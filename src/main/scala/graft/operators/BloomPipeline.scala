@@ -102,9 +102,16 @@ object BloomPipeline {
     * join strategy and the probe predicate stays in codegen. Its cost
     * profile carries one hidden term: the joined BINARY `bits` attribute
     * is materialized per probe row (~m/8 bytes of memcpy each), so the
-    * production unsharded probe is [[fpStatsCollected]]; this formulation
-    * is the right one when the filter side is too large to collect but
-    * small enough to broadcast-join.
+    * production unsharded probe is [[fpStatsCollected]] (what
+    * [[graft.ReferencePipeline]] runs); this formulation is the right one
+    * when the filter side is too large to collect but small enough to
+    * broadcast-join.
+    *
+    * Remaining callers: `CollectedProbeSpec` and `ReferencePipelineSpec`
+    * (cross-formulation identity against the collected probe),
+    * `PipelineSpec`, and the perfbench harness's traced `recomposed`
+    * pass. Deleting it (ROADMAP item 5) waits for a benchmark change that
+    * moves that recomposition onto [[fpStatsCollected]].
     *
     * Edge policy (SURVEY.md §2.6, deliberate fix): a test rating with no
     * built filter is *skipped* via the inner join (the Hadoop engine
