@@ -2,8 +2,10 @@ package graft
 
 import java.util.Locale
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Encoders, Observation, Row, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{BloomPipeline, FilterStore, Ingest, Ratings}
 
@@ -11,9 +13,12 @@ import graft.operators.{BloomPipeline, FilterStore, Ingest, Ratings}
   * `map-reduce-bloom-filter` actually runs today (`sh-scripts/0..3`),
   * re-expressed end to end:
   *
-  *   0. split: ratings TSV → train/test (60/40, seeded)
-  *   1. linecount: per-rating counts → single text file (getmerge analog)
-  *   2. builder: per-rating Bloom filters → persisted artifact
+  *   0. split: ratings TSV → train/test (60/40, seeded), both sampled from
+  *      one cached parse, so the TSV is parsed once per run
+  *   1. linecount: per-rating counts, collected once → single text file
+  *      (getmerge analog); the same collected rows size the filters
+  *   2. builder: per-rating Bloom filters ([[BloomPipeline.buildSized]]
+  *      over that geometry, so train is counted once) → persisted artifact
   *   3. tester: reload the artifact once, collect it into a broadcast
   *      [[graft.core.GroupFilters]] (the testers' own shape,
   *      `bloomfilters_tester.py:81`), probe the held-out split once with
@@ -64,21 +69,32 @@ object ReferencePipeline {
     require(p > 0 && p < 1, s"p must be in (0,1), got $p")
 
     // job 0 — ingest + split (reference split-dataset.py; seeded for rerun
-    // stability, disjointness by row identity)
+    // stability, disjointness by row identity). The parsed input is cached
+    // so the TSV is parsed once: train and test are both sampled from the
+    // one cache, and randomSplit draws per partition over the same rows as
+    // an uncached parse would, so split membership is unchanged.
     val obs = new Observation(s"ingest_${System.identityHashCode(spark)}_${outDir.hashCode}")
     val ratings = Ingest.readRatingsTsvObserved(spark, tsvDir, obs)
-    val Array(train, test) = Ratings.randomSplit(ratings, seed = 42L)
+      .persist(StorageLevel.MEMORY_AND_DISK)
 
-    // buildFilters persists train; released however the stages end
+    // released however the stages end
     val stats = try {
-      // job 1 — linecount, merged to one text file (reference 1_launch +
-      // getmerge): "rating\tcount" lines
-      BloomPipeline.linecount(train)
-        .select(format_string("%d\t%d", col("rating"), col("n")).as("value"))
-        .coalesce(1).write.mode("overwrite").text(s"$outDir/linecount")
+      val Array(train, test) = Ratings.randomSplit(ratings, seed = 42L)
 
-      // job 2 — build + persist the filter artifact
-      FilterStore.save(BloomPipeline.buildFilters(train, p), s"$outDir/filters")
+      // job 1 — linecount, collected once (at most one row per rating); the
+      // job fills the ratings cache and fires the ingest metrics. Its rows,
+      // in collected (the aggregate's partition) order, are the text merged
+      // to one file (reference 1_launch + getmerge: "rating\tcount" lines)
+      // and, as a local relation, the sizing input of the build.
+      val linecount = BloomPipeline.linecount(train)
+      val counts = linecount.collect().toSeq
+      spark.createDataset(counts.map(r =>
+        "%d\t%d".formatLocal(Locale.US, r.getInt(0), r.getLong(1))))(
+        Encoders.STRING).coalesce(1).write.mode("overwrite").text(s"$outDir/linecount")
+
+      // job 2 — build + persist the filter artifact, no second count of train
+      val geometry = BloomPipeline.sized(spark.createDataFrame(counts.asJava, linecount.schema), p)
+      FilterStore.save(BloomPipeline.buildSized(train, geometry), s"$outDir/filters")
 
       // job 3 — reload the artifact, broadcast it, probe the held-out split
       // once; train/test disjoint, so every hit is a false positive
@@ -88,7 +104,7 @@ object ReferencePipeline {
         BloomPipeline.collectFilters(FilterStore.load(spark, s"$outDir/filters")))
       try BloomPipeline.fpStatsCollected(test, filters).collect()
       finally filters.destroy()
-    } finally train.unpersist()
+    } finally ratings.unpersist()
 
     // the results text keeps the collected (partition) order, the order a
     // coalesced write of the aggregate produces; the report is by rating

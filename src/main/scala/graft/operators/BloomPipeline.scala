@@ -12,9 +12,14 @@ import graft.functions.{bloom_build_native, bloom_might_contain, bloom_probe_gro
   *
   * {{{
   * ratings --(linecount)--> (rating, n)                     // sizing stats
-  * train + sizes --(buildFilters)--> (rating, n, m, k, bits)
+  * (rating, n) --(sized)--> (rating, n, m, k)               // geometry
+  * train + geometry --(buildSized)--> (rating, n, m, k, bits)
   * test + filters --(fpStats)--> (rating, falsePositives, total, fpRate)
   * }}}
+  *
+  * [[buildFilters]] is `buildSized(train, sized(linecount(train), p))` in
+  * one plan; [[graft.ReferencePipeline]] collects the linecount rows once
+  * and sizes from them, so its counts, text and geometry share one job.
   *
   * Scale design: the sizing pass is a partial+final hash aggregate (tiny
   * result: one row per group); geometry joins back to the fact rows via
@@ -66,17 +71,30 @@ object BloomPipeline {
 
   /** [[buildFilters]] with approx sizing — one pass fewer of exact-count
     * state, same zero-FN contract, FPP ≤ ~p with high probability. */
-  def buildFiltersApprox(train: DataFrame, p: Double, rsd: Double = 0.05): DataFrame = {
-    val geometry = sizedApprox(train, p, rsd)
+  def buildFiltersApprox(train: DataFrame, p: Double, rsd: Double = 0.05): DataFrame =
+    buildSized(train, sizedApprox(train, p, rsd))
+
+  /** Stage 2's one build formulation — reference builder
+    * (`bloomfilters_builder.py:87-100`, `builder/BloomFilterReducer.java:46-94`):
+    * broadcast `geometry` (one `(rating, n, m, k)` row per group) onto the
+    * train rows and OR each group's keys into its m-bit filter. Output one
+    * row per group: (rating, n, m, k, bits). Every sizing path builds
+    * through it: [[buildFilters]] (exact in-plan counts),
+    * [[buildFiltersApprox]] (HLL counts) and [[graft.ReferencePipeline]]
+    * (its collected linecount rows as a local relation, through [[sized]]).
+    */
+  def buildSized(train: DataFrame, geometry: DataFrame): DataFrame =
     train
       .join(broadcast(geometry), "rating")
-      .groupBy("rating", "n", "m", "k")
+      .groupBy("rating", "n", "m", "k") // n/m/k functionally determined by rating
       .agg(bloom_build_native(col("movieId"), col("m"), col("k")).as("bits"))
-  }
 
-  /** Stage 2 — reference builder (`bloomfilters_builder.py:87-100`,
-    * `builder/BloomFilterReducer.java:46-94`). Output one row per group:
-    * (rating, n, m, k, bits).
+  /** [[buildSized]] with exact in-plan sizing, `sized(linecount(train), p)`.
+    * Callers: the `SparkEntry` bloom lanes (directly and through
+    * [[broadcastFilters]]/[[endToEnd]]), the `StreamingQueries`
+    * stream-static probe, the tests, and the perfbench harness's traced
+    * `recomposed` pass. [[graft.ReferencePipeline]] does not call it: it
+    * sizes from the linecount rows it already collected.
     */
   def buildFilters(train: DataFrame, p: Double): DataFrame = {
     // the build is a double pass over train (sizing agg, then the filter
@@ -86,11 +104,7 @@ object BloomPipeline {
     // it (`train.unpersist()` / `spark.catalog.clearCache()`); Bench and
     // Verify clear between queries so nothing is measured warm.
     train.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val geometry = sized(linecount(train), p)
-    train
-      .join(broadcast(geometry), "rating")
-      .groupBy("rating", "n", "m", "k") // n/m/k functionally determined by rating
-      .agg(bloom_build_native(col("movieId"), col("m"), col("k")).as("bits"))
+    buildSized(train, sized(linecount(train), p))
   }
 
   /** Stage 3 — reference tester (`bloomfilters_tester.py:94-112`,

@@ -43,7 +43,15 @@ object Ingest {
     * (`Observation.get("corrupt_rows")`) — no second pass, no
     * accumulator races (observe metrics are exactly-once per action,
     * unlike accumulators under task retries). This is the §2.6 policy the
-    * Hadoop reference approximated with log-and-skip counters. */
+    * Hadoop reference approximated with log-and-skip counters.
+    *
+    * Metric-consumer caveat, besides the global-sort one on
+    * [[docsJsonSchema]]: when this result is persisted, the metrics
+    * fire once, on the action that fills the cache, and later reads of the
+    * cache do not fire them again. [[graft.ReferencePipeline]] relies on
+    * this: its `ingested`/`corrupt_dropped` come from the linecount job
+    * that fills its ratings cache, and the build and probe that read the
+    * cache afterwards leave them as they are. */
   def readRatingsTsvObserved(
       spark: SparkSession, path: String,
       observation: org.apache.spark.sql.Observation): DataFrame = {

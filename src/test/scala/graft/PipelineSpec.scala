@@ -84,6 +84,27 @@ class PipelineSpec extends SparkSuite {
     assert(indexed === fused)
   }
 
+  test("buildSized over collected counts == buildFilters, byte for byte") {
+    val p = 0.05
+    val cols = Seq("rating", "n", "m", "k", "bits").map(col)
+    def rows(filters: org.apache.spark.sql.DataFrame) =
+      filters.select(cols: _*).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getInt(2), r.getInt(3),
+          r.getAs[Array[Byte]](4).toSeq))
+        .sortBy(_._1).toSeq
+    try {
+      val inPlan = rows(BloomPipeline.buildFilters(train, p))
+      // the driver-side path ReferencePipeline takes: counts collected,
+      // then sized as a local relation
+      val linecount = BloomPipeline.linecount(train)
+      val local = spark.createDataFrame(
+        java.util.Arrays.asList(linecount.collect(): _*), linecount.schema)
+      val collected = rows(BloomPipeline.buildSized(train, BloomPipeline.sized(local, p)))
+      assert(inPlan.length === groups)
+      assert(collected === inPlan)
+    } finally train.unpersist()
+  }
+
   test("approx sizing: geometry near exact, zero FN, FPP still bounded") {
     val p = 0.05
     val exact = BloomPipeline.sized(BloomPipeline.linecount(train), p)

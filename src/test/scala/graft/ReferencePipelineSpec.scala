@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.GraftBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -35,9 +37,10 @@ class ReferencePipelineSpec extends SparkSuite {
   }
 
   /** One pipeline run shared by the tests below: its report, output dir,
-    * the persistent RDDs it left behind, and every executed plan. */
+    * the persistent RDDs it left behind, every executed plan, and the input
+    * records its tasks read. */
   private case class Run(report: Seq[String], outDir: String,
-      leftPersisted: Set[Int], plans: Seq[SparkPlan])
+      leftPersisted: Set[Int], plans: Seq[SparkPlan], recordsRead: Long)
 
   private lazy val pipeline = {
     val outDir = Files.createTempDirectory("graft_refpipe_out").toString
@@ -47,17 +50,24 @@ class ReferencePipelineSpec extends SparkSuite {
         plans.synchronized(plans += qe.executedPlan)
       def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
     }
+    val recordsRead = new AtomicLong
+    val taskListener = new SparkListener {
+      override def onTaskEnd(end: SparkListenerTaskEnd): Unit =
+        Option(end.taskMetrics).foreach(m => recordsRead.addAndGet(m.inputMetrics.recordsRead))
+    }
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     spark.listenerManager.register(listener)
+    spark.sparkContext.addSparkListener(taskListener)
     val report =
       try ReferencePipeline.run(spark, tsvDir, p, outDir)
       finally {
         GraftBus.drain(spark.sparkContext, 60000L)
+        spark.sparkContext.removeSparkListener(taskListener)
         spark.listenerManager.unregister(listener)
       }
     Run(report, outDir,
       spark.sparkContext.getPersistentRDDs.keySet.diff(persistedBefore).toSet,
-      plans.synchronized(plans.toList))
+      plans.synchronized(plans.toList), recordsRead.get)
   }
 
   /** Every node of an executed plan, through AQE wrappers, query stages,
@@ -76,7 +86,7 @@ class ReferencePipelineSpec extends SparkSuite {
     spark.read.text(path).collect().toSeq.map(_.getString(0))
 
   test("4-job lifecycle: split -> linecount -> build+persist -> reload+probe") {
-    val Run(report, outDir, _, _) = pipeline
+    val Run(report, outDir, _, _, _) = pipeline
 
     assert(report.head.contains("ingested=20001"))
     assert(report.head.contains("corrupt_dropped=1"))
@@ -102,7 +112,7 @@ class ReferencePipelineSpec extends SparkSuite {
   }
 
   test("results text holds exactly the report's data rows, in one part file") {
-    val Run(report, outDir, _, _) = pipeline
+    val Run(report, outDir, _, _, _) = pipeline
     val parts = Files.list(Paths.get(s"$outDir/results")).iterator()
     var textParts = 0
     parts.forEachRemaining(f => if (f.getFileName.toString.startsWith("part-")) textParts += 1)
@@ -113,7 +123,7 @@ class ReferencePipelineSpec extends SparkSuite {
   }
 
   test("per rating, (falsePositives, total) == join-form fpStats on the same artifact") {
-    val Run(report, outDir, _, _) = pipeline
+    val Run(report, outDir, _, _, _) = pipeline
     val test = Ratings.randomSplit(Ingest.readRatingsTsv(spark, tsvDir), seed = 42L)(1)
     val joined = BloomPipeline.fpStats(test, FilterStore.load(spark, s"$outDir/filters"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -122,7 +132,27 @@ class ReferencePipelineSpec extends SparkSuite {
     assert(reported === joined)
   }
 
-  test("run releases the train split it persisted") {
+  test("linecount text == independent linecount(train) == each saved filter's n") {
+    val Run(_, outDir, _, _, _) = pipeline
+    val train = Ratings.randomSplit(Ingest.readRatingsTsv(spark, tsvDir), seed = 42L)(0)
+    val independent = BloomPipeline.linecount(train).collect()
+      .map(r => s"${r.getInt(0)}\t${r.getLong(1)}").sorted.toSeq
+    val text = textLines(s"$outDir/linecount")
+    assert(text.sorted === independent)
+    val counts = text.map(_.split("\t")).map(f => f(0).toInt -> f(1).toLong).toMap
+    val saved = FilterStore.load(spark, s"$outDir/filters").collect()
+      .map(r => r.getAs[Int]("rating") -> r.getAs[Long]("n")).toMap
+    assert(saved === counts)
+  }
+
+  test("the ratings input is read once: task records read < 2x the ingested rows") {
+    val Run(report, _, _, _, recordsRead) = pipeline
+    val rows = report.head.split(" ").head.stripPrefix("ingested=").toLong
+    assert(recordsRead > 0, "the listener saw no input records")
+    assert(recordsRead < 2 * rows, s"tasks read $recordsRead records for $rows ingested rows")
+  }
+
+  test("run releases every relation it persisted") {
     assert(pipeline.leftPersisted.isEmpty,
       s"persistent RDDs left by run: ${pipeline.leftPersisted.mkString(", ")}")
   }
@@ -130,7 +160,7 @@ class ReferencePipelineSpec extends SparkSuite {
   test("no executed plan joins a relation carrying the filter bits") {
     val all = pipeline.plans.flatMap(nodes)
     val joins = all.collect { case j: BaseJoinExec => j }
-    // the walk reaches joins at all: buildFilters' geometry join is one
+    // the walk reaches joins at all: buildSized's geometry join is one
     assert(joins.nonEmpty, s"no join seen in ${pipeline.plans.size} plans")
     val bitsJoins = joins.filter(_.children.exists(_.output.exists(_.name == "bits")))
     assert(bitsJoins.map(_.nodeName) === Nil, "joins against a relation carrying bits")
