@@ -63,6 +63,12 @@ object SparkEntry {
     * groups (~10k keys, ~50k bits) split into ~4 shards. */
   private val shardedSlabBits = 16384L
 
+  /** The `(rating, total, hits)` face of a bloom probe over train keys:
+    * zero FN makes hits == total, so the oracle predicts both columns. */
+  private def probeTotals(stats: DataFrame): DataFrame =
+    stats.select(col("rating"), col("total"), col("falsePositives").as("hits"))
+      .orderBy("rating")
+
   /** approx_percentile accuracy for the a15 equi-depth boundaries: rank
     * error ≤ n/accuracy per boundary — 0.01% of n, far inside the gate's
     * tolerance, at a fixed few-KB sketch per partition. */
@@ -1958,15 +1964,13 @@ object SparkEntry {
       // COGROUP formulation (r14): every join-shaped probe pays a hidden
       // per-row memcpy — codegen's getBinary copies the joined bitset
       // for EACH probe row (measured at sf5: 403s unsharded join, 1072s
-      // slab join, 3.1s collected broadcast). probeTotalsSharded extracts
+      // slab join, 3.1s collected broadcast). fpStatsSharded extracts
       // each slab's bits once per cogroup and probes the iterator through
       // the same core kernel — distributed, no driver artifact, per-probe
-      // cost back to k hashes. The join form stays registered where the
-      // bits are bounded (bloom_sharded_fpstats) and documented at
-      // BloomPipeline.fpStats.
+      // cost back to k hashes.
       val train = Ratings.trainFromLineitem(s, dir)
       val filters = BloomPipeline.buildShardedFilters(train, defaultP)
-      BloomPipeline.probeTotalsSharded(train, filters).orderBy("rating")
+      probeTotals(BloomPipeline.fpStatsSharded(train, filters))
     }),
     "bloom_zero_fn" -> ((s, dir) => {
       // The hard invariant, as a cross-engine oracle: probing every train
@@ -2005,14 +2009,7 @@ object SparkEntry {
       val path = fixtures("filters")(s, dir)
       val bc = s.sparkContext.broadcast(
         BloomPipeline.collectFilters(FilterStore.load(s, path)))
-      train
-        .select(col("rating"),
-          graft.functions.bloom_probe_groups(bc, col("rating"), col("movieId")).as("hit"))
-        .where(col("hit").isNotNull)
-        .groupBy("rating")
-        .agg(count("*").as("total"),
-          sum(when(col("hit"), 1L).otherwise(0L)).as("hits"))
-        .orderBy("rating")
+      probeTotals(BloomPipeline.fpStatsCollected(train, bc))
     }),
     "bloom_seqfile_reload" -> ((s, dir) => {
       // S3/K2 LITERAL-format parity: the same reload -> probe lifecycle
@@ -2023,26 +2020,17 @@ object SparkEntry {
       val path = fixtures("filters_seq")(s, dir)
       val bc = s.sparkContext.broadcast(
         BloomPipeline.collectFilters(FilterStore.loadSequenceFile(s, path)))
-      train
-        .select(col("rating"),
-          graft.functions.bloom_probe_groups(bc, col("rating"), col("movieId")).as("hit"))
-        .where(col("hit").isNotNull)
-        .groupBy("rating").agg(
-          count("*").as("total"),
-          sum(when(col("hit"), 1L).otherwise(0L)).as("hits"))
-        .orderBy("rating")
+      probeTotals(BloomPipeline.fpStatsCollected(train, bc))
     }),
     "bloom_sharded_reload" -> ((s, dir) => {
       // The 100 TB lifecycle: sharded build -> persist slab artifact ->
       // reload -> route -> probe (slabs may be too many to collect OR to
-      // broadcast, so the probe is the cogroup shape — r15; the join form
-      // is fenced at BloomPipeline.fpStatsSharded). hits == total by
-      // zero-FN on the train split, so fully oracle-checked.
+      // broadcast, so the probe is the cogroup shape of
+      // BloomPipeline.fpStatsSharded — r15). hits == total by zero-FN on
+      // the train split, so fully oracle-checked.
       val train = Ratings.trainFromLineitem(s, dir)
       val path = fixtures("sharded_filters")(s, dir)
-      BloomPipeline.probeTotalsSharded(train, FilterStore.load(s, path))
-        .select(col("rating"), col("total"), col("hits"))
-        .orderBy("rating")
+      probeTotals(BloomPipeline.fpStatsSharded(train, FilterStore.load(s, path)))
     }),
     "k5_csv_roundtrip" -> ((s, dir) => {
       // CSV sink with real quoting/escaping (commas, quotes, newlines in
@@ -2239,10 +2227,9 @@ object SparkEntry {
     "bloom_sharded_fpstats" -> ((s, dir) => // bit-valued internals -> rows-only
       // COGROUP FP face (r15): the per-rating (fp, total, rate) output on
       // the probe shape whose per-probe cost stays k hashes at any slab
-      // size — the join form is fenced at BloomPipeline.fpStatsSharded
-      // (its per-row getBinary memcpy priced at 1071.8s for 8 MB slabs
-      // in the r14 sf5 campaign)
-      BloomPipeline.fpStatsShardedCogroup(
+      // size (a join-form slab probe's per-row getBinary memcpy priced at
+      // 1071.8s for 8 MB slabs in the r14 sf5 campaign)
+      BloomPipeline.fpStatsSharded(
         Ratings.testFromLineitem(s, dir),
         BloomPipeline.buildShardedFilters(
           Ratings.trainFromLineitem(s, dir), defaultP, shardedSlabBits))
@@ -2278,10 +2265,9 @@ object SparkEntry {
           sum(when(col("fpRate") > defaultP * 2, 1L).otherwise(0L))
             .as("violations"))),
     "bloom_sharded_fp_bound" -> ((s, dir) =>
-      // the green FP-bound gate now rides the COGROUP face (r15): the
-      // hit set is bit-identical to the fenced join form, so the bound
-      // semantics are unchanged while the gated plan is the scale-safe one
-      BloomPipeline.fpStatsShardedCogroup(
+      // the green FP-bound gate rides the COGROUP face (r15), the
+      // scale-safe sharded probe
+      BloomPipeline.fpStatsSharded(
         Ratings.testFromLineitem(s, dir),
         BloomPipeline.buildShardedFilters(
           Ratings.trainFromLineitem(s, dir), defaultP, shardedSlabBits))

@@ -14,12 +14,12 @@ import graft.core.BloomFilter
 
 /** Native per-group Bloom build: `bloom_build_native(key, m, k)` → BINARY.
   *
-  * A [[TypedImperativeAggregate]] twin of [[BloomBuildAggregator]] (the
-  * `Aggregator`/udaf formulation): same fold, same merge (bitwise OR),
-  * byte-identical output — asserted in FunctionsSpec. The difference is
-  * the hot path: `update` reads the three columns straight off the
-  * `InternalRow` and hashes the key's UTF8String bytes in place — no
-  * case-class materialization, no String decode/re-encode per input row.
+  * The fold is [[graft.core.BloomFilter]]'s `put` per key and the merge
+  * is bitwise OR, so the output is byte-identical to a driver-side filter
+  * holding the same keys — asserted in FunctionsSpec. `update` reads the
+  * three columns straight off the `InternalRow` and hashes the key's
+  * UTF8String bytes in place — no case-class materialization, no String
+  * decode/re-encode per input row.
   * The buffer lives as a plain object and serializes (m, k, bits) only at
   * partial-aggregation shuffle boundaries, which is exactly the
   * fixed-size-per-(partition, group) shuffle contract the pipeline's

@@ -126,18 +126,14 @@ package object functions {
     * an ARRAY<INT> hash-sequence column. */
   def winnow(hashes: Column, w: Int): Column = col(Winnow(expr(hashes), w))
 
-  /** Per-group Bloom build aggregate: `bloom_build(key, m, k)` → BINARY. */
-  val bloom_build: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udaf(BloomBuildAggregator, Encoders.product[BloomInput])
-
   /** Reference-shaped build from explicit hash indexes:
     * `bloom_build_indexed(idx, m, k)` → BINARY (SURVEY.md §7.2.5b). */
   val bloom_build_indexed: org.apache.spark.sql.expressions.UserDefinedFunction =
     udaf(BloomIndexAggregator, Encoders.product[BloomIndexInput])
 
-  /** Native TypedImperativeAggregate bloom build (the production path:
-    * no per-row encoder, hashes UTF8String bytes in place). Byte-identical
-    * output to [[bloom_build]]. */
+  /** Per-group Bloom build aggregate: `bloom_build_native(key, m, k)` →
+    * BINARY, a native TypedImperativeAggregate (no per-row encoder, hashes
+    * UTF8String bytes in place). */
   def bloom_build_native(key: Column, m: Column, k: Column): Column =
     col(BloomBuildAgg(expr(key), expr(m), expr(k))
       .toAggregateExpression(isDistinct = false))
@@ -229,15 +225,13 @@ package object functions {
       build(exprs)
     }
 
-  /** Register the SQL surface (`SELECT mmh3(c, 3)`, `bloom_build(...)`,
-    * `bloom_might_contain(...)`) on an existing session. Sessions built
-    * with `spark.sql.extensions=graft.GraftExtensions` get the expression
-    * functions without this call; the udaf still needs it. */
-  def registerAll(spark: SparkSession): Unit = {
+  /** Register the SQL surface (`SELECT mmh3(c, 3)`,
+    * `bloom_build_native(...)`, `bloom_might_contain(...)`) on an existing
+    * session. Sessions built with `spark.sql.extensions=graft.GraftExtensions`
+    * get the same functions without this call. */
+  def registerAll(spark: SparkSession): Unit =
     sqlBuilders.foreach { case (name, n, build) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         name, checkedBuilder(name, n, build), "built-in")
     }
-    spark.udf.register("bloom_build", bloom_build)
-  }
 }

@@ -14,8 +14,14 @@ import graft.functions.{bloom_build_native, bloom_might_contain, bloom_probe_gro
   * ratings --(linecount)--> (rating, n)                     // sizing stats
   * (rating, n) --(sized)--> (rating, n, m, k)               // geometry
   * train + geometry --(buildSized)--> (rating, n, m, k, bits)
-  * test + filters --(fpStats)--> (rating, falsePositives, total, fpRate)
+  * test + filters --(fpStatsCollected)--> (rating, falsePositives, total, fpRate)
+  * test + slabs --(fpStatsSharded)--> (rating, falsePositives, total, fpRate)
   * }}}
+  *
+  * One probe formulation per filter shape: [[fpStatsCollected]] probes a
+  * collected, broadcast filter set; [[fpStatsSharded]] cogroups probes
+  * with the slabs of [[buildShardedFilters]]. The join form [[fpStats]]
+  * remains until its last caller moves (see its scaladoc).
   *
   * [[buildFilters]] is `buildSized(train, sized(linecount(train), p))` in
   * one plan; [[graft.ReferencePipeline]] collects the linecount rows once
@@ -244,35 +250,27 @@ object BloomPipeline {
       .agg(bloom_build_native(col("movieId"), col("m"), col("k")).as("bits"))
   }
 
-  /** Sharded probe TOTALS via COGROUP — the fully distributed probe
-    * without the join form's hidden memcpy: any join-shaped probe makes
-    * codegen extract the joined BINARY per output row
-    * (`UnsafeRow.getBinary` allocates and copies ~slabBytes for EVERY
-    * probe — the r14 sf5 cohort measured 403s for the unsharded join and
-    * 1072s for the slab join, vs 3.1s for the collected-broadcast probe).
-    * Cogrouping probes with slabs on `(rating, shard)` extracts each
-    * slab's bits ONCE per group and probes the group's iterator through
-    * the same [[graft.core.BloomFilter]] kernel the codegen expression
-    * uses — per-probe cost returns to k hashes, and the plan stays fully
-    * distributed (no driver artifact): this is the probe shape for
-    * filter sets too large to collect or broadcast, where
+  /** Sharded probe — per-rating `(rating, falsePositives, total, fpRate)`
+    * (reference P4+A5, `tester/ReducerTester.java:102-113`) via COGROUP,
+    * the fully distributed probe without the join form's hidden memcpy:
+    * any join-shaped probe makes codegen extract the joined BINARY per
+    * output row (`UnsafeRow.getBinary` allocates and copies ~slabBytes for
+    * EVERY probe — the r14 sf5 cohort measured 403s for the unsharded join
+    * and 1072s for the slab join, vs 3.1s for the collected-broadcast
+    * probe). Cogrouping probes with slabs on `(rating, shard)` extracts
+    * each slab's bits ONCE per group and probes the group's iterator
+    * through the same [[graft.core.BloomFilter]] kernel the codegen
+    * expression uses — per-probe cost returns to k hashes, and the plan
+    * stays fully distributed (no driver artifact): this is the probe shape
+    * for filter sets too large to collect or broadcast, where
     * [[fpStatsCollected]] stops applying. It is also the REFERENCE'S OWN
-    * reducer shape — `tester/ReducerTester.java:49-118` takes the
-    * group's filter as the first value, then probes the remaining
-    * iterator (SURVEY §2 A5) — recovered here because it is the
-    * formulation whose per-probe cost stays k hashes at any filter
-    * size. Exchanges carry
-    * `(rating, shard, key)` probe rows and one slab row per
-    * (group, shard) — both narrow, both skew-free by the shard design.
-    * Missing groups are skipped (the §2.6 inner-join policy). */
-  def probeTotalsSharded(test: DataFrame, filters: DataFrame): DataFrame =
-    cogroupProbe(test, filters)
-
-  /** The shared cogroup probe kernel behind [[probeTotalsSharded]] and
-    * [[fpStatsShardedCogroup]]: per (rating, shard) group, extract the
-    * slab's bits ONCE and stream the group's probes through it. Output
-    * one `(rating, total, hits)` row per probed rating. */
-  private def cogroupProbe(test: DataFrame, filters: DataFrame): DataFrame = {
+    * reducer shape — `tester/ReducerTester.java:49-118` takes the group's
+    * filter as the first value, then probes the remaining iterator
+    * (SURVEY §2 A5). Exchanges carry `(rating, shard, key)` probe rows and
+    * one slab row per (group, shard) — both narrow, both skew-free by the
+    * shard design. Missing groups are skipped (the §2.6 inner-join
+    * policy). */
+  def fpStatsSharded(test: DataFrame, filters: DataFrame): DataFrame = {
     val spark = test.sparkSession
     import spark.implicits._
     val geometry = filters.select(col("rating"), col("s")).distinct()
@@ -321,43 +319,7 @@ object BloomPipeline {
       }
       .toDF("rating", "total", "hits")
       .groupBy("rating")
-      .agg(sum("total").as("total"), sum("hits").as("hits"))
-  }
-
-  /** The per-rating FP-rate face (reference P4+A5,
-    * `tester/ReducerTester.java:102-113`) on the COGROUP probe — the
-    * scale-safe shape [[probeTotalsSharded]] established, now covering
-    * the `(falsePositives, total, fpRate)` output the reference reducer
-    * emits (VERDICT r14 ask #2). Identical probe semantics to
-    * [[fpStatsSharded]] (same routing, same slabs, same kernel — the
-    * hit set is bit-identical); the cost model differs: per-probe cost
-    * stays k hashes at ANY slab size, where the join form's per-row
-    * binary extraction priced at 1071.8s for 8 MB slabs at sf5. */
-  def fpStatsShardedCogroup(test: DataFrame, filters: DataFrame): DataFrame =
-    cogroupProbe(test, filters)
-      .select(col("rating"), col("hits").as("falsePositives"), col("total"))
-      .withColumn("fpRate", col("falsePositives") / col("total"))
-
-  /** Join-form sharded probe — FENCED (VERDICT r14 ask #2): every
-    * join-shaped probe pays codegen's per-output-row `getBinary` memcpy
-    * (~slabBytes per probe row; the sf5 campaign priced 8 MB slabs at
-    * 1071.8s), so this formulation is safe ONLY where slabs are bounded
-    * small (the 2 KB test-SF slabs). Production probes at any slab size
-    * use [[fpStatsShardedCogroup]] / [[probeTotalsSharded]]; this stays
-    * as the cross-formulation twin (same hit set by construction) and
-    * the bounded-slab spec surface. */
-  def fpStatsSharded(test: DataFrame, filters: DataFrame): DataFrame = {
-    val geometry = filters.select("rating", "s", "m", "k").distinct()
-    test
-      .join(broadcast(geometry), "rating")
-      .withColumn("shard", pmod(graft.functions.mmh3(col("movieId"), routeSeed), col("s")))
-      .join(filters.select("rating", "shard", "bits"), Seq("rating", "shard"))
-      .select(col("rating"),
-        bloom_might_contain(col("bits"), col("m"), col("k"), col("movieId")).as("hit"))
-      .groupBy("rating")
-      .agg(
-        sum(when(col("hit"), 1L).otherwise(0L)).as("falsePositives"),
-        count("*").as("total"))
+      .agg(sum("hits").as("falsePositives"), sum("total").as("total"))
       .withColumn("fpRate", col("falsePositives") / col("total"))
   }
 }

@@ -68,7 +68,7 @@ object Dedup {
     * not occur in `batchA`.
     *
     * Scale shape: batch A is folded into ONE Bloom filter (a single
-    * `bloom_build` aggregate, sized from a count pass); every B row probes
+    * `bloom_build_native` aggregate, sized from a count pass); every B row probes
     * the broadcast filter inside codegen, and only the bloom-positive
     * sliver (true dups + ~p·|B| false positives) reaches the verify
     * join — the expensive shuffle join runs on a fraction of B, which

@@ -169,7 +169,7 @@ class PlanAuditSpec extends SparkSuite {
     // Checked on the sharded zero-FN gate (r15: the last registered
     // JOIN-form probe — bloom_probe_totals and the fpstats faces moved
     // to the cogroup form; 2KB slabs keep this lane's carried bytes
-    // bounded, per the fpStatsSharded fence)
+    // bounded, so its per-row getBinary copy stays cheap)
     val df = SparkEntry.queries("bloom_sharded_zero_fn")(spark, dir)
     df.collect()
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec

@@ -20,7 +20,6 @@ object SparkSuite {
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    s.udf.register("bloom_build", graft.functions.bloom_build)
     s
   }
 }

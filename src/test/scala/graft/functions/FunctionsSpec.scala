@@ -119,7 +119,7 @@ class FunctionsSpec extends SparkSuite {
       .withColumn("m", lit(m)).withColumn("k", lit(k))
 
     val filters = train.groupBy($"grp")
-      .agg(bloom_build($"key", $"m", $"k").as("bits"), count("*").as("n"))
+      .agg(bloom_build_native($"key", $"m", $"k").as("bits"), count("*").as("n"))
       .withColumn("m", lit(m)).withColumn("k", lit(k))
 
     // every trained key must be found in its own group's filter (no FN)
@@ -149,21 +149,26 @@ class FunctionsSpec extends SparkSuite {
     }
   }
 
-  test("bloom_build_native == bloom_build (udaf) byte for byte, incl. SQL path") {
-    val train = (0 until 4000).map(i => (s"key-$i", i % 5)).toDF("key", "grp")
-      .withColumn("m", lit(2048)).withColumn("k", lit(4))
+  test("bloom_build_native == driver-built core.BloomFilter per group, incl. SQL path") {
+    val (m, k) = (2048, 4)
+    val keys = (0 until 4000).map(i => (s"key-$i", i % 5))
+    val train = keys.toDF("key", "grp")
+      .withColumn("m", lit(m)).withColumn("k", lit(k))
     def bitsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => r.getInt(0) -> r.getAs[Array[Byte]](1).toSeq).toMap
-    val viaUdaf = bitsOf(train.groupBy($"grp")
-      .agg(bloom_build($"key", $"m", $"k").as("bits")))
+    val expected = keys.groupBy(_._2).map { case (grp, ks) =>
+      val bf = BloomFilter.empty(m, k)
+      ks.foreach { case (key, _) => bf.put(key) }
+      grp -> bf.toBytes.toSeq
+    }
     val viaNative = bitsOf(train.groupBy($"grp")
       .agg(bloom_build_native($"key", $"m", $"k").as("bits")))
-    assert(viaNative === viaUdaf)
+    assert(viaNative === expected)
 
     train.createOrReplaceTempView("bbn_input")
     val viaSql = bitsOf(spark.sql(
       "SELECT grp, bloom_build_native(key, m, k) AS bits FROM bbn_input GROUP BY grp"))
-    assert(viaSql === viaUdaf)
+    assert(viaSql === expected)
   }
 
   test("bloom_build_native skips null keys and serializes across partials") {
@@ -181,9 +186,24 @@ class FunctionsSpec extends SparkSuite {
   test("empty group (no rows) never happens; zero-length key ok") {
     val df = Seq(("", 0)).toDF("key", "grp")
       .withColumn("m", lit(64)).withColumn("k", lit(3))
-    val filters = df.groupBy($"grp").agg(bloom_build($"key", $"m", $"k").as("bits"))
+    val filters = df.groupBy($"grp").agg(bloom_build_native($"key", $"m", $"k").as("bits"))
     val bits = filters.head().getAs[Array[Byte]]("bits")
     assert(bits.length === 8)
     assert(BloomFilter.mightContainBytes(bits, 64, 3, Array.emptyByteArray))
+  }
+
+  test("bloom_build_indexed rejects partitions of one group with mismatched geometry") {
+    // each row lands in its own partition, so the two buffers only meet
+    // in merge — which must refuse to OR a 128-bit buffer into a 64-bit one
+    val rows = Seq(BloomIndexInput(5, 64, 3), BloomIndexInput(5, 128, 3))
+    val df = spark.sparkContext.parallelize(rows, 2).toDF()
+    val ex = intercept[Exception] {
+      df.agg(bloom_build_indexed($"idx", $"m", $"k").as("bits")).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(ex).exists(_.contains("merging mismatched buffers")),
+      s"unexpected failure: $ex")
   }
 }

@@ -1,9 +1,11 @@
 package graft.operators
 
+import java.nio.charset.StandardCharsets
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.core.BloomFilter
+import graft.core.{BloomFilter, Murmur3}
 import graft.functions.bloom_might_contain
 
 class ShardedBloomSpec extends SparkSuite {
@@ -85,55 +87,67 @@ class ShardedBloomSpec extends SparkSuite {
     assert(perKey === 0L)
   }
 
-  test("probeTotalsSharded (cogroup form): zero FN on members, equals " +
-      "the join form's verdicts, skips filterless groups") {
+  /** Driver-side recount of the sharded probe: route each key with
+    * `floorMod(murmur3(key, routeSeed), s)` and probe its slab with the
+    * core kernel. Per rating: (falsePositives, total). */
+  private def recount(probes: Seq[(String, Int)],
+      filters: org.apache.spark.sql.DataFrame): Map[Int, (Long, Long)] = {
+    val slabs = filters.select("rating", "shard", "s", "m", "k", "bits").collect()
+      .map(r => (r.getInt(0), r.getInt(1)) ->
+        ((r.getInt(2), r.getInt(3), r.getInt(4), r.getAs[Array[Byte]](5)))).toMap
+    val shards = slabs.map { case ((rating, _), (s, _, _, _)) => rating -> s }
+    probes.filter { case (_, rating) => shards.contains(rating) }
+      .groupBy(_._2).map { case (rating, keys) =>
+        val hits = keys.count { case (key, _) =>
+          val bytes = key.getBytes(StandardCharsets.UTF_8)
+          val shard = Math.floorMod(
+            Murmur3.hashBytes(bytes, BloomPipeline.routeSeed), shards(rating))
+          val (_, m, k, bits) = slabs((rating, shard))
+          BloomFilter.mightContainBytes(bits, m, k, bytes)
+        }
+        rating -> ((hits.toLong, keys.size.toLong))
+      }
+  }
+
+  private def statsOf(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => r.getInt(0) ->
+      ((r.getAs[Long]("falsePositives"), r.getAs[Long]("total"),
+        r.getAs[Double]("fpRate")))).toMap
+
+  test("fpStatsSharded (cogroup form): zero FN on members, equals " +
+      "a driver-side recount, skips filterless groups") {
     val train = ratings(4000, 2)
     val filters = BloomPipeline.buildShardedFilters(train, p, maxSlabBits = 2048)
     // members: every probe hits (the hard invariant through the cogroup path)
-    val own = BloomPipeline.probeTotalsSharded(train, filters)
-      .collect().map(r => r.getInt(0) ->
-        ((r.getAs[Long]("total"), r.getAs[Long]("hits")))).toMap
+    val own = statsOf(BloomPipeline.fpStatsSharded(train, filters))
     assert(own.keySet === Set(0, 1))
-    own.values.foreach { case (t, h) => assert(t === 2000L && h === t) }
-    // non-members: cogroup verdicts equal the join-expression verdicts
-    // key for key (same kernel, different extraction path)
+    own.values.foreach { case (h, t, _) => assert(t === 2000L && h === t) }
+    // non-members: cogroup verdicts equal the core kernel's, slab for slab
     val others = (5000 until 6000).map(i => (s"other-$i", i % 2))
-      .toDF("movieId", "rating")
-    val viaCogroup = BloomPipeline.probeTotalsSharded(others, filters)
-      .collect().map(r => r.getInt(0) -> r.getAs[Long]("hits")).toMap
-    val geometry = filters.select("rating", "s", "m", "k").distinct()
-    val viaJoin = others.join(broadcast(geometry), "rating")
-      .withColumn("shard",
-        pmod(graft.functions.mmh3($"movieId", BloomPipeline.routeSeed), $"s"))
-      .join(filters.select("rating", "shard", "bits"), Seq("rating", "shard"))
-      .select($"rating",
-        bloom_might_contain($"bits", $"m", $"k", $"movieId").as("hit"))
-      .groupBy("rating")
-      .agg(sum(when($"hit", 1L).otherwise(0L)).as("hits"))
-      .collect().map(r => r.getInt(0) -> r.getAs[Long]("hits")).toMap
-    assert(viaCogroup === viaJoin)
+    val viaCogroup = statsOf(BloomPipeline.fpStatsSharded(
+      others.toDF("movieId", "rating"), filters))
+      .map { case (rating, (h, t, _)) => rating -> ((h, t)) }
+    assert(viaCogroup === recount(others, filters))
     // a probe group with no filter is skipped, not crashed (§2.6)
     val alien = Seq(("x", 9)).toDF("movieId", "rating")
-    assert(BloomPipeline.probeTotalsSharded(alien, filters).collect().isEmpty)
+    assert(BloomPipeline.fpStatsSharded(alien, filters).collect().isEmpty)
   }
 
-  test("fpStatsShardedCogroup: per-rating (fp, total, rate) equals the " +
-      "fenced join form row for row (VERDICT r14 ask #2)") {
+  test("fpStatsSharded: per-rating (fp, total, rate) equals a driver-side " +
+      "recount row for row") {
     val train = ratings(4000, 2)
     val filters = BloomPipeline.buildShardedFilters(train, p, maxSlabBits = 2048)
     val probes = (8000 until 11000).map(i => (s"probe-$i", i % 2))
-      .toDF("movieId", "rating")
-    def asMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getInt(0) ->
-        ((r.getAs[Long]("falsePositives"), r.getAs[Long]("total"),
-          r.getAs[Double]("fpRate")))).toMap
-    val viaCogroup = asMap(BloomPipeline.fpStatsShardedCogroup(probes, filters))
-    val viaJoin = asMap(BloomPipeline.fpStatsSharded(probes, filters))
-    assert(viaCogroup === viaJoin)
+    val viaCogroup = statsOf(BloomPipeline.fpStatsSharded(
+      probes.toDF("movieId", "rating"), filters))
+    val expected = recount(probes, filters).map { case (rating, (fp, t)) =>
+      rating -> ((fp, t, fp.toDouble / t))
+    }
+    assert(viaCogroup === expected)
     assert(viaCogroup.keySet === Set(0, 1))
     viaCogroup.values.foreach { case (_, t, _) => assert(t === 1500L) }
     // members through the FP face: rate is exactly 1.0 (zero FN)
-    val own = asMap(BloomPipeline.fpStatsShardedCogroup(train, filters))
+    val own = statsOf(BloomPipeline.fpStatsSharded(train, filters))
     own.values.foreach { case (fp, t, rate) =>
       assert(fp === t && rate === 1.0)
     }
@@ -146,7 +160,7 @@ class ShardedBloomSpec extends SparkSuite {
     try {
       val doubled = filters.unionByName(filters)
       val ex = intercept[Exception] {
-        BloomPipeline.probeTotalsSharded(train, doubled).collect()
+        BloomPipeline.fpStatsSharded(train, doubled).collect()
       }
       def messages(t: Throwable): Seq[String] =
         if (t == null) Seq.empty
