@@ -85,8 +85,9 @@ object Staging {
     * shuffle-partition sweet spot), clamped to the session width — a
     * 100 TB run's node relation takes the session's own parallelism,
     * exactly as today, so the knob only BOUNDS width from below at small
-    * state, never shrinks a big run. Env-tunable
-    * (`SPARK_GRAFT_ROUND_ROWS_PER_PART`), never a hard-coded core count. */
+    * state, never shrinks a big run. A fixed row budget
+    * ([[RoundRowsPerPart]]), never a hard-coded core count; the loops take
+    * it through [[Fixpoint.rounds]]. */
   /** `perPartRows` overrides the 1M-row default for operator families
     * whose per-row WORK is much larger than a narrow node row — e.g. the
     * degree-oriented wedge joins budget ~16k edges/partition because each
@@ -94,33 +95,14 @@ object Staging {
     * derived width per run; never a core count. */
   def roundWidth(spark: org.apache.spark.sql.SparkSession,
       stateRows: Long, perPartRows: Long = 0L): Int = {
-    val perPart =
-      if (perPartRows > 0) perPartRows
-      else sys.env.getOrElse("SPARK_GRAFT_ROUND_ROWS_PER_PART",
-        "1000000").toLong
+    val perPart = if (perPartRows > 0) perPartRows else RoundRowsPerPart
     val sessW = spark.sessionState.conf.numShufflePartitions
     math.min(sessW.toLong,
       math.max(1L, (stateRows + perPart - 1) / perPart)).toInt
   }
 
-  /** A child session whose `spark.sql.shuffle.partitions` is
-    * [[roundWidth]] — the loops re-base their round relations into it via
-    * `Bridge.pinInternal(df, child)` so ONLY the per-round exchanges run
-    * at the right-sized width (the CPU-heavy fronts stay on the outer
-    * session at full width). Returns the outer session unchanged when the
-    * state already fills the session width, so big runs plan exactly as
-    * before. The shared CacheManager makes persist/unpersist and
-    * clearCache work identically across parent and child. */
-  def roundSession(spark: org.apache.spark.sql.SparkSession,
-      stateRows: Long, perPartRows: Long = 0L): org.apache.spark.sql.SparkSession = {
-    val w = roundWidth(spark, stateRows, perPartRows)
-    if (w == spark.sessionState.conf.numShufflePartitions) spark
-    else {
-      val child = spark.newSession()
-      child.conf.set("spark.sql.shuffle.partitions", w.toString)
-      child
-    }
-  }
+  /** [[roundWidth]]'s default rows per partition. */
+  private val RoundRowsPerPart: Long = 1000000L
 
   /** [[spread]] `df`, then apply each stage and [[pin]] its output:
     * {{{

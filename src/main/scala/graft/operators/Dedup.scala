@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.{bloom_build_native, jaro_winkler, minhash_sig, mmh3, simhash64}
+import graft.functions.{Fixpoint, bloom_build_native, jaro_winkler, minhash_sig, mmh3, simhash64}
 import graft.operators.TextAnalysis.{normalized, shingles, tokens}
 
 /** Deduplication operators over the `documents` table — the core of an
@@ -841,9 +841,10 @@ object Dedup {
     val pairs = rawPairs
       .select(col("doc_a"), col("doc_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // symmetrized pair edges, named `(v, u)` for the shared round body
     val edges = pairs
       .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .toDF("src", "dst")
+      .toDF("v", "u")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // right-sized round width (r17, VERDICT r16 #3 / guide §2.2 — the
@@ -851,72 +852,18 @@ object Dedup {
     // label-propagation rounds exchange a doc-keyed pair relation whose
     // size is now measured (the count also materializes the pair/edge
     // caches the loop reads); small candidate sets run their rounds at a
-    // narrow width instead of the session default, big runs keep the
-    // session width (rs eq spark)
-    val spark = docs.sparkSession
+    // narrow width instead of the session default
     val nEdgeRows = edges.count()
-    val rs = graft.functions.Staging.roundSession(spark, nEdgeRows)
-    val edgesR =
-      if (rs eq spark) edges
-      else org.apache.spark.sql.graft.Bridge.pinInternal(
-        edges.coalesce(graft.functions.Staging.roundWidth(spark, nEdgeRows)),
-        rs)
-    var labels = edgesR.select(col("src").as("v")).distinct()
-      .withColumn("label", col("v"))
-    var persisted: Option[DataFrame] = None
-    var converged = false
-    // label-sum fixed-point detection (r17, the [[Graph.connectedComponents]]
-    // convention): labels only ever decrease, so "round changed nothing" ⟺
-    // "exact decimal Σ label unchanged" — observed on the materializing
-    // count, no extra job, and no `__old` column riding the per-round
-    // persists and the pointer-jump self-join exchange (8 B/row narrower)
-    var prevSum: java.math.BigDecimal = null
-    while (!converged) {
-      val fromNbrs = edgesR
-        .join(labels.select(col("v").as("src"), col("label").as("nl")), "src")
-        .groupBy(col("dst").as("v")).agg(min("nl").as("nbr"))
-      val prop = labels.select(col("v"), col("label"))
-        .join(fromNbrs, Seq("v"), "left_outer")
-        .select(col("v"),
-          least(col("label"), coalesce(col("nbr"), col("label"))).as("label"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // pointer jumping: label <- label(label). One neighbor hop alone
-      // converges in DIAMETER rounds — a 1M-doc near-dup chain would take
-      // 1M passes over the edges; composing each round with a jump
-      // through the (much smaller) label relation halves the remaining
-      // chain every round, so convergence is O(log diameter). Sound
-      // because labels only ever decrease toward the component minimum,
-      // and every label value is itself a vertex of the label relation
-      // (labels start as own-ids and move through min folds of them).
-      //
-      // The jump SELF-JOINS the round's relation, so carrying its logical
-      // plan forward would double the plan every round — exponential
-      // analysis cost (observed: the driver stuck building a
-      // 2^rounds-node plan string). Re-basing the round's result on its
-      // own RDD truncates the LOGICAL plan to a leaf while keeping RDD
-      // lineage (fault tolerance recomputes through the persisted
-      // parents, unlike localCheckpoint which forfeits it), and the
-      // persist/unpersist pair below releases each superseded round
-      // deterministically instead of waiting on driver GC.
-      val jumped = prop.as("l1")
-        .join(prop.select(col("v").as("jv"), col("label").as("jl")).as("l2"),
-          col("l1.label") === col("jv"))
-        .select(col("l1.v").as("v"),
-          least(col("l1.label"), col("jl")).as("label"))
-      val obs = org.apache.spark.sql.Observation()
-      val next = org.apache.spark.sql.graft.Bridge.pinInternal(jumped, rs)
-        .observe(obs, coalesce(sum(col("label").cast("decimal(28,0)")),
-          lit(0).cast("decimal(28,0)")).as("lsum"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      next.count() // materializes next; the observation fires with it
-      val lsum = obs.get("lsum").asInstanceOf[java.math.BigDecimal]
-      prop.unpersist(false) // consumed by the jump, never read again
-      persisted.foreach(_.unpersist(false)) // superseded round
-      persisted = Some(next)
-      labels = next
-      converged = prevSum != null && lsum.compareTo(prevSum) == 0
-      prevSum = lsum
-    }
+    val loop = Fixpoint.rounds(docs.sparkSession, nEdgeRows)
+    val edgesR = loop.enter(edges)
+    // the connected-components round (min-label fold + pointer jump,
+    // [[Graph.minLabelJumpRound]]) run to the label-sum fixed point
+    val labels = loop.iterate(
+        edgesR.select(col("v").as("node")).distinct()
+          .withColumn("label", col("node")),
+        Int.MaxValue, Fixpoint.labelSum) { (cur, _) =>
+      Graph.minLabelJumpRound(edgesR, cur)
+    }(Fixpoint.sameSum)
     // the final labels are materialized; drop the scaffolding caches (the
     // result only recomputes through them if its own cache is evicted),
     // INCLUDING the pair relation's own inner persists (minhashLshPairs'
@@ -930,8 +877,8 @@ object Dedup {
     // lazily — register that ownership so callers (and composing
     // operators, via transfer) can release it
     graft.CacheScope.owns(
-      labels.select(col("v").as("doc_id"), col("label").as("cluster")),
-      persisted.toSeq: _*)
+      labels.state.select(col("node").as("doc_id"), col("label").as("cluster")),
+      labels.caches: _*)
   }
 
   /** Leakage-safe train/test splitting — the step between dedup and

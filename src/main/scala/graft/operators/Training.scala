@@ -156,16 +156,12 @@ object Training {
     setupRows.iterator.filter(_.getInt(0) >= 0).foreach(r =>
       mu(r.getInt(0)) = r.getLong(2).toDouble / nTrain)
 
-    // right-sized iteration width (r17, the roundSession treatment): each
+    // right-sized iteration width (r17, the Fixpoint round width): each
     // iteration is one scan+aggregate over the counted doc-feature cache;
     // at small corpora a session-width pass is task-scheduling overhead,
-    // at 100 TB rs eq spark and nothing changes
-    val rs = graft.functions.Staging.roundSession(spark, nTrain + nHoldout)
-    val docFeatsR =
-      if (rs eq spark) docFeats
-      else org.apache.spark.sql.graft.Bridge.pinInternal(
-        docFeats.coalesce(graft.functions.Staging.roundWidth(spark,
-          nTrain + nHoldout)), rs)
+    // at 100 TB the rounds keep the session width and nothing changes
+    val docFeatsR = graft.functions.Fixpoint.rounds(spark, nTrain + nHoldout)
+      .enter(docFeats)
     val train = docFeatsR.where(!col("is_holdout"))
 
     var w = Array.fill(dim)(0.0)

@@ -37,7 +37,7 @@ object Bridge {
     * `target`'s conf while its rows still compute through `df`'s own
     * execution (caches included). Used by the iterative loops to run
     * their per-round exchanges in a right-sized child session
-    * ([[graft.functions.Staging.roundSession]]) without re-keying the
+    * ([[graft.functions.Fixpoint.rounds]]) without re-keying the
     * outer session's conf. */
   def pinInternal(df: DataFrame,
       target: org.apache.spark.sql.SparkSession): DataFrame = {

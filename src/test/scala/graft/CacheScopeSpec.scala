@@ -90,13 +90,30 @@ class CacheScopeSpec extends SparkSuite {
     val events = Seq(10L, 20L, 10L, 30L).zipWithIndex.map {
       case (u, i) => (1000000000L * i, i.toLong, u, "c", 1.0, "{}")
     }.toDF("ts", "event_id", "user_id", "event_type", "value", "props")
-    val pr = graft.operators.Graph.pagerank(events, iters = 2)
-    assert(pr.count() > 0)
-    CacheScope.release(pr)
-    val leaked = spark.sparkContext.getPersistentRDDs
-    assert(leaked.isEmpty,
-      s"pagerank release left ${leaked.size} persisted RDD(s) behind")
-    spark.catalog.clearCache()
+    val base = (1 to 40).map(i => s"w$i")
+    val docs = Seq(
+      (1L, base.mkString(" ")),
+      (2L, (base.take(38) :+ "changed").mkString(" ")),
+      (3L, (1 to 40).map(i => s"z$i").mkString(" ")))
+      .toDF("doc_id", "text")
+    import graft.operators.{Dedup, Graph}
+    val lanes: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pagerank" -> (() => Graph.pagerank(events, iters = 2)),
+      "personalizedPagerank" -> (() =>
+        Graph.personalizedPagerank(events, col("node") === 10L, iters = 2)),
+      "labelPropagation" -> (() => Graph.labelPropagation(events, iters = 2)),
+      "connectedComponents" -> (() => Graph.connectedComponents(events)),
+      "bfsHops" -> (() => Graph.bfsHops(events, col("node") === 10L, hops = 2)),
+      "nearDupClusters" -> (() => Dedup.nearDupClusters(docs)))
+    lanes.foreach { case (name, lane) =>
+      val result = lane()
+      assert(result.count() > 0, name)
+      CacheScope.release(result)
+      val leaked = spark.sparkContext.getPersistentRDDs
+      assert(leaked.isEmpty,
+        s"$name release left ${leaked.size} persisted RDD(s) behind")
+      spark.catalog.clearCache()
+    }
   }
 
   test("composed dedup operators leave no unowned persists behind: one " +

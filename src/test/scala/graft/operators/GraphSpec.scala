@@ -427,6 +427,8 @@ class GraphSpec extends SparkSuite {
     // fully finalized operator: bounded local result, NOTHING resident
     Graph.linkPrediction(ev, topK = 5).collect()
     assert(resident === base, "linkPrediction left resident caches")
+    Graph.modularity(ev, iters = 2).collect()
+    assert(resident === base, "modularity left resident caches")
     // result-cache operators: at most ONE resident entry after
     // consumption — the operator's own materialized result (node-sized),
     // never the edge-sized preps; clearCache returns to baseline.

@@ -451,6 +451,26 @@ class TextDedupSpec extends SparkSuite {
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 8L -> 8L, 9L -> 8L))
   }
 
+  test("nearDupClusters cache lifecycle: only the final label round stays " +
+      "resident") {
+    // the pair and edge preps and every superseded round are released
+    // before return; at most the returned labels' own cache may remain,
+    // and clearCache returns to the baseline
+    def resident: Int = spark.sparkContext.getPersistentRDDs.size
+    spark.catalog.clearCache()
+    val base = resident
+    val chain = baseWords.take(59) :+ "edit1"
+    val d = docs(
+      (1L, baseWords.mkString(" ")),
+      (2L, chain.mkString(" ")),
+      (3L, (baseWords.take(58) ++ Seq("edit1", "edit2")).mkString(" ")))
+    assert(Dedup.nearDupClusters(d).collect().length === 3)
+    assert(resident <= base + 1,
+      s"nearDupClusters left ${resident - base} resident caches (max 1)")
+    spark.catalog.clearCache()
+    assert(resident === base, "nearDupClusters residue survived clearCache")
+  }
+
   test("packSequences: running-total bins with correct offsets") {
     val d = docs(
       (1L, "a b c"),        // 3 tokens, cum 3  -> seq 0 offset 0
