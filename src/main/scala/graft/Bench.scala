@@ -38,7 +38,7 @@ import org.apache.spark.sql.SparkSession
   *    measured suite runs `SPARK_GRAFT_DRAWS` times (default 3) in one
   *    process, and the OFFICIAL per-query number is the MEDIAN of its
   *    per-draw values (one run each). Draws ≥ 2 are LIGHT (r10): only queries above
-  *    `SPARK_GRAFT_LIGHT_THRESH` (default 2.0s) re-measure — the
+  *    [[LightThresh]] (2.0s) re-measure — the
   *    light tail keeps its full-draw-1 value — so a second draw
   *    fits the budget on a loaded host and the driver's artifact is a
   *    median where a median can matter (r9: the driver admitted only
@@ -86,7 +86,7 @@ import org.apache.spark.sql.SparkSession
   *  - PROTOCOL FROZEN (r13, VERDICT r12 ask #1). The measurement channel
   *    is FINAL as configured in r12: gc-off hygiene, ONE timed run per
   *    query per draw, cross-draw MEDIAN for the heavy set
-  *    (> SPARK_GRAFT_LIGHT_THRESH, default 2.0s), MIN-of-2 when the
+  *    (> [[LightThresh]], 2.0s), MIN-of-2 when the
   *    light tail's single re-measure gives a query exactly two samples,
   *    streaming-last deterministic order, 3-draw / 1800s-budget
   *    admission. Three consecutive estimator changes (r10 min-of-3 →
@@ -99,9 +99,20 @@ import org.apache.spark.sql.SparkSession
   *    shape; exchange bytes are the cluster-network half local[32]
   *    can't time). Captured after each run from the [[StageTracer]],
   *    after the clock stops — the estimator is untouched.
+  *
+  * Usage: `runMain graft.Bench [--force] [name,name,...]`. The names
+  * restrict the run to those registered queries; an unknown name fails
+  * the run before any session starts. The environment knobs it reads
+  * (cores, data dir, draws, budget, forced traces) are parsed and checked
+  * once by [[Config]].
   */
 object Bench {
   private val warmupDir = "/root/testdata/sf0.001"
+
+  /** Draw-1 seconds above which a query re-measures in later draws. */
+  private val LightThresh = 2.0
+
+  private val usage = "usage: runMain graft.Bench [--force] [name,name,...]"
 
   /** Median (numeric: mean of the two middles for even counts). */
   private[graft] def median(xs: Seq[Double]): Double = {
@@ -153,7 +164,7 @@ object Bench {
     // one random later query's timing per run — flush here, untimed
     try new ProcessBuilder("sync").inheritIO().start().waitFor()
     catch { case _: Exception => }
-    // NO hygiene System.gc() by default since r12. It was added when
+    // NO hygiene System.gc() since r12. It was added when
     // earlier queries' heap debris surfaced as collection pauses inside
     // random queries (r8: a2_indexed_equiv 7.2s mid-suite vs 2.4s) —
     // but a full GC also UNLOADS prior queries' generated classes, and
@@ -168,10 +179,7 @@ object Bench {
     // gc-off protocol 13% faster in total (310.3 vs 356.8s), ~100s less
     // wall per full draw, worst single-query regression +0.6s, and the
     // original a2 pause case IMPROVED (1.89 → 1.58s) — the 24g G1 heap
-    // absorbs the debris incrementally. SPARK_GRAFT_BENCH_GC=on
-    // restores the old protocol for A/B.
-    if (sys.env.get("SPARK_GRAFT_BENCH_GC").exists(_.equalsIgnoreCase("on")))
-      System.gc()
+    // absorbs the debris incrementally.
     // drain in-flight listener events from the PREVIOUS query before
     // clearing, so its late stage-completions can't leak into this
     // query's byte/trace window (untimed — the clock hasn't started)
@@ -195,11 +203,13 @@ object Bench {
     // %.3f renders "0,42" and the artifact stops being JSON. One global
     // default beats spot-fixing each field (the f1-helper lesson).
     java.util.Locale.setDefault(java.util.Locale.ROOT)
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val force = args.contains("--force")
+    val (flags, positional) = args.partition(_.startsWith("--"))
+    if (flags.exists(_ != "--force") || positional.length > 1) Config.usage(usage)
+    val force = flags.nonEmpty
     // optional local-iteration filter: bench only the named queries
-    val only: Option[Set[String]] = args.filterNot(_.startsWith("--"))
-      .headOption.map(_.split(",").map(_.trim).toSet)
+    val only = positional.headOption.map(Config.queryNames("Bench query names", _).toSet)
+    val cfg = Config.env
+    val sfDir = cfg.sfDir
     // pre-flight host-load disclosure (VERDICT r14 ask #3): the r14
     // driver official sat 10% above the same build's quiet-window number
     // purely on host load; carrying launch loadavg in EVERY emitted
@@ -211,33 +221,7 @@ object Bench {
     // belt-and-braces on top of the Locale.ROOT default above (a future
     // caller invoking the suite without main() keeps a valid artifact)
     val loadavgJson = f"$loadavg0%.2f".replace(",", ".")
-    val draws = sys.env.getOrElse("SPARK_GRAFT_DRAWS", "3").toInt.max(1)
-    val budgetSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1800").toDouble
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // date_format / window boundaries must render identically to the
-      // UTC-based Verify run regardless of host timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the status stores retain plan graphs/metrics per execution even
-      // with the UI off; across 100+ measured queries that accrual becomes
-      // late-run GC pressure that inflates the LAST queries' times — keep
-      // the retention tiny, the bench never reads it back
-      .config("spark.sql.ui.retainedExecutions", "5")
-      // drained AvailableNow streams leave their state-store providers
-      // loaded; the maintenance task's periodic snapshot/cleanup wave over
-      // all of them steals cores from whatever query it lands on — push it
-      // past the bench horizon (checkpoints here are throwaway)
-      .config("spark.sql.streaming.stateStore.maintenanceInterval", "1h")
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "50")
-      .config("spark.ui.retainedTasks", "500")
-      .config("spark.sql.warehouse.dir", s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = cfg.session()
 
     // slow-run stage tracer (r11 ask #1): reference medians come from the
     // committed artifact, read before this run overwrites it
@@ -255,16 +239,7 @@ object Bench {
     // isolating the st* block at the end keeps every batch query's number
     // clean and makes ordering stable across rounds. (Map iteration order
     // would otherwise reshuffle with every added query.)
-    // A/B order-experiment knob (VERDICT r13 ask #3, kernel-warmth
-    // residue): SPARK_GRAFT_FAMILY_FIRST=<prefix> moves the matching
-    // queries to the FRONT of every draw, so a family can be measured
-    // cold-start vs late-suite under the otherwise-identical frozen
-    // channel. Absent (every official run) the order is byte-identical
-    // to r12/r13: alphabetical, streaming last.
-    val familyFirst = sys.env.get("SPARK_GRAFT_FAMILY_FIRST")
-    val selected = selected0.toSeq.sortBy { case (n, _) =>
-      (!familyFirst.exists(n.startsWith), n.startsWith("st"), n)
-    }
+    val selected = selected0.toSeq.sortBy { case (n, _) => (n.startsWith("st"), n) }
 
     if (new java.io.File(warmupDir).isDirectory) {
       selected.foreach { case (name, fn) =>
@@ -292,20 +267,18 @@ object Bench {
     // was a single cold draw (ndraws:1) because a FULL draw's wall clock
     // — measured time plus 252 × (clearCache + sync + gc) hygiene — blew
     // the admission check for draw 2. Draws ≥ 2 therefore re-measure only
-    // the queries whose draw-1 official exceeds `lightThresh` (default
+    // the queries whose draw-1 official exceeds `LightThresh` (first
     // 1.0s; r9 data: 127 of 252 queries carrying 292 of 371 measured
     // seconds), reusing the draw-1 value for the sub-second tail where a
     // cross-draw median cannot change the total materially. Admission for
     // the next draw is predicted from the per-query WALL cost actually
     // observed (hygiene included), not from the last draw's full wall.
-    // default 2.0s (raised from 1.0 after the first r10 full run): at
+    // 2.0s (raised from 1.0 after the first r10 full run): at
     // 1.0 the light set was ~130 queries whose observed wall predicted
     // just over the remaining budget on a loaded host — the exact
     // regression this protocol exists to prevent. At 2.0 the light set
     // is the ~45-query heavy tail (where cross-draw medians actually
     // move the total) and draw 2 admits with ~200s margin.
-    val lightThresh =
-      sys.env.getOrElse("SPARK_GRAFT_LIGHT_THRESH", "2.0").toDouble
     case class QDraw(sec: Double, ok: Boolean, runs: Seq[Double],
         wall: Double, bytes: Option[StageTracer.Bytes] = None)
     val benchT0 = System.nanoTime()
@@ -326,8 +299,7 @@ object Bench {
     // not trivially small), or 10s absolute for queries with no archive
     // yet; SPARK_GRAFT_TRACE=name1,name2|all forces tracing regardless
     // (targeted diagnosis runs)
-    val forceTrace: Set[String] = sys.env.get("SPARK_GRAFT_TRACE")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty)
+    val forceTrace = cfg.trace
     def shouldTrace(name: String, sec: Double, ok: Boolean): Boolean =
       ok && tracesLeft > 0 &&
         (forceTrace(name) || forceTrace("all") || (baseline.get(name) match {
@@ -369,12 +341,12 @@ object Bench {
         drawsDone.reverseIterator.flatMap(_.get(n).map(_.wall))
           .nextOption().getOrElse(0.0)
       }.sum
-    while (drawsDone.size < draws
-        && (drawsDone.isEmpty || elapsed + predictedNextWall <= budgetSec)) {
+    while (drawsDone.size < cfg.draws
+        && (drawsDone.isEmpty || elapsed + predictedNextWall <= cfg.budgetSec)) {
       drawsDone += oneDraw(skip)
       if (drawsDone.size == 1)
         skip = drawsDone.head.collect {
-          case (n, q) if q.ok && q.sec <= lightThresh => n
+          case (n, q) if q.ok && q.sec <= LightThresh => n
         }.toSet
       System.err.println(f"[bench] draw ${drawsDone.size} done " +
         f"(${drawsDone.last.size} queries, measured " +
@@ -384,7 +356,7 @@ object Bench {
     val plannedDraws = drawsDone.size
 
     // LIGHT-TAIL SECOND PASS (ADVICE r11 #3): queries at or under
-    // lightThresh are otherwise draw-1-only — one cold run, no outlier
+    // LightThresh are otherwise draw-1-only — one cold run, no outlier
     // protection, and host noise is one-sided (r5 data: up to 4× on
     // sub-3s first draws), so the freeze biases the official total only
     // UPWARD, compounding across the ~230-query light tail. If budget
@@ -403,7 +375,7 @@ object Bench {
           drawsDone.reverseIterator.flatMap(_.get(n).map(_.wall))
             .nextOption().getOrElse(0.0)
         }.sum
-      if (elapsed + predictedLightWall <= budgetSec) {
+      if (elapsed + predictedLightWall <= cfg.budgetSec) {
         drawsDone += oneDraw(heavy)
         lightPasses = 1
         System.err.println(f"[bench] light-tail pass done " +

@@ -1,35 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Plan diagnostics: print the formatted physical plan (and optionally
-  * time the noop-sink execution) of registered queries.
+/** Plan diagnostics: print the formatted physical plan of registered
+  * queries. To time chosen queries, run `graft.Bench <names>`.
   *
-  * Usage: `runMain graft.Explain <sfDir> [queryName ...]`
-  * (no names → all queries; set GRAFT_EXPLAIN_TIME=1 to also execute).
+  * Usage: `runMain graft.Explain <sfDir> [name ...]` (no names → all
+  * queries; names may also be comma-separated; an unknown name fails).
   */
 object Explain {
+  private val usage = "usage: runMain graft.Explain <sfDir> [name ...]"
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val time = sys.env.get("GRAFT_EXPLAIN_TIME").contains("1")
+    val (sfDir, names) = args.toSeq match {
+      case Seq(sf) => (sf, SparkEntry.queries.keys.toSeq)
+      case Seq(sf, names @ _*) =>
+        (sf, Config.queryNames("Explain query names", names.mkString(",")))
+      case _ => Config.usage(usage)
+    }
+    val spark = Config.env.session()
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
       println(s"\n===== $name =====")
-      df.explain("formatted")
-      if (time) {
-        val t0 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        println(f"[time] $name: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
+      SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

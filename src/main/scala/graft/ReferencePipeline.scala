@@ -40,18 +40,8 @@ object ReferencePipeline {
       case Array(tsvDir, pStr, outDir) => pStr.toDoubleOption.map((tsvDir, _, outDir))
       case _ => None
     }
-    val (tsvDir, p, outDir) = parsed.getOrElse {
-      System.err.println(usage)
-      sys.exit(2)
-    }
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (tsvDir, p, outDir) = parsed.getOrElse(Config.usage(usage))
+    val spark = Config.env.session()
     try run(spark, tsvDir, p, outDir).foreach(println)
     finally spark.stop()
   }

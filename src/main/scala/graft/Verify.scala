@@ -1,24 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  *
+  * Usage: `runMain graft.Verify <sfDir> <outDir> [name,name,...]`. The
+  * optional names (local iteration only) restrict the dump to those
+  * registered queries; an unknown name fails the run. */
 object Verify {
+  private val usage = "usage: runMain graft.Verify <sfDir> <outDir> [name,name,...]"
+
   def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
-    // Optional third arg (local iteration only; the driver passes two):
-    // comma-separated query names to restrict the dump to.
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").map(_.trim).toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (sfDir, outDir, only) = args match {
+      case Array(sf, out) => (sf, out, None)
+      case Array(sf, out, names) =>
+        (sf, out, Some(Config.queryNames("Verify query names", names).toSet))
+      case _ => Config.usage(usage)
+    }
+    val spark = Config.env.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -28,10 +28,12 @@ import graft.functions.{BloomBuildAgg, BloomMightContain}
   * small side — rows that could never join (Inner/LeftSemi). False
   * positives merely survive to the join, which re-checks exactly.
   *
-  * Off by default; enable with `spark.graft.runtimeBloom.enabled=true`.
-  * Sizing uses the small side's size-in-bytes estimate (row estimate ×
-  * safety factor) — overestimation only wastes filter bits, never
-  * correctness.
+  * Off by default; enable with `spark.graft.runtimeBloom.enabled=true`
+  * (`true`/`false` in any case). `maxBuildBytes`/`minProbeBytes` are
+  * longs ≥ 0 and `fpp` lies in (0, 1); any other value fails planning
+  * with a message naming the key. Sizing uses the small side's
+  * size-in-bytes estimate (row estimate × safety factor) —
+  * overestimation only wastes filter bits, never correctness.
   */
 case class InjectBloomRuntimeFilter(spark: SparkSession) extends Rule[LogicalPlan] {
 
@@ -40,8 +42,11 @@ case class InjectBloomRuntimeFilter(spark: SparkSession) extends Rule[LogicalPla
   private val minProbeKey = "spark.graft.runtimeBloom.minProbeBytes"     // big side floor
   private val fppKey = "spark.graft.runtimeBloom.fpp"
 
-  private def conf(key: String, default: String): String =
-    spark.conf.getOption(key).getOrElse(default)
+  private def conf[T](key: String, default: T, what: String)(read: String => Option[T]): T =
+    graft.Config.setting(key, spark.conf.getOption(key), default, what)(read)
+
+  private def bytes(key: String, default: Long): Long =
+    conf(key, default, "a long >= 0")(_.toLongOption.filter(_ >= 0))
 
   // Registered via injectPreCBORule: the batch runs ONCE (no fixed point),
   // after operator optimization (predicates already pushed, sizes
@@ -50,10 +55,10 @@ case class InjectBloomRuntimeFilter(spark: SparkSession) extends Rule[LogicalPla
   // machinery picks up the new ScalarSubquery exactly as it does for
   // Spark's own InjectRuntimeFilter.
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (conf(enabledKey, "false") != "true") return plan
-    val maxBuild = conf(maxBuildKey, (8L * 1024 * 1024).toString).toLong
-    val minProbe = conf(minProbeKey, (64L * 1024 * 1024).toString).toLong
-    val fpp = conf(fppKey, "0.05").toDouble
+    if (!conf(enabledKey, false, "true or false")(_.toBooleanOption)) return plan
+    val maxBuild = bytes(maxBuildKey, 8L * 1024 * 1024)
+    val minProbe = bytes(minProbeKey, 64L * 1024 * 1024)
+    val fpp = conf(fppKey, 0.05, "in (0, 1)")(_.toDoubleOption.filter(p => p > 0 && p < 1))
 
     plan.transformUp {
       case j @ Join(left, right, joinType, Some(cond), _)

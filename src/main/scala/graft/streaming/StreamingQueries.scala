@@ -30,75 +30,49 @@ object StreamingQueries {
     */
   private[streaming] def childSession(outer: SparkSession): SparkSession = {
     val spark = outer.newSession()
-    // 4 state partitions by default (r11, measured: the drained lane's
-    // cost is per-partition state-store commit rounds — a stream-stream
-    // join opens 4 stores per partition per batch, and even the EMPTY
+    // 4 state partitions (r11, measured: the drained lane's cost is
+    // per-partition state-store commit rounds — a stream-stream join
+    // opens 4 stores per partition per batch, and even the EMPTY
     // watermark-advance batch pays the full round. At sf0.1 the heavy
     // 6-query cohort medians 24.6s at width 4 vs ~30.8s at width 8 vs
     // 38.3s at width 16; width 2 adds <1.5s more but halves row-work
     // parallelism headroom). A cluster deployment sizes this to its key
-    // cardinality per query — the knob is env-tunable and frozen into
-    // each query's checkpoint, as the st5 scaladoc documents.
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4"))
+    // cardinality per query; the width is frozen into each query's
+    // checkpoint, as the st5 scaladoc documents.
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     // State width 4 bounds the per-batch store-commit round, but it must
     // not also choke the SOURCE scan: the r12 stage traces show the
     // dominant stages are the scan+map fronts (4 tasks, ~1s each) whose
     // split count comes from maxPartitionBytes, not shuffle width.
-    // Smaller splits widen the map side while the stateful exchange
-    // stays at 4. Env-tunable; a cluster deployment leaves this at the
-    // session default and gets its map width from real file counts.
-    spark.conf.set("spark.sql.files.maxPartitionBytes",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_SPLIT_BYTES", s"${2 * 1024 * 1024}"))
-    // Production-posture state store, DEFAULT ON (r7 verdict ask #5): the
-    // HDFS-backed provider keeps every version of every key's state on
-    // the JVM heap — fine at sf0.1, memory-unbounded at 100 TB. RocksDB
-    // keeps state off-heap/on-disk with incremental checkpointing, the
-    // store a cluster deployment runs (st10's transformWithState already
-    // REQUIRES it). Every stateful query in this object flows through
-    // this one choke point, so Verify/Bench/specs all exercise the real
-    // provider; SPARK_GRAFT_STATE_STORE=hdfs opts out for A/B timing.
-    if (!sys.env.get("SPARK_GRAFT_STATE_STORE").exists(_.equalsIgnoreCase("hdfs"))) {
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Changelog checkpointing (r12): a commit persists only the
-      // batch's delta; full snapshots move to the maintenance thread.
-      // Measured NEUTRAL at sf0.1 (heavy cohort 23.6s vs 23.3s — state
-      // here is KBs, so snapshot-vs-changelog doesn't move the floor),
-      // but it is the posture a production RocksDB deployment runs: at
-      // real state sizes the per-commit snapshot upload is the term that
-      // grows with state while the changelog grows only with the batch.
-      // Env-toggleable for A/B timing.
-      if (!sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG").exists(_.equalsIgnoreCase("off")))
-        spark.conf.set(
-          "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          "true")
-      // NOT adopted (r17): rocksdb.trackTotalNumberOfRows=false (blind
-      // state puts, no get-per-put for the row-count metric) measured
-      // NEUTRAL on the 8-query heavy stateful cohort at sf0.1 (17.6 vs
-      // 17.0 s totals, inside noise) — state here is KBs–MBs, so the
-      // extra GET never shows. Worth re-testing on a deployment with
-      // millions of state rows per partition; left at the default so the
-      // state-row telemetry stays real.
-    }
-    // Diagnostic tap (r17, measurement only — guide §1): with
-    // SPARK_GRAFT_STREAM_PROGRESS set, every micro-batch's progress JSON
-    // (the engine's own durationMs breakdown: triggerExecution,
-    // queryPlanning, walCommit, commitOffsets, addBatch, stateOperators)
-    // goes to stderr, so the per-drain fixed cost can be attributed to
-    // planning vs log I/O vs state commits instead of guessed at.
-    // Off (the default) this adds nothing to the drain path.
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROGRESS"))
-      spark.streams.addListener(
-        new org.apache.spark.sql.streaming.StreamingQueryListener {
-          override def onQueryStarted(e: org.apache.spark.sql.streaming
-              .StreamingQueryListener.QueryStartedEvent): Unit = ()
-          override def onQueryProgress(e: org.apache.spark.sql.streaming
-              .StreamingQueryListener.QueryProgressEvent): Unit =
-            System.err.println(s"[stream-progress] ${e.progress.json}")
-          override def onQueryTerminated(e: org.apache.spark.sql.streaming
-              .StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        })
+    // 2 MiB splits widen the map side while the stateful exchange stays
+    // at 4. A cluster deployment leaves this at the session default and
+    // gets its map width from real file counts.
+    spark.conf.set("spark.sql.files.maxPartitionBytes", s"${2 * 1024 * 1024}")
+    // Production-posture state store (r7 verdict ask #5): the HDFS-backed
+    // provider keeps every version of every key's state on the JVM heap —
+    // fine at sf0.1, memory-unbounded at 100 TB. RocksDB keeps state
+    // off-heap/on-disk with incremental checkpointing, the store a cluster
+    // deployment runs (st10's transformWithState already REQUIRES it).
+    // Every stateful query in this object flows through this one choke
+    // point, so Verify/Bench/specs all exercise the real provider.
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // Changelog checkpointing (r12): a commit persists only the batch's
+    // delta; full snapshots move to the maintenance thread. Measured
+    // NEUTRAL at sf0.1 (heavy cohort 23.6s vs 23.3s — state here is KBs,
+    // so snapshot-vs-changelog doesn't move the floor), but it is the
+    // posture a production RocksDB deployment runs: at real state sizes
+    // the per-commit snapshot upload is the term that grows with state
+    // while the changelog grows only with the batch.
+    spark.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    // NOT adopted (r17): rocksdb.trackTotalNumberOfRows=false (blind
+    // state puts, no get-per-put for the row-count metric) measured
+    // NEUTRAL on the 8-query heavy stateful cohort at sf0.1 (17.6 vs
+    // 17.0 s totals, inside noise) — state here is KBs–MBs, so the
+    // extra GET never shows. Worth re-testing on a deployment with
+    // millions of state rows per partition; left at the default so the
+    // state-row telemetry stays real.
     spark
   }
 
@@ -381,17 +355,11 @@ object StreamingQueries {
   def dsirScore(outer: SparkSession, dir: String,
       targetSources: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
-    val dbg = sys.env.contains("GRAFT_STREAM_DEBUG")
-    val t0 = System.nanoTime()
-    def mark(what: String): Unit = if (dbg)
-      System.err.println(f"[st15-phase] $what at ${(System.nanoTime - t0) / 1e9}%.2fs")
     val spark = childSession(outer)
     // no state store here (see scaladoc) — the width that matters is the
     // per-batch fold's aggregation, which wants the full core count
     spark.conf.set("spark.sql.shuffle.partitions",
       outer.sessionState.conf.numShufflePartitions)
-    mark("child session")
-    mark("schema read")
     // PID-scoped artifact path (two JVMs over the same dir must not
     // clobber each other's counts mid-read — the st9/st11 convention)
     val out = s"${sys.props("java.io.tmpdir")}/graft_st15_" +
@@ -426,7 +394,6 @@ object StreamingQueries {
         when(col("in_target") || col("kk.kind") === "u", lit(-1L))
           .otherwise(col("doc_id")).as("doc_id"),
         col("in_target"), col("kk.kind").as("kind"), col("kk.key").as("key"))
-    mark("plan built")
     // per-batch fold + append: each batch's counts are final for its
     // docs (doc-local, see scaladoc); model (-1) rows from different
     // batches re-aggregate at finish
@@ -440,13 +407,7 @@ object StreamingQueries {
       }
       .trigger(Trigger.AvailableNow())
       .start()
-    mark("stream started")
     q.awaitTermination()
-    mark("stream drained")
-    if (dbg) q.recentProgress.foreach { p =>
-      System.err.println(s"[st15-batch ${p.batchId}] rows=${p.numInputRows} " +
-        s"durations=${p.durationMs}")
-    }
     // The drained artifact feeds seven derivations (two uni/bi models,
     // the candidate relation, two totals). Materializing each model slice
     // as its own distributed branch cost a JOB PER BRANCH (six broadcast
@@ -461,7 +422,6 @@ object StreamingQueries {
     val modelRows = counts
       .groupBy("in_target", "kind", "key").agg(sum("c").as("c"))
       .collect()
-    mark("model collected")
     import spark.implicits._
     def uni(target: Boolean): Seq[(String, Long)] = modelRows.iterator
       .filter(r => r.getBoolean(0) == target && r.getString(1) == "u")
@@ -570,10 +530,6 @@ object StreamingQueries {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    if (sys.env.contains("GRAFT_STREAM_DEBUG")) q.recentProgress.foreach { p =>
-      System.err.println(s"[st5-batch ${p.batchId}] rows=${p.numInputRows} " +
-        s"durations=${p.durationMs}")
-    }
     spark.table(name)
       .groupBy(date_format(col("click_time"), "yyyy-MM-dd HH:00").as("hour"))
       .agg(count("*").as("n_conversions"))
@@ -1238,10 +1194,6 @@ object StreamingQueries {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    if (sys.env.contains("GRAFT_STREAM_DEBUG")) q.recentProgress.foreach { p =>
-      System.err.println(s"[st3-batch ${p.batchId}] rows=${p.numInputRows} " +
-        s"durations=${p.durationMs}")
-    }
     spark.table(name).orderBy("rating")
   }
 

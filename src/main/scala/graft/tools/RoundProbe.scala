@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Config
 
 /** Diagnostic: print the modularity trajectory (whose rows expose the LP
   * fixed-point round directly — frozen trailing rounds repeat the fixed
@@ -11,14 +11,8 @@ import org.apache.spark.sql.SparkSession
   */
 object RoundProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    if (args.isEmpty) Config.usage("usage: runMain graft.tools.RoundProbe <dir> [<dir> ...]")
+    val spark = Config.env.session()
     args.foreach { dir =>
       println(s"== modularity trajectory @ $dir ==")
       graft.operators.Graph

@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.Config
 
 /** Scaling-evidence data generator (SCALING.md's third point).
   *
@@ -158,15 +160,12 @@ object ScaleData {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(src, dst, factorS) = args.take(3)
-    val factor = factorS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (src, dst, factor) = args match {
+      case Array(s, d, f) if f.toIntOption.exists(_ > 0) => (s, d, f.toInt)
+      case _ => Config.usage(
+        "usage: runMain graft.tools.ScaleData <srcDir> <dstDir> <factor, an int >= 1>")
+    }
+    val spark = Config.env.session()
     val tables = keyCols.keys.toSeq ++ dims
     // domain offsets: one tiny max() job per domain-owning PK — shared by
     // every column in the domain so FK joins stay consistent per replica

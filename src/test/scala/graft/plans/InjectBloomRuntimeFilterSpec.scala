@@ -51,6 +51,39 @@ class InjectBloomRuntimeFilterSpec extends SparkSuite {
     assert(!plan.contains("bloom_might_contain"))
   }
 
+  test("enabled accepts true in any case") {
+    spark.conf.set("spark.graft.runtimeBloom.enabled", "TRUE")
+    spark.conf.set("spark.graft.runtimeBloom.maxBuildBytes", "1000000")
+    spark.conf.set("spark.graft.runtimeBloom.minProbeBytes", "1")
+    try {
+      val plan = big.join(small, "key").queryExecution.optimizedPlan.toString
+      assert(plan.contains("bloom_might_contain"))
+    } finally spark.conf.set("spark.graft.runtimeBloom.enabled", "false")
+  }
+
+  test("a garbled conf fails planning with a message naming its key") {
+    val bad = Seq(
+      "enabled" -> "yes",
+      "maxBuildBytes" -> "8m", "maxBuildBytes" -> "-1",
+      "minProbeBytes" -> "x", "minProbeBytes" -> "-1",
+      "fpp" -> "0", "fpp" -> "1", "fpp" -> "x")
+    bad.foreach { case (k, v) =>
+      val key = s"spark.graft.runtimeBloom.$k"
+      spark.conf.set("spark.graft.runtimeBloom.enabled", "true")
+      spark.conf.set(key, v)
+      try {
+        val e = intercept[Exception](
+          big.join(small, "key").queryExecution.optimizedPlan)
+        val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).map(_.getMessage).toSeq
+        assert(msgs.exists(m => m != null && m.contains(key)), s"$key=$v: $msgs")
+      } finally {
+        spark.conf.unset(key)
+        spark.conf.set("spark.graft.runtimeBloom.enabled", "false")
+      }
+    }
+  }
+
   test("no injection when the small side exceeds the build cap") {
     spark.conf.set("spark.graft.runtimeBloom.enabled", "true")
     spark.conf.set("spark.graft.runtimeBloom.maxBuildBytes", "1")

@@ -20,6 +20,11 @@ class RocksDbStateStoreSpec extends SparkSuite {
     assert(child.conf
       .get("spark.sql.streaming.stateStore.providerClass")
       .contains("RocksDBStateStoreProvider"))
+    // the other constants of the drained-stream posture
+    assert(child.conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(child.conf.get("spark.sql.files.maxPartitionBytes") === s"${2 * 1024 * 1024}")
+    assert(child.conf.get(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") === "true")
   }
 
   test("stateful drain writes RocksDB state artifacts and matches batch") {
