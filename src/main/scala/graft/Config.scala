@@ -52,6 +52,21 @@ final case class Config(cpus: Int, sfDir: String, draws: Int,
 
 object Config {
 
+  /** A child of `outer`: its own SQL confs, temp views and session state
+    * over the same SparkContext and cache manager. A new session starts
+    * from the options the session was built with, so the outer session's
+    * runtime SQL confs are copied over first (a conf tuned with
+    * `spark.conf.set` holds inside the child too), then `overrides`. */
+  def child(outer: SparkSession, overrides: (String, String)*): SparkSession = {
+    val child = outer.newSession()
+    val conf = child.sessionState.conf
+    outer.sessionState.conf.getAllConfs.foreach { case (k, v) =>
+      if (conf.getConfString(k, null) != v) conf.setConfString(k, v)
+    }
+    overrides.foreach { case (k, v) => child.conf.set(k, v) }
+    child
+  }
+
   /** The process environment, parsed on first use: the only read of it. */
   lazy val env: Config = parse(sys.env)
 

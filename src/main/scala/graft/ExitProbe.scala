@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Minimal reproduction of the r8 shutdown failure shape, as a probe main
   * for `CleanExitSpec`: run one RocksDB-backed stateful streaming query
@@ -22,14 +21,9 @@ object ExitProbe {
     (1L to 200L).map(i => (i % 7, i)).toDF("k", "v")
       .write.mode("overwrite").parquet(s"$dir/src")
     val schema = spark.read.parquet(s"$dir/src").schema
-    val q = spark.readStream.schema(schema).parquet(s"$dir/src")
-      .groupBy("k").agg(count(lit(1)).as("n"))
-      .writeStream.format("memory").queryName("exit_probe")
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val n = spark.table("exit_probe").count()
+    val n = graft.streaming.StreamingQueries.drainTable("exit_probe",
+      spark.readStream.schema(schema).parquet(s"$dir/src")
+        .groupBy("k").agg(count(lit(1)).as("n")), "complete").count()
 
     CleanExit.teardown(spark)
     println(s"PROBE_OK $n")

@@ -176,7 +176,7 @@ object SparkEntry {
     * runs every builder in an untimed setup pass so the timed region of a
     * round-trip query measures the scan/probe, not the sink (the sink
     * operators' own timings live in the k-queries that ARE sinks). */
-  def fixtures: Map[String, (SparkSession, String) => String] = ListMap(
+  lazy val fixtures: Map[String, (SparkSession, String) => String] = ListMap(
     "filters" -> ((s, dir) => ensureFixture(dir, "filters") { path =>
       FilterStore.save(
         BloomPipeline.buildFilters(Ratings.trainFromLineitem(s, dir), defaultP), path)
@@ -352,7 +352,7 @@ object SparkEntry {
     ).orderBy("rating")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = ListMap(
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = ListMap(
     // --- S/P: scans, projections, filters, limits, splits (SURVEY §2.1-2.2)
     "p1_parse_project" -> ((s, dir) =>
       Ratings.fromLineitem(s, dir).orderBy("movieId")),
@@ -868,7 +868,7 @@ object SparkEntry {
       // top-2 customers — the parser/analyzer turn the per-row subquery
       // into a LateralJoin the optimizer can reason about; the identical
       // SQL runs on DuckDB, so the decorrelation is oracle-checked.
-      val sp = s.newSession()
+      val sp = Config.child(s)
       Tables(sp, dir, "nation").createOrReplaceTempView("nation_v")
       Tables(sp, dir, "customer").createOrReplaceTempView("customer_v")
       sp.sql("""SELECT n.n_name, l.c_name, l.c_acctbal
@@ -883,7 +883,7 @@ object SparkEntry {
       // generated by the recursion itself (e3 builds the same spine with
       // sequence()), left-joined to hour-of-day event counts so empty
       // hours surface as zero. Identical SQL is the DuckDB oracle.
-      val sp = s.newSession()
+      val sp = Config.child(s)
       Tables(sp, dir, "events").createOrReplaceTempView("events_v")
       sp.sql("""WITH RECURSIVE hours(hr) AS (
                |  SELECT 0 UNION ALL SELECT hr + 1 FROM hours WHERE hr < 23)
@@ -900,7 +900,7 @@ object SparkEntry {
       // schema-on-read shape for event payloads. The oracle extracts the
       // same value with engine-neutral string functions, so the variant
       // path is value-checked without assuming DuckDB's JSON extension.
-      val sp = s.newSession()
+      val sp = Config.child(s)
       Tables(sp, dir, "events").createOrReplaceTempView("events_vv")
       sp.sql("""SELECT event_type,
                |       count(*) AS n,
@@ -912,7 +912,7 @@ object SparkEntry {
       // the SQL front door: correlated EXISTS through the parser; the
       // analyzer decorrelates it to a left-semi join (same physical shape
       // as j4) — no per-row subquery execution survives to the plan
-      val sp = s.newSession()
+      val sp = Config.child(s)
       Tables(sp, dir, "orders").createOrReplaceTempView("orders_v")
       Tables(sp, dir, "lineitem").createOrReplaceTempView("lineitem_v")
       sp.sql("""SELECT o_orderpriority, count(*) AS n
@@ -926,7 +926,7 @@ object SparkEntry {
       // correlated scalar-aggregate subquery -> decorrelated to one
       // aggregate + join (RewriteCorrelatedScalarSubquery); compares each
       // customer to their segment's average balance
-      val sp = s.newSession()
+      val sp = Config.child(s)
       Tables(sp, dir, "customer").createOrReplaceTempView("customer_v")
       sp.sql("""SELECT c_mktsegment, count(*) AS n_above
                |FROM customer_v c
@@ -1068,11 +1068,10 @@ object SparkEntry {
     "x2_runtime_bloom" -> ((outer, dir) => {
       // isolated session: extraOptimizations + confs live and die here, so
       // nothing leaks into the shared session even under concurrent queries
-      val s = outer.newSession()
+      val s = Config.child(outer, "spark.graft.runtimeBloom.enabled" -> "true",
+        "spark.graft.runtimeBloom.minProbeBytes" -> "1")
       s.experimental.extraOptimizations =
         s.experimental.extraOptimizations :+ graft.plans.InjectBloomRuntimeFilter(s)
-      s.conf.set("spark.graft.runtimeBloom.enabled", "true")
-      s.conf.set("spark.graft.runtimeBloom.minProbeBytes", "1")
       val big = Tables(s, dir, "lineitem")
         .select(concat(lit("p"), col("l_partkey")).as("pk"), col("l_quantity"))
       val small = Tables(s, dir, "part").where(col("p_size") <= 5)
@@ -2828,14 +2827,14 @@ object SparkEntry {
       // PQ training/encode shuffles are tiny (n·m rows, m·ksub groups) —
       // right-size their partition count in a child session, like the
       // streaming state stores
-      val c = s.newSession(); c.conf.set("spark.sql.shuffle.partitions", "8")
+      val c = Config.child(s, "spark.sql.shuffle.partitions" -> "8")
       val cb = Similarity.loadPqCodebook(c, fixtures("pq_codebook")(c, dir))
       Similarity.pqTopK(Tables(c, dir, "embeddings"),
         col("vec_id") % 50 === 0, simK, pretrained = Some(cb))
         .orderBy("query_id", "rank")
     }),
     "sim_ann_pq_recall" -> ((s, dir) => {
-      val c = s.newSession(); c.conf.set("spark.sql.shuffle.partitions", "8")
+      val c = Config.child(s, "spark.sql.shuffle.partitions" -> "8")
       val emb = Tables(c, dir, "embeddings")
       val cb = Similarity.loadPqCodebook(c, fixtures("pq_codebook")(c, dir))
       Similarity.recallVsExact(emb,
@@ -2846,14 +2845,14 @@ object SparkEntry {
     "sim_ann_ivfpq" -> ((s, dir) => { // approximate by design -> rows-only
       // IVF restricts the lists scanned, PQ scores inside a list — the
       // production ANN composition; small-shuffle child session like pq
-      val c = s.newSession(); c.conf.set("spark.sql.shuffle.partitions", "8")
+      val c = Config.child(s, "spark.sql.shuffle.partitions" -> "8")
       val cb = Similarity.loadPqCodebook(c, fixtures("pq_codebook")(c, dir))
       Similarity.ivfPqTopK(Tables(c, dir, "embeddings"),
         col("vec_id") % 50 === 0, simK, pretrained = Some(cb))
         .orderBy("query_id", "rank")
     }),
     "sim_ann_ivfpq_recall" -> ((s, dir) => {
-      val c = s.newSession(); c.conf.set("spark.sql.shuffle.partitions", "8")
+      val c = Config.child(s, "spark.sql.shuffle.partitions" -> "8")
       val emb = Tables(c, dir, "embeddings")
       val cb = Similarity.loadPqCodebook(c, fixtures("pq_codebook")(c, dir))
       Similarity.recallVsExact(emb,
@@ -2865,14 +2864,14 @@ object SparkEntry {
       // residual-encoded IVF×PQ (the FAISS-default refinement): codes
       // spend the codebook on the within-list residual distribution;
       // the codebook loads from the offline TRAIN artifact, like ivfpq
-      val c = s.newSession(); c.conf.set("spark.sql.shuffle.partitions", "8")
+      val c = Config.child(s, "spark.sql.shuffle.partitions" -> "8")
       val cb = Similarity.loadPqCodebook(c, fixtures("pq_codebook_res")(c, dir))
       Similarity.ivfPqResidualTopK(Tables(c, dir, "embeddings"),
         col("vec_id") % 50 === 0, simK, pretrained = Some(cb))
         .orderBy("query_id", "rank")
     }),
     "sim_ann_ivfpq_res_recall" -> ((s, dir) => {
-      val c = s.newSession(); c.conf.set("spark.sql.shuffle.partitions", "8")
+      val c = Config.child(s, "spark.sql.shuffle.partitions" -> "8")
       val emb = Tables(c, dir, "embeddings")
       val cb = Similarity.loadPqCodebook(c, fixtures("pq_codebook_res")(c, dir))
       Similarity.recallVsExact(emb,
@@ -2948,7 +2947,7 @@ object SparkEntry {
       graft.streaming.StreamingQueries.statefulUserCounts(s, dir)),
     "st10_transform_state" -> ((s, dir) => // transformWithState + MapState
       graft.streaming.StreamingQueries.transformWithStateCounts(s, dir)),
-    "st11_multibatch" -> ((s, dir) => // state accumulates across 4 batches
+    "st11_multibatch" -> ((s, dir) => // state accumulates across 2 batches
       graft.streaming.StreamingQueries.multiBatchState(s, dir)),
     "st12_stream_sessions" -> ((s, dir) => // watermark-finalized sessions
       graft.streaming.StreamingQueries.streamSessions(s, dir)),
@@ -3177,7 +3176,7 @@ object SparkEntry {
       NaiveBayes.evaluate(Tables(s, dir, "documents"), memoKey = dir))
   )
 
-  def oracleSql: Map[String, String] = {
+  lazy val oracleSql: Map[String, String] = {
     val li = Ratings.fromLineitemSql
     val ev = Ratings.fromEventsSql
     val train = Ratings.splitSql("<")
@@ -3413,7 +3412,7 @@ object SparkEntry {
           |  FROM lineitem)
           |WHERE l_orderkey <= 100
           |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin,
-      "st11_multibatch" -> // 4-batch delta stream sums to the batch count
+      "st11_multibatch" -> // 2-batch delta stream sums to the batch count
         """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
           |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
       "st12_stream_sessions" -> // only watermark-finalized sessions emit:
@@ -4162,7 +4161,7 @@ object SparkEntry {
           |  ON p.user_id = d.d_user AND p.probe_us >= d.valid_from_us
           |  AND (d.valid_to_us IS NULL OR p.probe_us < d.valid_to_us)
           |ORDER BY p.user_id, p.probe_event_id""".stripMargin,
-      "st18_stream_mv" -> // 4-batch MV merge chain == full recompute
+      "st18_stream_mv" -> // 2-batch MV merge chain == full recompute
         """SELECT epoch_ns(ts) // 3600000000000 AS hr, event_type,
           |       count(*) AS n, round(sum(value), 2) AS sum_value
           |FROM events GROUP BY 1, 2 ORDER BY hr, event_type""".stripMargin,

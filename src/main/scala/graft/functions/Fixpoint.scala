@@ -85,23 +85,13 @@ object Fixpoint {
 
   /** A child session whose `spark.sql.shuffle.partitions` is `w`, or the
     * outer session itself when `w` is already its width (big runs plan
-    * exactly as without the child). `newSession()` starts from the
-    * options the session was built with, so the outer session's runtime
-    * SQL confs are copied over first — a conf tuned with `spark.conf.set`
-    * holds inside the rounds too. The shared CacheManager makes
-    * persist/unpersist and clearCache work identically across parent and
-    * child. */
+    * exactly as without the child). The child keeps the outer session's
+    * runtime SQL confs ([[graft.Config.child]]). The shared CacheManager
+    * makes persist/unpersist and clearCache work identically across
+    * parent and child. */
   private def roundSession(spark: SparkSession, w: Int): SparkSession =
     if (w == spark.sessionState.conf.numShufflePartitions) spark
-    else {
-      val child = spark.newSession()
-      val conf = child.sessionState.conf
-      spark.sessionState.conf.getAllConfs.foreach { case (k, v) =>
-        if (conf.getConfString(k, null) != v) conf.setConfString(k, v)
-      }
-      child.conf.set("spark.sql.shuffle.partitions", w.toString)
-      child
-    }
+    else graft.Config.child(spark, "spark.sql.shuffle.partitions" -> w.toString)
 
   /** `agg`'s value from `obs`, waiting at most [[MetricWait]]; computed
     * over `df` with one job when the metric never arrives. */

@@ -1,8 +1,13 @@
 package graft.streaming
 
+import java.util.concurrent.{ConcurrentHashMap, TimeoutException}
+
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, Trigger}
 
 /** Batch-equivalent streaming queries: the same transformations the batch
   * engine registers, executed through Structured Streaming's incremental
@@ -15,8 +20,97 @@ import org.apache.spark.sql.streaming.Trigger
   * rows. The memory sink is test-scale plumbing only; a cluster deployment
   * swaps it for a parquet/Kafka sink in append mode with the watermark
   * bounding state eviction.
+  *
+  * Every stream runs through [[drain]]: started with
+  * `AvailableNow`, waited for at most [[DrainWait]], stopped and
+  * failed by name when it overruns, and recorded by name ([[lastDrain]]).
   */
 object StreamingQueries {
+
+  /** The longest one drain may run. The slowest lane drains in seconds at
+    * sf0.1 (3.9 s) and st31 in 8-20 s at sf1: a stream still running
+    * after this is stuck, not slow. */
+  val DrainWait: FiniteDuration = 10.minutes
+
+  /** What one drained run did: its non-empty micro-batches and the input
+    * rows they read. */
+  final case class Drained(batches: Int, inputRows: Long)
+
+  private val drains = new ConcurrentHashMap[String, Drained]
+
+  /** The record of the last drain of the stream named `name`. Two
+    * concurrent drains of one name over one dir would race, but they
+    * already share that dir's scratch paths, so same-name drains are
+    * sequential by construction. */
+  def lastDrain(name: String): Option[Drained] = Option(drains.get(name))
+
+  /** A lane's stream name over `dir`: the memory-sink table, the query
+    * name and the [[lastDrain]] key. */
+  def named(lane: String, dir: String): String =
+    s"${lane}_${math.abs(dir.hashCode)}"
+
+  /** Runs `writer` as the stream `name` until it has read every file
+    * present at start (`AvailableNow`), waiting at most `wait`. A
+    * stream still running then is stopped and fails naming it; a stream
+    * whose micro-batch threw fails naming it too. The run is recorded
+    * under `name`. */
+  private[graft] def drain(name: String, writer: DataStreamWriter[_],
+      wait: FiniteDuration = DrainWait): Unit = {
+    val q = writer.queryName(name).trigger(Trigger.AvailableNow()).start()
+    if (!q.awaitTermination(wait.toMillis)) {
+      q.stop()
+      throw new TimeoutException(s"stream $name did not drain within $wait")
+    }
+    val ran = q.recentProgress.filter(_.numInputRows > 0)
+    drains.put(name, Drained(ran.length, ran.map(_.numInputRows).sum))
+  }
+
+  /** [[drain]] of `df` into a memory sink in output `mode`; the drained
+    * table. */
+  private[graft] def drainTable(name: String, df: DataFrame,
+      mode: String): DataFrame = {
+    drain(name, df.writeStream.format("memory").outputMode(mode))
+    df.sparkSession.table(name)
+  }
+
+  /** A PID-scoped scratch directory for the stream `name`, emptied: two
+    * JVMs (e.g. bench and verify) over the same data dir must not clobber
+    * each other's files mid-read, and a re-run starts clean. */
+  private def scratch(spark: SparkSession, name: String): String = {
+    val path = s"${sys.props("java.io.tmpdir")}/graft_${name}_" +
+      ProcessHandle.current().pid()
+    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(path), true)
+    path
+  }
+
+  /** `df` re-laid as 8 parquet files under `$base/src` and streamed back 4
+    * per trigger: 2 real micro-batches, so state and merges genuinely carry
+    * across a commit ([[multiBatchState]] says why 2).
+    *
+    * `byTime` lays the files out as disjoint `(ts, event_id)` ranges,
+    * part-00000 holding the earliest slice. FileStreamSource admits by
+    * (modification time, path), and a parallel write finishes its part
+    * files in arbitrary order — so strictly increasing modification
+    * times are pinned in part order, making admission order = time order
+    * (the log-rotation contract the incremental twins model). */
+  private def relaid(df: DataFrame, base: String,
+      byTime: Boolean = false): DataFrame = {
+    val spark = df.sparkSession
+    val path = s"$base/src"
+    (if (byTime) df.repartitionByRange(8, col("ts"), col("event_id"))
+     else df.repartition(8)).write.mode("overwrite").parquet(path)
+    if (byTime) {
+      val parts = new java.io.File(path).listFiles()
+        .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
+      val base = (System.currentTimeMillis() / 1000L) * 1000L - 3600000L
+      parts.zipWithIndex.foreach { case (f, i) =>
+        f.setLastModified(base + i * 1000L)
+      }
+    }
+    spark.readStream.schema(spark.read.parquet(path).schema)
+      .option("maxFilesPerTrigger", "4").parquet(path)
+  }
 
   /** Isolated child session for one drained stream: right-sized state
     * partition count — a handful of live keys never needs 32 state-store
@@ -27,9 +121,12 @@ object StreamingQueries {
     * sees no new files, runs no batch, and leaves the fresh memory sink
     * empty. (Measured: relocating these few-KB checkpoints to tmpfs moves
     * nothing — the ~1s/query floor is micro-batch planning, not I/O.)
+    * The child keeps the outer session's runtime SQL confs
+    * ([[graft.Config.child]]) under the stream posture below, then a
+    * lane's own `overrides`.
     */
-  private[streaming] def childSession(outer: SparkSession): SparkSession = {
-    val spark = outer.newSession()
+  private[streaming] def childSession(outer: SparkSession,
+      overrides: (String, String)*): SparkSession = graft.Config.child(outer, Seq(
     // 4 state partitions (r11, measured: the drained lane's cost is
     // per-partition state-store commit rounds — a stream-stream join
     // opens 4 stores per partition per batch, and even the EMPTY
@@ -39,7 +136,7 @@ object StreamingQueries {
     // parallelism headroom). A cluster deployment sizes this to its key
     // cardinality per query; the width is frozen into each query's
     // checkpoint, as the st5 scaladoc documents.
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    "spark.sql.shuffle.partitions" -> "4",
     // State width 4 bounds the per-batch store-commit round, but it must
     // not also choke the SOURCE scan: the r12 stage traces show the
     // dominant stages are the scan+map fronts (4 tasks, ~1s each) whose
@@ -47,7 +144,7 @@ object StreamingQueries {
     // 2 MiB splits widen the map side while the stateful exchange stays
     // at 4. A cluster deployment leaves this at the session default and
     // gets its map width from real file counts.
-    spark.conf.set("spark.sql.files.maxPartitionBytes", s"${2 * 1024 * 1024}")
+    "spark.sql.files.maxPartitionBytes" -> s"${2 * 1024 * 1024}",
     // Production-posture state store (r7 verdict ask #5): the HDFS-backed
     // provider keeps every version of every key's state on the JVM heap —
     // fine at sf0.1, memory-unbounded at 100 TB. RocksDB keeps state
@@ -55,8 +152,8 @@ object StreamingQueries {
     // deployment runs (st10's transformWithState already REQUIRES it).
     // Every stateful query in this object flows through this one choke
     // point, so Verify/Bench/specs all exercise the real provider.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     // Changelog checkpointing (r12): a commit persists only the batch's
     // delta; full snapshots move to the maintenance thread. Measured
     // NEUTRAL at sf0.1 (heavy cohort 23.6s vs 23.3s — state here is KBs,
@@ -64,8 +161,7 @@ object StreamingQueries {
     // posture a production RocksDB deployment runs: at real state sizes
     // the per-commit snapshot upload is the term that grows with state
     // while the changelog grows only with the batch.
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"
     // NOT adopted (r17): rocksdb.trackTotalNumberOfRows=false (blind
     // state puts, no get-per-put for the row-count metric) measured
     // NEUTRAL on the 8-query heavy stateful cohort at sf0.1 (17.6 vs
@@ -73,8 +169,7 @@ object StreamingQueries {
     // extra GET never shows. Worth re-testing on a deployment with
     // millions of state rows per partition; left at the default so the
     // state-row telemetry stays real.
-    spark
-  }
+  ) ++ overrides: _*)
 
   /** Streaming file source for one table, tolerant of BOTH parquet
     * layouts: the driver's testdata ships `<dir>/<table>.parquet` as a
@@ -103,7 +198,7 @@ object StreamingQueries {
   /** Event-time hourly counts over the `events` table, as a stream:
     * file-source parquet scan → event-time tumbling window (with
     * watermark) → count per (window, event_type) → memory sink, drained
-    * with `Trigger.AvailableNow` so the result is the complete, final
+    * with `AvailableNow` so the result is the complete, final
     * answer — identical to the batch `e1_event_hourly` query and checked
     * against the same oracle.
     */
@@ -112,8 +207,6 @@ object StreamingQueries {
     // per-batch cost is state-store commits per partition, so right-size
     // the state partition count in an isolated child session
     val spark = childSession(outer)
-    // file streams need an explicit schema; one footer read supplies it
-    val name = "st1_events_hourly_" + math.abs(dir.hashCode)
 
     // the file source requires a directory: stream the table dir with a
     // glob filter (the testdata table is a single parquet file)
@@ -130,18 +223,13 @@ object StreamingQueries {
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:00").as("hour"),
         col("event_type"), col("n"))
 
-    val q = counts.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("hour", "event_type")
+    drainTable(named("st1_events_hourly", dir), counts, "complete")
+      .orderBy("hour", "event_type")
   }
 
   /** [[eventHourly]] in APPEND output mode — the production shape: a row
     * is emitted exactly once, when the watermark passes its window's end
-    * and the window's state is dropped. Drained with `Trigger.AvailableNow`
+    * and the window's state is dropped. Drained with `AvailableNow`
     * the result is every *finalized* window: `window.end <= max event time
     * − delay` (the trailing windows stay open and unemitted — that is the
     * semantics, and the oracle applies the same cutoff). The final no-data
@@ -149,8 +237,6 @@ object StreamingQueries {
     * the watermark past the last data batch and flushes those windows. */
   def eventHourlyAppend(outer: SparkSession, dir: String): DataFrame = {
     val spark = childSession(outer)
-    val name = "st4_events_append_" + math.abs(dir.hashCode)
-
     val counts = graft.operators.Tables.normalizeEvents(
       tableStream(spark, dir, "events"))
       .select(timestamp_micros(expr("ts div 1000")).as("event_time"),
@@ -161,13 +247,8 @@ object StreamingQueries {
       .select(date_format(col("window.start"), "yyyy-MM-dd HH:00").as("hour"),
         col("event_type"), col("n"))
 
-    val q = counts.writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("hour", "event_type")
+    drainTable(named("st4_events_append", dir), counts, "append")
+      .orderBy("hour", "event_type")
   }
 
   /** Hopping (sliding) event-time windows as a stream — `e6_sliding`
@@ -179,7 +260,6 @@ object StreamingQueries {
     * shares its oracle. */
   def eventSliding(outer: SparkSession, dir: String): DataFrame = {
     val spark = childSession(outer)
-    val name = "st17_sliding_" + math.abs(dir.hashCode)
     val counts = graft.operators.Tables.normalizeEvents(
       tableStream(spark, dir, "events"))
       .select(timestamp_micros(expr("ts div 1000")).as("t"),
@@ -189,13 +269,8 @@ object StreamingQueries {
       .agg(count(lit(1)).as("n"))
       .select(expr("unix_micros(window.start)").as("w_start_us"),
         col("event_type"), col("n"))
-    val q = counts.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("w_start_us", "event_type")
+    drainTable(named("st17_sliding", dir), counts, "complete")
+      .orderBy("w_start_us", "event_type")
   }
 
   /** Streaming dedup state over the documents corpus: keyed aggregation on
@@ -206,17 +281,10 @@ object StreamingQueries {
   def dedupState(outer: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
     val spark = childSession(outer)
-    val name = "st2_dedup_" + math.abs(dir.hashCode)
     val counts = tableStream(spark, dir, "documents")
       .select(graft.operators.TextAnalysis.normalized(col("text")).as("norm"))
       .groupBy("norm").agg(cnt("*").as("n"))
-    val q = counts.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainTable(named("st2_dedup", dir), counts, "complete")
       .agg(sum("n").as("n_docs"), count("*").as("n_distinct"))
   }
 
@@ -233,19 +301,13 @@ object StreamingQueries {
   def kmvState(outer: SparkSession, dir: String, k: Int = 64): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
     val spark = childSession(outer)
-    val name = "st16_kmv_" + math.abs(dir.hashCode)
     val hashes = tableStream(spark, dir, "events")
       .select(col("event_type").as("grp"),
         graft.operators.Sampling.rowHash(col("user_id")).as("h"))
       .groupBy("grp", "h").agg(cnt("*").as("n_seen"))
-    val q = hashes.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     graft.operators.Kmv.sketchFinish(
-        spark.table(name).select("grp", "h"), k)
+        drainTable(named("st16_kmv", dir), hashes, "complete")
+          .select("grp", "h"), k)
       .withColumnRenamed("grp", "event_type")
       .orderBy("event_type")
   }
@@ -265,19 +327,12 @@ object StreamingQueries {
   def corpusIngest(outer: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
     val spark = childSession(outer)
-    val name = "st13_corpus_" + math.abs(dir.hashCode)
     val counts = tableStream(spark, dir, "documents")
       .where(graft.functions.hashed_lr_score(col("text"), 64) >= 0)
       .select(col("source"),
         xxhash64(graft.operators.TextAnalysis.normalized(col("text"))).as("fp"))
       .groupBy("source", "fp").agg(cnt("*").as("n"))
-    val q = counts.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).groupBy("source")
+    drainTable(named("st13_corpus", dir), counts, "complete").groupBy("source")
       .agg(count("*").as("n_unique"), sum("n").as("n_docs"))
       .orderBy("source")
   }
@@ -295,22 +350,15 @@ object StreamingQueries {
   def lmScore(outer: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
     val spark = childSession(outer)
-    val name = "st14_lm_" + math.abs(dir.hashCode)
     val counts = tableStream(spark, dir, "documents")
       .select(col("doc_id"),
         explode(graft.operators.TextAnalysis.tokens(col("text"))).as("token"))
       .groupBy("doc_id", "token").agg(cnt("*").as("c_dt"))
-    val q = counts.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val dt = drainTable(named("st14_lm", dir), counts, "complete")
     // stream drained: widen the shuffle for the batch finishing joins
-    // (the 8-partition child sizing is state-commit right-sizing only)
+    // (the 4-partition child sizing is state-commit right-sizing only)
     spark.conf.set("spark.sql.shuffle.partitions",
       outer.sessionState.conf.numShufflePartitions)
-    val dt = spark.table(name)
     // the memory table appears on both sides of the join: rename the
     // freq-side key so the self-join attributes cannot collide
     val freq = dt.groupBy("token").agg(sum("c_dt").as("c_t"))
@@ -355,18 +403,12 @@ object StreamingQueries {
   def dsirScore(outer: SparkSession, dir: String,
       targetSources: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
-    val spark = childSession(outer)
     // no state store here (see scaladoc) — the width that matters is the
     // per-batch fold's aggregation, which wants the full core count
-    spark.conf.set("spark.sql.shuffle.partitions",
-      outer.sessionState.conf.numShufflePartitions)
-    // PID-scoped artifact path (two JVMs over the same dir must not
-    // clobber each other's counts mid-read — the st9/st11 convention)
-    val out = s"${sys.props("java.io.tmpdir")}/graft_st15_" +
-      s"${math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(out), true) // idempotent re-run
+    val spark = childSession(outer, "spark.sql.shuffle.partitions" ->
+      outer.sessionState.conf.numShufflePartitions.toString)
+    val name = named("st15_dsir", dir)
+    val out = scratch(spark, name)
     val toked = tableStream(spark, dir, "documents")
       .select(col("doc_id"),
         col("source").isin(targetSources: _*).as("in_target"),
@@ -397,17 +439,14 @@ object StreamingQueries {
     // per-batch fold + append: each batch's counts are final for its
     // docs (doc-local, see scaladoc); model (-1) rows from different
     // batches re-aggregate at finish
-    val q = rows.writeStream
+    drain(name, rows.writeStream
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
             batchId: Long) =>
           batch.groupBy("doc_id", "in_target", "kind", "key")
             .agg(cnt("*").as("c"))
             .write.mode("overwrite").parquet(s"$out/batch=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     // The drained artifact feeds seven derivations (two uni/bi models,
     // the candidate relation, two totals). Materializing each model slice
     // as its own distributed branch cost a JOB PER BRANCH (six broadcast
@@ -496,7 +535,7 @@ object StreamingQueries {
     // state partition count to the keys, isolated in a child session so
     // the shared session's shuffle width is untouched. Real deployments
     // pin this per-query too (it is frozen into the checkpoint).
-    val spark = childSession(outer)
+    //
     // No-data micro-batch opt-out (r17, VERDICT r16 #1 — measured 0.66 s
     // of the drain's 2.8 s at sf0.1): for an INNER stream-stream join the
     // trailing zero-row batch only advances the watermark and EVICTS
@@ -506,8 +545,8 @@ object StreamingQueries {
     // exactly that watermark advance.) A long-running deployment would
     // keep the default — eviction is what bounds state across triggers;
     // a drain's state dies with the query.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val name = "st5_funnel_" + math.abs(dir.hashCode)
+    val spark = childSession(outer,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     def side(tag: String) = graft.operators.Tables.normalizeEvents(
       tableStream(spark, dir, "events"))
       .where(col("event_type") === tag)
@@ -524,13 +563,7 @@ object StreamingQueries {
         && col("purchase_time") >= col("click_time")
         && col("purchase_time") < col("click_time") + expr("INTERVAL 1 HOUR"))
 
-    val q = joined.writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainTable(named("st5_funnel", dir), joined, "append")
       .groupBy(date_format(col("click_time"), "yyyy-MM-dd HH:00").as("hour"))
       .agg(count("*").as("n_conversions"))
       .orderBy("hour")
@@ -547,7 +580,6 @@ object StreamingQueries {
     * same cutoff. Output: per click-hour matched vs abandoned counts. */
   def streamStreamLeftOuter(outer: SparkSession, dir: String): DataFrame = {
     val spark = childSession(outer)
-    val name = "st8_abandon_" + math.abs(dir.hashCode)
     def side(tag: String) = graft.operators.Tables.normalizeEvents(
       tableStream(spark, dir, "events"))
       .where(col("event_type") === tag)
@@ -562,13 +594,7 @@ object StreamingQueries {
         && col("purchase_time") < col("click_time") + expr("INTERVAL 1 HOUR"),
       "left_outer")
 
-    val q = joined.writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainTable(named("st8_abandon", dir), joined, "append")
       .groupBy(date_format(col("click_time"), "yyyy-MM-dd HH:00").as("hour"))
       .agg(sum(when(col("purchase_user").isNotNull, 1L).otherwise(0L)).as("matched"),
         sum(when(col("purchase_user").isNull, 1L).otherwise(0L)).as("abandoned"))
@@ -586,14 +612,13 @@ object StreamingQueries {
     // Dedup state cost is per-partition state-store commits per batch, not
     // row work — right-size the state partition count in a child session
     // (frozen into a real checkpoint, so deployments pin it per-query too).
-    val spark = childSession(outer)
     // No-data micro-batch opt-out (r17, the st5 rationale): kept rows are
     // emitted in the data batch they arrive in — the trailing zero-row
     // batch only advances the watermark to evict suppression state, so
     // the drained row set is identical without it (0.33 s of the 2.2 s
     // drain at sf0.1). A long-running deployment keeps the default.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val name = "st7_dropdup_" + math.abs(dir.hashCode)
+    val spark = childSession(outer,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
     def src = graft.operators.Tables.normalizeEvents(
       tableStream(spark, dir, "events"))
       .select(col("event_id"),
@@ -603,13 +628,7 @@ object StreamingQueries {
       .withWatermark("event_time", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
 
-    val q = deduped.writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainTable(named("st7_dropdup", dir), deduped, "append")
       .groupBy("event_type").agg(count("*").as("n"))
       .orderBy("event_type")
   }
@@ -624,25 +643,17 @@ object StreamingQueries {
     * in-memory collector. */
   def foreachBatchSink(outer: SparkSession, dir: String): DataFrame = {
     val spark = childSession(outer)
-    // PID-scoped: two JVMs (e.g. bench and verify) over the same data dir
-    // must not clobber each other's sink mid-read
-    val out = s"${sys.props("java.io.tmpdir")}/graft_st9_" +
-      s"${math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(out), true) // idempotent re-run
+    val name = named("st9_foreach", dir)
+    val out = scratch(spark, name)
 
     val stream = tableStream(spark, dir, "events")
       .select(col("event_id"), col("event_type"))
 
-    val q = stream.writeStream
+    drain(name, stream.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
           batchId: Long) =>
         batch.write.mode("overwrite").parquet(s"$out/batch=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
 
     spark.read.parquet(out)
       .groupBy("event_type").agg(count("*").as("n"))
@@ -661,11 +672,7 @@ object StreamingQueries {
     * the batch `groupBy(user_id, event_type).count` — oracle-checked. */
   def transformWithStateCounts(outer: SparkSession, dir: String): DataFrame = {
     val spark = childSession(outer)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    val name = "st10_tws_" + math.abs(dir.hashCode)
 
     val deltas = tableStream(spark, dir, "events")
       .select(col("user_id"), col("event_type")).as[(Long, String)]
@@ -674,13 +681,8 @@ object StreamingQueries {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append())
 
-    val q = deltas.toDF("user_id", "event_type", "delta").writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainTable(named("st10_tws", dir),
+        deltas.toDF("user_id", "event_type", "delta"), "append")
       .groupBy("user_id", "event_type").agg(sum("delta").as("n"))
       .orderBy("user_id", "event_type")
   }
@@ -690,16 +692,20 @@ object StreamingQueries {
     * function emits each batch's DELTA and keeps the running total in
     * `GroupState`, so the drained append-mode result summed per user is
     * batch-count-invariant and equals the batch `groupBy.count` — the
-    * custom-state API (the `StreamingBloom` kernels use the same one)
-    * oracle-checked end to end. State is one long per user: bounded by
-    * key cardinality, never by input rows. */
-  def statefulUserCounts(outer: SparkSession, dir: String): DataFrame = {
-    val spark = childSession(outer)
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val name = "st6_state_" + math.abs(dir.hashCode)
+    * custom-state API oracle-checked end to end. State is one long per
+    * user: bounded by key cardinality, never by input rows. */
+  def statefulUserCounts(outer: SparkSession, dir: String): DataFrame =
+    userEventCounts(named("st6_state", dir),
+      tableStream(childSession(outer), dir, "events"))
 
-    val deltas = tableStream(spark, dir, "events")
+  /** Per-user event counts of the `events` stream through
+    * `flatMapGroupsWithState`, drained as the stream `name`: each batch
+    * emits its per-user DELTA and keeps the running total in `GroupState`;
+    * the append-mode deltas summed per user are the counts. */
+  private def userEventCounts(name: String, events: DataFrame): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    val deltas = events
       .select(col("user_id")).as[Long]
       .groupByKey(identity)
       .flatMapGroupsWithState[Long, (Long, Long)](
@@ -709,14 +715,7 @@ object StreamingQueries {
           state.update(state.getOption.getOrElse(0L) + n)
           Iterator((uid, n))
       }
-
-    val q = deltas.toDF("user_id", "delta").writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainTable(name, deltas.toDF("user_id", "delta"), "append")
       .groupBy("user_id").agg(sum("delta").as("n_events"))
       .orderBy("user_id")
   }
@@ -730,7 +729,6 @@ object StreamingQueries {
     * applies the identical ms-floor watermark cutoff. */
   def streamSessions(outer: SparkSession, dir: String): DataFrame = {
     val spark = childSession(outer)
-    val name = "st12_sessions_" + math.abs(dir.hashCode)
 
     val sessions = graft.operators.Tables.normalizeEvents(
       tableStream(spark, dir, "events"))
@@ -744,13 +742,8 @@ object StreamingQueries {
         expr("unix_micros(session_window.end)").as("s_end_us"),
         col("n"))
 
-    val q = sessions.writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("user_id", "s_start_us")
+    drainTable(named("st12_sessions", dir), sessions, "append")
+      .orderBy("user_id", "s_start_us")
   }
 
   /** Checkpoint recovery — the property every production stream lives
@@ -760,17 +753,14 @@ object StreamingQueries {
     * the re-laid source files and drains (`AvailableNow`); the second
     * half is then written and run 2 restarts FROM THE CHECKPOINT — the
     * file-source offsets log skips everything run 1 committed (pinned:
-    * run 2's input-row count is exposed for the spec), and the parquet
+    * run 2's input-row count is its [[lastDrain]] record), and the parquet
     * sink's `_spark_metadata` commit log makes the two runs' output read
     * back as one exactly-once dataset. The rollup of that sink must
     * equal the batch answer over the whole table — the oracle. */
   def checkpointResume(outer: SparkSession, dir: String): DataFrame = {
     val spark = childSession(outer)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_st19_" +
-      s"${math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
+    val name = named("st19_resume", dir)
+    val base = scratch(spark, name)
     val src = s"$base/src"
     val all = graft.operators.Tables.normalizeEvents(
         spark.read.parquet(s"$dir/events.parquet"))
@@ -780,38 +770,21 @@ object StreamingQueries {
       .write.mode("append").parquet(src)
     val schema = spark.read.parquet(src).schema
 
-    def drain(): Long = {
-      val q = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "2").parquet(src)
-        .writeStream
-        .format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      q.recentProgress.map(_.numInputRows).sum
-    }
-    drain() // run 1: first half only
+    def run(): Unit = drain(name, spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "2").parquet(src)
+      .writeStream
+      .format("parquet")
+      .option("path", s"$base/out")
+      .option("checkpointLocation", s"$base/ckpt"))
+    run() // run 1: first half only
     all.where(col("event_id") % 2 === 1).repartition(2)
       .write.mode("append").parquet(src)
-    resumeRowsByDir.put(dir, drain()) // run 2: MUST see only the new files
+    run() // run 2: MUST see only the new files
 
     spark.read.parquet(s"$base/out")
       .groupBy("event_type").agg(count(lit(1)).as("n"))
       .orderBy("event_type")
   }
-
-  /** Rows run 2 of [[checkpointResume]] ingested (spec observability:
-    * exactly the second half — nothing reprocessed across the restart).
-    * Keyed by input dir so runs over different dirs can't clobber each
-    * other; two CONCURRENT runs over the same dir would still race — but
-    * they already share the dir-derived scratch/checkpoint paths, so
-    * same-dir invocations are sequential by construction. */
-  private val resumeRowsByDir =
-    new java.util.concurrent.ConcurrentHashMap[String, Long]
-  def lastResumeRows(dir: String): Long =
-    resumeRowsByDir.getOrDefault(dir, -1L)
 
   /** Incremental materialized-view maintenance as a stream — the
     * production face of `d4_incremental_mv`: the hourly rollup lives as a
@@ -819,8 +792,8 @@ object StreamingQueries {
     * aggregates and MERGES them into the previous MV version by key
     * (count and sum are self-merging states, so merge == recompute — the
     * batch twin's oracle checks exactly that). The source is re-laid as 8
-    * splits admitted 2 per trigger (the st11 recipe), so the merge
-    * genuinely accumulates across 4 micro-batches. Versioned
+    * splits admitted 4 per trigger ([[relaid]]), so the merge
+    * genuinely accumulates across 2 micro-batches. Versioned
     * overwrite-by-batch-id writes make retries idempotent (batch i
     * rebuilds v=i from the committed v=i-1) — the exactly-once recipe a
     * cluster deployment keeps, with the table format handling versions.
@@ -834,22 +807,14 @@ object StreamingQueries {
   def incrementalMv(outer: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
     val spark = childSession(outer)
-    val base = s"${sys.props("java.io.tmpdir")}/graft_st18_" +
-      s"${math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(base), true)
-    val src = s"$base/src"
-    graft.operators.Tables.normalizeEvents(
+    val name = named("st18_mv", dir)
+    val base = scratch(spark, name)
+    val src = relaid(graft.operators.Tables.normalizeEvents(
         spark.read.parquet(s"$dir/events.parquet"))
       .select(expr("ts div 3600000000000").as("hr"), col("event_type"),
-        col("value"))
-      .repartition(8).write.parquet(src)
-    val schema = spark.read.parquet(src).schema
+        col("value")), base)
 
-    val q = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "4").parquet(src)
-      .writeStream
+    drain(name, src.writeStream
       .option("checkpointLocation", s"$base/ckpt")
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
@@ -864,12 +829,11 @@ object StreamingQueries {
               .groupBy("hr", "event_type")
               .agg(sum("n").as("n"), sum("sv").as("sv"))
           merged.write.mode("overwrite").parquet(s"$base/mv/v=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
 
-    val versions = fs.listStatus(new org.apache.hadoop.fs.Path(s"$base/mv"))
+    val versions = org.apache.hadoop.fs.FileSystem.get(
+        spark.sparkContext.hadoopConfiguration)
+      .listStatus(new org.apache.hadoop.fs.Path(s"$base/mv"))
       .map(_.getPath.getName).filter(_.startsWith("v="))
       .map(_.stripPrefix("v=").toLong)
     mvVersionsByDir.put(dir, versions.length)
@@ -881,8 +845,8 @@ object StreamingQueries {
 
   /** Number of MV versions the last [[incrementalMv]] run over `dir`
     * committed (driver-side observability for the spec; not part of the
-    * result). Dir-keyed like [[lastResumeRows]] — same sequential
-    * same-dir assumption, enforced by the shared scratch paths. */
+    * result). Dir-keyed like [[lastDrain]] — same sequential same-dir
+    * assumption, enforced by the shared scratch paths. */
   private val mvVersionsByDir =
     new java.util.concurrent.ConcurrentHashMap[String, Int]
   def lastMvVersions(dir: String): Int =
@@ -900,48 +864,15 @@ object StreamingQueries {
     * the lane-wide drain floor was the r10 verdict's #5 ask.) */
   def multiBatchState(outer: SparkSession, dir: String): DataFrame = {
     val spark = childSession(outer)
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    // PID-scoped for the same reason as the st9 sink path
-    val src = s"${sys.props("java.io.tmpdir")}/graft_st11_src_" +
-      s"${math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    spark.read.parquet(s"$dir/events.parquet").repartition(8)
-      .write.mode("overwrite").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val name = "st11_multibatch_" + math.abs(dir.hashCode)
-
-    val deltas = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "4").parquet(src)
-      .select(col("user_id")).as[Long]
-      .groupByKey(identity)
-      .flatMapGroupsWithState[Long, (Long, Long)](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Long], state: GroupState[Long]) =>
-          val n = rows.size.toLong
-          state.update(state.getOption.getOrElse(0L) + n)
-          Iterator((uid, n))
-      }
-
-    val q = deltas.toDF("user_id", "delta").writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    lastBatches.set(q.recentProgress.count(_.numInputRows > 0))
-    spark.table(name)
-      .groupBy("user_id").agg(sum("delta").as("n_events"))
-      .orderBy("user_id")
+    val name = named("st11_multibatch", dir)
+    userEventCounts(name, relaid(spark.read.parquet(s"$dir/events.parquet"),
+      scratch(spark, name)))
   }
-
-  /** Number of non-empty micro-batches of the last [[multiBatchState]] run
-    * (driver-side observability for the spec; not part of the result). */
-  val lastBatches = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** The streaming twin of `e8_markov`: first-order event-type transition
     * estimation as an INCREMENTAL computation. The source is re-laid as 8
-    * `(ts, event_id)`-range-split files admitted 2 per trigger (the st11
-    * recipe), so a user's events genuinely arrive across multiple
+    * `(ts, event_id)`-range-split files admitted 4 per trigger
+    * ([[relaid]]), so a user's events genuinely arrive across multiple
     * micro-batches in time order (log-rotation shape). Per-user state is
     * ONE row — the last seen `(ts, event_id, event_type)`: each batch
     * sorts the user's arrivals, prepends the carried state, emits the
@@ -954,29 +885,10 @@ object StreamingQueries {
   def streamMarkov(outer: SparkSession, dir: String): DataFrame = {
     val spark = childSession(outer)
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val src = s"${sys.props("java.io.tmpdir")}/graft_st20_src_" +
-      s"${math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    // disjoint (ts, event_id) ranges per file: part-00000 holds the
-    // earliest slice. FileStreamSource admits by (modification time,
-    // path), and a parallel write finishes its part files in arbitrary
-    // order — so pin strictly increasing mod times in partition order,
-    // making admission order = time order (the log-rotation contract
-    // this query models).
-    graft.operators.Tables(spark, dir, "events")
-      .repartitionByRange(8, col("ts"), col("event_id"))
-      .write.mode("overwrite").parquet(src)
-    val parts = new java.io.File(src).listFiles()
-      .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-    val base = (System.currentTimeMillis() / 1000L) * 1000L - 3600000L
-    parts.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(base + i * 1000L)
-    }
-    val schema = spark.read.parquet(src).schema
-    val name = "st20_markov_" + math.abs(dir.hashCode)
+    val name = named("st20_markov", dir)
 
-    val transitions = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "4").parquet(src)
+    val transitions = relaid(graft.operators.Tables(spark, dir, "events"),
+        scratch(spark, name), byTime = true)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .as[(Long, Long, Long, String)]
       .groupByKey(_._1)
@@ -992,14 +904,8 @@ object StreamingQueries {
             .map { case (a, b) => (a._3, b._3) }
       }
 
-    val q = transitions.toDF("prev_type", "next_type").writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     import org.apache.spark.sql.expressions.Window
-    spark.table(name)
+    drainTable(name, transitions.toDF("prev_type", "next_type"), "append")
       .groupBy("prev_type", "next_type").agg(count(lit(1)).as("n"))
       .withColumn("p",
         round(col("n") / sum("n").over(Window.partitionBy("prev_type")), 6))
@@ -1009,7 +915,7 @@ object StreamingQueries {
   /** The streaming twin of `w7_zscore_anomaly`: trailing z-score outlier
     * flagging as an INCREMENTAL computation — the telemetry-monitoring
     * shape this lane exists for. Source re-laid as 8 time-range files
-    * admitted 2 per trigger (the st20 log-rotation recipe), keyed by
+    * admitted 4 per trigger (the [[relaid]] log-rotation recipe), keyed by
     * event_type (bounded cardinality). Per-type state is the ring of the
     * last 50 values only — each batch sorts its arrivals by
     * `(ts, event_id)`, scores every event against the carried ring
@@ -1022,23 +928,10 @@ object StreamingQueries {
   def streamAnomaly(outer: SparkSession, dir: String): DataFrame = {
     val spark = childSession(outer)
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val src = s"${sys.props("java.io.tmpdir")}/graft_st21_src_" +
-      s"${math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    graft.operators.Tables(spark, dir, "events")
-      .repartitionByRange(8, col("ts"), col("event_id"))
-      .write.mode("overwrite").parquet(src)
-    val parts = new java.io.File(src).listFiles()
-      .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-    val base = (System.currentTimeMillis() / 1000L) * 1000L - 3600000L
-    parts.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(base + i * 1000L)
-    }
-    val schema = spark.read.parquet(src).schema
-    val name = "st21_anomaly_" + math.abs(dir.hashCode)
+    val name = named("st21_anomaly", dir)
 
-    val flagged = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "4").parquet(src)
+    val flagged = relaid(graft.operators.Tables(spark, dir, "events"),
+        scratch(spark, name), byTime = true)
       .select(col("event_type"), col("ts"), col("event_id"), col("value"))
       .as[(String, Long, Long, Double)]
       .groupByKey(_._1)
@@ -1071,13 +964,8 @@ object StreamingQueries {
           out.result().iterator
       }
 
-    val q = flagged.toDF("event_id", "event_type", "value", "z").writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("event_id")
+    drainTable(name, flagged.toDF("event_id", "event_type", "value", "z"),
+      "append").orderBy("event_id")
   }
 
   /** The streaming twin of `e9_attribution`: last-touch credit assignment
@@ -1086,7 +974,7 @@ object StreamingQueries {
     * replays its arrivals in `(ts, event_id)` order: a purchase emits
     * its verdict against the touch carried at that point (7-day
     * lookback, else 'organic'); a click/view replaces the touch. The
-    * time-range file admission (st20 recipe) makes the carried touch at
+    * time-range file admission ([[relaid]]) makes the carried touch at
     * every batch seam exactly what the batch window's running
     * `last(..., ignoreNulls)` sees, so the drained result shares e9's
     * oracle verbatim. This is attribution the way a production stream
@@ -1094,24 +982,11 @@ object StreamingQueries {
   def streamAttribution(outer: SparkSession, dir: String): DataFrame = {
     val spark = childSession(outer)
     import spark.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val lookbackNs = 7L * 24 * 3600 * 1000000000L
-    val src = s"${sys.props("java.io.tmpdir")}/graft_st22_src_" +
-      s"${math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    graft.operators.Tables(spark, dir, "events")
-      .repartitionByRange(8, col("ts"), col("event_id"))
-      .write.mode("overwrite").parquet(src)
-    val parts = new java.io.File(src).listFiles()
-      .filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-    val base = (System.currentTimeMillis() / 1000L) * 1000L - 3600000L
-    parts.zipWithIndex.foreach { case (f, i) =>
-      f.setLastModified(base + i * 1000L)
-    }
-    val schema = spark.read.parquet(src).schema
-    val name = "st22_attrib_" + math.abs(dir.hashCode)
+    val name = named("st22_attrib", dir)
 
-    val verdicts = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "4").parquet(src)
+    val verdicts = relaid(graft.operators.Tables(spark, dir, "events"),
+        scratch(spark, name), byTime = true)
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .as[(Long, Long, Long, String)]
       .groupByKey(_._1)
@@ -1140,15 +1015,9 @@ object StreamingQueries {
           out.result().iterator
       }
 
-    val q = verdicts
-      .toDF("user_id", "purchase_id", "purchase_ts_us", "touch_id", "channel")
-      .writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("purchase_id")
+    drainTable(name, verdicts
+        .toDF("user_id", "purchase_id", "purchase_ts_us", "touch_id", "channel"),
+      "append").orderBy("purchase_id")
   }
 
   /** Stream-static bloom probe: the static side builds the per-group
@@ -1173,7 +1042,6 @@ object StreamingQueries {
         graft.operators.BloomPipeline.buildFilters(
           graft.operators.Ratings.trainFromLineitem(spark, dir),
           graft.SparkEntry.defaultP)))
-    val name = "st3_bloom_probe_" + math.abs(dir.hashCode)
 
     val stream = graft.operators.Ratings.trainProjection(
       tableStream(spark, dir, "lineitem")
@@ -1188,13 +1056,8 @@ object StreamingQueries {
       .agg(count("*").as("total"),
         sum(when(col("hit"), 1L).otherwise(0L)).as("hits"))
 
-    val q = stream.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("rating")
+    drainTable(named("st3_bloom_probe", dir), stream, "complete")
+      .orderBy("rating")
   }
 
   /** Streaming count-min heavy-hitter monitor — `a8_cms_topk`'s sketch as
@@ -1202,10 +1065,10 @@ object StreamingQueries {
     * (`⌈2/ε⌉ × ⌈ln(1/0.01)⌉` longs, ~80 KB at ε=1e-3) plus the row
     * count, no matter how long the stream runs — the reason a frequency
     * monitor can stay up forever where an exact per-key count table grows
-    * with the key domain. The source is re-laid as 8 splits admitted 2
-    * per trigger (the st11 recipe), so the sketch buffer genuinely merges
-    * across ≥4 state-store commits rather than folding in one batch;
-    * [[lastCmsBatches]] records the observed batch count for the spec.
+    * with the key domain. The source is re-laid as 8 splits admitted 4
+    * per trigger ([[relaid]]), so the sketch buffer genuinely merges
+    * across 2 state-store commits rather than folding in one batch;
+    * [[lastDrain]] records the observed batch count for the spec.
     *
     * The result is the same gate face as the batch query: the exact
     * top-10 users (a bounded batch pass at drain time — the gate's exact
@@ -1216,24 +1079,12 @@ object StreamingQueries {
   def cmsState(outer: SparkSession, dir: String,
       eps: Double = 1e-3): DataFrame = {
     val spark = childSession(outer)
-    val src = s"${sys.props("java.io.tmpdir")}/graft_st23_src_" +
-      s"${math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    spark.read.parquet(s"$dir/events.parquet").repartition(8)
-      .write.mode("overwrite").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val name = "st23_cms_" + math.abs(dir.hashCode)
-    val sk = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "4").parquet(src)
+    val name = named("st23_cms", dir)
+    val sk = relaid(spark.read.parquet(s"$dir/events.parquet"),
+        scratch(spark, name))
       .agg(count_min_sketch(col("user_id"), lit(eps), lit(0.99), lit(42))
         .as("sk"), count(lit(1)).as("n"))
-    val q = sk.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    lastCmsBatches.set(q.recentProgress.count(_.numInputRows > 0))
-    val row = spark.table(name).head()
+    val row = drainTable(name, sk, "complete").head()
     val cms = org.apache.spark.util.sketch.CountMinSketch.readFrom(
       new java.io.ByteArrayInputStream(row.getAs[Array[Byte]]("sk")))
     val bound = math.ceil(eps * row.getAs[Long]("n")).toLong
@@ -1247,11 +1098,6 @@ object StreamingQueries {
       }
     outer.createDataFrame(topk.toSeq).toDF("user_id", "n", "cms_ok")
   }
-
-  /** Non-empty micro-batch count of the last [[cmsState]] run (driver-side
-    * observability for the spec; sequential-harness assumption as with
-    * [[lastBatches]]). */
-  val lastCmsBatches = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Always-on data-contract monitor — a17's expectation verdicts as
     * stream state: the stream maintains one fixed-width metric row PER
@@ -1270,31 +1116,21 @@ object StreamingQueries {
   def contractMonitor(outer: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
     val spark = childSession(outer)
-    val src = s"${sys.props("java.io.tmpdir")}/graft_st24_src_" +
-      s"${math.abs(dir.hashCode)}_${ProcessHandle.current().pid()}"
-    spark.read.parquet(s"$dir/events.parquet").repartition(8)
-      .write.mode("overwrite").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val name = "st24_contract_" + math.abs(dir.hashCode)
-    val metrics = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "4").parquet(src)
+    val name = named("st24_contract", dir)
+    val metrics = relaid(spark.read.parquet(s"$dir/events.parquet"),
+        scratch(spark, name))
       .groupBy(col("event_type"))
       .agg(cnt(lit(1)).as("n"),
         sum(when(col("value").isNull, 1L).otherwise(0L)).as("n_null"),
         min(col("value")).as("mn"))
-    val q = metrics.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val drained = drainTable(name, metrics, "complete")
     // fold the drained per-type state into the global metric row; the
     // type count is exact by construction (state rows = distinct types),
     // and a NULL event_type — which forms its own state row — is
     // excluded from it, matching count(DISTINCT event_type)'s NULL
     // semantics in the oracle (r9 advice #2; latent only, no nulls in
     // the shipped data)
-    val m = spark.table(name).agg(
+    val m = drained.agg(
       sum(col("n")).as("n"), sum(col("n_null")).as("n_null"),
       min(col("mn")).as("mn"),
       cnt(col("event_type")).as("n_types"))
@@ -1324,19 +1160,13 @@ object StreamingQueries {
   def benfordMonitor(outer: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
     val spark = childSession(outer)
-    val name = "st25_benford_" + math.abs(dir.hashCode)
     val cents = round(col("l_extendedprice") * 100).cast("long")
     val digit = substring(cents.cast("string"), 1, 1).cast("int")
     val counts = tableStream(spark, dir, "lineitem", maxFilesPerTrigger = Some(2))
       .where(col("l_extendedprice") > 0)
       .groupBy(digit.as("digit")).agg(cnt(lit(1)).as("n"))
-    val q = counts.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.operators.FeatureEng.benfordFace(spark.table(name))
+    graft.operators.FeatureEng.benfordFace(
+      drainTable(named("st25_benford", dir), counts, "complete"))
   }
 
   /** Streaming PSI drift monitor — `fe5_psi_drift` as an always-on
@@ -1353,18 +1183,12 @@ object StreamingQueries {
   def psiMonitor(outer: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
     val spark = childSession(outer)
-    val name = "st27_psi_" + math.abs(dir.hashCode)
     val counts = tableStream(spark, dir, "orders", maxFilesPerTrigger = Some(2))
       .groupBy(graft.operators.FeatureEng.psiCohort.as("cohort"),
         graft.operators.FeatureEng.psiBin(10, 50000.0).as("bin"))
       .agg(cnt(lit(1)).as("n"))
-    val q = counts.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.operators.FeatureEng.psiFace(spark.table(name), 10)
+    graft.operators.FeatureEng.psiFace(
+      drainTable(named("st27_psi", dir), counts, "complete"), 10)
   }
 
   /** Streaming two-sample KS drift monitor — the distributional sibling
@@ -1380,18 +1204,12 @@ object StreamingQueries {
   def ksMonitor(outer: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
     val spark = childSession(outer)
-    val name = "st28_ks_" + math.abs(dir.hashCode)
     val counts = tableStream(spark, dir, "orders", maxFilesPerTrigger = Some(2))
       .groupBy(graft.operators.FeatureEng.psiCohort.as("cohort"),
         graft.operators.FeatureEng.psiBin(10, 50000.0).as("bin"))
       .agg(cnt(lit(1)).as("n"))
-    val q = counts.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.operators.FeatureEng.ksBinnedFace(spark.table(name))
+    graft.operators.FeatureEng.ksBinnedFace(
+      drainTable(named("st28_ks", dir), counts, "complete"))
   }
 
   /** Streaming CUSUM changepoint monitor — `w13_cusum` as an always-on
@@ -1408,22 +1226,15 @@ object StreamingQueries {
   def cusumMonitor(outer: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
     val spark = childSession(outer)
-    val name = "st29_cusum_" + math.abs(dir.hashCode)
     val counts = graft.operators.Tables.normalizeEvents(
         tableStream(spark, dir, "events", maxFilesPerTrigger = Some(2)))
       .groupBy(col("event_type"), expr("ts div 3600000000000").as("hr"))
       .agg(cnt(lit(1)).as("x"))
-    val q = counts.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     // the face self-joins its cells (per-type stats fold back onto the
     // cell relation) and MemoryPlan leaves can't deduplicate attribute
     // ids across a self-join — re-base the drained state onto its own
     // RDD (a LogicalRDD leaf analyzes like any batch relation)
-    val drained = spark.table(name)
+    val drained = drainTable(named("st29_cusum", dir), counts, "complete")
     graft.operators.FeatureEng.cusumFace(
       org.apache.spark.sql.graft.Bridge.pinInternal(drained))
   }
@@ -1444,7 +1255,6 @@ object StreamingQueries {
       minQuality: Double = 0.5, minFlesch: Double = 20.0): DataFrame = {
     import org.apache.spark.sql.functions.{count => cnt}
     val spark = childSession(outer)
-    val name = "st30_intake_" + math.abs(dir.hashCode)
     val scored = graft.operators.TextAnalysis.readability(
       graft.operators.TextAnalysis.qualityScore(
         tableStream(spark, dir, "documents"),
@@ -1454,13 +1264,7 @@ object StreamingQueries {
       .agg(cnt(lit(1)).as("n_docs"),
         sum(when(col("quality") >= minQuality
           && col("flesch") >= minFlesch, 1L).otherwise(0L)).as("n_pass"))
-    val q = ledger.writeStream
-      .format("memory").queryName(name)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
+    drainTable(named("st30_intake", dir), ledger, "complete")
       .withColumn("pass_rate",
         round(col("n_pass").cast("double") / col("n_docs"), 6))
       .orderBy("source")
@@ -1500,8 +1304,6 @@ object StreamingQueries {
         cellMaps.getOrElse(l, Map.empty[String, Long]), default))
       graft.functions.nb_score_sum(table, prior, toks)
     }
-    val schema = batchDocs.schema
-    val name = "st26_nbserve_" + math.abs(dir.hashCode)
     val scored = tableStream(spark, dir, "documents", maxFilesPerTrigger = Some(2))
       .where(!graft.operators.NaiveBayes.isTrain && size(toks) > 0)
       .select(Seq(col("doc_id"),
@@ -1515,16 +1317,10 @@ object StreamingQueries {
         val s = col(s"s_$l")
         (when(s > bs, lit(l)).otherwise(bl), when(s > bs, s).otherwise(bs))
     }
-    val q = scored
-      .select(col("doc_id"), col("true_label"),
-        predCol.as("pred"), scoreCol2.as("score_q"))
-      .writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name).orderBy("doc_id")
+    drainTable(named("st26_nbserve", dir), scored
+        .select(col("doc_id"), col("true_label"),
+          predCol.as("pred"), scoreCol2.as("score_q")),
+      "append").orderBy("doc_id")
   }
 
   /** Streaming near-duplicate ADMISSION gate — the `dedup_minhash_lsh`
@@ -1575,13 +1371,12 @@ object StreamingQueries {
       threshold: Double = 0.8, numHashes: Int = 128, bands: Int = 0,
       shingleN: Int = 3, maxBucket: Int = 1024): DataFrame = {
     import org.apache.spark.sql.functions.{max => fmax}
-    val spark = childSession(outer)
     // this lane's cost is the in-batch LSH probe + exact-verify JOINS,
     // not state commits: the child default of 4 state partitions would
     // run the bucket and verify exchanges 8× under-parallel (measured
     // 19.9s → 8.3s at sf1 when widened back to the session width)
-    spark.conf.set("spark.sql.shuffle.partitions",
-      outer.sessionState.conf.numShufflePartitions)
+    val spark = childSession(outer, "spark.sql.shuffle.partitions" ->
+      outer.sessionState.conf.numShufflePartitions.toString)
     val index = graft.operators.Dedup.shingleSets(
         spark.read.parquet(s"$dir/documents.parquet")
           .where(pmod(col("doc_id"), lit(5)) =!= 4), shingleN)
@@ -1647,7 +1442,7 @@ object StreamingQueries {
       idxBuckets.count()
       idxRaw.unpersist(false)
     }
-    val q = tableStream(spark, dir, "documents")
+    drain(named("st31_neardup", dir), tableStream(spark, dir, "documents")
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // the Staging.spread discipline applies inside a micro-batch
@@ -1686,10 +1481,7 @@ object StreamingQueries {
           }
           ()
         } finally { sets.unpersist(false); () }
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      })
     } finally {
       // released on failure paths too (r15 review): a library caller
       // embedding this gate must not accrue corpus-scale caches per

@@ -64,4 +64,13 @@ class ConfigSpec extends AnyFunSuite {
       "spark.ui.retainedTasks" -> "500",
       "spark.sql.warehouse.dir" -> s"$tmp/graft_warehouse"))
   }
+
+  test("the registries are built once and every oracle names a registered " +
+      "query") {
+    assert(SparkEntry.queries eq SparkEntry.queries)
+    assert(SparkEntry.oracleSql eq SparkEntry.oracleSql)
+    assert(SparkEntry.fixtures eq SparkEntry.fixtures)
+    val strays = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(strays.isEmpty, s"oracles without a query: ${strays.mkString(", ")}")
+  }
 }

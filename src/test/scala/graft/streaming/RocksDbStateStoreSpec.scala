@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.Trigger
   * over an inspectable checkpoint must leave RocksDB's snapshot artifacts
   * (`<version>.zip` per state partition) and NONE of the HDFS-backed
   * provider's `.delta` files — while still matching the batch answer.
-  * Result correctness for the full st1–st19 surface under RocksDB is
+  * Result correctness for the full st1–st31 surface under RocksDB is
   * covered by StreamingQueriesSpec (every stateful query flows through
   * `childSession`, which defaults the provider on).
   */
@@ -25,6 +25,20 @@ class RocksDbStateStoreSpec extends SparkSuite {
     assert(child.conf.get("spark.sql.files.maxPartitionBytes") === s"${2 * 1024 * 1024}")
     assert(child.conf.get(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") === "true")
+    // the outer session's runtime confs hold in the child: a zone set at
+    // runtime formats the streamed hours exactly as the batch query does
+    val zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    try {
+      assert(StreamingQueries.childSession(spark).conf
+        .get("spark.sql.session.timeZone") === "Asia/Tokyo")
+      val dir = "/root/testdata/sf0.001"
+      val streamed = graft.SparkEntry.queries("st1_stream_hourly")(spark, dir)
+        .collect()
+      val batch = graft.SparkEntry.queries("e1_event_hourly")(spark, dir)
+        .collect()
+      assert(streamed.map(_.toSeq).toSeq === batch.map(_.toSeq).toSeq)
+    } finally spark.conf.set("spark.sql.session.timeZone", zone)
   }
 
   test("stateful drain writes RocksDB state artifacts and matches batch") {

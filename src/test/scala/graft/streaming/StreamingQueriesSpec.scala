@@ -2,8 +2,48 @@ package graft.streaming
 
 import graft.SparkSuite
 import graft.operators.Tables
+import org.apache.spark.sql.DataFrame
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+import org.scalatest.time.{Seconds, Span}
 
-class StreamingQueriesSpec extends SparkSuite {
+import scala.concurrent.duration._
+
+class StreamingQueriesSpec extends SparkSuite with TimeLimits {
+
+  /** A file stream over a tiny one-file parquet source. */
+  private def tinyStream(tag: String): DataFrame = {
+    val path = s"${sys.props("java.io.tmpdir")}/graft_drain_spec_$tag"
+    spark.range(10).toDF("id").write.mode("overwrite").parquet(path)
+    spark.readStream.schema(spark.read.parquet(path).schema).parquet(path)
+  }
+
+  test("drain stops a stream that overruns its wait and fails naming it") {
+    implicit val signaler: Signaler = ThreadSignaler
+    val name = "drain_spec_overrun"
+    // the micro-batch sleeps far past the wait: only the drain's bound
+    // (and its stop) can end this within the test's limit
+    val e = failAfter(Span(60, Seconds)) {
+      intercept[java.util.concurrent.TimeoutException] {
+        StreamingQueries.drain(name, tinyStream("overrun").writeStream
+          .foreachBatch { (_: DataFrame, _: Long) => Thread.sleep(600000L) },
+          wait = 2.seconds)
+      }
+    }
+    assert(e.getMessage.contains(name), e.getMessage)
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("a micro-batch that throws fails the drain naming the stream") {
+    val name = "drain_spec_failing"
+    val e = intercept[Exception] {
+      StreamingQueries.drain(name, tinyStream("failing").writeStream
+        .foreachBatch { (_: DataFrame, id: Long) =>
+          if (id >= 0) throw new IllegalStateException("micro-batch failed")
+        })
+    }
+    assert(e.getMessage.contains(name), e.getMessage)
+    assert(spark.streams.active.isEmpty)
+  }
 
   test("eventHourly stream reproduces the batch answer exactly") {
     val dir = "/root/testdata/sf0.001"
@@ -96,8 +136,10 @@ class StreamingQueriesSpec extends SparkSuite {
     val dir = "/root/testdata/sf0.001"
     import org.apache.spark.sql.functions._
     val streamed = StreamingQueries.multiBatchState(spark, dir).collect()
-    assert(StreamingQueries.lastBatches.get() > 1,
-      s"expected multiple non-empty micro-batches, got ${StreamingQueries.lastBatches.get()}")
+    val run = StreamingQueries.lastDrain(
+      StreamingQueries.named("st11_multibatch", dir))
+    assert(run.exists(_.batches > 1),
+      s"expected multiple non-empty micro-batches, got $run")
     val batch = Tables(spark, dir, "events")
       .groupBy("user_id").agg(count("*").as("n_events"))
       .orderBy("user_id").collect()
@@ -109,9 +151,9 @@ class StreamingQueriesSpec extends SparkSuite {
     val dir = "/root/testdata/sf0.001"
     import org.apache.spark.sql.functions._
     val streamed = StreamingQueries.cmsState(spark, dir).collect()
-    assert(StreamingQueries.lastCmsBatches.get() > 1,
-      s"expected multiple non-empty micro-batches, " +
-        s"got ${StreamingQueries.lastCmsBatches.get()}")
+    val run = StreamingQueries.lastDrain(StreamingQueries.named("st23_cms", dir))
+    assert(run.exists(_.batches > 1),
+      s"expected multiple non-empty micro-batches, got $run")
     assert(streamed.length === 10)
     assert(streamed.forall(_.getBoolean(2)),
       "CMS estimate must satisfy exact <= est <= exact + eps*N for " +
@@ -197,9 +239,11 @@ class StreamingQueriesSpec extends SparkSuite {
     val streamed = StreamingQueries.checkpointResume(spark, dir).collect()
     val secondHalf = Tables(spark, dir, "events")
       .where(col("event_id") % 2 === 1).count()
-    assert(StreamingQueries.lastResumeRows(dir) === secondHalf,
+    val run2 = StreamingQueries.lastDrain(
+      StreamingQueries.named("st19_resume", dir))
+    assert(run2.map(_.inputRows) === Some(secondHalf),
       s"run 2 must ingest exactly the new rows ($secondHalf), got " +
-        s"${StreamingQueries.lastResumeRows(dir)} — offsets log ignored?")
+        s"$run2 — offsets log ignored?")
     val batch = Tables(spark, dir, "events")
       .groupBy("event_type").agg(count(lit(1)).as("n"))
       .orderBy("event_type").collect()
