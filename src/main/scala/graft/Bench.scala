@@ -27,11 +27,7 @@ import org.apache.spark.sql.SparkSession
   *    no outlier protection at all, the worst of both estimators. One
   *    run per query makes a full draw's wall ≈ its measured time, so
   *    the 1800s budget admits 2–3 draws and the official number is a
-  *    genuine cross-draw median. NOTE for cross-round comparison:
-  *    r1–r4 reported median-of-3 above 3.0s, r5–r10 min-of-3 above
-  *    1.5s; r11+ reports single runs medianed across draws, so per-query
-  *    deltas across those boundaries conflate the estimator change with
-  *    real speedups.
+  *    genuine cross-draw median.
   *  - a failing query contributes `ok=false` instead of silently
   *    contributing a fast time.
   *  - MULTI-DRAW protocol (r8, per the r7 verdict's #1 ask): the whole
@@ -52,8 +48,7 @@ import org.apache.spark.sql.SparkSession
   *    visible in the artifact itself. A wall-clock budget
   *    (`SPARK_GRAFT_BENCH_BUDGET_SEC`, default 1800) stops admitting new
   *    draws when the next one would overrun — at least one draw always
-  *    completes. NOTE for cross-round comparison: r5–r7 published a
-  *    single draw; one noisy draw could dominate a round delta there.
+  *    completes.
   *  - OUTLIER GUARD (r7 verdict ask #6): if the official total deviates
   *    >25% above the session's best draw total, the detail artifact is
   *    diverted to `BENCH_DETAIL_OUTLIER.json` unless `--force` is passed
@@ -65,17 +60,15 @@ import org.apache.spark.sql.SparkSession
   *    copy is GITIGNORED (VERDICT r13 ask #4): the driver's end-of-round
   *    pass overwrites it freely, and the COMMITTED record is the
   *    `bench/archive/BENCH_DETAIL_r*` officials — promoted there by
-  *    hand, never clobbered. (Process-only change; the measurement
-  *    channel below is untouched.)
-  *  - SLOW-RUN STAGE TRACER (r12, per the r11 verdict's #1 ask): a
-  *    [[StageTracer]] rides the session; any run whose wall exceeds 3×
-  *    the query's archived median (read from the committed
-  *    BENCH_DETAIL.json before this run overwrites it) gets its
-  *    per-stage metrics (wall, run/CPU/GC time, shuffle, spill, task
-  *    max/median) embedded as `slow_trace` in the detail entry — so a
-  *    loaded-host anomaly like r9–r11's dedup_containment carries its
-  *    own diagnosis: spill/GC/skew → fix the query; high `unaccounted`
-  *    or run≪wall with no spill → host/scheduler delay, proven.
+  *    hand, never clobbered.
+  *  - QUERY LEDGER: a [[QueryLedger]] rides the session. Its window
+  *    opens untimed just before each measured run's clock starts and
+  *    closes after the clock stops and the listener bus drains; every
+  *    detail entry carries the record of the query's most recent
+  *    measuring run: jobs, stages, tasks, task failures, executor
+  *    run/CPU/GC seconds, shuffle/spill/input/output MB, driver-only
+  *    seconds (wall with no job running) and `complete` (false when a
+  *    drain timed out).
   *  - LIGHT-TAIL SECOND PASS (r12, ADVICE r11 #3): after the planned
   *    draws, leftover budget re-measures the light tail once so its
   *    queries get a min-of-2 instead of a frozen cold draw-1 value
@@ -83,33 +76,24 @@ import org.apache.spark.sql.SparkSession
   *    and the re-measure itself runs last in the session so it can
   *    carry end-of-suite drag); `light_passes` discloses whether it
   *    ran.
-  *  - PROTOCOL FROZEN (r13, VERDICT r12 ask #1). The measurement channel
-  *    is FINAL as configured in r12: gc-off hygiene, ONE timed run per
-  *    query per draw, cross-draw MEDIAN for the heavy set
-  *    (> [[LightThresh]], 2.0s), MIN-of-2 when the
-  *    light tail's single re-measure gives a query exactly two samples,
-  *    streaming-last deterministic order, 3-draw / 1800s-budget
-  *    admission. Three consecutive estimator changes (r10 min-of-3 →
-  *    r11 cross-draw median → r12 gc-off + light min-of-2) made no two
-  *    consecutive officials directly comparable; from r13 on the
-  *    estimator does not change, so round-over-round per-query deltas
-  *    are clean. Telemetry MAY still be added outside the timed region —
-  *    r13 adds per-query shuffle/spill/input/output BYTE totals to the
-  *    detail artifact (VERDICT r12 ask #3: time ratios prove local CPU
-  *    shape; exchange bytes are the cluster-network half local[32]
-  *    can't time). Captured after each run from the [[StageTracer]],
-  *    after the clock stops — the estimator is untouched.
+  *  - PROTOCOL FROZEN (r13, VERDICT r12 ask #1): the estimator above
+  *    does not change, so round-over-round per-query deltas stay
+  *    comparable. Telemetry such as the ledger may be added outside the
+  *    timed region only.
   *
   * Usage: `runMain graft.Bench [--force] [name,name,...]`. The names
   * restrict the run to those registered queries; an unknown name fails
   * the run before any session starts. The environment knobs it reads
-  * (cores, data dir, draws, budget, forced traces) are parsed and checked
+  * (cores, data dir, draws, budget) are parsed and checked
   * once by [[Config]].
   */
 object Bench {
   private val warmupDir = "/root/testdata/sf0.001"
 
-  /** Draw-1 seconds above which a query re-measures in later draws. */
+  /** Draw-1 seconds above which a query re-measures in later draws. At
+    * 2.0 the re-measured set is the ~45-query heavy tail, where
+    * cross-draw medians move the total, and draw 2 fits the budget on a
+    * loaded host (at 1.0 it did not). */
   private val LightThresh = 2.0
 
   private val usage = "usage: runMain graft.Bench [--force] [name,name,...]"
@@ -131,22 +115,9 @@ object Bench {
       "BENCH_DETAIL_OUTLIER.json"
     else "BENCH_DETAIL.json"
 
-  /** Archived per-query medians from the committed BENCH_DETAIL.json —
-    * the slow-run tracer's reference point (VERDICT r11 ask #1: trace a
-    * query when its wall exceeds ~3× the archived builder median). Read
-    * BEFORE this run overwrites the file; a missing/garbled file just
-    * means no baselines (new queries trace on an absolute threshold). */
-  private[graft] def loadBaseline(path: String): Map[String, Double] =
-    try {
-      val txt = scala.io.Source.fromFile(path)
-      val s = try txt.mkString finally txt.close()
-      val re = """"([A-Za-z0-9_]+)":\{"sec":([0-9.eE+-]+)""".r
-      re.findAllMatchIn(s).map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Exception => Map.empty }
-
   private def runOne(spark: SparkSession, name: String,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-      dir: String, tracer: Option[StageTracer] = None): (Double, Boolean) = {
+      dir: String, ledger: Option[QueryLedger] = None): (Double, Boolean) = {
     // each query pays its own full cost: operators that persist shared
     // subtrees (bloom builds, dedup stages) must not hand a warm cache to
     // the next measured query
@@ -164,29 +135,14 @@ object Bench {
     // one random later query's timing per run — flush here, untimed
     try new ProcessBuilder("sync").inheritIO().start().waitFor()
     catch { case _: Exception => }
-    // NO hygiene System.gc() since r12. It was added when
-    // earlier queries' heap debris surfaced as collection pauses inside
-    // random queries (r8: a2_indexed_equiv 7.2s mid-suite vs 2.4s) —
-    // but a full GC also UNLOADS prior queries' generated classes, and
-    // HotSpot zombifies every compiled method that inlined through
-    // them: the r12 PrintCompilation study caught the shared
-    // ArrayIntersect kernel cycling compiled → not-entrant → zombie
-    // around these collections, after which an array-kernel-bound query
-    // runs at interpreter speed for most of a draw (10-25× real CPU on
-    // identical input — the dedup_containment artifact mystery of
-    // r9-r12). The full-suite A/B at sf0.1 (archived:
-    // BENCH_DETAIL_r12_sf01_gcprotocol_{on,off}.json) measured the
-    // gc-off protocol 13% faster in total (310.3 vs 356.8s), ~100s less
-    // wall per full draw, worst single-query regression +0.6s, and the
-    // original a2 pause case IMPROVED (1.89 → 1.58s) — the 24g G1 heap
-    // absorbs the debris incrementally.
-    // drain in-flight listener events from the PREVIOUS query before
-    // clearing, so its late stage-completions can't leak into this
-    // query's byte/trace window (untimed — the clock hasn't started)
-    tracer.foreach { t =>
-      org.apache.spark.GraftBus.drain(spark.sparkContext, 2000)
-      t.clear() // fresh stage window for the timed region
-    }
+    // NO hygiene System.gc(): a full GC unloads prior queries' generated
+    // classes, and HotSpot discards every compiled method that inlined
+    // through them, so an array-kernel-bound query then runs at
+    // interpreter speed for most of a draw (10-25× real CPU). The sf0.1
+    // A/B (bench/archive BENCH_DETAIL_r12_sf01_gcprotocol_{on,off}.json)
+    // measured gc-off 13% faster in total; the G1 heap absorbs the debris.
+    // the ledger window opens last, untimed (the clock hasn't started)
+    ledger.foreach(_.open())
     val t0 = System.nanoTime()
     val ok =
       try { fn(spark, dir).write.format("noop").mode("overwrite").save(); true }
@@ -222,12 +178,7 @@ object Bench {
     // caller invoking the suite without main() keeps a valid artifact)
     val loadavgJson = f"$loadavg0%.2f".replace(",", ".")
     val spark = cfg.session()
-
-    // slow-run stage tracer (r11 ask #1): reference medians come from the
-    // committed artifact, read before this run overwrites it
-    val baseline = loadBaseline("BENCH_DETAIL.json")
-    val tracer = new StageTracer
-    spark.sparkContext.addSparkListener(tracer)
+    val ledger = new QueryLedger(spark.sparkContext)
 
     val selected0 = only match {
       case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
@@ -262,25 +213,12 @@ object Bench {
       }
     }
 
-    // ---- multi-draw measurement ----
-    // LIGHT SUBSEQUENT DRAWS (r9 verdict ask #5): the r9 driver artifact
-    // was a single cold draw (ndraws:1) because a FULL draw's wall clock
-    // — measured time plus 252 × (clearCache + sync + gc) hygiene — blew
-    // the admission check for draw 2. Draws ≥ 2 therefore re-measure only
-    // the queries whose draw-1 official exceeds `LightThresh` (first
-    // 1.0s; r9 data: 127 of 252 queries carrying 292 of 371 measured
-    // seconds), reusing the draw-1 value for the sub-second tail where a
-    // cross-draw median cannot change the total materially. Admission for
-    // the next draw is predicted from the per-query WALL cost actually
-    // observed (hygiene included), not from the last draw's full wall.
-    // 2.0s (raised from 1.0 after the first r10 full run): at
-    // 1.0 the light set was ~130 queries whose observed wall predicted
-    // just over the remaining budget on a loaded host — the exact
-    // regression this protocol exists to prevent. At 2.0 the light set
-    // is the ~45-query heavy tail (where cross-draw medians actually
-    // move the total) and draw 2 admits with ~200s margin.
-    case class QDraw(sec: Double, ok: Boolean, runs: Seq[Double],
-        wall: Double, bytes: Option[StageTracer.Bytes] = None)
+    // ---- multi-draw measurement (see the scaladoc) ----
+    // Admission for the next draw is predicted from the per-query WALL
+    // cost actually observed (hygiene included), not from the last
+    // draw's full wall.
+    case class QDraw(sec: Double, ok: Boolean, wall: Double,
+        record: QueryLedger.Record)
     val benchT0 = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - benchT0) / 1e9
     // draw = one pass over the non-skipped suite, ONE timed run per query
@@ -289,60 +227,28 @@ object Bench {
     // to ndraws:1, see the scaladoc)
     val drawsDone =
       scala.collection.mutable.ArrayBuffer.empty[Map[String, QDraw]]
-    // per-query stage traces captured this run: name -> entries (one per
-    // traced draw), each a JSON object. Capped so a systemically loaded
-    // host can't bloat the artifact.
-    val traces = scala.collection.mutable.Map
-      .empty[String, scala.collection.mutable.ArrayBuffer[String]]
-    var tracesLeft = 24
-    // trace when the wall exceeds 3× the archived builder median (and is
-    // not trivially small), or 10s absolute for queries with no archive
-    // yet; SPARK_GRAFT_TRACE=name1,name2|all forces tracing regardless
-    // (targeted diagnosis runs)
-    val forceTrace = cfg.trace
-    def shouldTrace(name: String, sec: Double, ok: Boolean): Boolean =
-      ok && tracesLeft > 0 &&
-        (forceTrace(name) || forceTrace("all") || (baseline.get(name) match {
-          case Some(b) => sec > 2.0 && sec > 3.0 * b
-          case None    => sec > 10.0
-        }))
     def oneDraw(skip: Set[String]): Map[String, QDraw] =
       selected.flatMap { case (name, fn) =>
         if (skip(name)) None
         else {
           val w0 = System.nanoTime()
-          val (sec, ok) = runOne(spark, name, fn, sfDir, Some(tracer))
-          // per-query byte totals (r13, ask #3): clock already stopped;
-          // drain so the final stage completions are counted
-          org.apache.spark.GraftBus.drain(spark.sparkContext, 2000)
-          val bytes = if (ok) Some(tracer.byteTotals) else None
+          val (sec, ok) = runOne(spark, name, fn, sfDir, Some(ledger))
+          // clock already stopped: the ledger drains the bus, then records
+          val record = ledger.close(sec)
           val wall = (System.nanoTime() - w0) / 1e9
-          if (shouldTrace(name, sec, ok)) {
-            tracesLeft -= 1
-            org.apache.spark.GraftBus.drain(spark.sparkContext, 5000)
-            val snap = tracer.snapshotJson(sec)
-            val drawIdx = drawsDone.size + 1
-            traces.getOrElseUpdate(name,
-              scala.collection.mutable.ArrayBuffer.empty) +=
-              s"""{"draw":$drawIdx,"sec":${f"$sec%.3f"},"trace":$snap}"""
-            System.err.println(f"[bench] TRACE $name draw $drawIdx: " +
-              f"$sec%.2fs vs baseline ${baseline.getOrElse(name, -1.0)}%.2fs" +
-              " - stage metrics captured")
-          }
-          Some(name -> QDraw(sec, ok, Seq(sec), wall, bytes))
+          Some(name -> QDraw(sec, ok, wall, record))
         }
       }.toMap
     var skip = Set.empty[String]
-    // predicted wall of the next (light) draw: the most recent observed
-    // wall of every query that would be re-measured
-    def predictedNextWall: Double = selected.iterator
-      .filterNot { case (n, _) => skip(n) }
-      .map { case (n, _) =>
+    // predicted wall of a draw over the queries `measured` admits: the
+    // most recent observed wall of each
+    def predictedWall(measured: String => Boolean): Double = selected.iterator
+      .collect { case (n, _) if measured(n) =>
         drawsDone.reverseIterator.flatMap(_.get(n).map(_.wall))
           .nextOption().getOrElse(0.0)
       }.sum
     while (drawsDone.size < cfg.draws
-        && (drawsDone.isEmpty || elapsed + predictedNextWall <= cfg.budgetSec)) {
+        && (drawsDone.isEmpty || elapsed + predictedWall(n => !skip(n)) <= cfg.budgetSec)) {
       drawsDone += oneDraw(skip)
       if (drawsDone.size == 1)
         skip = drawsDone.head.collect {
@@ -355,27 +261,12 @@ object Bench {
     }
     val plannedDraws = drawsDone.size
 
-    // LIGHT-TAIL SECOND PASS (ADVICE r11 #3): queries at or under
-    // LightThresh are otherwise draw-1-only — one cold run, no outlier
-    // protection, and host noise is one-sided (r5 data: up to 4× on
-    // sub-3s first draws), so the freeze biases the official total only
-    // UPWARD, compounding across the ~230-query light tail. If budget
-    // remains after the planned draws, spend it re-measuring the light
-    // tail exactly once; the official then takes the MIN of the two
-    // samples (see the estimator note below — one-sided noise) instead
-    // of a frozen cold run. `light_passes` in the artifact records
-    // whether it ran, so a budget-starved run's draw-1-only status is
-    // visible (the ADVICE's fallback disclosure).
+    // LIGHT-TAIL SECOND PASS (see the scaladoc): otherwise the light
+    // tail is one cold draw-1 run, biased only upward by host noise.
     var lightPasses = 0
     if (plannedDraws >= 2 && skip.nonEmpty) {
       val heavy = selected.map(_._1).toSet -- skip
-      def predictedLightWall: Double = selected.iterator
-        .filter { case (n, _) => skip(n) }
-        .map { case (n, _) =>
-          drawsDone.reverseIterator.flatMap(_.get(n).map(_.wall))
-            .nextOption().getOrElse(0.0)
-        }.sum
-      if (elapsed + predictedLightWall <= cfg.budgetSec) {
+      if (elapsed + predictedWall(skip) <= cfg.budgetSec) {
         drawsDone += oneDraw(heavy)
         lightPasses = 1
         System.err.println(f"[bench] light-tail pass done " +
@@ -387,15 +278,10 @@ object Bench {
 
     // official per-query = median across the draws that measured it
     // (sub-threshold queries: their single full-draw value); ok = every
-    // measuring draw green. EXCEPTION (r12): a light query that got the
-    // tail re-measure has exactly TWO samples, and the noise this pass
-    // exists to correct is ONE-SIDED upward (r5: up to 4× on sub-3s
-    // first draws) — a 2-sample median (= mean) SPREADS an outlier
-    // instead of removing it, and the re-measure itself can carry
-    // end-of-suite drag (the r12 official caught the st tail's light
-    // re-measures uniformly ~2s high: 28 drained streams re-run after
-    // 3 full draws of session debris). Under one-sided noise min-of-2
-    // is the consistent estimator; 3+ samples keep the median.
+    // measuring draw green. A light query with the tail re-measure has
+    // exactly TWO samples: under one-sided upward noise a 2-sample median
+    // (= mean) spreads an outlier instead of removing it, so it takes
+    // the min; 3+ samples keep the median.
     val names = selected.map(_._1)
     val results = names.map { k =>
       val per = drawsDone.flatMap(_.get(k)).toSeq
@@ -424,22 +310,10 @@ object Bench {
     val detail = results.map { case (k, (t, ok)) =>
       val per = drawsDone.flatMap(_.get(k)).toSeq
       val perDraw = per.map(p => f"${p.sec}%.3f").mkString("[", ",", "]")
-      val runsJson = per.map(_.runs.map(r => f"$r%.3f").mkString("[", ",", "]"))
-        .mkString("[", ",", "]")
-      val traceJson = traces.get(k)
-        .map(es => s""","slow_trace":${es.mkString("[", ",", "]")}""")
-        .getOrElse("")
-      // shuffle-byte accounting (r13): bytes are plan-determined, so the
-      // most recent measuring draw's totals stand for the query
-      val bytesJson = per.reverseIterator.flatMap(_.bytes).nextOption()
-        .map { b =>
-          def f1(d: Double) = f"$d%.1f".replace(",", ".")
-          s""","shufReadMB":${f1(b.shuffleReadMB)}""" +
-          s""","shufWriteMB":${f1(b.shuffleWriteMB)}""" +
-          s""","spillMB":${f1(b.spillMB)},"inputMB":${f1(b.inputMB)}""" +
-          s""","outputMB":${f1(b.outputMB)}"""
-        }.getOrElse("")
-      s""""$k":{"sec":$t,"ok":$ok,"draws":$perDraw,"runs":$runsJson$bytesJson$traceJson}"""
+      val runsJson = per.map(p => f"[${p.sec}%.3f]").mkString("[", ",", "]")
+      // the most recent measuring run's ledger record stands for the query
+      val record = per.last.record.jsonFields
+      s""""$k":{"sec":$t,"ok":$ok,"draws":$perDraw,"runs":$runsJson,$record}"""
     }.mkString("{", ",", "}")
     val target = detailPath(total, drawTotals, force)
     if (target != "BENCH_DETAIL.json")

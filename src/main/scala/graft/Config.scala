@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** The environment knobs, read once and checked, and the one local session
   * every main runs on.
   *
-  * Five knobs remain. A garbled value fails before any session starts,
+  * Four knobs remain. A garbled value fails before any session starts,
   * with a message naming the knob; an unset knob takes its default:
   *  - `SPARK_GRAFT_CPUS`: a positive int, the local cores and the shuffle
   *    width. Default: the host's available processors.
@@ -14,11 +14,13 @@ import org.apache.spark.sql.SparkSession
   *  - `SPARK_GRAFT_DRAWS`: an int ≥ 1, `Bench`'s planned draws. Default: 3.
   *  - `SPARK_GRAFT_BENCH_BUDGET_SEC`: a positive number of seconds,
   *    `Bench`'s wall budget for admitting draws. Default: 1800.
-  *  - `SPARK_GRAFT_TRACE`: `all` or a comma list of registered query
-  *    names whose `Bench` runs always get a stage trace. Default: none.
+  *
+  * Any other `SPARK_GRAFT_*` variable is not a knob of this build (most
+  * are knobs earlier builds read): it is ignored, with one stderr line
+  * naming it.
   */
 final case class Config(cpus: Int, sfDir: String, draws: Int,
-    budgetSec: Double, trace: Set[String]) {
+    budgetSec: Double) {
 
   /** Every main's session confs: the cores; UTC, so date_format and window
     * boundaries render the same on every host; no UI; tiny status-store
@@ -67,8 +69,26 @@ object Config {
     child
   }
 
-  /** The process environment, parsed on first use: the only read of it. */
-  lazy val env: Config = parse(sys.env)
+  /** The knobs [[parse]] reads. */
+  val Knobs: Seq[String] = Seq("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SF_DIR",
+    "SPARK_GRAFT_DRAWS", "SPARK_GRAFT_BENCH_BUDGET_SEC")
+
+  /** The process environment, parsed on first use: the only read of it.
+    * Each set `SPARK_GRAFT_*` variable that is not a knob gets a warning
+    * line, not a failure: an external script may still export a removed
+    * knob, and one stale variable must not sink its whole run. */
+  lazy val env: Config = {
+    unknownKnobs(sys.env).foreach { k =>
+      System.err.println(s"[config] ignoring $k: not a knob " +
+        s"(the knobs are ${Knobs.mkString(", ")})")
+    }
+    parse(sys.env)
+  }
+
+  /** The `SPARK_GRAFT_*` names in `env` that are not knobs, sorted. */
+  def unknownKnobs(env: Map[String, String]): Seq[String] =
+    env.keys.filter(k => k.startsWith("SPARK_GRAFT_") && !Knobs.contains(k))
+      .toSeq.sorted
 
   def parse(env: Map[String, String]): Config = {
     def knob[T](name: String, default: => T, what: String)(read: String => Option[T]): T =
@@ -80,11 +100,7 @@ object Config {
         "an existing directory")(Some(_).filter(new java.io.File(_).isDirectory)),
       draws = knob("SPARK_GRAFT_DRAWS", 3, "an int >= 1")(_.toIntOption.filter(_ >= 1)),
       budgetSec = knob("SPARK_GRAFT_BENCH_BUDGET_SEC", 1800.0,
-        "a positive number of seconds")(_.toDoubleOption.filter(_ > 0)),
-      trace = env.get("SPARK_GRAFT_TRACE").fold(Set.empty[String]) { v =>
-        if (v.trim == "all") Set("all")
-        else queryNames("SPARK_GRAFT_TRACE", v).toSet
-      })
+        "a positive number of seconds")(_.toDoubleOption.filter(_ > 0)))
   }
 
   /** `raw` read by `read`, or `default` when absent. A value `read`

@@ -73,16 +73,34 @@ object StreamingQueries {
     df.sparkSession.table(name)
   }
 
+  private val scratchDirs = ConcurrentHashMap.newKeySet[String]()
+
+  private def delete(spark: SparkSession, path: String): Unit =
+    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+      .delete(new org.apache.hadoop.fs.Path(path), true)
+
   /** A PID-scoped scratch directory for the stream `name`, emptied: two
     * JVMs (e.g. bench and verify) over the same data dir must not clobber
-    * each other's files mid-read, and a re-run starts clean. */
+    * each other's files mid-read, and a re-run starts clean. The path is
+    * registered for [[removeScratch]]. */
   private def scratch(spark: SparkSession, name: String): String = {
     val path = s"${sys.props("java.io.tmpdir")}/graft_${name}_" +
       ProcessHandle.current().pid()
-    org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(path), true)
+    delete(spark, path)
+    scratchDirs.add(path)
     path
   }
+
+  /** Deletes every scratch directory handed out so far. Lane results
+    * (st9, st15, st18, st19) read their scratch files lazily, so this
+    * runs only after the last result is consumed: from
+    * [[graft.CleanExit.teardown]], or from a spec that is done with its
+    * results. */
+  def removeScratch(spark: SparkSession): Unit =
+    scratchDirs.forEach { path =>
+      delete(spark, path)
+      scratchDirs.remove(path)
+    }
 
   /** `df` re-laid as 8 parquet files under `$base/src` and streamed back 4
     * per trigger: 2 real micro-batches, so state and merges genuinely carry

@@ -45,33 +45,4 @@ class BenchProtocolSpec extends AnyFunSuite {
     assert(Bench.detailPath(125.1, Seq(100.0), force = false)
       === "BENCH_DETAIL_OUTLIER.json")
   }
-
-  // --- r12: slow-run tracer baseline loader -------------------------------
-
-  test("loadBaseline: parses per-query medians from a detail artifact") {
-    val f = java.io.File.createTempFile("bdetail", ".json")
-    val w = new java.io.PrintWriter(f)
-    w.println("""{"metric":"total","value":9.9,"queries":{"a1_linecount":{"sec":0.454339437,"ok":true,"draws":[0.454]},"dedup_containment":{"sec":2.96,"ok":true,"draws":[2.97,2.74,3.25]}}}""")
-    w.close()
-    val b = Bench.loadBaseline(f.getPath)
-    assert(b("a1_linecount") === 0.454339437)
-    assert(b("dedup_containment") === 2.96)
-    f.delete()
-  }
-
-  test("loadBaseline: missing or garbled file yields no baselines") {
-    assert(Bench.loadBaseline("/nonexistent/nope.json") === Map.empty)
-    val f = java.io.File.createTempFile("bdetail", ".json")
-    val w = new java.io.PrintWriter(f); w.println("not json at all"); w.close()
-    assert(Bench.loadBaseline(f.getPath) === Map.empty)
-    f.delete()
-  }
-
-  test("StageTracer: snapshot accounts stages against the query wall") {
-    val t = new StageTracer
-    // no events: empty snapshot, all wall unaccounted
-    val s = t.snapshotJson(5.0)
-    assert(s.contains("\"nStages\":0"))
-    assert(s.contains("\"unaccounted\":5.000"))
-  }
 }

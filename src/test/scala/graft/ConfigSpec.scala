@@ -18,25 +18,28 @@ class ConfigSpec extends AnyFunSuite {
     Seq("0", "x", "1.5").foreach(rejects("SPARK_GRAFT_DRAWS", _))
     Seq("-1", "0", "x").foreach(rejects("SPARK_GRAFT_BENCH_BUDGET_SEC", _))
     rejects("SPARK_GRAFT_SF_DIR", "/nonexistent/graft_sf_dir")
-    rejects("SPARK_GRAFT_TRACE", "nosuchquery")
-    rejects("SPARK_GRAFT_TRACE", "")
   }
 
   test("absent knobs take their documented defaults") {
     assert(Config.parse(Map.empty) === Config(
       cpus = Runtime.getRuntime.availableProcessors,
-      sfDir = "/root/testdata/sf0.1", draws = 3, budgetSec = 1800.0,
-      trace = Set.empty))
+      sfDir = "/root/testdata/sf0.1", draws = 3, budgetSec = 1800.0))
   }
 
   test("well-formed knobs parse") {
     val dir = java.nio.file.Files.createTempDirectory("graft_config_spec").toString
     val cfg = Config.parse(Map(
       "SPARK_GRAFT_CPUS" -> " 7 ", "SPARK_GRAFT_SF_DIR" -> dir,
-      "SPARK_GRAFT_DRAWS" -> "1", "SPARK_GRAFT_BENCH_BUDGET_SEC" -> "0.5",
-      "SPARK_GRAFT_TRACE" -> "gr3_pagerank, x2_runtime_bloom"))
-    assert(cfg === Config(7, dir, 1, 0.5, Set("gr3_pagerank", "x2_runtime_bloom")))
-    assert(Config.parse(Map("SPARK_GRAFT_TRACE" -> "all")).trace === Set("all"))
+      "SPARK_GRAFT_DRAWS" -> "1", "SPARK_GRAFT_BENCH_BUDGET_SEC" -> "0.5"))
+    assert(cfg === Config(7, dir, 1, 0.5))
+  }
+
+  test("unknownKnobs names every SPARK_GRAFT_ variable that is not a knob") {
+    assert(Config.unknownKnobs(Map("SPARK_GRAFT_TRACE" -> "all",
+      "SPARK_GRAFT_ROUND_ROWS_PER_PART" -> "8", "SPARK_GRAFT_CPUS" -> "2")) ===
+      Seq("SPARK_GRAFT_ROUND_ROWS_PER_PART", "SPARK_GRAFT_TRACE"))
+    assert(Config.unknownKnobs(Config.Knobs.map(_ -> "1").toMap ++
+      Map("SPARK_DRIVER_MEM" -> "4g", "PATH" -> "/bin")).isEmpty)
   }
 
   test("queryNames keeps order, drops repeats, and lists every unknown name") {
@@ -52,7 +55,7 @@ class ConfigSpec extends AnyFunSuite {
 
   test("the session conf map is Bench's conf set, key for key") {
     val tmp = sys.props("java.io.tmpdir")
-    assert(Config(3, "", 1, 1.0, Set.empty).sessionConfs.toMap === Map(
+    assert(Config(3, "", 1, 1.0).sessionConfs.toMap === Map(
       "spark.master" -> "local[3]",
       "spark.sql.shuffle.partitions" -> "3",
       "spark.sql.session.timeZone" -> "UTC",

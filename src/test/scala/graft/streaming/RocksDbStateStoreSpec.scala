@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.SparkSuite
+import graft.{CleanExit, SparkSuite}
+import org.scalatest.BeforeAndAfterAll
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -13,7 +14,11 @@ import org.apache.spark.sql.streaming.Trigger
   * covered by StreamingQueriesSpec (every stateful query flows through
   * `childSession`, which defaults the provider on).
   */
-class RocksDbStateStoreSpec extends SparkSuite {
+class RocksDbStateStoreSpec extends SparkSuite with BeforeAndAfterAll {
+
+  // close the drained streams' RocksDB providers while the JVM is healthy
+  override def afterAll(): Unit =
+    try CleanExit.stopStateStores() finally super.afterAll()
 
   test("childSession defaults to the RocksDB state store provider") {
     val child = StreamingQueries.childSession(spark)

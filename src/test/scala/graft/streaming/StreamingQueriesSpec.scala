@@ -1,14 +1,20 @@
 package graft.streaming
 
-import graft.SparkSuite
+import graft.{CleanExit, SparkSuite}
 import graft.operators.Tables
 import org.apache.spark.sql.DataFrame
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.time.{Seconds, Span}
 
 import scala.concurrent.duration._
 
-class StreamingQueriesSpec extends SparkSuite with TimeLimits {
+class StreamingQueriesSpec extends SparkSuite with TimeLimits
+    with BeforeAndAfterAll {
+
+  // close the drained streams' RocksDB providers while the JVM is healthy
+  override def afterAll(): Unit =
+    try CleanExit.stopStateStores() finally super.afterAll()
 
   /** A file stream over a tiny one-file parquet source. */
   private def tinyStream(tag: String): DataFrame = {
@@ -374,5 +380,17 @@ class StreamingQueriesSpec extends SparkSuite with TimeLimits {
     // join/aggregate/window formulation
     assert(streamed.nonEmpty)
     assert(streamed.map(_.toSeq).toSeq === batch.map(_.toSeq).toSeq)
+  }
+
+  test("removeScratch deletes a lane's scratch dir once its rows are consumed") {
+    val dir = "/root/testdata/sf0.001"
+    val scratch = new java.io.File(sys.props("java.io.tmpdir"),
+      s"graft_${StreamingQueries.named("st9_foreach", dir)}_" +
+        ProcessHandle.current().pid())
+    val rows = graft.SparkEntry.queries("st9_foreach_sink")(spark, dir).collect()
+    assert(rows.nonEmpty)
+    assert(scratch.isDirectory, s"$scratch")
+    StreamingQueries.removeScratch(spark)
+    assert(!scratch.exists, s"$scratch")
   }
 }
