@@ -48,7 +48,9 @@ import org.apache.spark.sql.SparkSession
   *    visible in the artifact itself. A wall-clock budget
   *    (`SPARK_GRAFT_BENCH_BUDGET_SEC`, default 1800) stops admitting new
   *    draws when the next one would overrun — at least one draw always
-  *    completes.
+  *    completes. A later draw that would measure no query (every query
+  *    light) is not run, so `ndraws` and `draws` count only draws that
+  *    measured something.
   *  - OUTLIER GUARD (r7 verdict ask #6): if the official total deviates
   *    >25% above the session's best draw total, the detail artifact is
   *    diverted to `BENCH_DETAIL_OUTLIER.json` unless `--force` is passed
@@ -97,6 +99,17 @@ object Bench {
   private val LightThresh = 2.0
 
   private val usage = "usage: runMain graft.Bench [--force] [name,name,...]"
+
+  /** The queries draws after the first skip: green in draw 1 (name ->
+    * (seconds, ok)) and at most [[LightThresh]] seconds there. */
+  private[graft] def lightQueries(draw1: Map[String, (Double, Boolean)]): Set[String] =
+    draw1.collect { case (n, (sec, ok)) if ok && sec <= LightThresh => n }.toSet
+
+  /** Whether a draw that skips `skip` measures any of `names`. A draw
+    * that measures none is not run: its total would only repeat the
+    * previous draw's as if it were an independent draw. */
+  private[graft] def admitsAny(names: Seq[String], skip: Set[String]): Boolean =
+    names.exists(n => !skip(n))
 
   /** Median (numeric: mean of the two middles for even counts). */
   private[graft] def median(xs: Seq[Double]): Double = {
@@ -239,6 +252,7 @@ object Bench {
           Some(name -> QDraw(sec, ok, wall, record))
         }
       }.toMap
+    val names = selected.map(_._1)
     var skip = Set.empty[String]
     // predicted wall of a draw over the queries `measured` admits: the
     // most recent observed wall of each
@@ -248,12 +262,11 @@ object Bench {
           .nextOption().getOrElse(0.0)
       }.sum
     while (drawsDone.size < cfg.draws
-        && (drawsDone.isEmpty || elapsed + predictedWall(n => !skip(n)) <= cfg.budgetSec)) {
+        && (drawsDone.isEmpty || admitsAny(names, skip)
+          && elapsed + predictedWall(n => !skip(n)) <= cfg.budgetSec)) {
       drawsDone += oneDraw(skip)
       if (drawsDone.size == 1)
-        skip = drawsDone.head.collect {
-          case (n, q) if q.ok && q.sec <= LightThresh => n
-        }.toSet
+        skip = lightQueries(drawsDone.head.map { case (n, q) => n -> (q.sec, q.ok) })
       System.err.println(f"[bench] draw ${drawsDone.size} done " +
         f"(${drawsDone.last.size} queries, measured " +
         f"${drawsDone.last.valuesIterator.map(_.sec).sum}%.1fs, " +
@@ -262,10 +275,12 @@ object Bench {
     val plannedDraws = drawsDone.size
 
     // LIGHT-TAIL SECOND PASS (see the scaladoc): otherwise the light
-    // tail is one cold draw-1 run, biased only upward by host noise.
+    // tail is one cold draw-1 run, biased only upward by host noise. A
+    // draw loop that stopped for want of heavy queries had draws left.
     var lightPasses = 0
-    if (plannedDraws >= 2 && skip.nonEmpty) {
-      val heavy = selected.map(_._1).toSet -- skip
+    val drawsLeft = plannedDraws >= 2 || cfg.draws >= 2 && !admitsAny(names, skip)
+    if (drawsLeft && skip.nonEmpty) {
+      val heavy = names.toSet -- skip
       if (elapsed + predictedWall(skip) <= cfg.budgetSec) {
         drawsDone += oneDraw(heavy)
         lightPasses = 1
@@ -282,7 +297,6 @@ object Bench {
     // exactly TWO samples: under one-sided upward noise a 2-sample median
     // (= mean) spreads an outlier instead of removing it, so it takes
     // the min; 3+ samples keep the median.
-    val names = selected.map(_._1)
     val results = names.map { k =>
       val per = drawsDone.flatMap(_.get(k)).toSeq
       val sec = if (per.size == 2) per.map(_.sec).min
@@ -310,10 +324,9 @@ object Bench {
     val detail = results.map { case (k, (t, ok)) =>
       val per = drawsDone.flatMap(_.get(k)).toSeq
       val perDraw = per.map(p => f"${p.sec}%.3f").mkString("[", ",", "]")
-      val runsJson = per.map(p => f"[${p.sec}%.3f]").mkString("[", ",", "]")
       // the most recent measuring run's ledger record stands for the query
       val record = per.last.record.jsonFields
-      s""""$k":{"sec":$t,"ok":$ok,"draws":$perDraw,"runs":$runsJson,$record}"""
+      s""""$k":{"sec":$t,"ok":$ok,"draws":$perDraw,$record}"""
     }.mkString("{", ",", "}")
     val target = detailPath(total, drawTotals, force)
     if (target != "BENCH_DETAIL.json")

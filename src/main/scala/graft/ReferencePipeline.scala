@@ -1,10 +1,12 @@
 package graft
 
+import java.nio.charset.StandardCharsets
 import java.util.Locale
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Encoders, Observation, Row, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Observation, Row, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{BloomPipeline, FilterStore, Ingest, Ratings}
@@ -16,15 +18,25 @@ import graft.operators.{BloomPipeline, FilterStore, Ingest, Ratings}
   *   0. split: ratings TSV → train/test (60/40, seeded), both sampled from
   *      one cached parse, so the TSV is parsed once per run
   *   1. linecount: per-rating counts, collected once → single text file
-  *      (getmerge analog); the same collected rows size the filters
+  *      (getmerge analog), written from the driver; the same collected
+  *      rows size the filters
   *   2. builder: per-rating Bloom filters ([[BloomPipeline.buildSized]]
-  *      over that geometry, so train is counted once) → persisted artifact
-  *   3. tester: reload the artifact once, collect it into a broadcast
-  *      [[graft.core.GroupFilters]] (the testers' own shape,
-  *      `bloomfilters_tester.py:81`), probe the held-out split once with
-  *      [[BloomPipeline.fpStatsCollected]] → per-rating FP table; the
-  *      printed report and the results text come from the same collected
-  *      rows
+  *      over that geometry, so train is counted once), collected once (at
+  *      most one row per rating) → persisted artifact, saved from those
+  *      rows as one parquet file
+  *   3. tester: the same rows as a broadcast [[graft.core.GroupFilters]]
+  *      (the testers' own shape, `bloomfilters_tester.py:81`), probing the
+  *      held-out split once with [[BloomPipeline.fpStatsCollected]] →
+  *      per-rating FP table; the printed report and the results text,
+  *      written from the driver, come from the same collected rows
+  *
+  * The filter set is small (one row per rating), so it is collected once
+  * and both written and shipped from the same bytes, the broadcast-when-
+  * small pattern (MapReduce Algorithms for Big Data Analysis, VLDB 2012);
+  * the artifact is not read back. A run fires 9 Spark jobs: the cache fill,
+  * linecount map and result, the geometry broadcast, build map and result,
+  * the artifact write, probe map and result. The two texts are at most 10
+  * lines each and take no job.
   *
   * Usage: `runMain graft.ReferencePipeline <ratings.tsv dir> <p> <outDir>`
   * Prints the per-rating FP-rate table (the reference report's §6 shape)
@@ -52,6 +64,20 @@ object ReferencePipeline {
     "%d\t%d\t%d\t%.8f".formatLocal(Locale.US,
       r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3))
 
+  /** Replaces `dir` with the text a one-partition Spark text write of
+    * `lines` leaves: one `part-00000.txt` holding each line followed by
+    * `\n`, then an empty `_SUCCESS`. Written from the driver through the
+    * Hadoop `FileSystem` of `dir`, so it takes no Spark job. */
+  private def writeText(spark: SparkSession, lines: Seq[String], dir: String): Unit = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    fs.delete(path, true)
+    val out = fs.create(new Path(path, "part-00000.txt"))
+    try lines.foreach(l => out.write((l + "\n").getBytes(StandardCharsets.UTF_8)))
+    finally out.close()
+    fs.create(new Path(path, "_SUCCESS")).close()
+  }
+
   /** Returns the printed report lines (so tests can assert on them). */
   def run(spark: SparkSession, tsvDir: String, p: Double, outDir: String): Seq[String] = {
     // same check and message as BloomFilter.numHashes, before any job or
@@ -78,28 +104,30 @@ object ReferencePipeline {
       // and, as a local relation, the sizing input of the build.
       val linecount = BloomPipeline.linecount(train)
       val counts = linecount.collect().toSeq
-      spark.createDataset(counts.map(r =>
-        "%d\t%d".formatLocal(Locale.US, r.getInt(0), r.getLong(1))))(
-        Encoders.STRING).coalesce(1).write.mode("overwrite").text(s"$outDir/linecount")
+      writeText(spark, counts.map(r =>
+        "%d\t%d".formatLocal(Locale.US, r.getInt(0), r.getLong(1))), s"$outDir/linecount")
 
-      // job 2 — build + persist the filter artifact, no second count of train
+      // job 2 — build, no second count of train, collected once; the
+      // artifact is saved from those rows as a one-partition local
+      // relation, so it stays one parquet file sorted by rating
       val geometry = BloomPipeline.sized(spark.createDataFrame(counts.asJava, linecount.schema), p)
-      FilterStore.save(BloomPipeline.buildSized(train, geometry), s"$outDir/filters")
+      val built = BloomPipeline.buildSized(train, geometry)
+      val filterRows = built.collect().toSeq
+      FilterStore.save(
+        spark.createDataFrame(filterRows.asJava, built.schema).coalesce(1), s"$outDir/filters")
 
-      // job 3 — reload the artifact, broadcast it, probe the held-out split
-      // once; train/test disjoint, so every hit is a false positive
-      // (reference §5.1 contract). At most one row per rating comes back,
-      // in the aggregate's partition order.
-      val filters = spark.sparkContext.broadcast(
-        BloomPipeline.collectFilters(FilterStore.load(spark, s"$outDir/filters")))
+      // job 3 — broadcast the same rows, probe the held-out split once;
+      // train/test disjoint, so every hit is a false positive (reference
+      // §5.1 contract). At most one row per rating comes back, in the
+      // aggregate's partition order.
+      val filters = spark.sparkContext.broadcast(BloomPipeline.groupFilters(filterRows))
       try BloomPipeline.fpStatsCollected(test, filters).collect()
       finally filters.destroy()
     } finally ratings.unpersist()
 
     // the results text keeps the collected (partition) order, the order a
     // coalesced write of the aggregate produces; the report is by rating
-    spark.createDataset(stats.toSeq.map(statLine))(Encoders.STRING)
-      .coalesce(1).write.mode("overwrite").text(s"$outDir/results")
+    writeText(spark, stats.toSeq.map(statLine), s"$outDir/results")
 
     val header = Seq(
       f"ingested=${obs.get("total_rows")} corrupt_dropped=${obs.get("corrupt_rows")} p=$p%.4f",

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.core.{BloomFilter, GroupFilters}
@@ -24,8 +24,11 @@ import graft.functions.{bloom_build_native, bloom_might_contain, bloom_probe_gro
   * remains until its last caller moves (see its scaladoc).
   *
   * [[buildFilters]] is `buildSized(train, sized(linecount(train), p))` in
-  * one plan; [[graft.ReferencePipeline]] collects the linecount rows once
-  * and sizes from them, so its counts, text and geometry share one job.
+  * one plan. [[graft.ReferencePipeline]] collects the linecount rows once
+  * and sizes from them, so its counts, text and geometry share one job;
+  * it then collects [[buildSized]] once and saves the artifact and
+  * broadcasts the probe's filters ([[groupFilters]]) from those rows,
+  * with no reload.
   *
   * Scale design: the sizing pass is a partial+final hash aggregate (tiny
   * result: one row per group); geometry joins back to the fact rows via
@@ -148,13 +151,23 @@ object BloomPipeline {
         count("*").as("total"))
       .withColumn("fpRate", col("falsePositives") / col("total"))
 
+  /** The probe's [[GroupFilters]] from filter rows already on the driver:
+    * each row's `rating`, `m`, `k` and `bits` columns, read by name, so a
+    * full [[buildSized]] row `(rating, n, m, k, bits)` serves as well as a
+    * projected one. One row per group. */
+  def groupFilters(rows: Seq[Row]): GroupFilters =
+    GroupFilters(rows.map(r => (r.getAs[Int]("rating"), r.getAs[Int]("m"),
+      r.getAs[Int]("k"), r.getAs[Array[Byte]]("bits"))))
+
   /** Collect built filters into the bounded driver artifact the reference
     * testers load (`bloomfilters_tester.py:81` unpickles the filter dict;
-    * `tester/BloomFilterTester.java:83-88` stages it via DistributedCache).
-    * One row per group — same contract as collecting the filters. */
+    * `tester/BloomFilterTester.java:83-88` stages it via DistributedCache):
+    * one job over `filters`, mapped by [[groupFilters]]. Callers that
+    * hold the filter rows already ([[graft.ReferencePipeline]] collects
+    * its build once, then saves and probes from those rows) call
+    * [[groupFilters]] directly and skip this job. */
   def collectFilters(filters: DataFrame): GroupFilters =
-    GroupFilters(filters.select("rating", "m", "k", "bits").collect().toSeq
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getAs[Array[Byte]](3))))
+    groupFilters(filters.select("rating", "m", "k", "bits").collect().toSeq)
 
   /** Build + collect + broadcast in one step. */
   def broadcastFilters(train: DataFrame, p: Double): Broadcast[GroupFilters] =

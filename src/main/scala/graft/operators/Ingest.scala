@@ -50,8 +50,9 @@ object Ingest {
     * fire once, on the action that fills the cache, and later reads of the
     * cache do not fire them again. [[graft.ReferencePipeline]] relies on
     * this: its `ingested`/`corrupt_dropped` come from the linecount job
-    * that fills its ratings cache, and the build and probe that read the
-    * cache afterwards leave them as they are. */
+    * that fills its ratings cache, and the build collect and the probe
+    * that read the cache afterwards leave them as they are (the artifact
+    * write reads the collected filter rows, not the cache). */
   def readRatingsTsvObserved(
       spark: SparkSession, path: String,
       observation: org.apache.spark.sql.Observation): DataFrame = {

@@ -3,9 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unit coverage for the bench protocol's pure pieces: the cross-draw
-  * median estimator and the outlier guard that keeps a noise-dominated
-  * total from landing in `BENCH_DETAIL.json` by accident (r7 verdict
-  * asks #1 and #6 — the committed r7 number was the worst of six draws).
+  * median estimator, the admission of draws after the first, and the
+  * outlier guard that keeps a noise-dominated total from landing in
+  * `BENCH_DETAIL.json` by accident (r7 verdict asks #1 and #6 — the
+  * committed r7 number was the worst of six draws).
   */
 class BenchProtocolSpec extends AnyFunSuite {
 
@@ -44,5 +45,21 @@ class BenchProtocolSpec extends AnyFunSuite {
       === "BENCH_DETAIL.json")
     assert(Bench.detailPath(125.1, Seq(100.0), force = false)
       === "BENCH_DETAIL_OUTLIER.json")
+  }
+
+  test("draw admission: an all-light draw 1 admits no later draw; a heavy or failed query does") {
+    val names = Seq("a", "b", "c")
+    val allLight = Map("a" -> (0.4, true), "b" -> (2.0, true), "c" -> (1.1, true))
+    assert(Bench.lightQueries(allLight) === Set("a", "b", "c"))
+    assert(!Bench.admitsAny(names, Bench.lightQueries(allLight)))
+    val heavy = allLight + ("b" -> (2.01, true))
+    assert(Bench.lightQueries(heavy) === Set("a", "c"))
+    assert(Bench.admitsAny(names, Bench.lightQueries(heavy)))
+    // a failed query re-measures however fast it failed
+    val failed = allLight + ("c" -> (0.1, false))
+    assert(Bench.lightQueries(failed) === Set("a", "b"))
+    assert(Bench.admitsAny(names, Bench.lightQueries(failed)))
+    // draw 1 skips nothing
+    assert(Bench.admitsAny(names, Set.empty))
   }
 }

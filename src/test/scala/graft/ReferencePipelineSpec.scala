@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.GraftBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
@@ -37,10 +38,11 @@ class ReferencePipelineSpec extends SparkSuite {
   }
 
   /** One pipeline run shared by the tests below: its report, output dir,
-    * the persistent RDDs it left behind, every executed plan, and the input
-    * records its tasks read. */
+    * the persistent RDDs it left behind, every executed plan, the input
+    * records its tasks read, and the Spark jobs it fired. */
   private case class Run(report: Seq[String], outDir: String,
-      leftPersisted: Set[Int], plans: Seq[SparkPlan], recordsRead: Long)
+      leftPersisted: Set[Int], plans: Seq[SparkPlan], recordsRead: Long,
+      jobs: Int)
 
   private lazy val pipeline = {
     val outDir = Files.createTempDirectory("graft_refpipe_out").toString
@@ -58,16 +60,21 @@ class ReferencePipelineSpec extends SparkSuite {
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
     spark.listenerManager.register(listener)
     spark.sparkContext.addSparkListener(taskListener)
-    val report =
-      try ReferencePipeline.run(spark, tsvDir, p, outDir)
-      finally {
+    val ledger = new QueryLedger(spark.sparkContext)
+    ledger.open()
+    val (report, jobs) =
+      try {
+        val report = ReferencePipeline.run(spark, tsvDir, p, outDir)
+        (report, ledger.close(0.0).jobs)
+      } finally {
         GraftBus.drain(spark.sparkContext, 60000L)
+        spark.sparkContext.removeSparkListener(ledger)
         spark.sparkContext.removeSparkListener(taskListener)
         spark.listenerManager.unregister(listener)
       }
     Run(report, outDir,
       spark.sparkContext.getPersistentRDDs.keySet.diff(persistedBefore).toSet,
-      plans.synchronized(plans.toList), recordsRead.get)
+      plans.synchronized(plans.toList), recordsRead.get, jobs)
   }
 
   /** Every node of an executed plan, through AQE wrappers, query stages,
@@ -86,7 +93,7 @@ class ReferencePipelineSpec extends SparkSuite {
     spark.read.text(path).collect().toSeq.map(_.getString(0))
 
   test("4-job lifecycle: split -> linecount -> build+persist -> reload+probe") {
-    val Run(report, outDir, _, _, _) = pipeline
+    val Run(report, outDir, _, _, _, _) = pipeline
 
     assert(report.head.contains("ingested=20001"))
     assert(report.head.contains("corrupt_dropped=1"))
@@ -112,7 +119,7 @@ class ReferencePipelineSpec extends SparkSuite {
   }
 
   test("results text holds exactly the report's data rows, in one part file") {
-    val Run(report, outDir, _, _, _) = pipeline
+    val Run(report, outDir, _, _, _, _) = pipeline
     val parts = Files.list(Paths.get(s"$outDir/results")).iterator()
     var textParts = 0
     parts.forEachRemaining(f => if (f.getFileName.toString.startsWith("part-")) textParts += 1)
@@ -123,7 +130,7 @@ class ReferencePipelineSpec extends SparkSuite {
   }
 
   test("per rating, (falsePositives, total) == join-form fpStats on the same artifact") {
-    val Run(report, outDir, _, _, _) = pipeline
+    val Run(report, outDir, _, _, _, _) = pipeline
     val test = Ratings.randomSplit(Ingest.readRatingsTsv(spark, tsvDir), seed = 42L)(1)
     val joined = BloomPipeline.fpStats(test, FilterStore.load(spark, s"$outDir/filters"))
       .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -133,7 +140,7 @@ class ReferencePipelineSpec extends SparkSuite {
   }
 
   test("linecount text == independent linecount(train) == each saved filter's n") {
-    val Run(_, outDir, _, _, _) = pipeline
+    val Run(_, outDir, _, _, _, _) = pipeline
     val train = Ratings.randomSplit(Ingest.readRatingsTsv(spark, tsvDir), seed = 42L)(0)
     val independent = BloomPipeline.linecount(train).collect()
       .map(r => s"${r.getInt(0)}\t${r.getLong(1)}").sorted.toSeq
@@ -146,10 +153,42 @@ class ReferencePipelineSpec extends SparkSuite {
   }
 
   test("the ratings input is read once: task records read < 2x the ingested rows") {
-    val Run(report, _, _, _, recordsRead) = pipeline
+    val Run(report, _, _, _, recordsRead, _) = pipeline
     val rows = report.head.split(" ").head.stripPrefix("ingested=").toLong
     assert(recordsRead > 0, "the listener saw no input records")
     assert(recordsRead < 2 * rows, s"tasks read $recordsRead records for $rows ingested rows")
+  }
+
+  test("per rating, the collected probe of the reloaded artifact == the report") {
+    val Run(report, outDir, _, _, _, _) = pipeline
+    val test = Ratings.randomSplit(Ingest.readRatingsTsv(spark, tsvDir), seed = 42L)(1)
+    val filters = spark.sparkContext.broadcast(
+      BloomPipeline.collectFilters(FilterStore.load(spark, s"$outDir/filters")))
+    val reloaded =
+      try BloomPipeline.fpStatsCollected(test, filters).collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
+      finally filters.destroy()
+    val reported = dataRows(report).map(_.split("\t"))
+      .map(f => (f(0).toInt, f(1).toLong, f(2).toLong))
+    assert(reloaded === reported)
+  }
+
+  test("linecount and results: one part file of newline-ended lines, plus _SUCCESS") {
+    val outDir = pipeline.outDir
+    for (dir <- Seq("linecount", "results")) {
+      val names = Files.list(Paths.get(s"$outDir/$dir")).iterator().asScala
+        .map(_.getFileName.toString).filterNot(_.startsWith(".")).toSeq.sorted
+      val parts = names.filter(_.startsWith("part-"))
+      assert(parts.size === 1 && names === "_SUCCESS" +: parts, s"$dir holds $names")
+      val bytes = new String(Files.readAllBytes(Paths.get(s"$outDir/$dir", parts.head)),
+        StandardCharsets.UTF_8)
+      assert(bytes === textLines(s"$outDir/$dir").map(_ + "\n").mkString, dir)
+    }
+  }
+
+  test("a run fires at most 9 Spark jobs") {
+    assert(pipeline.jobs > 0, "the ledger saw no job")
+    assert(pipeline.jobs <= 9, s"run fired ${pipeline.jobs} jobs")
   }
 
   test("run releases every relation it persisted") {
