@@ -5,7 +5,9 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: `runMain graft.Verify <sfDir> <outDir> [name,name,...]`. The
   * optional names (local iteration only) restrict the dump to those
-  * registered queries; an unknown name fails the run. */
+  * registered queries; an unknown name fails the run. A lane that throws
+  * leaves no parquet dir; the others still run, and the main ends with
+  * one `[verify] k of n lanes failed: ...` stderr line and exit code 1. */
 object Verify {
   private val usage = "usage: runMain graft.Verify <sfDir> <outDir> [name,name,...]"
 
@@ -18,18 +20,16 @@ object Verify {
     }
     val spark = Config.env.session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val lanes = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      // release any relation a previous query's operator persisted —
-      // bounded cache footprint across the 80+-query dump
-      spark.catalog.clearCache()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+      .map { case (name, fn) => name -> { () =>
+        // release any relation a previous query's operator persisted —
+        // bounded cache footprint across the 80+-query dump
+        spark.catalog.clearCache()
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      } }
+    val failed = runLanes(lanes)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -48,8 +48,22 @@ object Verify {
     // same clean-exit discipline as Bench: the st* queries leave RocksDB
     // state-store providers loaded, and the default JVM shutdown raced
     // their native teardown in r8 (SIGSEGV at exit). Artifacts are all on
-    // disk by now; halt(0) guarantees the driver sees rc 0.
+    // disk by now; halt gives the driver rc 0, or 1 when a lane failed.
     CleanExit.teardown(spark)
-    CleanExit.halt(0)
+    if (failed.nonEmpty) System.err.println(
+      s"[verify] ${failed.size} of ${lanes.size} lanes failed: ${failed.mkString(", ")}")
+    CleanExit.halt(if (failed.isEmpty) 0 else 1)
   }
+
+  /** Runs every `(name, run)` lane in order. A lane that throws is
+    * reported on stderr and the rest still run; returns the names of the
+    * lanes that threw, in order. */
+  def runLanes(lanes: Seq[(String, () => Unit)]): Seq[String] =
+    lanes.flatMap { case (name, run) =>
+      try { run(); None }
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+    }
 }

@@ -22,31 +22,36 @@ import org.apache.spark.storage.StorageLevel
   *  - the ROUND STEP ([[Rounds.step]]): re-base the round relation on its
   *    own RDD in the round session (its logical plan stays one leaf deep
   *    instead of doubling per round, while RDD lineage keeps fault
-  *    tolerance — unlike localCheckpoint), persist it, materialize it with ONE
-  *    count that also carries the round's observed metric, then release
-  *    the predecessor and any per-round temporary cache;
+  *    tolerance — unlike localCheckpoint), persist it, materialize it with
+  *    ONE Spark job — a `noop` write whose observation carries the round's
+  *    metric ([[materialize]]) — then release the predecessor and any
+  *    per-round temporary cache;
   *  - FIXED-POINT DETECTION ([[Rounds.iterate]]): run rounds until a cap
   *    or until the round metric stops changing, reporting rounds run and
-  *    whether the loop converged.
+  *    whether the loop converged. Each round body also gets its
+  *    predecessor's metric, so a loop whose next round needs a scalar of
+  *    the last one (pagerank's dangling mass) reads it from the job that
+  *    already ran instead of firing another.
   */
 object Fixpoint {
 
   /** Longest wait for a round's observed metric. Spark posts it with the
-    * materializing count; if it is still absent after this bound, the
+    * materializing write; if it is still absent after this bound, the
     * step computes the same aggregate over the persisted round relation
     * with one explicit job — the same value, so the bound never changes a
     * result, and a lost metric costs a job instead of a hang. */
   val MetricWait: FiniteDuration = 5.seconds
 
-  /** A round metric of type `T`: the round relation's row count (which
-    * every step takes anyway), or one aggregate observed on that count. */
-  final class Metric[T] private[Fixpoint] (private[Fixpoint] val agg: Option[Column])
+  /** A round metric of type `T`: one aggregate over the round relation,
+    * observed on the job that materializes it. */
+  final class Metric[T] private[Fixpoint] (private[Fixpoint] val agg: Column)
 
   object Metric {
-    val rows: Metric[Long] = new Metric(None)
+    /** The round relation's row count. */
+    val rows: Metric[Long] = new Metric(count(lit(1)))
 
     /** `agg` must evaluate to a `T` over the round relation. */
-    def observed[T](agg: Column): Metric[T] = new Metric(Some(agg))
+    def observed[T](agg: Column): Metric[T] = new Metric(agg)
   }
 
   /** Exact Σ label of a `(…, label)` round relation: an order-independent
@@ -100,6 +105,19 @@ object Fixpoint {
     try Await.result(obs.future, MetricWait).get(0)
     catch { case _: TimeoutException => df.agg(agg).head().get(0) }
 
+  /** Persist `df` and materialize it with ONE Spark job: a `noop` write
+    * of the persisted relation, observed with `agg` (several scalars ride
+    * one `struct`). Returns the persisted relation and `agg`'s value
+    * ([[observed]]: bounded wait, one-job fallback). A `count()` instead
+    * costs a job per stage of its aggregate on top of the plan's own. */
+  def materialize(df: DataFrame, agg: Column): (DataFrame, Any) = {
+    val obs = Observation()
+    val cached = df.observe(obs, agg.as("metric"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    cached.write.format("noop").mode("overwrite").save()
+    (cached, observed(obs, cached, agg))
+  }
+
   final class Rounds private[Fixpoint] (outer: SparkSession,
       val session: SparkSession, val width: Int) {
 
@@ -120,17 +138,12 @@ object Fixpoint {
     def rebase(df: DataFrame): DataFrame =
       if (narrowed) pin(df) else df
 
-    /** Materialize one round: pin `body`, persist it, and count it once —
-      * the count also fires `metric` when it is observed — then release
-      * `release` (the predecessor and any temporaries). */
+    /** Materialize one round with one Spark job: pin `body`, persist it,
+      * and write it once to `noop` — the write also fires `metric` — then
+      * release `release` (the predecessor and any temporaries). */
     def step[T](body: DataFrame, metric: Metric[T] = Metric.rows,
         release: Seq[DataFrame] = Nil): Step[T] = {
-      val obs = Observation()
-      val pinned = pin(body)
-      val next = metric.agg.fold(pinned)(m => pinned.observe(obs, m.as("metric")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val rows = next.count()
-      val value = metric.agg.fold(rows: Any)(observed(obs, next, _))
+      val (next, value) = materialize(pin(body), metric.agg)
       release.foreach(_.unpersist(false))
       Step(next, value.asInstanceOf[T])
     }
@@ -138,12 +151,14 @@ object Fixpoint {
     /** Run `body` from `init` for at most `maxRounds` rounds, stopping
       * after the first round whose metric is `stable` against its
       * predecessor's (`seed` stands for the initial state's metric when it
-      * is already known). `body` gets the current state and the 1-based
-      * round number; `initCaches` are the caches behind `init`, released
-      * after round 1 like every later predecessor. */
+      * is already known). `body` gets the current state, the 1-based
+      * round number and the current state's metric (`seed` in round 1);
+      * `initCaches` are the caches behind `init`, released after round 1
+      * like every later predecessor. */
     def iterate[T](init: DataFrame, maxRounds: Int, metric: Metric[T],
         seed: Option[T] = None, initCaches: Seq[DataFrame] = Nil)(
-        body: (DataFrame, Int) => Round)(stable: (T, T) => Boolean): Result = {
+        body: (DataFrame, Int, Option[T]) => Round)(
+        stable: (T, T) => Boolean): Result = {
       var state = init
       var caches = initCaches
       var prev = seed
@@ -151,7 +166,7 @@ object Fixpoint {
       var converged = false
       while (n < maxRounds && !converged) {
         n += 1
-        val round = body(state, n)
+        val round = body(state, n, prev)
         val s = step(round.next, metric, caches ++ round.temps)
         converged = prev.exists(stable(_, s.value))
         prev = Some(s.value)

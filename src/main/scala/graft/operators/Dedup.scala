@@ -861,7 +861,7 @@ object Dedup {
     val labels = loop.iterate(
         edgesR.select(col("v").as("node")).distinct()
           .withColumn("label", col("node")),
-        Int.MaxValue, Fixpoint.labelSum) { (cur, _) =>
+        Int.MaxValue, Fixpoint.labelSum) { (cur, _, _) =>
       Graph.minLabelJumpRound(edgesR, cur)
     }(Fixpoint.sameSum)
     // the final labels are materialized; drop the scaffolding caches (the

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructType}
 
 import graft.functions.{Fixpoint, Staging}
 
@@ -29,13 +30,16 @@ import graft.functions.{Fixpoint, Staging}
   *    power-law graphs (a raw wedge join on a hub node is quadratic in
   *    its degree). The oracle counts the same triangles with the
   *    simpler node-id orientation — the COUNT is orientation-invariant.
-  *  - PageRank: rank is a node-keyed relation, never a driver array —
-  *    each iteration is (edges join ranks) shuffled on src, an
-  *    aggregate on dst, and a one-row dangling-mass scalar
-  *    cross-joined back in (the repo's bounded scalar-broadcast
-  *    contract). Iterations materialize via persist so the lineage
-  *    stays shallow; node count and iteration count are the only
-  *    driver scalars.
+  *  - PageRank: rank is a node-keyed `(node, deg, rank)` relation,
+  *    never a driver array. The preps are the edge relation with the
+  *    out-degree folded on by a window, and one `(node, deg)` aggregate
+  *    (`deg = 0` marks a dangling node). Each iteration is (edges join
+  *    ranks) shuffled on src, an aggregate on dst, and a one-row
+  *    dangling-mass relation cross-joined back in (the repo's bounded
+  *    scalar-broadcast contract). Iterations materialize via persist so
+  *    the lineage stays shallow, each with one job that also observes
+  *    the next round's dangling mass; the driver scalars are n, the
+  *    seed count and that one double per round.
   */
 object Graph {
 
@@ -227,68 +231,70 @@ object Graph {
 
   /** The [[pagerank]] / [[personalizedPagerank]] recurrence: `seeds`
     * `None` teleports (and spreads the dangling mass) uniformly over all
-    * `n` nodes; `Some(p)` teleports to the nodes matching `p` only. */
+    * `n` nodes; `Some(p)` teleports to the nodes matching `p` only. The
+    * rank state is `(node, deg, rank)`: carrying the out-degree lets the
+    * job that materializes a round also observe that round's dangling
+    * mass, which the next round spreads. */
   private def rankLoop(events: DataFrame, seeds: Option[Column], iters: Int,
       d: Double): DataFrame = {
     val spark = events.sparkSession
-    val ed = edges(events).persist()
-    val nodes = ed.select(col("src").as("node"))
-      .union(ed.select(col("dst").as("node"))).distinct().persist()
-    val outDeg = ed.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
+    // the out-degree folded onto each edge once (the arithmetic stays
+    // rank/deg, bit-identical to the oracle's)
+    val ed = edges(events)
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
       .persist()
-    // ITERATION-INVARIANT prep, paid once instead of once per iteration:
-    //  - deg folded onto each edge (saves a join inside every loop body;
-    //    the arithmetic stays rank/deg, bit-identical to the oracle's)
-    //  - the dangling node SET (nodes with no out-edge) — the loop then
-    //    only sums ranks over it, instead of re-deriving it by anti-join
-    val edDeg = ed
-      .join(outDeg.withColumnRenamed("node", "src"), "src")
-      .select("src", "dst", "deg").persist()
-    val dangling = nodes.join(outDeg, Seq("node"), "left_anti").persist()
-    // the two collected scalars: the seed count (one bounded job,
-    // personalized only) and the node count
-    val seedSet = seeds.map { p =>
-      val k = nodes.where(p).count()
-      require(k > 0, "personalized pagerank needs a non-empty seed set")
-      (p, k)
-    }
-    val n = nodes.count()
-    // a per-node share `f(count)`: over all n nodes, or over the seeds only
-    def share(f: Long => Column): Column = seedSet match {
-      case Some((p, k)) => when(p, f(k)).otherwise(lit(0.0))
-      case None => f(n)
-    }
+    // every node with its out-degree; deg = 0 marks a dangling node. ONE
+    // job materializes it (and the edge cache) and observes the three
+    // driver scalars: n, the seed count k, and the dangling seeds, whose
+    // 1/k each is round 1's dangling mass
+    val seed = seeds.getOrElse(lit(true))
+    val (nodeDeg, counts) = Fixpoint.materialize(
+      ed.select(col("src").as("node"), col("deg"))
+        .union(ed.select(col("dst").as("node"), lit(0L).as("deg")))
+        .groupBy("node").agg(max("deg").as("deg")),
+      struct(count(lit(1)), count_if(seed), count_if(seed && col("deg") === 0)))
+    val c = counts.asInstanceOf[Row]
+    val (n, k, kDangling) = (c.getLong(0), c.getLong(1), c.getLong(2))
+    require(seeds.isEmpty || k > 0,
+      "personalized pagerank needs a non-empty seed set")
+    // a per-node share `f(k)`: over all k = n nodes, or over the seeds only
+    def share(f: Long => Column): Column =
+      seeds.fold(f(k))(p => when(p, f(k)).otherwise(lit(0.0)))
     // right-sized round width (r17, VERDICT r16 #3 / guide §2.2): the
     // per-iteration exchanges carry node-keyed rank rows and the
     // deg-folded edge relation — both sized by the measured node count
     val loop = Fixpoint.rounds(spark, n)
-    val nodesR = loop.enter(nodes)
-    val edDegR = loop.enter(edDeg)
-    val danglingR = loop.enter(dangling)
-    // initial rank: persisted but NOT pre-materialized — it is a literal
-    // projection over the cached node set, cheaper to let the first
-    // iteration's job populate than to pay a dedicated action
-    val rank0 = nodesR.select(col("node"), share(k => lit(1.0 / k)).as("rank"))
-      .persist()
-    val ranked = loop.iterate(rank0, iters, Fixpoint.Metric.rows,
-        initCaches = Seq(rank0)) { (rank, _) =>
-      // dangling mass: one row, cross-joined (scalar broadcast)
-      val dang = rank.join(danglingR, Seq("node"), "left_semi")
-        .agg(coalesce(sum("rank"), lit(0.0)).as("dang"))
-      val contrib = edDegR.join(rank, edDegR("src") === rank("node"))
+    val edR = loop.enter(ed)
+    // a round's dangling mass enters the next as a one-row local relation,
+    // cross-joined: no job, and no per-round literal in generated code
+    def mass(dang: Double): DataFrame = loop.session.createDataFrame(
+      java.util.List.of(Row(dang)),
+      new StructType().add("dang", DoubleType, nullable = false))
+    val dangling = Fixpoint.Metric.observed[Double](
+      coalesce(sum(when(col("deg") === 0, col("rank"))), lit(0.0)))
+    // initial rank: a literal projection over the cached node set, left
+    // for round 1's job to compute rather than materialized on its own
+    val rank0 = loop.enter(nodeDeg)
+      .select(col("node"), col("deg"), share(k => lit(1.0 / k)).as("rank"))
+    val ranked = loop.iterate(rank0, iters, dangling,
+        seed = Some(kDangling.toDouble / k),
+        initCaches = Seq(nodeDeg)) { (rank, _, dang) =>
+      val contrib = edR.join(rank.select(col("node"), col("rank")),
+          col("src") === col("node"))
         .groupBy(col("dst").as("node"))
         .agg(sum(col("rank") / col("deg")).as("contrib"))
-      Fixpoint.Round(nodesR.join(contrib, Seq("node"), "left")
-        .crossJoin(dang)
-        .select(col("node"),
+      Fixpoint.Round(rank.select(col("node"), col("deg"))
+        .join(contrib, Seq("node"), "left")
+        .crossJoin(mass(dang.get))
+        .select(col("node"), col("deg"),
           (share(k => lit((1.0 - d) / k)) + lit(d) *
             (coalesce(col("contrib"), lit(0.0)) +
               share(k => col("dang") / lit(k.toDouble)))).as("rank")))
     }((_, _) => false)
-    // the final rank relation is cached and materialized — every prep
-    // cache is now dead weight; release them so a long multi-query run
-    // doesn't accrue resident graph relations (r8 advice #4)
-    Seq(ed, nodes, outDeg, edDeg, dangling).foreach(_.unpersist())
+    // the final rank relation is cached and materialized — the edge cache
+    // is now dead weight; release it so a long multi-query run doesn't
+    // accrue resident graph relations (r8 advice #4)
+    ed.unpersist()
     // the returned relation reads the final persisted rank lazily —
     // registered ownership (VERDICT r14 #7: the CacheScope discipline
     // extended to every Graph persist-and-return site)
@@ -336,9 +342,10 @@ object Graph {
     * in GraphSpec against the closed-form star-graph fixed point.
     *
     * Scale posture: identical to [[pagerank]] — node-keyed relations,
-    * one edge equi-join + one aggregate per half-step, ONE persist+count
-    * per round on a re-based RDD (the 2^rounds analysis-blowup
-    * discipline; the a-relation's cache fills as the h-step reads it),
+    * one edge equi-join + one aggregate per half-step, ONE persist and
+    * one materializing job per round on a re-based RDD (the 2^rounds
+    * analysis-blowup discipline; the a-relation's cache fills as the
+    * h-step reads it),
     * every prep released at exit with only the materialized result cache
     * resident. The oracle is the identical recurrence unrolled as
     * DuckDB CTEs. */
@@ -369,7 +376,7 @@ object Graph {
     val loop = Fixpoint.rounds(edgeRel.sparkSession, nodes.count())
     val nodesR = loop.enter(nodes)
     val edR = loop.enter(ed)
-    // the guard's max(h) rides each round's materializing count — zero
+    // the guard's max(h) rides each round's materializing job — zero
     // extra jobs (h sums non-negative terms: max == |max|)
     val hMaxOf = Fixpoint.Metric.observed[Long](
       coalesce(max(col("h")), lit(0L)))
@@ -575,7 +582,7 @@ object Graph {
     // no-op join. Exiting then skips those rounds with a bit-identical
     // result; a frontier still expanding at `hops` runs every level.
     val dist = loop.iterate(dist0, hops, Fixpoint.Metric.rows,
-        initCaches = Seq(dist0)) { (cur, h) =>
+        initCaches = Seq(dist0)) { (cur, h, _) =>
       val next = cur.where(col("dist") === h - 1)
         .join(symR, col("node") === col("u"))
         .select(col("v").as("node"), lit(h).as("dist"))
@@ -600,9 +607,10 @@ object Graph {
     * no inbound path stay at exactly 0.0, so the relation is sparse in
     * spirit even though emitted densely for the oracle.
     *
-    * Scale posture is [[pagerank]]'s: node-keyed relations, per-iteration
-    * persist+count so lineage stays one step deep, the seed count as the
-    * single bounded driver scalar, every prep cache released at exit. */
+    * Scale posture is [[pagerank]]'s: node-keyed relations, a per-
+    * iteration persist materialized by one job so lineage stays one step
+    * deep, n, the seed count and the per-round dangling mass as the
+    * bounded driver scalars, every prep cache released at exit. */
   def personalizedPagerank(
       events: DataFrame,
       seedPred: Column,
@@ -622,8 +630,8 @@ object Graph {
     * `(node, community)`.
     *
     * Scale posture: one symmetrized-adjacency equi-join plus a min
-    * aggregate per round over node-keyed relations; per-round
-    * persist+count keeps lineage one step deep (the [[pagerank]]
+    * aggregate per round over node-keyed relations; a per-round persist
+    * materialized by one job keeps lineage one step deep (the [[pagerank]]
     * discipline), and labels are integers so the cross-engine match is
     * exact, not rounded. */
   def labelPropagation(events: DataFrame, iters: Int = 4): DataFrame = {
@@ -646,9 +654,9 @@ object Graph {
     // monotone — a round that changes zero labels is the fixed point and
     // every remaining round recomputes the identical relation, so exiting
     // early is bit-identical to the full `iters` unroll. Detection (r17):
-    // the exact label sum observed on the materializing count.
+    // the exact label sum observed on the materializing job.
     val labels = loop.iterate(loop.rebase(lab), iters, Fixpoint.labelSum,
-        initCaches = Seq(lab)) { (cur, _) =>
+        initCaches = Seq(lab)) { (cur, _, _) =>
       Fixpoint.Round(minLabelRound(symR, cur))
     }(Fixpoint.sameSum)
     Seq(und, sym).foreach(_.unpersist())
@@ -761,7 +769,7 @@ object Graph {
     // IDENTICAL to the fixed round's and are synthesized driver-side
     // below (same integers, same division) instead of re-running the
     // three stats joins per no-op round. Detection is the exact label
-    // sum observed on each round's materializing count.
+    // sum observed on each round's materializing job.
     var cur = loop.rebase(lab0)
     var prevSum: Option[java.math.BigDecimal] = None
     var fixed = false
@@ -849,7 +857,7 @@ object Graph {
     // zero extra jobs, and no r16 `__old` column through the per-round
     // persists and the pointer-jump exchange
     val labels = loop.iterate(loop.rebase(labels0), Int.MaxValue,
-        Fixpoint.labelSum, initCaches = Seq(labels0)) { (cur, _) =>
+        Fixpoint.labelSum, initCaches = Seq(labels0)) { (cur, _, _) =>
       minLabelJumpRound(symR, cur)
     }(Fixpoint.sameSum)
     Seq(und, sym).foreach(_.unpersist(false))
@@ -912,7 +920,7 @@ object Graph {
     *
     * Scale posture: per round, two alive-set equi-joins against the
     * symmetrized edges and one count aggregate — node-keyed relations,
-    * persist+count per round ([[pagerank]] discipline), never a driver
+    * one persist per round ([[pagerank]] discipline), never a driver
     * structure beyond the two survivor COUNTS the flag needs. */
   def kCore(events: DataFrame, k: Int = 3, rounds: Int = 6): DataFrame = {
     val spark = events.sparkSession
@@ -938,7 +946,7 @@ object Graph {
     // result and the same `converged` flag the full unroll reports; a
     // graph still peeling at round `rounds` runs every round, unchanged.
     val core = loop.iterate(loop.rebase(alive), rounds, Fixpoint.Metric.rows,
-        seed = Some(nAlive), initCaches = Seq(alive)) { (cur, _) =>
+        seed = Some(nAlive), initCaches = Seq(alive)) { (cur, _, _) =>
       Fixpoint.Round(coreDeg(cur).where(col("deg") >= k).select("node"))
     }(_ == _)
     // zero rounds compare the initial count with itself

@@ -26,4 +26,19 @@ object SparkSuite {
 
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.spark
+
+  /** `body`'s result and the Spark jobs it fired, counted with
+    * [[QueryLedger]] as `Bench` counts a query's. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val ledger = new QueryLedger(spark.sparkContext)
+    try {
+      ledger.open()
+      val res = body
+      // a loaded host can hold job-end events past the ledger's own wait
+      org.apache.spark.GraftBus.drain(spark.sparkContext, 60000L)
+      val rec = ledger.close(0.0)
+      assert(rec.complete, "the listener bus did not drain")
+      (res, rec.jobs)
+    } finally spark.sparkContext.removeSparkListener(ledger)
+  }
 }

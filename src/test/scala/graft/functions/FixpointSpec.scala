@@ -36,6 +36,27 @@ class FixpointSpec extends SparkSuite with TimeLimits {
     s.state.unpersist(true)
   }
 
+  test("a step materializes its round with one Spark job") {
+    // a count() would add a job per stage of its own aggregate
+    val r = Fixpoint.rounds(spark, 1000)
+    val narrow = spark.range(0, 1000).toDF("label")
+    val (s1, narrowJobs) = jobsOf(r.step(narrow, Fixpoint.labelSum))
+    assert(s1.value === new java.math.BigDecimal(499500))
+    assert(narrowJobs === 1, "jobs fired by a step over a narrow body")
+    // an exchange in the body is one more job (adaptive execution runs
+    // each shuffle stage as its own job), and nothing else is
+    val grouped = narrow.groupBy((col("label") % 10).as("node"))
+      .agg(count(lit(1)).as("label"))
+    val (s2, groupedJobs) = jobsOf(r.step(grouped, Fixpoint.labelSum,
+      release = Seq(s1.state)))
+    assert(s2.value === new java.math.BigDecimal(1000))
+    assert(groupedJobs === 2, "jobs fired by a step over a one-exchange body")
+    // the persisted round serves later reads without recomputing it
+    assert(s2.state.storageLevel !== StorageLevel.NONE)
+    assert(jobsOf(s2.state.collect())._2 === 1)
+    s2.state.unpersist(true)
+  }
+
   test("round sessions keep the outer session's runtime SQL confs") {
     val outer = spark.newSession()
     outer.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -58,16 +79,20 @@ class FixpointSpec extends SparkSuite with TimeLimits {
       .persist()
     init.count()
     val r = Fixpoint.rounds(spark, 3)
-    val seen = scala.collection.mutable.ArrayBuffer.empty[(Int, org.apache.spark.sql.DataFrame)]
+    val seen = scala.collection.mutable.ArrayBuffer.empty[
+      (Int, org.apache.spark.sql.DataFrame, Option[java.math.BigDecimal])]
     val res = r.iterate(r.rebase(init), 10, Fixpoint.labelSum,
-        initCaches = Seq(init)) { (cur, n) =>
-      seen += ((n, cur))
+        initCaches = Seq(init)) { (cur, n, prev) =>
+      seen += ((n, cur, prev))
       Fixpoint.Round(cur.select(col("node"), least(col("label"), lit(1L))
         .as("label")))
     }(Fixpoint.sameSum)
     assert(res.rounds === 2)
     assert(res.converged)
     assert(seen.map(_._1) === Seq(1, 2))
+    // each body gets its state's metric: none known for init, then
+    // round 1's observed label sum
+    assert(seen.map(_._3) === Seq(None, Some(new java.math.BigDecimal(3))))
     assert(res.state.as[(Long, Long)].collect().sorted ===
       Array((1L, 1L), (2L, 1L), (3L, 1L)))
     assert(init.storageLevel === StorageLevel.NONE)
@@ -76,7 +101,7 @@ class FixpointSpec extends SparkSuite with TimeLimits {
     assert(res.state.storageLevel !== StorageLevel.NONE)
     assert(spark.sparkContext.getPersistentRDDs.size === base + 1)
     // a cap below the fixed point stops unconverged
-    val capped = r.iterate(init, 1, Fixpoint.labelSum) { (cur, _) =>
+    val capped = r.iterate(init, 1, Fixpoint.labelSum) { (cur, _, _) =>
       Fixpoint.Round(cur.select(col("node"), least(col("label"), lit(1L))
         .as("label")))
     }(Fixpoint.sameSum)

@@ -209,6 +209,69 @@ class GraphSpec extends SparkSuite {
     assert(math.abs(r(1L) + r(2L) - 1.0) < 1e-9)
   }
 
+  /** The pagerank recurrence as a plain-Scala power iteration: teleport
+    * and dangling mass go to `teleport` (every node for [[Graph.pagerank]]),
+    * the mass of round `i` spread in round `i + 1`. */
+  private def powerIteration(edges: Set[(Long, Long)], teleport: Long => Boolean,
+      iters: Int, d: Double = 0.85): Map[Long, Double] = {
+    val nodes = edges.flatMap { case (s, t) => Seq(s, t) }.toSeq.sorted
+    val out = edges.toSeq.groupMapReduce(_._1)(_ => 1)(_ + _)
+    val k = nodes.count(teleport).toDouble
+    def share(v: Long, x: Double) = if (teleport(v)) x / k else 0.0
+    var r = nodes.map(v => v -> share(v, 1.0)).toMap
+    for (_ <- 1 to iters) {
+      val dang = nodes.filterNot(out.contains).map(r).sum
+      val contrib = edges.toSeq.groupMapReduce(_._2)(e => r(e._1) / out(e._1))(_ + _)
+      r = nodes.map(v => v ->
+        (share(v, 1.0 - d) + d * (contrib.getOrElse(v, 0.0) + share(v, dang)))).toMap
+    }
+    r
+  }
+
+  private def round9(x: Double): Double =
+    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  test("pagerank/ppr: equal to a plain power iteration, with a dangling " +
+      "node and a node without in-edges") {
+    // 5→1, 1→2, 2→3, 3→1, 2→4: node 4 has no out-edge, node 5 no in-edge
+    val ev = eventsOf(Seq(5L, 1L, 2L, 3L, 1L, 2L, 4L))
+    val ed = Set((5L, 1L), (1L, 2L), (2L, 3L), (3L, 1L), (2L, 4L))
+    assert(Graph.edges(ev).as[(Long, Long)].collect().toSet === ed)
+    for (iters <- Seq(1, 4)) {
+      val pr = Graph.pagerank(ev, iters).as[(Long, Double)].collect().toMap
+      val prExp = powerIteration(ed, _ => true, iters)
+      assert(pr.keySet === prExp.keySet)
+      prExp.foreach { case (v, x) =>
+        assert(math.abs(pr(v) - round9(x)) < 1e-12, s"pagerank($v), $iters rounds")
+      }
+      // seeds {4, 5}: one dangling seed, one without in-edges
+      val ppr = Graph.personalizedPagerank(ev, col("node") >= 4L, iters)
+        .as[(Long, Double)].collect().toMap
+      val pprExp = powerIteration(ed, _ >= 4L, iters)
+      pprExp.foreach { case (v, x) =>
+        assert(math.abs(ppr(v) - round9(x)) < 1e-12, s"ppr($v), $iters rounds")
+      }
+    }
+    spark.catalog.clearCache()
+  }
+
+  test("pagerank/ppr fire at most 30 jobs") {
+    // 150 users over 10 hour buckets, each bucket ending in its own sink;
+    // 3 rounds: the (node, deg) prep job, one materializing job plus the
+    // body's exchanges per round, the ordered collect
+    val rnd = new scala.util.Random(5)
+    val ev = eventsOfBuckets((0 until 10).map { b =>
+      Seq.fill(300)(rnd.nextInt(150).toLong) :+ (1000L + b)
+    }: _*)
+    val (_, prJobs) = jobsOf(Graph.pagerank(ev).collect())
+    assert(prJobs <= 30, "pagerank jobs")
+    spark.catalog.clearCache()
+    val (_, pprJobs) = jobsOf(
+      Graph.personalizedPagerank(ev, col("node") % 50 === 0).collect())
+    assert(pprJobs <= 30, "personalized pagerank jobs")
+    spark.catalog.clearCache()
+  }
+
   test("labelPropagation: components collapse to their min node id") {
     // components {1,2,3} (diameter 2) and {4,5}: 4 rounds ≥ both diameters
     val r = Graph.labelPropagation(
