@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.core.BloomFilter
 import graft.functions.bloom_might_contain
 import graft.operators.{AsOf, BloomPipeline, Bucketing, Dedup, DedupSql, FeatureEng, FeatureEngSql, FilterStore, Graph, GraphSql, Ingest, Kmv, KmvSql, Layout, LayoutSql, Multimodal, MultimodalSql, NaiveBayes, NaiveBayesSql, Privacy, PrivacySql, RangeJoin, Ranks, Ratings, Sampling, SamplingSql, Similarity, SimilaritySql, Skew, Tables, TextAnalysis, TextAnalysisSql, Tokenizer, TokenizerSql, Training}
+import graft.operators.Similarity.{ExactCos, Ivf, OneList, PqAdc, Sq8Cos}
 
 /** Driver contract (see the build brief + SURVEY.md §7).
   *
@@ -2788,8 +2789,8 @@ object SparkEntry {
       Similarity.annTopK(Tables(s, dir, "embeddings"),
         col("vec_id") % 50 === 0, simK).orderBy("query_id", "rank")),
     "sim_ann_ivf" -> ((s, dir) => // approximate by design -> rows-only check
-      Similarity.ivfTopK(Tables(s, dir, "embeddings"),
-        col("vec_id") % 50 === 0, simK).orderBy("query_id", "rank")),
+      Similarity.indexTopK(Tables(s, dir, "embeddings"), col("vec_id") % 50 === 0,
+        simK, Ivf(), ExactCos).orderBy("query_id", "rank")),
     // Recall gates for the ANN paths: counts are real oracle values,
     // recall_ok the cross-engine invariant (seed-deterministic recall on
     // the random-unit-vector testdata measures 0.46/0.48 for LSH/IVF —
@@ -2809,18 +2810,18 @@ object SparkEntry {
     "sim_ann_ivf_recall" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       Similarity.recallVsExact(emb,
-        Similarity.ivfTopK(emb, col("vec_id") % 50 === 0, simK),
+        Similarity.indexTopK(emb, col("vec_id") % 50 === 0, simK, Ivf(), ExactCos),
         col("vec_id") % 50 === 0, simK, floor = 0.25)
     }),
     "sim_ann_sq8" -> ((s, dir) => // approximate by design -> rows-only check
       // IVF lists scored in the 4x-compressed scalar-quantized domain;
       // no trained artifact (per-vector scale), unlike the PQ lanes
-      Similarity.ivfSq8TopK(Tables(s, dir, "embeddings"),
-        col("vec_id") % 50 === 0, simK).orderBy("query_id", "rank")),
+      Similarity.indexTopK(Tables(s, dir, "embeddings"), col("vec_id") % 50 === 0,
+        simK, Ivf(), Sq8Cos).orderBy("query_id", "rank")),
     "sim_ann_sq8_recall" -> ((s, dir) => {
       val emb = Tables(s, dir, "embeddings")
       Similarity.recallVsExact(emb,
-        Similarity.ivfSq8TopK(emb, col("vec_id") % 50 === 0, simK),
+        Similarity.indexTopK(emb, col("vec_id") % 50 === 0, simK, Ivf(), Sq8Cos),
         col("vec_id") % 50 === 0, simK, floor = 0.25)
     }),
     "sim_ann_pq" -> ((s, dir) => { // approximate by design -> rows-only check
@@ -2829,8 +2830,8 @@ object SparkEntry {
       // streaming state stores
       val c = Config.child(s, "spark.sql.shuffle.partitions" -> "8")
       val cb = Similarity.loadPqCodebook(c, fixtures("pq_codebook")(c, dir))
-      Similarity.pqTopK(Tables(c, dir, "embeddings"),
-        col("vec_id") % 50 === 0, simK, pretrained = Some(cb))
+      Similarity.indexTopK(Tables(c, dir, "embeddings"),
+        col("vec_id") % 50 === 0, simK, OneList, PqAdc(cb))
         .orderBy("query_id", "rank")
     }),
     "sim_ann_pq_recall" -> ((s, dir) => {
@@ -2838,8 +2839,7 @@ object SparkEntry {
       val emb = Tables(c, dir, "embeddings")
       val cb = Similarity.loadPqCodebook(c, fixtures("pq_codebook")(c, dir))
       Similarity.recallVsExact(emb,
-        Similarity.pqTopK(emb, col("vec_id") % 50 === 0, simK,
-          pretrained = Some(cb)),
+        Similarity.indexTopK(emb, col("vec_id") % 50 === 0, simK, OneList, PqAdc(cb)),
         col("vec_id") % 50 === 0, simK, floor = 0.25)
     }),
     "sim_ann_ivfpq" -> ((s, dir) => { // approximate by design -> rows-only
@@ -2847,8 +2847,8 @@ object SparkEntry {
       // production ANN composition; small-shuffle child session like pq
       val c = Config.child(s, "spark.sql.shuffle.partitions" -> "8")
       val cb = Similarity.loadPqCodebook(c, fixtures("pq_codebook")(c, dir))
-      Similarity.ivfPqTopK(Tables(c, dir, "embeddings"),
-        col("vec_id") % 50 === 0, simK, pretrained = Some(cb))
+      Similarity.indexTopK(Tables(c, dir, "embeddings"),
+        col("vec_id") % 50 === 0, simK, Ivf(), PqAdc(cb))
         .orderBy("query_id", "rank")
     }),
     "sim_ann_ivfpq_recall" -> ((s, dir) => {
@@ -2856,8 +2856,7 @@ object SparkEntry {
       val emb = Tables(c, dir, "embeddings")
       val cb = Similarity.loadPqCodebook(c, fixtures("pq_codebook")(c, dir))
       Similarity.recallVsExact(emb,
-        Similarity.ivfPqTopK(emb, col("vec_id") % 50 === 0, simK,
-          pretrained = Some(cb)),
+        Similarity.indexTopK(emb, col("vec_id") % 50 === 0, simK, Ivf(), PqAdc(cb)),
         col("vec_id") % 50 === 0, simK, floor = 0.2)
     }),
     "sim_ann_ivfpq_res" -> ((s, dir) => { // approximate by design -> rows-only
@@ -2866,8 +2865,8 @@ object SparkEntry {
       // the codebook loads from the offline TRAIN artifact, like ivfpq
       val c = Config.child(s, "spark.sql.shuffle.partitions" -> "8")
       val cb = Similarity.loadPqCodebook(c, fixtures("pq_codebook_res")(c, dir))
-      Similarity.ivfPqResidualTopK(Tables(c, dir, "embeddings"),
-        col("vec_id") % 50 === 0, simK, pretrained = Some(cb))
+      Similarity.indexTopK(Tables(c, dir, "embeddings"), col("vec_id") % 50 === 0,
+        simK, Ivf(), PqAdc(cb, residual = true))
         .orderBy("query_id", "rank")
     }),
     "sim_ann_ivfpq_res_recall" -> ((s, dir) => {
@@ -2875,8 +2874,8 @@ object SparkEntry {
       val emb = Tables(c, dir, "embeddings")
       val cb = Similarity.loadPqCodebook(c, fixtures("pq_codebook_res")(c, dir))
       Similarity.recallVsExact(emb,
-        Similarity.ivfPqResidualTopK(emb, col("vec_id") % 50 === 0, simK,
-          pretrained = Some(cb)),
+        Similarity.indexTopK(emb, col("vec_id") % 50 === 0, simK,
+          Ivf(), PqAdc(cb, residual = true)),
         col("vec_id") % 50 === 0, simK, floor = 0.2)
     }),
     "sim_mmr_rerank" -> ((s, dir) => // greedy selection -> rows-only +

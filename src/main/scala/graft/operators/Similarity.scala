@@ -4,12 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{cosine_sim, dot_product, srp_sig}
+import graft.functions.{cosine_sim, dot_product, pq_adc, pq_encode, pq_table,
+  sq8_cos, sq8_encode, srp_sig, vec_sub}
 
 /** Similarity search over the `embeddings` table (`vec_id BIGINT,
   * embedding ARRAY<FLOAT>, label INT`).
   *
-  * Two paths, per the standard ANN playbook:
+  * Three paths, per the standard ANN playbook:
   *
   *  - [[bruteForceTopK]] / [[bruteForcePairs]]: exact cosine via the native
   *    [[graft.functions.CosineSim]] kernel. Exact and oracle-checkable; the
@@ -17,7 +18,12 @@ import graft.functions.{cosine_sim, dot_product, srp_sig}
   *    this is the *baseline*, not the scale path.
   *  - [[annTopK]]: signed-random-projection LSH — signatures bucket the
   *    corpus, candidates come from banded bucket joins, and only candidates
-  *    pay a cosine. Sub-linear probes per query; the 100 TB path.
+  *    pay a cosine. Data-oblivious, sub-linear probes per query.
+  *  - [[indexTopK]]: the index family — a list layout ([[OneList]] or
+  *    [[Ivf]] inverted lists) times an in-list scorer ([[ExactCos]],
+  *    [[Sq8Cos]], [[PqAdc]] raw or residual), then one shortlist and exact
+  *    re-rank. Data-adaptive lists and compressed-domain scoring; the
+  *    100 TB path.
   *
   * Ranking ties: ranks order by `(round(cos, 6) DESC, neighbor_id)` — the
   * rounding makes cross-engine rank comparison immune to last-ulp float
@@ -31,20 +37,10 @@ object Similarity {
     * `(query_id, rank, neighbor_id, cos)`. The query set is broadcast; the
     * corpus side streams through one codegen'd cosine per (query, vector)
     * pair — a BroadcastNestedLoopJoin by construction, which is the right
-    * plan when |queries| ≪ |corpus|. */
-  def bruteForceTopK(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
-    val q = emb.where(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    emb.repartition(emb.sparkSession.sessionState.conf.numShufflePartitions)
-      .select(col("vec_id").as("neighbor_id"), col("embedding"))
-      .join(broadcast(q), col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosRounded(col("q_emb"), col("embedding")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-  }
+    * plan when |queries| ≪ |corpus|. It is the index family's
+    * `OneList × ExactCos` point. */
+  def bruteForceTopK(emb: DataFrame, queryPred: Column, k: Int): DataFrame =
+    indexTopK(emb, queryPred, k, OneList, ExactCos)
 
   /** kNN label classification over the embedding corpus — the
     * label-propagation / weak-supervision shape (predict a document's
@@ -83,8 +79,8 @@ object Similarity {
     * is still quadratic: this lane must never reach a production corpus,
     * which is what `maxRows` enforces — the default fails fast past
     * 200k vectors (~4·10¹⁰ pairs, the edge of single-cluster sanity).
-    * The scale paths ARE the ANN queries ([[annTopK]], [[ivfPqTopK]],
-    * [[ivfPqResidualTopK]]); raise the bound only for a bigger offline
+    * The scale paths ARE the ANN queries ([[annTopK]], [[indexTopK]]);
+    * raise the bound only for a bigger offline
     * ground-truth build that has the budget for it. */
   def bruteForcePairs(emb: DataFrame, threshold: Double,
       maxRows: Long = 200000L): DataFrame = {
@@ -93,10 +89,7 @@ object Similarity {
       s"bruteForcePairs is the O(n^2) oracle lane: corpus has $n vectors" +
         s" > maxRows=$maxRows. Use the ANN operators for corpora this" +
         " size, or raise maxRows explicitly for an offline truth build.")
-    // spread the stream side: a small parquet corpus arrives as one input
-    // partition, which would run the O(n^2) loop single-threaded
-    val spread = emb.repartition(emb.sparkSession.sessionState.conf.numShufflePartitions)
-    val a = spread.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
+    val a = spread(emb).select(col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     val b = emb.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
     // threshold compares the ROUNDED cosine so the boundary decision is
     // identical to the oracle's (which also filters on the rounded value)
@@ -209,15 +202,11 @@ object Similarity {
       emb.select(col("vec_id").as("neighbor_id"), col("embedding")),
       "neighbor_id", "embedding")
 
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    qb.join(cb, Seq("band", "key"))
+    topK(qb.join(cb, Seq("band", "key"))
       .where(col("neighbor_id") =!= col("query_id"))
       .select(col("query_id"), col("neighbor_id"),
         cosRounded(col("q_emb"), col("embedding")).as("cos"))
-      .distinct() // a pair can collide in several bands
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+      .distinct(), k) // a pair can collide in several bands
   }
   /** Recall gate for an approximate top-k result against the exact
     * [[bruteForceTopK]] baseline: one row `(n_queries, n_exact,
@@ -279,39 +268,14 @@ object Similarity {
       when(scale === 0.0, 0.0).otherwise(round(err(scale), 6)).as("max_abs_err"))
   }
 
-  /** Approximate top-k via product quantization (PQ) — the compressed-
-    * domain scoring path (FAISS's `PQ` stage):
-    *
-    *   1. TRAIN: vectors split into `m` subvectors of `d/m` dims; per
-    *      subspace, a `ksub`-centroid codebook is trained by spherical
-    *      k-means (deterministic sample init + `iters` Lloyd rounds —
-    *      assignment is max-cosine through the native kernel, update is
-    *      the element-wise mean). The trained codebook (`m × ksub` rows)
-    *      is a tiny artifact, materialized once driver-side like the
-    *      reference's persisted filters.
-    *   2. ENCODE: each corpus vector becomes `m` one-byte-ish codes via
-    *      the native `pq_encode` kernel — a narrow projection straight
-    *      off the scan (no explode, no centroid join, no aggregate). At
-    *      100 TB this is the point: a 64-dim float vector (256 B)
-    *      compresses to `m` codes (8 B) + one shared codebook, so the
-    *      candidate-scoring working set fits in memory.
-    *   3. SCORE (ADC): per query, a broadcast table of
-    *      `dot(q_sub, centroid)` for all `(subspace, code)`; a candidate's
-    *      approximate cosine is the sum of `m` table lookups over its
-    *      codes — never a full-width float pass. Top `shortlist` by
-    *      approximate score, then an exact cosine re-rank of the shortlist
-    *      yields the final top-k.
-    *
-    * Orthogonal to [[ivfTopK]] (coarse pruning) — production systems
-    * compose them (IVF restricts the lists scanned, PQ scores inside a
-    * list); here PQ scans all codes so its recall is attributable to the
-    * quantization alone. The composition is [[ivfPqTopK]].
-    */
-  /** Spherical-k-means PQ codebook training (the TRAIN stage of
-    * [[pqTopK]], shared with [[ivfPqTopK]]): returns the flat codebook
-    * laid out at slot `j*ksub + code` plus the per-slot squared centroid
-    * norms. A tiny `m × ksub` driver artifact, like the reference's
-    * persisted filters. */
+  /** Spherical-k-means PQ codebook training, the TRAIN stage of [[PqAdc]]:
+    * vectors split into `m` subvectors of `d/m` dims; per subspace, a
+    * `ksub`-centroid codebook is trained from a deterministic sample init
+    * plus `iters` Lloyd rounds (assignment is max-cosine through the
+    * native kernel, update the element-wise mean). Returns the flat
+    * codebook laid out at slot `j*ksub + code` plus the per-slot squared
+    * centroid norms: a tiny `m × ksub` driver artifact, like the
+    * reference's persisted filters. */
   def trainPqCodebook(
       emb: DataFrame,
       m: Int,
@@ -330,8 +294,7 @@ object Similarity {
         .toDF(idCol, "j", "sub")
 
     val corpusSubs = subvectors(
-      emb.repartition(spark.sessionState.conf.numShufflePartitions)
-        .select(col("vec_id"), col("embedding")), "vec_id")
+      spread(emb).select(col("vec_id"), col("embedding")), "vec_id")
 
     // --- TRAIN ---------------------------------------------------------
     // deterministic sample init: the first ksub vectors in hash order,
@@ -439,500 +402,257 @@ object Similarity {
       .coalesce(1).write.mode("overwrite").parquet(path)
   }
 
-  /** The IVF coarse quantizer shared by [[ivfPqTopK]],
-    * [[ivfPqResidualTopK]] and [[saveResidualPqCodebook]]: a
-    * deterministic hash-order sample of the corpus. Any pretrained
-    * residual codebook is only valid against the SAME
-    * `(corpus, nCentroids, ivfSeed)` triple — the residual distribution
-    * is defined relative to these centroids. */
-  private def ivfCentroids(emb: DataFrame, nCentroids: Int, ivfSeed: Int): DataFrame =
-    emb.orderBy(xxhash64(col("vec_id"), lit(ivfSeed)))
-      .limit(nCentroids)
-      .select(monotonically_increasing_id().as("centroid_id"),
-        col("embedding").as("c_emb"))
+  /** The list layout of an [[indexTopK]] search: which corpus vectors a
+    * query's candidates come from. */
+  sealed trait ListLayout
 
-  /** TRAIN stage of [[ivfPqResidualTopK]], run offline once: assigns
-    * every corpus vector to its coarse list, trains the PQ codebook on
-    * the RESIDUAL distribution `v − centroid(v)`, and persists it in the
-    * same one-row artifact format as [[savePqCodebook]]. */
-  def saveResidualPqCodebook(emb: DataFrame, path: String,
-      nCentroids: Int = 16, ivfSeed: Int = 42, m: Int = 8,
-      ksub: Int = 16, iters: Int = 2, seed: Int = 7): Unit = {
-    import graft.functions.vec_sub
-    val centroids = ivfCentroids(emb, nCentroids, ivfSeed)
-    val w = Window.partitionBy("vec_id").orderBy(col("c_cos").desc, col("centroid_id"))
-    val resid = emb.join(broadcast(centroids))
-      .select(col("vec_id"), col("embedding"), col("centroid_id"), col("c_emb"),
-        cosine_sim(col("embedding"), col("c_emb")).as("c_cos"))
-      .withColumn("c_rank", row_number().over(w))
-      .where(col("c_rank") === 1)
-      .select(col("vec_id"), vec_sub(col("embedding"), col("c_emb")).as("embedding"))
-    val (cb, cn2) = trainPqCodebook(resid, m, ksub, iters, seed)
-    writeCodebook(emb.sparkSession, cb, cn2, path)
+  /** One list holding the whole corpus: the queries broadcast into a
+    * nested-loop join over the spread corpus, with no assignment step, so
+    * recall is attributable to the in-list scorer alone (FAISS `PQ`
+    * next to `IVFPQ`). */
+  case object OneList extends ListLayout
+
+  /** Inverted lists (FAISS `IVF`): the [[ivfCentroids]] coarse codebook;
+    * every corpus vector lands in its ONE nearest list, each query probes
+    * its `nProbe` nearest lists, and candidates come from the
+    * `centroid_id` equi-join of the probed lists — per-query work is the
+    * probed lists, never a corpus×query product. A pair meets at most
+    * once: one list per vector, distinct lists per query. IVF adapts to
+    * the data distribution (lists follow density); [[annTopK]]'s LSH is
+    * data-oblivious. */
+  final case class Ivf(nCentroids: Int = 16, nProbe: Int = 4, ivfSeed: Int = 42)
+      extends ListLayout {
+    require(nProbe <= nCentroids, s"nProbe ($nProbe) must be <= nCentroids ($nCentroids)")
   }
 
-  def pqTopK(
-      emb: DataFrame,
-      queryPred: Column,
-      k: Int,
-      m: Int = 8,
-      ksub: Int = 16,
-      iters: Int = 2,
-      shortlist: Int = 64,
-      seed: Int = 7,
-      pretrained: Option[(Array[Double], Array[Double])] = None): DataFrame = {
-    val spark = emb.sparkSession
-    val (cbFlat, cn2Flat) =
-      pretrained.getOrElse(trainPqCodebook(emb, m, ksub, iters, seed))
+  /** How [[indexTopK]] scores a candidate inside a probed list. */
+  sealed trait Scorer { def residual: Boolean = false }
+
+  /** The full-width rounded cosine — the final score itself, so this
+    * scorer takes no shortlist and no re-rank. */
+  case object ExactCos extends Scorer
+
+  /** Scalar quantization (FAISS `SQ8`): corpus rows carry ONE
+    * self-contained binary (8-byte scale + one int8 code per dimension,
+    * 4× smaller than float32), scored by the asymmetric
+    * [[graft.functions.sq8_cos]] kernel — full-width query vs integer
+    * codes; the per-vector scale cancels in cosine. Vs [[PqAdc]]: 4×
+    * compression instead of ~16×, but NO trained codebook — no TRAIN
+    * stage, no artifact lifecycle, no train/serve drift; per-dimension
+    * error is bounded by `scale/2` (the arithmetic [[quantizeInt8Stats]]
+    * audits), so recall loss vs the exact scorer is negligible. The
+    * classic deployment ladder is raw → SQ8 → PQ as the corpus outgrows
+    * memory tiers. */
+  case object Sq8Cos extends Scorer
+
+  /** Product quantization scored by asymmetric distance (FAISS `PQ`),
+    * against a codebook from [[trainPqCodebook]] or [[loadPqCodebook]]:
+    *
+    *   - ENCODE: each corpus vector becomes `m` codes through the native
+    *     `pq_encode` kernel — a narrow projection straight off the scan
+    *     (no explode, no centroid join, no aggregate). A 64-dim float
+    *     vector (256 B) compresses to `m` codes (8 B) plus one shared
+    *     codebook, so the candidate-scoring working set fits in memory.
+    *   - SCORE (ADC): per query, one flat table of `dot(q_sub, centroid)`
+    *     for every `(subspace, code)`; a candidate's approximate cosine is
+    *     the sum of `m` lookups over its codes — never a full-width float
+    *     pass.
+    *
+    * `residual` codes `v − centroid(v)` instead of the raw vector (the
+    * FAISS-default refinement, [[Ivf]] lists only): the codebook is spent
+    * on the tighter within-list distribution, and the score decomposes
+    * exactly without per-list tables — `dot(q, r̂) = dot(q, c) +
+    * Σ_j dot(q_j, reŝ_j)`: the first term once per (query, probed list),
+    * the second an ADC over ONE table built from the RAW query; `|r|` is
+    * the true vector norm. Its codebook comes from
+    * [[trainResidualPqCodebook]] over the SAME lists. */
+  final case class PqAdc(codebook: (Array[Double], Array[Double]), m: Int = 8,
+      ksub: Int = 16, override val residual: Boolean = false) extends Scorer {
     // a codebook trained with different (m, ksub) can pass the kernels'
     // flat-length checks (m*ksub*sd is m-invariant: it equals ksub*d) and
     // silently score against misaligned centroids — the norm table's
     // length is NOT m-invariant, so gate on it here
-    require(cn2Flat.length == m * ksub,
-      s"pretrained codebook shape mismatch: |cn2|=${cn2Flat.length}, expected m*ksub=${m * ksub}")
-
-    // --- ENCODE: one narrow codegen'd projection off the scan — the
-    // native pq_encode kernel replaces explode + centroid join + two
-    // aggregations (the sf0.1 plan dropped 4 shuffles to 0 here) --------
-    val codesWide = emb
-      .repartition(spark.sessionState.conf.numShufflePartitions)
-      .select(col("vec_id").as("neighbor_id"),
-        graft.functions.pq_encode(col("embedding").cast("array<double>"),
-          typedLit(cbFlat.toSeq), m, ksub).as("codes"))
-      .withColumn("rn2",
-        graft.functions.pq_adc(typedLit(cn2Flat.toSeq), col("codes"), ksub))
-
-    // --- SCORE (ADC): per query one flat lookup table, broadcast --------
-    val queries = emb.where(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val qtabWide = queries.select(col("query_id"),
-      graft.functions.pq_table(col("embedding").cast("array<double>"),
-        typedLit(cbFlat.toSeq), m, ksub).as("ip_flat"),
-      dot_product(col("embedding").cast("array<double>"),
-        col("embedding").cast("array<double>")).as("qn2"))
-
-    val wShort = Window.partitionBy("query_id")
-      .orderBy(col("approx_cos").desc, col("neighbor_id"))
-    val shortlisted = codesWide.join(broadcast(qtabWide),
-        col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(col("rn2") === 0.0 || col("qn2") === 0.0, 0.0)
-          .otherwise(graft.functions.pq_adc(col("ip_flat"), col("codes"), ksub)
-            / (sqrt(col("qn2")) * sqrt(col("rn2"))))
-          .as("approx_cos"))
-      .withColumn("srank", row_number().over(wShort))
-      .where(col("srank") <= shortlist)
-
-    // --- RE-RANK (exact cosine on the shortlist only) --------------------
-    // the shortlist (|Q| × shortlist rows) broadcasts into the corpus —
-    // never the other way: Spark has no stats under the window and would
-    // happily broadcast the corpus side at test scale
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    broadcast(shortlisted)
-      .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding")),
-        Seq("neighbor_id"))
-      .join(broadcast(queries.select(col("query_id"), col("embedding").as("q_emb"))),
-        Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosRounded(col("q_emb"), col("embedding")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+    require(codebook._2.length == m * ksub,
+      s"codebook shape mismatch: |cn2|=${codebook._2.length}, expected m*ksub=${m * ksub}")
+    private def cb: Column = typedLit(codebook._1.toSeq)
+    private[Similarity] def encode(v: Column): Column = pq_encode(v, cb, m, ksub)
+    private[Similarity] def table(q: Column): Column =
+      pq_table(q.cast("array<double>"), cb, m, ksub)
+    private[Similarity] def norm2(codes: Column): Column =
+      pq_adc(typedLit(codebook._2.toSeq), codes, ksub)
   }
 
-  /** Approximate top-k via an IVF (inverted-file) coarse quantizer:
+  /** Approximate top-k over an index — the partition → filter → refine
+    * pipeline (REPOSE, ICDE 2021), the same shape as the paper's cheap
+    * membership filter followed by an exact check:
     *
-    *   1. `nCentroids` deterministic sample vectors act as the coarse
-    *      codebook (k-means initialization without refinement iterations —
-    *      honest about being sample-based; swap in trained centroids for
-    *      production recall).
-    *   2. every corpus vector is assigned to its nearest centroid (one
-    *      broadcast of the tiny codebook, `max_by` per vector);
-    *   3. each query probes its `nProbe` nearest centroids' inverted
-    *      lists only — candidates shuffle on `centroid_id`, per-query work
-    *      is the probed lists, not the corpus.
+    *   1. lists: [[OneList]] scans every vector, [[Ivf]] restricts each
+    *      query to its probed lists;
+    *   2. filter: the [[Scorer]] scores the candidates, in the compressed
+    *      domain for [[Sq8Cos]] and [[PqAdc]], and the top-`shortlist`
+    *      per query survive;
+    *   3. refine: the shortlist re-ranks with an exact cosine.
     *
-    * The other classic ANN shape next to [[annTopK]]'s LSH: IVF adapts to
-    * the data distribution (lists follow density), LSH is data-oblivious.
-    */
-  def ivfTopK(
-      emb: DataFrame,
-      queryPred: Column,
-      k: Int,
-      nCentroids: Int = 16,
-      nProbe: Int = 4,
-      seed: Int = 42): DataFrame = {
-    require(nProbe <= nCentroids, s"nProbe ($nProbe) must be <= nCentroids ($nCentroids)")
-
-    // deterministic pseudo-random codebook: first nCentroids by hash order
-    val centroids = emb
-      .orderBy(xxhash64(col("vec_id"), lit(seed)))
-      .limit(nCentroids)
-      .select(monotonically_increasing_id().as("centroid_id"),
-        col("embedding").as("c_emb"))
-
-    def assign(df: DataFrame, idCol: String, embCol: String, lists: Int): DataFrame = {
-      val w = Window.partitionBy(idCol).orderBy(col("c_cos").desc, col("centroid_id"))
-      df.join(broadcast(centroids))
-        .select(col(idCol), col(embCol), col("centroid_id"),
-          cosine_sim(col(embCol), col("c_emb")).as("c_cos"))
-        .withColumn("c_rank", row_number().over(w))
-        .where(col("c_rank") <= lists)
-        .drop("c_cos", "c_rank")
-    }
-
-    val corpus = assign(
-      emb.select(col("vec_id").as("neighbor_id"), col("embedding")),
-      "neighbor_id", "embedding", lists = 1) // each vector lives in ONE list
-    val queries = assign(
-      emb.where(queryPred)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb")),
-      "query_id", "q_emb", lists = nProbe)   // each query probes nProbe lists
-
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    queries.join(corpus, Seq("centroid_id"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosRounded(col("q_emb"), col("embedding")).as("cos"))
-      .distinct() // a pair can meet through several probed lists
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-  }
-
-  /** Approximate top-k via IVF × SQ8 — the scalar-quantized middle point
-    * of the compression family (FAISS `IVF,SQ8`): the coarse quantizer
-    * restricts WHICH lists are scanned (as in [[ivfTopK]]), and the
-    * probed lists are scored against corpus rows that carry ONE
-    * self-contained binary (8-byte scale + one int8 code per dimension,
-    * 4× smaller than float32) through the asymmetric
-    * [[graft.functions.sq8_cos]] kernel — full-width query vs integer
-    * codes; the per-vector scale cancels in cosine. The top-`shortlist`
-    * by approximate score re-rank with a true cosine, like the PQ lanes.
-    *
-    * Vs [[ivfPqTopK]]: SQ8 compresses 4× (PQ here ~16×) but needs NO
-    * trained codebook — the scale is per-vector, so there is no TRAIN
-    * stage, no artifact lifecycle, and no train/serve distribution-drift
-    * failure mode; per-dimension error is bounded by `scale/2` (the same
-    * arithmetic [[quantizeInt8Stats]] audits), so recall loss vs raw IVF
-    * is negligible. The classic deployment ladder is raw → SQ8 → PQ as
-    * the corpus outgrows memory tiers. */
-  def ivfSq8TopK(
-      emb: DataFrame,
-      queryPred: Column,
-      k: Int,
-      nCentroids: Int = 16,
-      nProbe: Int = 4,
-      shortlist: Int = 64,
-      ivfSeed: Int = 42): DataFrame = {
-    require(nProbe <= nCentroids, s"nProbe ($nProbe) must be <= nCentroids ($nCentroids)")
-    val centroids = ivfCentroids(emb, nCentroids, ivfSeed)
-
-    def assign(df: DataFrame, idCol: String, embCol: String, lists: Int): DataFrame = {
-      val w = Window.partitionBy(idCol).orderBy(col("c_cos").desc, col("centroid_id"))
-      df.join(broadcast(centroids))
-        .select(col(idCol), col(embCol), col("centroid_id"),
-          cosine_sim(col(embCol), col("c_emb")).as("c_cos"))
-        .withColumn("c_rank", row_number().over(w))
-        .where(col("c_rank") <= lists)
-        .drop("c_cos", "c_rank")
-    }
-
-    // inverted lists of SQ8 containers, assigned WITHOUT shuffling the
-    // float vector: encode in the scan projection, score the broadcast
-    // centroid candidates per row, then fold to the arg-max list with a
-    // map-side-combining max_by (all nCentroids copies of a row are
-    // born in one partition, so the partial aggregate collapses them
-    // before the exchange) — the only corpus-scale shuffle carries
-    // `(neighbor_id, centroid_id, sq8)`: ids + the 4×-compressed
-    // container, never the float embedding (locked in PlanAuditSpec).
-    // Tie-break matches assign(): highest cosine, then lowest centroid.
-    val corpus = emb
-      .select(col("vec_id").as("neighbor_id"), col("embedding"),
-        graft.functions.sq8_encode(col("embedding")).as("sq8"))
-      .join(broadcast(centroids))
-      .select(col("neighbor_id"), col("sq8"), col("centroid_id"),
-        cosine_sim(col("embedding"), col("c_emb")).as("c_cos"))
-      .groupBy("neighbor_id")
-      .agg(
-        max_by(col("centroid_id"), struct(col("c_cos"), -col("centroid_id")))
-          .as("centroid_id"),
-        first(col("sq8")).as("sq8"))
-
+    * Returns `(query_id, rank, neighbor_id, cos)`. [[ExactCos]] scores
+    * with the final rounded cosine, so it skips the shortlist: re-ranking
+    * would only recompute the same values. `OneList × ExactCos` is
+    * [[bruteForceTopK]]; `Ivf × PqAdc` is FAISS `IVFPQ`, the production
+    * composition. */
+  def indexTopK(emb: DataFrame, queryPred: Column, k: Int, lists: ListLayout,
+      scorer: Scorer, shortlist: Int = 64): DataFrame = {
     val queries = emb.where(queryPred)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    // the query side keeps the window formulation: it needs top-nProbe
-    // lists (not arg-max), and |Q| is bounded — its exchange carrying
-    // q_emb is query-sized, not corpus-sized
-    val qassign = assign(queries, "query_id", "q_emb", lists = nProbe)
-
-    val wShort = Window.partitionBy("query_id")
-      .orderBy(col("approx_cos").desc, col("neighbor_id"))
-    val shortlisted = corpus.join(broadcast(qassign), Seq("centroid_id"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        graft.functions.sq8_cos(col("q_emb"), col("sq8")).as("approx_cos"))
-      .distinct() // a (query, neighbor) pair can meet via several probes
-      .withColumn("srank", row_number().over(wShort))
-      .where(col("srank") <= shortlist)
-
-    // exact re-rank of the tiny shortlist (|Q| × shortlist rows broadcast
-    // INTO the corpus — see pqTopK's rationale)
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    broadcast(shortlisted)
-      .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding")),
-        Seq("neighbor_id"))
+    // the corpus payload the scorer reads, encoded off the scan — before
+    // any assignment, so lists carry codes rather than floats. Residual
+    // codes need the list's centroid: they come from residualLists.
+    val (payload, encode): (Seq[String], DataFrame => DataFrame) = scorer match {
+      case ExactCos => (Seq("embedding"), identity)
+      case Sq8Cos => (Seq("sq8"), _.withColumn("sq8", sq8_encode(col("embedding"))))
+      case p: PqAdc => (Seq("codes", "rn2"),
+        _.withColumn("codes", p.encode(col("embedding").cast("array<double>")))
+          .withColumn("rn2", p.norm2(col("codes"))))
+    }
+    // per query (and probed list): the scorer's lookup tables
+    def tables(probes: DataFrame): DataFrame = scorer match {
+      case p: PqAdc =>
+        def dot(a: String, b: String) =
+          dot_product(col(a).cast("array<double>"), col(b).cast("array<double>"))
+        val t = probes.withColumn("ip_flat", p.table(col("q_emb")))
+          .withColumn("qn2", dot("q_emb", "q_emb"))
+        if (p.residual) t.withColumn("qc_dot", dot("q_emb", "c_emb")) else t
+      case _ => probes
+    }
+    val candidates = lists match {
+      case OneList =>
+        require(!scorer.residual, "residual PQ encodes v - centroid(v): it needs Ivf lists")
+        encode(spread(corpusOf(emb)))
+          .join(broadcast(tables(queries)), col("neighbor_id") =!= col("query_id"))
+      case ivf: Ivf =>
+        val centroids = ivfCentroids(emb, ivf)
+        val corpus = scorer match {
+          case p: PqAdc if p.residual =>
+            residualLists(emb, ivf).withColumn("codes", p.encode(col("resid")))
+          case _ => assignLists(encode(corpusOf(emb)), centroids, payload)
+        }
+        corpus.join(broadcast(tables(probeLists(queries, centroids, ivf.nProbe))),
+            Seq("centroid_id"))
+          .where(col("neighbor_id") =!= col("query_id"))
+    }
+    val scored = candidates.select(col("query_id"), col("neighbor_id"), scorer match {
+      case ExactCos => cosRounded(col("q_emb"), col("embedding")).as("cos")
+      case Sq8Cos => sq8_cos(col("q_emb"), col("sq8")).as("approx_cos")
+      case p: PqAdc =>
+        val adc = pq_adc(col("ip_flat"), col("codes"), p.ksub)
+        when(col("rn2") === 0.0 || col("qn2") === 0.0, 0.0)
+          .otherwise((if (p.residual) col("qc_dot") + adc else adc)
+            / (sqrt(col("qn2")) * sqrt(col("rn2"))))
+          .as("approx_cos")
+    })
+    // ExactCos already scored with the final cosine. The other scorers
+    // re-rank their shortlist exactly: its |Q| × shortlist rows broadcast
+    // INTO the corpus — never the other way (Spark has no stats under the
+    // window and would happily broadcast the corpus at test scale)
+    if (scorer == ExactCos) topK(scored, k)
+    else topK(broadcast(top(scored, shortlist, "approx_cos")
+        .select(col("query_id"), col("neighbor_id")))
+      .join(corpusOf(emb), Seq("neighbor_id"))
       .join(broadcast(queries), Seq("query_id"))
       .select(col("query_id"), col("neighbor_id"),
-        cosRounded(col("q_emb"), col("embedding")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+        cosRounded(col("q_emb"), col("embedding")).as("cos")), k)
   }
 
-  /** Approximate top-k via IVF × PQ — the production ANN composition
-    * (FAISS `IVFPQ`): the coarse quantizer restricts WHICH lists are
-    * scanned, PQ scores WITHIN a list in the compressed domain, and only
-    * the per-query shortlist pays an exact full-width cosine.
-    *
-    *   1. coarse: `nCentroids` sample centroids ([[ivfTopK]]'s quantizer);
-    *      every corpus vector lands in exactly one inverted list, each
-    *      query probes its `nProbe` nearest lists;
-    *   2. compressed: corpus vectors carry only their `m` PQ codes into
-    *      the candidate join — the probed lists are scored by `pq_adc`
-    *      table lookups, never a full-width float pass (at 100 TB the
-    *      scannable corpus is codes + one shared codebook, RAM-resident);
-    *   3. exact: the top-`shortlist` by approximate score re-rank with a
-    *      true cosine.
-    *
-    * PQ here encodes raw vectors, not per-list residuals (FAISS's default
-    * refinement) — recall stays attributable to quantization + probe
-    * count, and the codebook stays one shared artifact; residual encoding
-    * is the production upgrade when list-local distributions diverge.
-    * Candidates come from the `centroid_id` equi-join of the probed lists
-    * — never a corpus×query product.
-    */
-  def ivfPqTopK(
-      emb: DataFrame,
-      queryPred: Column,
-      k: Int,
-      nCentroids: Int = 16,
-      nProbe: Int = 4,
-      m: Int = 8,
-      ksub: Int = 16,
-      iters: Int = 2,
-      shortlist: Int = 64,
-      seed: Int = 7,
-      ivfSeed: Int = 42,
-      pretrained: Option[(Array[Double], Array[Double])] = None): DataFrame = {
-    require(nProbe <= nCentroids, s"nProbe ($nProbe) must be <= nCentroids ($nCentroids)")
-    val spark = emb.sparkSession
-    val (cbFlat, cn2Flat) =
-      pretrained.getOrElse(trainPqCodebook(emb, m, ksub, iters, seed))
-    // a codebook trained with different (m, ksub) can pass the kernels'
-    // flat-length checks (m*ksub*sd is m-invariant: it equals ksub*d) and
-    // silently score against misaligned centroids — the norm table's
-    // length is NOT m-invariant, so gate on it here
-    require(cn2Flat.length == m * ksub,
-      s"pretrained codebook shape mismatch: |cn2|=${cn2Flat.length}, expected m*ksub=${m * ksub}")
+  /** The top `n` rows per query by `(score desc, tie)`, numbered `rank`:
+    * the one ranking window of the similarity operators. */
+  private def top(df: DataFrame, n: Int, score: String,
+      tie: String = "neighbor_id"): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col(score).desc, col(tie))
+    df.withColumn("rank", row_number().over(w)).where(col("rank") <= n)
+  }
 
-    // coarse quantizer — same deterministic sample codebook as ivfTopK
-    val centroids = ivfCentroids(emb, nCentroids, ivfSeed)
+  /** The top-k tail: `(query_id, rank, neighbor_id, cos)` by
+    * `(cos desc, neighbor_id)`. */
+  private def topK(df: DataFrame, k: Int): DataFrame =
+    top(df, k, "cos").select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
 
-    def assign(df: DataFrame, idCol: String, embCol: String, lists: Int): DataFrame = {
-      val w = Window.partitionBy(idCol).orderBy(col("c_cos").desc, col("centroid_id"))
-      df.join(broadcast(centroids))
-        .select(col(idCol), col(embCol), col("centroid_id"),
-          cosine_sim(col(embCol), col("c_emb")).as("c_cos"))
-        .withColumn("c_rank", row_number().over(w))
-        .where(col("c_rank") <= lists)
-        .drop("c_cos", "c_rank")
-    }
+  private def corpusOf(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id").as("neighbor_id"), col("embedding"))
 
-    // inverted lists of CODES: raw-vector PQ codes are centroid-
-    // independent, so encode BEFORE assignment and fold the broadcast-
-    // centroid candidates with a map-side-combining max_by (all
-    // nCentroids copies of a row are born in one partition, so the
-    // partial aggregate collapses them before the exchange). The window
-    // formulation this replaces shuffled the full-width embedding to
-    // rank candidates; now the only full-width exchange is the explicit
-    // local-bench repartition that spreads encode+score work (a real
-    // cluster's scan is already parallel — drop it there), and the
-    // assignment exchange carries `(neighbor_id, centroid_id, codes)`.
-    // Tie-break matches assign(): highest cosine, then lowest centroid.
-    val corpusCodes = emb
-      .repartition(spark.sessionState.conf.numShufflePartitions)
-      .select(col("vec_id").as("neighbor_id"), col("embedding"),
-        graft.functions.pq_encode(col("embedding").cast("array<double>"),
-          typedLit(cbFlat.toSeq), m, ksub).as("codes"))
-      .join(broadcast(centroids))
-      .select(col("neighbor_id"), col("codes"), col("centroid_id"),
-        cosine_sim(col("embedding"), col("c_emb")).as("c_cos"))
+  /** Spread a scan over the shuffle width: a small parquet corpus arrives
+    * as one input partition, which would run the per-row work
+    * single-threaded. */
+  private def spread(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions)
+
+  /** The IVF coarse codebook: `nCentroids` vectors in a deterministic hash
+    * order of the corpus (k-means initialization without refinement
+    * iterations — honest about being sample-based; swap in trained
+    * centroids for production recall). A residual codebook is only valid
+    * against the SAME `(corpus, nCentroids, ivfSeed)`: the residual
+    * distribution is defined relative to these centroids. */
+  private def ivfCentroids(emb: DataFrame, ivf: Ivf): DataFrame =
+    emb.orderBy(xxhash64(col("vec_id"), lit(ivf.ivfSeed)))
+      .limit(ivf.nCentroids)
+      .select(monotonically_increasing_id().as("centroid_id"),
+        col("embedding").as("c_emb"))
+
+  /** Corpus list assignment: `(neighbor_id, embedding, payload…)` →
+    * `(neighbor_id, centroid_id, payload…)`, each vector in its ONE
+    * nearest list (highest cosine, then lowest centroid id). The broadcast
+    * centroid candidates fold with a map-side-combining `max_by`: all
+    * `nCentroids` copies of a row are born in one partition, so the
+    * partial aggregate collapses them before the exchange, and the
+    * corpus-scale shuffle carries ids plus the payload — codes when the
+    * scorer encodes off the scan, the float vector only when the scorer
+    * reads it (exact cosine, residual PQ). */
+  private def assignLists(vectors: DataFrame, centroids: DataFrame,
+      payload: Seq[String]): DataFrame =
+    vectors.join(broadcast(centroids))
+      .select(Seq(col("neighbor_id"), col("centroid_id"),
+        cosine_sim(col("embedding"), col("c_emb")).as("c_cos")) ++ payload.map(col): _*)
       .groupBy("neighbor_id")
-      .agg(
-        max_by(col("centroid_id"), struct(col("c_cos"), -col("centroid_id")))
-          .as("centroid_id"),
-        first(col("codes")).as("codes"))
-      .withColumn("rn2",
-        graft.functions.pq_adc(typedLit(cn2Flat.toSeq), col("codes"), ksub))
+      .agg(max_by(col("centroid_id"), struct(col("c_cos"), -col("centroid_id")))
+        .as("centroid_id"), payload.map(p => first(col(p)).as(p)): _*)
 
-    val queries = emb.where(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    val qtab = assign(queries, "query_id", "embedding", lists = nProbe)
-      .select(col("centroid_id"), col("query_id"),
-        graft.functions.pq_table(col("embedding").cast("array<double>"),
-          typedLit(cbFlat.toSeq), m, ksub).as("ip_flat"),
-        dot_product(col("embedding").cast("array<double>"),
-          col("embedding").cast("array<double>")).as("qn2"))
+  /** Query-side probes: `(query_id, q_emb)` → one row per probed list,
+    * `(query_id, q_emb, centroid_id, c_emb)`, the `nProbe` nearest lists
+    * by the same order as [[assignLists]]. The window's exchange is
+    * query-sized (|Q| rows), not corpus-sized. */
+  private def probeLists(queries: DataFrame, centroids: DataFrame,
+      nProbe: Int): DataFrame =
+    top(queries.join(broadcast(centroids))
+        .withColumn("c_cos", cosine_sim(col("q_emb"), col("c_emb"))),
+      nProbe, "c_cos", tie = "centroid_id")
+      .drop("c_cos", "rank")
 
-    // probed-list candidate join on centroid_id; compressed-domain score
-    val wShort = Window.partitionBy("query_id")
-      .orderBy(col("approx_cos").desc, col("neighbor_id"))
-    val shortlisted = corpusCodes.join(broadcast(qtab), Seq("centroid_id"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(col("rn2") === 0.0 || col("qn2") === 0.0, 0.0)
-          .otherwise(graft.functions.pq_adc(col("ip_flat"), col("codes"), ksub)
-            / (sqrt(col("qn2")) * sqrt(col("rn2"))))
-          .as("approx_cos"))
-      .distinct() // a (query, neighbor) pair can meet via several probes
-      .withColumn("srank", row_number().over(wShort))
-      .where(col("srank") <= shortlist)
-
-    // exact re-rank of the tiny shortlist (|Q| × shortlist rows broadcast
-    // INTO the corpus — see pqTopK's rationale)
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    broadcast(shortlisted)
-      .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding")),
-        Seq("neighbor_id"))
-      .join(broadcast(queries.select(col("query_id"), col("embedding").as("q_emb"))),
-        Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosRounded(col("q_emb"), col("embedding")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-  }
-
-  /** [[ivfPqTopK]] with RESIDUAL encoding — the FAISS-default refinement:
-    * PQ codes the residual `v − centroid(v)` instead of the raw vector,
-    * so the quantizer spends its codebook on the (much tighter)
-    * within-list distribution. The scoring stays exact-decomposable
-    * without per-list cross tables:
-    *
-    *   - `dot(q, r̂) = dot(q, c) + Σ_j dot(q_j, reŝ_j)` — the first term
-    *     is computed once per (query, probed list) during assignment, the
-    *     second is a standard ADC over ONE table built from the RAW query
-    *     against the residual codebook (list-independent, one per query);
-    *   - `|r|` uses the TRUE vector norm, captured as one double per row
-    *     in the same encode projection — more accurate than any
-    *     reconstruction from codes, and free.
-    *
-    * Same candidate topology as [[ivfPqTopK]]: probed-list equi-join on
-    * `centroid_id`, codes-only corpus rows, exact shortlist re-rank.
-    *
-    * `pretrained` takes the [[saveResidualPqCodebook]] artifact — trained
-    * offline against the SAME `(corpus, nCentroids, ivfSeed)` (the
-    * residual distribution is defined relative to those centroids). With
-    * it, serving never runs Lloyd iterations: the inline-train fallback
-    * exists for exploration, not production.
-    */
-  def ivfPqResidualTopK(
-      emb: DataFrame,
-      queryPred: Column,
-      k: Int,
-      nCentroids: Int = 16,
-      nProbe: Int = 4,
-      m: Int = 8,
-      ksub: Int = 16,
-      iters: Int = 2,
-      shortlist: Int = 64,
-      seed: Int = 7,
-      ivfSeed: Int = 42,
-      pretrained: Option[(Array[Double], Array[Double])] = None): DataFrame = {
-    require(nProbe <= nCentroids, s"nProbe ($nProbe) must be <= nCentroids ($nCentroids)")
-    val spark = emb.sparkSession
-    import graft.functions.vec_sub
-
-    val centroids = ivfCentroids(emb, nCentroids, ivfSeed)
-
-    // assignment that KEEPS the centroid vector (the residual needs it)
-    def assignKeep(df: DataFrame, idCol: String, embCol: String, lists: Int): DataFrame = {
-      val w = Window.partitionBy(idCol).orderBy(col("c_cos").desc, col("centroid_id"))
-      df.join(broadcast(centroids))
-        .select(col(idCol), col(embCol), col("centroid_id"), col("c_emb"),
-          cosine_sim(col(embCol), col("c_emb")).as("c_cos"))
-        .withColumn("c_rank", row_number().over(w))
-        .where(col("c_rank") <= lists)
-        .drop("c_cos", "c_rank")
-    }
-
-    // one narrow pass: list id + residual + true squared norm per vector.
-    // Persist only when training inline — the pretrained path reads this
-    // relation exactly once (encode), so caching it would just spill.
-    val corpusResidBase = assignKeep(
-        emb.repartition(spark.sessionState.conf.numShufflePartitions)
-          .select(col("vec_id").as("neighbor_id"), col("embedding")),
-        "neighbor_id", "embedding", lists = 1)
+  /** Residual lists `(centroid_id, neighbor_id, resid, rn2)`: every corpus
+    * vector's list, its residual `v − centroid(v)` and its TRUE squared
+    * norm (one double from the same pass — more accurate than any
+    * reconstruction from codes). Residual [[PqAdc]] encodes this relation
+    * and [[trainResidualPqCodebook]] trains on it. */
+  private def residualLists(emb: DataFrame, ivf: Ivf): DataFrame = {
+    val centroids = ivfCentroids(emb, ivf)
+    assignLists(corpusOf(emb), centroids, Seq("embedding"))
+      .join(broadcast(centroids), Seq("centroid_id"))
       .select(col("centroid_id"), col("neighbor_id"),
         vec_sub(col("embedding"), col("c_emb")).as("resid"),
         dot_product(col("embedding").cast("array<double>"),
           col("embedding").cast("array<double>")).as("rn2"))
-    val corpusResid =
-      if (pretrained.isDefined) corpusResidBase
-      else corpusResidBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
 
-    // codebook trained offline on the residual distribution (or inline
-    // as the exploration fallback); same shape gate as ivfPqTopK
-    val (cbFlat, cn2Flat) = pretrained.getOrElse(trainPqCodebook(
-      corpusResid.select(col("neighbor_id").as("vec_id"), col("resid").as("embedding")),
-      m, ksub, iters, seed))
-    require(cn2Flat.length == m * ksub,
-      s"pretrained codebook shape mismatch: |cn2|=${cn2Flat.length}, expected m*ksub=${m * ksub}")
+  /** TRAIN stage of residual [[PqAdc]], run offline once: the PQ codebook
+    * of the residual distribution `v − centroid(v)` over `ivf`'s lists. */
+  def trainResidualPqCodebook(emb: DataFrame, ivf: Ivf, m: Int, ksub: Int,
+      iters: Int, seed: Int): (Array[Double], Array[Double]) =
+    trainPqCodebook(residualLists(emb, ivf)
+      .select(col("neighbor_id").as("vec_id"), col("resid").as("embedding")),
+      m, ksub, iters, seed)
 
-    val corpusCodes = corpusResid.select(col("centroid_id"), col("neighbor_id"),
-      graft.functions.pq_encode(col("resid"), typedLit(cbFlat.toSeq), m, ksub)
-        .as("codes"),
-      col("rn2"))
-
-    val queries = emb.where(queryPred)
-      .select(col("vec_id").as("query_id"), col("embedding"))
-    // per (query, probed list): dot(q, c); per query: the residual-ADC
-    // table from the RAW query (list-independent by the decomposition)
-    val qtab = assignKeep(queries, "query_id", "embedding", lists = nProbe)
-      .select(col("centroid_id"), col("query_id"),
-        dot_product(col("embedding").cast("array<double>"),
-          col("c_emb").cast("array<double>")).as("qc_dot"),
-        graft.functions.pq_table(col("embedding").cast("array<double>"),
-          typedLit(cbFlat.toSeq), m, ksub).as("ip_flat"),
-        dot_product(col("embedding").cast("array<double>"),
-          col("embedding").cast("array<double>")).as("qn2"))
-
-    val wShort = Window.partitionBy("query_id")
-      .orderBy(col("approx_cos").desc, col("neighbor_id"))
-    val shortlisted = corpusCodes.join(broadcast(qtab), Seq("centroid_id"))
-      .where(col("neighbor_id") =!= col("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        when(col("rn2") === 0.0 || col("qn2") === 0.0, 0.0)
-          .otherwise(
-            (col("qc_dot") + graft.functions.pq_adc(col("ip_flat"), col("codes"), ksub))
-              / (sqrt(col("qn2")) * sqrt(col("rn2"))))
-          .as("approx_cos"))
-      .distinct()
-      .withColumn("srank", row_number().over(wShort))
-      .where(col("srank") <= shortlist)
-
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("neighbor_id"))
-    broadcast(shortlisted)
-      .join(emb.select(col("vec_id").as("neighbor_id"), col("embedding")),
-        Seq("neighbor_id"))
-      .join(broadcast(queries.select(col("query_id"), col("embedding").as("q_emb"))),
-        Seq("query_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        cosRounded(col("q_emb"), col("embedding")).as("cos"))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
+  /** [[trainResidualPqCodebook]] persisted in the same one-row artifact
+    * format as [[savePqCodebook]]. */
+  def saveResidualPqCodebook(emb: DataFrame, path: String, ivf: Ivf = Ivf(),
+      m: Int = 8, ksub: Int = 16, iters: Int = 2, seed: Int = 7): Unit = {
+    val (cb, cn2) = trainResidualPqCodebook(emb, ivf, m, ksub, iters, seed)
+    writeCodebook(emb.sparkSession, cb, cn2, path)
   }
 
   /** One reranker input row: a candidate neighbor with its query

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 import graft.functions.{cosine_sim, dot_product, pq_adc, srp_sig}
+import graft.operators.Similarity.{ExactCos, Ivf, OneList, PqAdc, Sq8Cos}
 
 class SimilaritySpec extends SparkSuite {
   import spark.implicits._
@@ -160,7 +161,7 @@ class SimilaritySpec extends SparkSuite {
     approx.foreach { case (q, n) => assert(n / 10 === q / 10, s"query $q -> $n") }
 
     // IVF with a generous probe budget on the same clustered data
-    val ivf = Similarity.ivfTopK(e, queryPred, 1, nCentroids = 16, nProbe = 8)
+    val ivf = Similarity.indexTopK(e, queryPred, 1, Ivf(nCentroids = 16, nProbe = 8), ExactCos)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toMap
     val ivfRecall = exact.count { case (q, n) => ivf.get(q).contains(n) }.toDouble / exact.size
     assert(ivfRecall >= 0.6, s"IVF recall@1 = $ivfRecall")
@@ -179,8 +180,9 @@ class SimilaritySpec extends SparkSuite {
 
     val exact = Similarity.bruteForceTopK(e, queryPred, 1)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toMap
-    val pq = Similarity.pqTopK(e, queryPred, 1, m = 4, ksub = 16,
-      iters = 2, shortlist = 16)
+    val cb = Similarity.trainPqCodebook(e, m = 4, ksub = 16, iters = 2, seed = 7)
+    val pq = Similarity.indexTopK(e, queryPred, 1, OneList, PqAdc(cb, m = 4, ksub = 16),
+      shortlist = 16)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toMap
 
     assert(pq.keySet === exact.keySet, "every query must return a neighbor")
@@ -192,8 +194,8 @@ class SimilaritySpec extends SparkSuite {
     // the IVF×PQ composition on the same clustered data: a generous probe
     // budget keeps the coarse pruning near-lossless here, so recall is
     // dominated by the same quantization as plain PQ
-    val ivfpq = Similarity.ivfPqTopK(e, queryPred, 1,
-      nCentroids = 16, nProbe = 8, m = 4, ksub = 16, iters = 2, shortlist = 16)
+    val ivfpq = Similarity.indexTopK(e, queryPred, 1,
+      Ivf(nCentroids = 16, nProbe = 8), PqAdc(cb, m = 4, ksub = 16), shortlist = 16)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toMap
     assert(ivfpq.keySet === exact.keySet, "every query must return a neighbor")
     val ivfpqRecall =
@@ -206,8 +208,11 @@ class SimilaritySpec extends SparkSuite {
     // (On near-uniform random vectors — the registered queries' testdata —
     // residuals are no tighter than raw vectors and measured recall is
     // slightly lower; both variants ship, documented.)
-    val res = Similarity.ivfPqResidualTopK(e, queryPred, 1,
-      nCentroids = 16, nProbe = 8, m = 4, ksub = 16, iters = 2, shortlist = 16)
+    val ivf = Ivf(nCentroids = 16, nProbe = 8)
+    val resCb = Similarity.trainResidualPqCodebook(e, ivf, m = 4, ksub = 16,
+      iters = 2, seed = 7)
+    val res = Similarity.indexTopK(e, queryPred, 1, ivf,
+      PqAdc(resCb, m = 4, ksub = 16, residual = true), shortlist = 16)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toMap
     assert(res.keySet === exact.keySet, "every query must return a neighbor")
     val resRecall =
@@ -215,17 +220,47 @@ class SimilaritySpec extends SparkSuite {
     assert(resRecall >= 0.6, s"residual IVF×PQ recall@1 = $resRecall")
 
     // train-once/serve-many lifecycle: the persisted residual codebook
-    // must reproduce the inline-trained answer EXACTLY (training is
+    // must reproduce the freshly trained answer EXACTLY (training is
     // deterministic: hash-order init + fixed seeds)
     val path = java.nio.file.Files.createTempDirectory("rescb").toString + "/cb"
-    Similarity.saveResidualPqCodebook(e, path,
-      nCentroids = 16, ivfSeed = 42, m = 4, ksub = 16, iters = 2, seed = 7)
-    val cb = Similarity.loadPqCodebook(spark, path)
-    val served = Similarity.ivfPqResidualTopK(e, queryPred, 1,
-      nCentroids = 16, nProbe = 8, m = 4, ksub = 16, iters = 2,
-      shortlist = 16, pretrained = Some(cb))
+    Similarity.saveResidualPqCodebook(e, path, ivf, m = 4, ksub = 16, iters = 2, seed = 7)
+    val served = Similarity.indexTopK(e, queryPred, 1, ivf,
+      PqAdc(Similarity.loadPqCodebook(spark, path), m = 4, ksub = 16, residual = true),
+      shortlist = 16)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toMap
-    assert(served === res, "pretrained artifact must reproduce inline training")
+    assert(served === res, "persisted artifact must reproduce the trained codebook")
+  }
+
+  test("indexTopK: every layout × scorer point is exact with every list probed") {
+    // the pqTopK test's clustered data. With nProbe = nCentroids and a
+    // shortlist of the whole corpus, every point must return exactly the
+    // brute-force rows, ranks and cos: the assignment and candidate join
+    // meet each pair once, and the exact re-rank sees every candidate
+    val rnd = new scala.util.Random(13)
+    val centers = Array.fill(20)(Array.fill(32)(rnd.nextGaussian()))
+    val rows = for { c <- 0 until 20; i <- 0 until 10 } yield {
+      val v = centers(c).map(x => (x + rnd.nextGaussian() * 0.03).toFloat)
+      ((c * 10 + i).toLong, v.toSeq)
+    }
+    val e = vecDf(rows: _*)
+    val queryPred = col("vec_id") % 10 === 0
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("query_id", "rank").as[(Long, Int, Long, Double)].collect().toSeq
+    val exact = ranked(Similarity.bruteForceTopK(e, queryPred, k = 5))
+    assert(exact.size === 20 * 5)
+
+    val ivf = Ivf(nCentroids = 16, nProbe = 16)
+    val pq = PqAdc(Similarity.trainPqCodebook(e, m = 4, ksub = 16, iters = 2, seed = 7),
+      m = 4, ksub = 16)
+    val res = PqAdc(Similarity.trainResidualPqCodebook(e, ivf, m = 4, ksub = 16,
+      iters = 2, seed = 7), m = 4, ksub = 16, residual = true)
+    Seq(("one list × exact", OneList, ExactCos), ("one list × sq8", OneList, Sq8Cos),
+      ("one list × pq", OneList, pq), ("ivf × exact", ivf, ExactCos),
+      ("ivf × sq8", ivf, Sq8Cos), ("ivf × pq", ivf, pq), ("ivf × residual pq", ivf, res)
+    ).foreach { case (point, lists, scorer) =>
+      assert(ranked(Similarity.indexTopK(e, queryPred, k = 5, lists, scorer,
+        shortlist = 200)) === exact, point)
+    }
   }
 
   test("recallVsExact: counts and gate, both directions") {
@@ -340,8 +375,8 @@ class SimilaritySpec extends SparkSuite {
       (i.toLong, base.toSeq)
     }
     val emb = vecDf(rows: _*)
-    val ann = Similarity.ivfSq8TopK(emb, col("vec_id") % 10 === 0, k = 1,
-      nCentroids = 8, nProbe = 4)
+    val ann = Similarity.indexTopK(emb, col("vec_id") % 10 === 0, k = 1,
+      Ivf(nCentroids = 8, nProbe = 4), Sq8Cos)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     val exact = Similarity.bruteForceTopK(emb, col("vec_id") % 10 === 0, k = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
