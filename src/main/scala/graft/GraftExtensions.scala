@@ -12,11 +12,12 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * }}}
   *
   * (cluster-wide via spark-defaults.conf, or per-session on the builder)
-  * resolves `mmh3`, `bloom_might_contain`, `bloom_build_native`,
-  * `cosine_sim`, `simhash64`, `minhash_sig` as regular catalog functions —
-  * no driver-side `registerAll` call, works from pure-SQL clients
-  * (thriftserver, notebooks). Builders are shared with
-  * [[graft.functions.registerAll]], so the two paths cannot drift.
+  * resolves every function of [[graft.functions.sqlBuilders]] (`mmh3`,
+  * `bloom_might_contain`, `bloom_build_native` and each
+  * [[graft.functions.Kernels]] entry) as a regular catalog function — no
+  * driver-side `registerAll` call, works from pure-SQL clients
+  * (thriftserver, notebooks). [[graft.functions.registerAll]] registers
+  * the same list.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -1,5 +1,7 @@
 package graft.core
 
+import org.apache.spark.unsafe.types.UTF8String
+
 /** Jaro–Winkler similarity (Jaro 1989; Winkler 1990) — the string-metric
   * kernel of the fuzzy entity-resolution lane.
   *
@@ -17,8 +19,8 @@ package graft.core
   * count over the matched subsequences) is the textbook O(len₁·len₂)
   * worst case but O(len·window) in practice; the kernel allocates two
   * boolean arrays and nothing else, so it inlines cleanly into
-  * whole-stage codegen via [[graft.functions]]' `jaro_winkler`
-  * expression.
+  * whole-stage codegen as the `jaro_winkler` entry of
+  * [[graft.functions.Kernels]].
   */
 object JaroWinkler {
 
@@ -77,4 +79,8 @@ object JaroWinkler {
       j + l * 0.1 * (1.0 - j)
     } else j
   }
+
+  /** [[similarity]] of two SQL strings: the `jaro_winkler` kernel. */
+  def similarity(s1: UTF8String, s2: UTF8String): Double =
+    similarity(s1.toString, s2.toString)
 }

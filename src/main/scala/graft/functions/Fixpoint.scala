@@ -44,7 +44,7 @@ object Fixpoint {
 
   /** A round metric of type `T`: one aggregate over the round relation,
     * observed on the job that materializes it. */
-  final class Metric[T] private[Fixpoint] (private[Fixpoint] val agg: Column)
+  final class Metric[T] private[Fixpoint] (private[graft] val agg: Column)
 
   object Metric {
     /** The round relation's row count. */

@@ -270,111 +270,3 @@ case class NbScoreSum(
   override protected def withNewChildInternal(newChild: Expression): NbScoreSum =
     copy(child = newChild)
 }
-
-/** `jaro_winkler(a, b)` — Jaro–Winkler similarity in [0, 1] with the
-  * portable convention [[graft.core.JaroWinkler]] documents (0.1 prefix
-  * weight over ≤ 4 chars, boost above 0.7, empty strings score 0) —
-  * DuckDB's `jaro_winkler_similarity`, fuzz-verified bit-identical.
-  *
-  * A native expression for the same reason as [[Mmh3]]: the fuzzy-match
-  * verify kernel runs on every blocked candidate pair, so it must stay a
-  * single static call inside whole-stage codegen rather than a boxed UDF
-  * dispatch. */
-case class JaroWinklerSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!left.dataType.isInstanceOf[StringType] ||
-      !right.dataType.isInstanceOf[StringType]) {
-      TypeCheckResult.TypeCheckFailure(
-        s"jaro_winkler takes two STRINGs, got " +
-          s"(${left.dataType.sql}, ${right.dataType.sql})")
-    } else TypeCheckResult.TypeCheckSuccess
-  }
-
-  override def dataType: DataType = DoubleType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "jaro_winkler"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.core.JaroWinkler.similarity(
-      a.asInstanceOf[UTF8String].toString, b.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.core.JaroWinkler.similarity(" +
-        s"$a.toString(), $b.toString());")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): JaroWinklerSim =
-    copy(left = newLeft, right = newRight)
-}
-
-/** ASCII byte-histogram L1 distance (graft.core.CharHist.l1) — the
-  * lossless pigeonhole prefilter for bounded-edit-distance candidates:
-  * `levenshtein(a,b) ≤ d ⇒ hist_l1(a,b) ≤ 2·d`. */
-case class HistL1(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (!left.dataType.isInstanceOf[StringType] ||
-      !right.dataType.isInstanceOf[StringType])
-      TypeCheckResult.TypeCheckFailure(
-        s"hist_l1 takes two STRINGs, got " +
-          s"(${left.dataType.sql}, ${right.dataType.sql})")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = IntegerType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "hist_l1"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.core.CharHist.l1(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.core.CharHist.l1($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HistL1 =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Byte-histogram common count (graft.core.CharHist.common) — the
-  * lossless upper-bound prefilter on the Jaro match count m:
-  * `m ≤ hist_common(a,b)`, so a JW-threshold-derived lower bound on m
-  * can cut candidates before the O(len²) kernel. */
-case class HistCommon(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (!left.dataType.isInstanceOf[StringType] ||
-      !right.dataType.isInstanceOf[StringType])
-      TypeCheckResult.TypeCheckFailure(
-        s"hist_common takes two STRINGs, got " +
-          s"(${left.dataType.sql}, ${right.dataType.sql})")
-    else TypeCheckResult.TypeCheckSuccess
-
-  override def dataType: DataType = IntegerType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "hist_common"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    graft.core.CharHist.common(
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.core.CharHist.common($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): HistCommon =
-    copy(left = newLeft, right = newRight)
-}

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.functions.{lit, udaf}
 
@@ -10,10 +11,8 @@ import org.apache.spark.sql.functions.{lit, udaf}
   */
 package object functions {
 
-  private def col(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
-    Bridge.column(e)
-  private def expr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
-    Bridge.expression(c)
+  private def col(e: Expression): Column = Bridge.column(e)
+  private def expr(c: Column): Expression = Bridge.expression(c)
 
   /** Seeded murmur3_x86_32 of a string/binary column (signed Int). */
   def mmh3(key: Column, seed: Column): Column = col(Mmh3(expr(key), expr(seed)))
@@ -29,59 +28,63 @@ package object functions {
       group: Column, key: Column): Column =
     col(BloomProbeGroups(filters, expr(group), expr(key)))
 
-  /** Cosine similarity of two ARRAY<FLOAT|DOUBLE> embedding columns. */
-  def cosine_sim(a: Column, b: Column): Column = col(CosineSim(expr(a), expr(b)))
+  /** A [[Kernels]] table entry over `cols`, then its INT constants. */
+  private def kernel(name: String, cols: Column*)(consts: Int*): Column =
+    col(Kernel(Kernels(name), cols.map(expr), consts))
+
+  /** Cosine similarity of two ARRAY<FLOAT|DOUBLE> embedding columns of one
+    * element type; a NULL element fails the row (see [[VectorKernels]]). */
+  def cosine_sim(a: Column, b: Column): Column = kernel("cosine_sim", a, b)()
 
   /** Inner product of two ARRAY<FLOAT|DOUBLE> vector columns. */
-  def dot_product(a: Column, b: Column): Column = col(DotProduct(expr(a), expr(b)))
+  def dot_product(a: Column, b: Column): Column = kernel("dot_product", a, b)()
 
   /** Element-wise difference of two ARRAY<FLOAT|DOUBLE> vector columns. */
-  def vec_sub(a: Column, b: Column): Column = col(VecSub(expr(a), expr(b)))
+  def vec_sub(a: Column, b: Column): Column = kernel("vec_sub", a, b)()
 
   /** PQ asymmetric-distance lookup: sum of `table[j*ksub + codes[j]]`. */
   def pq_adc(table: Column, codes: Column, ksub: Int): Column =
-    col(PqAdc(expr(table), expr(codes), ksub))
+    kernel("pq_adc", table, codes)(ksub)
 
   /** PQ code word of a vector against a flat codebook (ARRAY<INT>). */
   def pq_encode(vec: Column, cb: Column, m: Int, ksub: Int): Column =
-    col(PqEncode(expr(vec), expr(cb), m, ksub))
+    kernel("pq_encode", vec, cb)(m, ksub)
 
   /** PQ flat ADC lookup table of a query vector (ARRAY<DOUBLE>). */
   def pq_table(vec: Column, cb: Column, m: Int, ksub: Int): Column =
-    col(PqTable(expr(vec), expr(cb), m, ksub))
+    kernel("pq_table", vec, cb)(m, ksub)
 
   /** 64-bit SimHash of an ARRAY<STRING> token column. */
-  def simhash64(tokens: Column): Column = col(SimHash64(expr(tokens)))
+  def simhash64(tokens: Column): Column = kernel("simhash64", tokens)()
 
   /** MinHash signature (ARRAY<INT>, length numHashes) of an ARRAY<STRING>
-    * shingle column. */
+    * shingle column; an empty input yields all Int.MaxValue (filter such
+    * documents upstream). */
   def minhash_sig(shingles: Column, numHashes: Int): Column =
-    col(MinHashSig(expr(shingles), numHashes))
+    kernel("minhash_sig", shingles)(numHashes)
 
   /** Signed-random-projection LSH signature (LONG, low `bits` bits) of an
     * ARRAY<FLOAT|DOUBLE> embedding column. */
   def srp_sig(vec: Column, bits: Int, seed: Int = 0): Column =
-    col(SrpSig(expr(vec), bits, seed))
+    kernel("srp_sig", vec)(bits, seed)
 
   /** Word n-gram shingles of an ARRAY<STRING> token column. */
-  def word_ngrams(tokens: Column, n: Int): Column = col(WordNgrams(expr(tokens), n))
+  def word_ngrams(tokens: Column, n: Int): Column = kernel("word_ngrams", tokens)(n)
 
   /** `[top, total]` adjacent-bigram stats of an ARRAY<STRING> token column. */
-  def bigram_stats(tokens: Column): Column = col(BigramStats(expr(tokens)))
+  def bigram_stats(tokens: Column): Column = kernel("bigram_stats", tokens)()
 
   /** Native corpus tokenizer: lowercased maximal [a-z0-9]+ runs. */
-  def word_tokens(text: Column): Column = col(WordTokens(expr(text)))
+  def word_tokens(text: Column): Column = kernel("word_tokens", text)()
 
   /** Jaro–Winkler similarity of two string columns (DuckDB convention). */
-  def jaro_winkler(a: Column, b: Column): Column =
-    col(JaroWinklerSim(expr(a), expr(b)))
+  def jaro_winkler(a: Column, b: Column): Column = kernel("jaro_winkler", a, b)()
 
   /** ASCII byte-histogram L1 distance (edit-distance pigeonhole filter). */
-  def hist_l1(a: Column, b: Column): Column = col(HistL1(expr(a), expr(b)))
+  def hist_l1(a: Column, b: Column): Column = kernel("hist_l1", a, b)()
 
   /** Byte-histogram common count (Jaro match-count upper bound). */
-  def hist_common(a: Column, b: Column): Column =
-    col(HistCommon(expr(a), expr(b)))
+  def hist_common(a: Column, b: Column): Column = kernel("hist_common", a, b)()
 
   /** Integer NB label score `prior + Σ logp_q(token)` over a token array,
     * probing a broadcast quantized-log-prob table (serving kernel). */
@@ -90,41 +93,39 @@ package object functions {
       prior: Long, tokens: Column): Column =
     col(NbScoreSum(model, prior, expr(tokens)))
 
-  /** Feature-hashed linear quality score (BIGINT) of a text column. */
+  /** Feature-hashed linear quality score (BIGINT) of a text column. A real
+    * deployment swaps the fixed weight rule for trained weights (a
+    * `dim`-length array, same kernel shape). */
   def hashed_lr_score(text: Column, dim: Int): Column =
-    col(HashedLrScore(expr(text), dim))
+    kernel("hashed_lr_score", text)(dim)
 
   /** `[scale, max_abs_err]` int8-quantization audit of a vector column. */
-  def int8_quant_stats(vec: Column): Column = col(Int8QuantStats(expr(vec)))
+  def int8_quant_stats(vec: Column): Column = kernel("int8_quant_stats", vec)()
 
   /** Self-contained SQ8 container (8-byte scale + int8 codes) of a
     * vector column. */
-  def sq8_encode(vec: Column): Column = col(Sq8Encode(expr(vec)))
+  def sq8_encode(vec: Column): Column = kernel("sq8_encode", vec)()
 
   /** Asymmetric cosine: full-width query vector vs sq8-encoded corpus
     * vector. */
-  def sq8_cos(query: Column, bin: Column): Column =
-    col(Sq8Cos(expr(query), expr(bin)))
+  def sq8_cos(query: Column, bin: Column): Column = kernel("sq8_cos", query, bin)()
 
   /** `[en, de, fr, es]` stopword-profile counts of a text column. */
-  def stop_profile_counts(text: Column): Column =
-    col(StopProfileCounts(expr(text)))
+  def stop_profile_counts(text: Column): Column = kernel("stop_profile_counts", text)()
 
   /** `[n_words, tok_chars, n_alpha_words, n_stop_distinct]` of a text
     * column (the Gopher rule filter's token measurements). */
-  def gopher_token_stats(text: Column): Column =
-    col(GopherTokenStats(expr(text)))
+  def gopher_token_stats(text: Column): Column = kernel("gopher_token_stats", text)()
 
   /** `[total, distinct]` word n-gram counts of a token array column. */
-  def ngram_stats(tokens: Column, n: Int): Column =
-    col(WordNgramStats(expr(tokens), n))
+  def ngram_stats(tokens: Column, n: Int): Column = kernel("ngram_stats", tokens)(n)
 
   /** Element-wise seeded murmur3 of an ARRAY<STRING> column. */
-  def hash_array(arr: Column, seed: Int): Column = col(HashArray(expr(arr), seed))
+  def hash_array(arr: Column, seed: Int): Column = kernel("hash_array", arr)(seed)
 
   /** Winnowing fingerprint (window-`w` rolling minima, rightmost ties) of
     * an ARRAY<INT> hash-sequence column. */
-  def winnow(hashes: Column, w: Int): Column = col(Winnow(expr(hashes), w))
+  def winnow(hashes: Column, w: Int): Column = kernel("winnow", hashes)(w)
 
   /** Reference-shaped build from explicit hash indexes:
     * `bloom_build_indexed(idx, m, k)` → BINARY (SURVEY.md §7.2.5b). */
@@ -138,82 +139,23 @@ package object functions {
     col(BloomBuildAgg(expr(key), expr(m), expr(k))
       .toAggregateExpression(isDistinct = false))
 
-  /** The SQL-function surface: (name, arity, builder). Shared between
+  /** The SQL-function surface: (name, arity, builder) for the three
+    * hand-written SQL functions and every [[Kernels]] entry. Shared between
     * session-local registration ([[registerAll]]) and extension-based
     * injection ([[graft.GraftExtensions]]). */
-  private[graft] val sqlBuilders: Seq[(String, Int,
-      Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression)] = Seq(
-    ("mmh3", 2, exprs => Mmh3(exprs(0), exprs(1))),
-    ("bloom_might_contain", 4, exprs =>
-      BloomMightContain(exprs(0), exprs(1), exprs(2), exprs(3))),
-    ("cosine_sim", 2, exprs => CosineSim(exprs(0), exprs(1))),
-    ("dot_product", 2, exprs => DotProduct(exprs(0), exprs(1))),
-    ("vec_sub", 2, exprs => VecSub(exprs(0), exprs(1))),
-    ("int8_quant_stats", 1, exprs => Int8QuantStats(exprs(0))),
-    ("sq8_encode", 1, exprs => Sq8Encode(exprs(0))),
-    ("sq8_cos", 2, exprs => Sq8Cos(exprs(0), exprs(1))),
-    ("stop_profile_counts", 1, exprs => StopProfileCounts(exprs(0))),
-    ("gopher_token_stats", 1, exprs => GopherTokenStats(exprs(0))),
-    ("ngram_stats", 2, {
-      case Seq(toks, org.apache.spark.sql.catalyst.expressions.Literal(n: Int,
-          org.apache.spark.sql.types.IntegerType)) => WordNgramStats(toks, n)
-      case _ => throw new IllegalArgumentException(
-        "ngram_stats(tokens, n): n must be an INT literal")
-    }),
-    ("simhash64", 1, exprs => SimHash64(exprs(0))),
-    ("bloom_build_native", 3, exprs =>
-      BloomBuildAgg(exprs(0), exprs(1), exprs(2))
-        .toAggregateExpression(isDistinct = false)),
-    ("minhash_sig", 2, {
-      case Seq(sh, org.apache.spark.sql.catalyst.expressions.Literal(n: Int,
-          org.apache.spark.sql.types.IntegerType)) => MinHashSig(sh, n)
-      case _ => throw new IllegalArgumentException(
-        "minhash_sig(shingles, numHashes): numHashes must be an INT literal")
-    }),
-    ("word_tokens", 1, exprs => WordTokens(exprs(0))),
-    ("jaro_winkler", 2, exprs => JaroWinklerSim(exprs(0), exprs(1))),
-    ("hashed_lr_score", 2, {
-      case Seq(text, org.apache.spark.sql.catalyst.expressions.Literal(d: Int,
-          org.apache.spark.sql.types.IntegerType)) => HashedLrScore(text, d)
-      case _ => throw new IllegalArgumentException(
-        "hashed_lr_score(text, dim): dim must be an INT literal")
-    }),
-    ("bigram_stats", 1, exprs => BigramStats(exprs(0))),
-    ("word_ngrams", 2, {
-      case Seq(toks, org.apache.spark.sql.catalyst.expressions.Literal(n: Int,
-          org.apache.spark.sql.types.IntegerType)) => WordNgrams(toks, n)
-      case _ => throw new IllegalArgumentException(
-        "word_ngrams(tokens, n): n must be an INT literal")
-    }),
-    ("hash_array", 2, {
-      case Seq(arr, org.apache.spark.sql.catalyst.expressions.Literal(s: Int,
-          org.apache.spark.sql.types.IntegerType)) => HashArray(arr, s)
-      case _ => throw new IllegalArgumentException(
-        "hash_array(strings, seed): seed must be an INT literal")
-    }),
-    ("winnow", 2, {
-      case Seq(arr, org.apache.spark.sql.catalyst.expressions.Literal(w: Int,
-          org.apache.spark.sql.types.IntegerType)) => Winnow(arr, w)
-      case _ => throw new IllegalArgumentException(
-        "winnow(hashes, w): w must be an INT literal")
-    }),
-    ("srp_sig", 3, {
-      case Seq(emb,
-          org.apache.spark.sql.catalyst.expressions.Literal(b: Int,
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.catalyst.expressions.Literal(s: Int,
-            org.apache.spark.sql.types.IntegerType)) => SrpSig(emb, b, s)
-      case _ => throw new IllegalArgumentException(
-        "srp_sig(embedding, bits, seed): bits and seed must be INT literals")
-    }))
+  private[graft] val sqlBuilders: Seq[(String, Int, Builder)] = Seq[(String, Int, Builder)](
+      ("mmh3", 2, exprs => Mmh3(exprs(0), exprs(1))),
+      ("bloom_might_contain", 4, exprs =>
+        BloomMightContain(exprs(0), exprs(1), exprs(2), exprs(3))),
+      ("bloom_build_native", 3, exprs =>
+        BloomBuildAgg(exprs(0), exprs(1), exprs(2))
+          .toAggregateExpression(isDistinct = false))) ++
+    Kernels.table.map(k => (k.name, k.args.size, k.fromSql _))
+
+  private[graft] type Builder = Seq[Expression] => Expression
 
   /** Arity-checked wrapper around a raw builder. */
-  private[graft] def checkedBuilder(name: String, n: Int,
-      build: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression)
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression =
+  private[graft] def checkedBuilder(name: String, n: Int, build: Builder): Builder =
     exprs => {
       if (exprs.length != n) {
         throw new org.apache.spark.sql.AnalysisException(
@@ -225,10 +167,10 @@ package object functions {
       build(exprs)
     }
 
-  /** Register the SQL surface (`SELECT mmh3(c, 3)`,
-    * `bloom_build_native(...)`, `bloom_might_contain(...)`) on an existing
-    * session. Sessions built with `spark.sql.extensions=graft.GraftExtensions`
-    * get the same functions without this call. */
+  /** Register the SQL surface ([[sqlBuilders]]: `SELECT mmh3(c, 3)`,
+    * `word_ngrams(tokens, 3)`, ...) on an existing session. Sessions built
+    * with `spark.sql.extensions=graft.GraftExtensions` get the same
+    * functions without this call. */
   def registerAll(spark: SparkSession): Unit =
     sqlBuilders.foreach { case (name, n, build) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -1,24 +1,26 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Murmur3
 
-/** Static kernels for the vector/text expressions below. Kept as plain
-  * static methods so whole-stage-generated code can call them without
-  * closure objects (same pattern as [[graft.core.BloomFilter]]'s kernels).
+/** Static kernels behind the [[Kernels]] table's vector and text entries.
+  * Kept as plain static methods so whole-stage-generated code can call
+  * them without closure objects (same pattern as
+  * [[graft.core.BloomFilter]]'s kernels).
   */
 object VectorKernels {
 
-  /** Cosine similarity of two equal-length float vectors, accumulated in
-    * double in index order (one pass, three accumulators). The DuckDB
-    * oracle mirrors this exact association:
-    * `dot / (sqrt(na) * sqrt(nb))`. Zero-norm input → 0.0. */
+  /** `cosine_sim`: cosine similarity of two equal-length vectors,
+    * accumulated in double in index order (one pass, three accumulators)
+    * by the float or the double loop, picked once per call (the two sides
+    * share one element type, checked at analysis). The DuckDB oracle
+    * mirrors this exact association: `dot / (sqrt(na) * sqrt(nb))`.
+    * Zero-norm input → 0.0. */
+  def cosine(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double =
+    if (aFloat) cosineFloat(a, b) else cosineDouble(a, b)
+
   def cosineFloat(a: ArrayData, b: ArrayData): Double = {
     val n = a.numElements()
     require(b.numElements() == n,
@@ -51,10 +53,7 @@ object VectorKernels {
     if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Inner product of two equal-length vectors, accumulated in double in
-    * index order — the ADC building block for product-quantized scoring
-    * (and the norm via `dot(x, x)`). DuckDB twin: `list_dot_product`. */
-  // Null-slot contract (cosine/dot/vecSub kernels): a NULL array element
+  // Null-slot contract (vector kernels and winnow): a NULL array element
   // is rejected with a clear error rather than silently read as 0/garbage
   // through getFloat/getDouble — embeddings come from parquet whose list
   // type is nullable-by-default (containsNull=true), so the type check
@@ -68,7 +67,13 @@ object VectorKernels {
   // policy in the query where it's visible.
   private def requireNoNullSlot(a: ArrayData, i: Int, op: String): Unit =
     if (a.isNullAt(i)) throw new IllegalArgumentException(
-      s"$op: NULL element at index $i — vector columns must have non-null elements")
+      s"$op: NULL element at index $i — array columns must have non-null elements")
+
+  /** `dot_product`: the inner product of two equal-length vectors,
+    * accumulated in double in index order, by the float or the double
+    * loop picked once per call. DuckDB twin: `list_dot_product`. */
+  def dot(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): Double =
+    if (aFloat) dotFloat(a, b) else dotDouble(a, b)
 
   def dotFloat(a: ArrayData, b: ArrayData): Double = {
     val n = a.numElements()
@@ -98,7 +103,7 @@ object VectorKernels {
     dot
   }
 
-  /** PQ encode kernel (see [[PqEncode]]): per subspace `j`, the code of
+  /** PQ encode kernel (`pq_encode`): per subspace `j`, the code of
     * the max-cosine centroid (ties -> lowest code, matching
     * `max_by(code, struct(sim, -code))`). `cb` is the flat codebook laid
     * out `(j*ksub + code)*sd + dim`. One call encodes a full vector —
@@ -135,7 +140,7 @@ object VectorKernels {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** PQ ADC-table kernel (see [[PqTable]]): the query's flat lookup table
+  /** PQ ADC-table kernel (`pq_table`): the query's flat lookup table
     * `table[j*ksub + code] = dot(q_j, c_{j,code})`, one call per query. */
   def pqTable(vec: ArrayData, cb: ArrayData, m: Int, ksub: Int): ArrayData = {
     val d = vec.numElements()
@@ -163,7 +168,7 @@ object VectorKernels {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** ADC lookup kernel (see [[PqAdc]]): `Σ_j table[j*ksub + codes[j]]` —
+  /** ADC lookup kernel (`pq_adc`): `Σ_j table[j*ksub + codes[j]]` —
     * the product-quantization score is `m` flat-array lookups, never a
     * full-width vector pass. */
   def pqAdc(table: ArrayData, codes: ArrayData, ksub: Int): Double = {
@@ -187,7 +192,7 @@ object VectorKernels {
     sum
   }
 
-  /** Element-wise vector subtraction (see [[VecSub]]): the residual
+  /** Element-wise vector subtraction (`vec_sub`): the residual
     * kernel of residual-encoded IVF×PQ. Accepts float or double element
     * arrays on either side; always returns doubles. */
   def vecSub(a: ArrayData, b: ArrayData, aFloat: Boolean, bFloat: Boolean): ArrayData = {
@@ -206,7 +211,7 @@ object VectorKernels {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
   }
 
-  /** Int8-quantization audit kernel (see [[Int8QuantStats]]):
+  /** Int8-quantization audit kernel (`int8_quant_stats`):
     * `[scale, max_abs_err]` for a float/double vector under symmetric
     * per-vector int8 quantization (`scale = max|e|/127`, code =
     * `clamp(floor(e/scale + 0.5), ±127)`). Operation order mirrors the
@@ -244,7 +249,7 @@ object VectorKernels {
       .fromPrimitiveArray(Array(s, maxErr))
   }
 
-  /** SQ8 encode kernel (see [[Sq8Encode]]): symmetric per-vector int8
+  /** SQ8 encode kernel (`sq8_encode`): symmetric per-vector int8
     * quantization into ONE self-contained binary — 8 bytes of big-endian
     * IEEE-754 scale (`max|e|/127`), then one signed code byte per
     * dimension (`clamp(floor(e/scale + 0.5), ±127)`; zero vector →
@@ -282,13 +287,13 @@ object VectorKernels {
     out
   }
 
-  /** Asymmetric SQ8 cosine (see [[Sq8Cos]]): cosine between a full-width
+  /** Asymmetric SQ8 cosine (`sq8_cos`): cosine between a full-width
     * query vector and an [[sq8Encode]]d corpus vector — the ADC-style
     * scoring pass of the IVF×SQ8 lane. The per-vector scale is a positive
     * scalar multiplier and cancels in cosine, so the corpus side is pure
     * integer code math (the scale bytes exist for dot/L2 consumers);
     * zero-norm convention matches [[cosineDouble]]. */
-  def sq8Cos(q: ArrayData, isFloat: Boolean, bin: Array[Byte]): Double = {
+  def sq8Cos(q: ArrayData, bin: Array[Byte], isFloat: Boolean): Double = {
     val n = bin.length - 8
     require(q.numElements() == n,
       s"sq8_cos: length mismatch ${q.numElements()} vs $n")
@@ -305,7 +310,7 @@ object VectorKernels {
     else dot / (math.sqrt(nq) * math.sqrt(nc.toDouble))
   }
 
-  /** Bigram-repetition kernel (see [[BigramStats]]): `[top, total]` where
+  /** Bigram-repetition kernel (`bigram_stats`): `[top, total]` where
     * `total` is the number of adjacent token bigrams (`|tokens| - 1`) and
     * `top` the occurrence count of the most frequent one. One local pass
     * with a per-document hash map (bounded by tokens-per-doc, never by
@@ -335,7 +340,7 @@ object VectorKernels {
       .fromPrimitiveArray(Array[Long](top, n - 1L))
   }
 
-  /** Word n-gram kernel (see [[WordNgrams]]). Null tokens render as empty
+  /** Word n-gram kernel (`word_ngrams`). Null tokens render as empty
     * strings inside a shingle (they cannot occur from the tokenizer). */
   def wordNgrams(tokens: ArrayData, n: Int): ArrayData = {
     val len = tokens.numElements()
@@ -371,7 +376,7 @@ object VectorKernels {
     Array(stopEn, stopDe, stopFr, stopEs)
       .map(_.map(_.getBytes("UTF-8")).toArray)
 
-  /** Stop-profile counting kernel (see [[StopProfileCounts]]): per
+  /** Stop-profile counting kernel (`stop_profile_counts`): per
     * profile, how many token occurrences are one of its stopwords —
     * `[en, de, fr, es]` in ONE pass over the lowered bytes (the composed
     * form pays one interpreted `filter` lambda per profile per token).
@@ -408,7 +413,7 @@ object VectorKernels {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(counts)
   }
 
-  /** N-gram counting kernel (see [[WordNgramStats]]): `[total, distinct]`
+  /** N-gram counting kernel (`ngram_stats`): `[total, distinct]`
     * word `n`-gram shingle counts of a token array WITHOUT materializing
     * the shingle array (the `word_ngrams` → `array_distinct` → `size`
     * composition allocates every shingle string twice). Same semantics as
@@ -438,7 +443,7 @@ object VectorKernels {
       Array(total, seen.size.toLong))
   }
 
-  /** Gopher-rule token statistics kernel (see [[GopherTokenStats]]):
+  /** Gopher-rule token statistics kernel (`gopher_token_stats`):
     * `[n_words, tok_chars, n_alpha_words, n_stop_distinct]` in one pass
     * over the lowered bytes — word count, total token characters, tokens
     * containing at least one letter, and DISTINCT English stopwords
@@ -480,7 +485,7 @@ object VectorKernels {
       Array(nWords, tokChars, nAlpha, java.lang.Long.bitCount(stopMask.toLong).toLong))
   }
 
-  /** Hashed-feature linear scorer kernel (see [[HashedLrScore]]): one pass
+  /** Hashed-feature linear scorer kernel (`hashed_lr_score`): one pass
     * over the lowered bytes; every `[a-z0-9]+` run contributes
     * `weight(bucket(run))` where `bucket = (len*31 + firstByte) % dim` and
     * `weight(b) = (b * 2654435761) % 1001 - 500`. All-integer arithmetic,
@@ -505,7 +510,7 @@ object VectorKernels {
     score
   }
 
-  /** Tokenizer kernel (see [[WordTokens]]): lowercase, then maximal
+  /** Tokenizer kernel (`word_tokens`): lowercase, then maximal
     * `[a-z0-9]+` byte runs. Byte-for-byte equal to
     * `regexp_extract_all(lower(text), '[a-z0-9]+', 0)` for EVERY input:
     * the lowering is the same `UTF8String.toLowerCase` the built-in
@@ -536,7 +541,7 @@ object VectorKernels {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** Element-wise seeded murmur3 (see [[HashArray]]); nulls hash as empty. */
+  /** Element-wise seeded murmur3 (`hash_array`); nulls hash as empty. */
   def hashArray(arr: ArrayData, seed: Int): ArrayData = {
     val n = arr.numElements()
     val out = new Array[Int](n)
@@ -583,10 +588,12 @@ object VectorKernels {
     * every `w`-window contributes a selected hash (detection of any match
     * ≥ w+k-1 grams), and the fingerprint is a position-subset of the
     * input. Sequences shorter than `w` yield their single rightmost
-    * minimum. */
+    * minimum. A NULL hash is rejected (the null-slot contract above). */
   def winnow(hashes: ArrayData, w: Int): ArrayData = {
     val n = hashes.numElements()
     def h(i: Int): Int = hashes.getInt(i)
+    var j = 0
+    while (j < n) { requireNoNullSlot(hashes, j, "winnow"); j += 1 }
     if (n == 0) {
       return org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
         .fromPrimitiveArray(Array.emptyIntArray)
@@ -632,7 +639,7 @@ object VectorKernels {
       }
     })
 
-  /** Signed-random-projection signature kernel (see [[SrpSig]]). */
+  /** Signed-random-projection signature kernel (`srp_sig`). */
   def srpSig(vec: ArrayData, bits: Int, seed: Int, isFloat: Boolean): Long = {
     val dims = vec.numElements()
     val ps = planes(bits, dims, seed)
@@ -684,784 +691,4 @@ object VectorKernels {
     }
     sig
   }
-}
-
-/** `word_tokens(text)` — the corpus tokenizer as a native kernel:
-  * lowercased maximal `[a-z0-9]+` runs of a STRING column, exactly
-  * `regexp_extract_all(lower(text), '[a-z0-9]+', 0)` (the DuckDB oracles
-  * keep using the regex form — the parity is total, see
-  * [[VectorKernels.wordTokens]], and VectorKernelsPropSpec fuzzes it).
-  * Native because the regex engine walks a backtracking NFA per char
-  * while this is two branch tests per byte — tokenization fronts every
-  * text/dedup operator, so it is the single hottest scalar in the corpus
-  * pipeline. */
-case class WordTokens(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"word_tokens argument must be STRING, got ${t.sql}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "word_tokens"
-
-  override protected def nullSafeEval(text: Any): Any =
-    VectorKernels.wordTokens(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.VectorKernels.wordTokens($t);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordTokens =
-    copy(child = newChild)
-}
-
-/** `word_ngrams(tokens, n)` — word n-gram shingles of an `ARRAY<STRING>`
-  * token column: `["a","b","c","d"]` with n=3 → `["a b c", "b c d"]`;
-  * inputs shorter than `n` yield one shingle of all tokens joined (so no
-  * document silently drops out of the dedup universe). A native kernel
-  * because the built-in `transform(sequence(...), i -> concat_ws(" ",
-  * slice(tokens, i, n)))` pays an interpreted lambda + array copy per
-  * shingle — the dominant cost of corpus-scale MinHash pipelines.
-  */
-/** `vec_sub(a, b)` — element-wise difference of two `ARRAY<FLOAT|DOUBLE>`
-  * vector columns as `ARRAY<DOUBLE>`, one codegen'd kernel call. The
-  * residual step of residual-encoded IVF×PQ (`r = v - centroid`); native
-  * for the same reason as [[DotProduct]]: `zip_with` lambdas are
-  * interpreted, and this sits in the corpus-wide encode path. Same
-  * null-slot contract as [[DotProduct]]. */
-case class VecSub(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private def elemType(e: Expression): Option[DataType] = e.dataType match {
-    case ArrayType(FloatType, _)  => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _                        => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (elemType(left), elemType(right)) match {
-      case (Some(_), Some(_)) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"vec_sub arguments must be ARRAY<FLOAT> or ARRAY<DOUBLE>, " +
-          s"got ${left.dataType.sql} and ${right.dataType.sql}")
-    }
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "vec_sub"
-
-  private def isFloat(e: Expression): Boolean = elemType(e).contains(FloatType)
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    VectorKernels.vecSub(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData],
-      isFloat(left), isFloat(right))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorKernels.vecSub($a, $b, ${isFloat(left)}, ${isFloat(right)});")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): VecSub =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `bigram_stats(tokens)` → `ARRAY<BIGINT> [top, total]`: occurrence count
-  * of the document's most frequent adjacent word bigram and the bigram
-  * total — the Gopher-style repetition signal as ONE narrow codegen'd
-  * projection. The composed alternatives both lose: explode + two-level
-  * hash aggregate shuffles every distinct (doc, bigram) pair, and the
-  * zero-shuffle `aggregate()`/`transform()` fold runs interpreted lambdas
-  * (see [[CosineSim]]'s rationale). Kernel state is a per-document map,
-  * bounded by tokens-per-doc at any corpus scale.
-  */
-case class BigramStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"bigram_stats argument must be ARRAY<STRING>, got ${t.sql}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "bigram_stats"
-
-  override protected def nullSafeEval(tokens: Any): Any =
-    VectorKernels.bigramStats(tokens.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.VectorKernels.bigramStats($t);")
-
-  override protected def withNewChildInternal(newChild: Expression): BigramStats =
-    copy(child = newChild)
-}
-
-/** `ngram_stats(tokens, n)` → `ARRAY<BIGINT> [total, distinct]`: word
-  * n-gram counts without materializing the shingle array — the counting
-  * face of [[WordNgrams]] for queries that only need the repetition
-  * measures (Gopher dup-3-gram bound, shingle statistics).
-  */
-case class WordNgramStats(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, s"ngram_stats: n must be positive, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"ngram_stats argument must be ARRAY<STRING>, got ${t.sql}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "ngram_stats"
-
-  override protected def nullSafeEval(tokens: Any): Any =
-    VectorKernels.wordNgramStats(tokens.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.VectorKernels.wordNgramStats($t, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordNgramStats =
-    copy(child = newChild)
-}
-
-/** `gopher_token_stats(text)` → `ARRAY<BIGINT> [n_words, tok_chars,
-  * n_alpha_words, n_stop_distinct]`: the token-level measurements of the
-  * Gopher rule filter in one codegen'd pass (the composed form pays an
-  * interpreted `rlike` lambda per token). Shingle-repetition measures
-  * stay on the native [[WordNgrams]] path.
-  */
-case class GopherTokenStats(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"gopher_token_stats argument must be STRING, got ${t.sql}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "gopher_token_stats"
-
-  override protected def nullSafeEval(text: Any): Any =
-    VectorKernels.gopherTokenStats(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.VectorKernels.gopherTokenStats($t);")
-
-  override protected def withNewChildInternal(newChild: Expression): GopherTokenStats =
-    copy(child = newChild)
-}
-
-/** `stop_profile_counts(text)` → `ARRAY<INT> [en, de, fr, es]`: stopword
-  * occurrence counts against the four language profiles in one codegen'd
-  * pass over the raw text — fronts language ID and quality scoring, the
-  * two projections every document of a pretraining corpus flows through;
-  * the composed `filter(tokens, t -> t.isin(...))` form pays four
-  * interpreted lambdas per document (equivalence pinned in TextDedupSpec).
-  */
-case class StopProfileCounts(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"stop_profile_counts argument must be STRING, got ${t.sql}")
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "stop_profile_counts"
-
-  override protected def nullSafeEval(text: Any): Any =
-    VectorKernels.stopProfileCounts(text.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.VectorKernels.stopProfileCounts($t);")
-
-  override protected def withNewChildInternal(newChild: Expression): StopProfileCounts =
-    copy(child = newChild)
-}
-
-/** `int8_quant_stats(vec)` → `ARRAY<DOUBLE> [scale, max_abs_err]`: the
-  * symmetric per-vector int8 compression audit as one codegen'd pass —
-  * replaces a four-`transform`-lambda composition (cast, abs-max,
-  * quantize, reconstruct-error) whose interpreted lambdas dominate the
-  * corpus-wide audit. Same null-slot contract as [[DotProduct]].
-  */
-case class Int8QuantStats(child: Expression) extends UnaryExpression {
-
-  private def elemType: Option[DataType] = child.dataType match {
-    case ArrayType(FloatType, _)  => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _                        => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = elemType match {
-    case Some(_) => TypeCheckResult.TypeCheckSuccess
-    case None => TypeCheckResult.TypeCheckFailure(
-      s"int8_quant_stats argument must be ARRAY<FLOAT> or ARRAY<DOUBLE>, " +
-        s"got ${child.dataType.sql}")
-  }
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "int8_quant_stats"
-
-  private def isFloat: Boolean = elemType.contains(FloatType)
-
-  override protected def nullSafeEval(v: Any): Any =
-    VectorKernels.int8QuantStats(v.asInstanceOf[ArrayData], isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.VectorKernels.int8QuantStats($v, $isFloat);")
-
-  override protected def withNewChildInternal(newChild: Expression): Int8QuantStats =
-    copy(child = newChild)
-}
-
-/** `sq8_encode(vec)` → `BINARY`: per-vector symmetric int8 quantization
-  * as one self-contained container (8-byte big-endian scale + one code
-  * byte per dimension) — the storage/wire format of the SQ8 ANN lane.
-  * Same null-slot contract as [[DotProduct]]. */
-case class Sq8Encode(child: Expression) extends UnaryExpression {
-
-  private def elemType: Option[DataType] = child.dataType match {
-    case ArrayType(FloatType, _)  => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _                        => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = elemType match {
-    case Some(_) => TypeCheckResult.TypeCheckSuccess
-    case None => TypeCheckResult.TypeCheckFailure(
-      s"sq8_encode argument must be ARRAY<FLOAT> or ARRAY<DOUBLE>, " +
-        s"got ${child.dataType.sql}")
-  }
-
-  override def dataType: DataType = BinaryType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "sq8_encode"
-
-  private def isFloat: Boolean = elemType.contains(FloatType)
-
-  override protected def nullSafeEval(v: Any): Any =
-    VectorKernels.sq8Encode(v.asInstanceOf[ArrayData], isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.VectorKernels.sq8Encode($v, $isFloat);")
-
-  override protected def withNewChildInternal(newChild: Expression): Sq8Encode =
-    copy(child = newChild)
-}
-
-/** `sq8_cos(query_vec, sq8_bin)` → `DOUBLE`: asymmetric cosine between a
-  * full-width query vector and an [[Sq8Encode]]d corpus vector — the SQ8
-  * analogue of [[PqAdc]]'s compressed-domain scoring. */
-case class Sq8Cos(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private def elemType: Option[DataType] = left.dataType match {
-    case ArrayType(FloatType, _)  => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _                        => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (elemType, right.dataType) match {
-      case (Some(_), BinaryType) => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"sq8_cos arguments must be (ARRAY<FLOAT|DOUBLE>, BINARY), " +
-          s"got ${left.dataType.sql} and ${right.dataType.sql}")
-    }
-
-  override def dataType: DataType = DoubleType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "sq8_cos"
-
-  private def isFloat: Boolean = elemType.contains(FloatType)
-
-  override protected def nullSafeEval(q: Any, bin: Any): Any =
-    VectorKernels.sq8Cos(q.asInstanceOf[ArrayData], isFloat,
-      bin.asInstanceOf[Array[Byte]])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (q, bin) =>
-      s"${ev.value} = graft.functions.VectorKernels.sq8Cos($q, $isFloat, $bin);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Sq8Cos =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `hashed_lr_score(text, dim)` → `BIGINT`: a feature-hashed linear model
-  * score — the fastText-style quality-classifier shape — as ONE narrow
-  * codegen'd projection over the raw text. Each `[a-z0-9]+` token maps to
-  * one of `dim` feature buckets (`(len·31 + firstByte) mod dim`, the
-  * hashing-trick projection) and the bucket's weight
-  * (`(b·2654435761) mod 1001 − 500`, a fixed deterministic weight table)
-  * is accumulated. A real deployment swaps the multiplicative weight rule
-  * for trained weights (a `dim`-length literal array — same kernel shape);
-  * the arithmetic stays integer-exact so the score is cross-engine
-  * oracle-checkable, unlike a float-weight model. Scoring 100 TB is a
-  * single scan: no token explode, no weight-table join, no shuffle.
-  */
-case class HashedLrScore(child: Expression, dim: Int) extends UnaryExpression {
-  require(dim > 0, s"hashed_lr_score: dim must be positive, got $dim")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hashed_lr_score argument must be STRING, got ${t.sql}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "hashed_lr_score"
-
-  override protected def nullSafeEval(text: Any): Any =
-    VectorKernels.hashedLrScore(text.asInstanceOf[UTF8String], dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.VectorKernels.hashedLrScore($t, $dim);")
-
-  override protected def withNewChildInternal(newChild: Expression): HashedLrScore =
-    copy(child = newChild)
-}
-
-case class WordNgrams(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, s"word_ngrams: n must be positive, got $n")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"word_ngrams argument must be ARRAY<STRING>, got ${t.sql}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "word_ngrams"
-
-  override protected def nullSafeEval(tokens: Any): Any =
-    VectorKernels.wordNgrams(tokens.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.VectorKernels.wordNgrams($t, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): WordNgrams =
-    copy(child = newChild)
-}
-
-/** `hash_array(arr, seed)` — element-wise seeded murmur3 of an
-  * `ARRAY<STRING>`: the vectorized sibling of [[Mmh3]] (native loop
-  * instead of an interpreted `transform` lambda per element).
-  */
-case class HashArray(child: Expression, seed: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"hash_array argument must be ARRAY<STRING>, got ${t.sql}")
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "hash_array"
-
-  override protected def nullSafeEval(arr: Any): Any =
-    VectorKernels.hashArray(arr.asInstanceOf[ArrayData], seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.VectorKernels.hashArray($a, $seed);")
-
-  override protected def withNewChildInternal(newChild: Expression): HashArray =
-    copy(child = newChild)
-}
-
-/** `winnow(hashes, w)` — winnowing fingerprint of an `ARRAY<INT>` hash
-  * sequence (see [[VectorKernels.winnow]]). A native kernel because the
-  * sliding-window-minimum has no lambda-free composition of built-ins at
-  * all (a `transform(sequence(...))` formulation would be O(n·w) through
-  * interpreted lambdas and still need position-dedup).
-  */
-case class Winnow(child: Expression, w: Int) extends UnaryExpression {
-  require(w > 0, s"winnow: window must be positive, got $w")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: IntegerType, false) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"winnow argument must be ARRAY<INT> without nulls, got ${t.sql}")
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "winnow"
-
-  override protected def nullSafeEval(arr: Any): Any =
-    VectorKernels.winnow(arr.asInstanceOf[ArrayData], w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.functions.VectorKernels.winnow($a, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): Winnow =
-    copy(child = newChild)
-}
-
-/** `minhash_sig(shingles, numHashes)` — MinHash signature of an
-  * `ARRAY<STRING>` shingle column: `sig[s] = min over shingles of
-  * mmh3(shingle, s)` for seeds `0..numHashes-1`. A native kernel because
-  * the built-in composition `transform(sequence(0,H-1), s ->
-  * array_min(transform(sh, x -> mmh3(x, s))))` routes H×|shingles| hash
-  * calls through interpreted lambdas. Empty input → all-Int.MaxValue
-  * signature (deterministic; such docs should be filtered upstream).
-  */
-case class MinHashSig(child: Expression, numHashes: Int) extends UnaryExpression {
-  require(numHashes > 0, s"minhash_sig: numHashes must be positive, got $numHashes")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig argument must be ARRAY<STRING>, got ${t.sql}")
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "minhash_sig"
-
-  override protected def nullSafeEval(shingles: Any): Any =
-    VectorKernels.minhashSig(shingles.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, sh =>
-      s"${ev.value} = graft.functions.VectorKernels.minhashSig($sh, $numHashes);")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSig =
-    copy(child = newChild)
-}
-
-/** `cosine_sim(a, b)` — cosine similarity of two `ARRAY<FLOAT|DOUBLE>`
-  * embedding columns as one codegen'd kernel call.
-  *
-  * Why a native expression: the built-in composition
-  * `aggregate(zip_with(a, b, _*_), 0d, _+_)` routes every element through
-  * interpreted `HigherOrderFunction` lambdas — at a 25M-pair similarity
-  * self-join that is ~1.6B boxed lambda invocations. This kernel is a tight
-  * primitive loop inside whole-stage codegen.
-  *
-  * Null array SLOTS are rejected with a clear error — see [[DotProduct]]
-  * for the documented contract and rationale.
-  */
-case class CosineSim(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private def elemType(e: Expression): Option[DataType] = e.dataType match {
-    case ArrayType(FloatType, _)  => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _                        => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (elemType(left), elemType(right)) match {
-      case (Some(a), Some(b)) if a == b => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"cosine_sim arguments must both be ARRAY<FLOAT> or ARRAY<DOUBLE>, " +
-          s"got ${left.dataType.sql} and ${right.dataType.sql}")
-    }
-
-  override def dataType: DataType = DoubleType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "cosine_sim"
-
-  private def kernel: String = elemType(left) match {
-    case Some(FloatType) => "cosineFloat"
-    case _               => "cosineDouble"
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    if (elemType(left).contains(FloatType)) VectorKernels.cosineFloat(x, y)
-    else VectorKernels.cosineDouble(x, y)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorKernels.$kernel($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): CosineSim =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `dot_product(a, b)` — inner product of two `ARRAY<FLOAT|DOUBLE>` vector
-  * columns as one codegen'd kernel call (same rationale as [[CosineSim]]:
-  * no interpreted `aggregate(zip_with(...))` lambdas in hot paths). Used by
-  * the product-quantization ADC tables and for norms via `dot(x, x)`.
-  *
-  * Null SLOTS inside an array are rejected at runtime with a clear error
-  * (documented contract, same as [[VecSub]]): parquet-sourced embedding
-  * columns type as `containsNull=true` even though the pipeline never
-  * writes a null element, so the type check can't forbid them statically
-  * without refusing every real embedding table — but silently reading a
-  * null slot as 0.0 through the primitive accessor (the pre-guard
-  * behavior) diverges from SQL semantics (DuckDB's `list_dot_product`
-  * yields NULL). Embeddings with genuinely-missing dimensions must be
-  * repaired or filtered upstream.
-  */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  private def elemType(e: Expression): Option[DataType] = e.dataType match {
-    case ArrayType(FloatType, _)  => Some(FloatType)
-    case ArrayType(DoubleType, _) => Some(DoubleType)
-    case _                        => None
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (elemType(left), elemType(right)) match {
-      case (Some(a), Some(b)) if a == b => TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"dot_product arguments must both be ARRAY<FLOAT> or ARRAY<DOUBLE>, " +
-          s"got ${left.dataType.sql} and ${right.dataType.sql}")
-    }
-
-  override def dataType: DataType = DoubleType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "dot_product"
-
-  private def kernel: String = elemType(left) match {
-    case Some(FloatType) => "dotFloat"
-    case _               => "dotDouble"
-  }
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val (x, y) = (a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    if (elemType(left).contains(FloatType)) VectorKernels.dotFloat(x, y)
-    else VectorKernels.dotDouble(x, y)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.VectorKernels.$kernel($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProduct =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Shared shape of the two PQ projection kernels: `(ARRAY<DOUBLE> vector,
-  * ARRAY<DOUBLE> flat codebook) -> array`, parameterized by `(m, ksub)`.
-  * The codebook argument is a literal/broadcast-sized array (`m*ksub*sd`
-  * doubles), so the whole encode/table step is a narrow codegen'd
-  * projection straight off the scan — the plan never explodes subvectors
-  * or joins against a centroid table.
-  */
-abstract class PqProjection extends BinaryExpression {
-  def vec: Expression
-  def cb: Expression
-  def m: Int
-  def ksub: Int
-
-  override def left: Expression = vec
-  override def right: Expression = cb
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (vec.dataType, cb.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (v, c) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName arguments must be (ARRAY<DOUBLE>, ARRAY<DOUBLE>), " +
-          s"got ${v.sql}, ${c.sql}")
-    }
-
-  override def nullIntolerant: Boolean = true
-
-  protected def kernel: String
-
-  override protected def nullSafeEval(v: Any, c: Any): Any = kernel match {
-    case "pqEncode" =>
-      VectorKernels.pqEncode(v.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData], m, ksub)
-    case _ =>
-      VectorKernels.pqTable(v.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData], m, ksub)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, c) =>
-      s"${ev.value} = graft.functions.VectorKernels.$kernel($v, $c, $m, $ksub);")
-}
-
-/** `pq_encode(vec, codebook, m, ksub)` — the vector's PQ code word
-  * (ARRAY<INT>, length m): per subspace, the max-cosine centroid. */
-case class PqEncode(vec: Expression, cb: Expression, m: Int, ksub: Int)
-    extends PqProjection {
-  require(m > 0 && ksub > 0, s"pq_encode: m/ksub must be positive")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "pq_encode"
-  override protected def kernel: String = "pqEncode"
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqEncode =
-    copy(vec = newLeft, cb = newRight)
-}
-
-/** `pq_table(vec, codebook, m, ksub)` — the query's flat ADC lookup table
-  * (ARRAY<DOUBLE>, length m*ksub): `dot(q_j, c_{j,code})` per slot. */
-case class PqTable(vec: Expression, cb: Expression, m: Int, ksub: Int)
-    extends PqProjection {
-  require(m > 0 && ksub > 0, s"pq_table: m/ksub must be positive")
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "pq_table"
-  override protected def kernel: String = "pqTable"
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqTable =
-    copy(vec = newLeft, cb = newRight)
-}
-
-/** `pq_adc(table, codes, ksub)` — asymmetric-distance-computation lookup
-  * for product quantization: `table` is a flat `ARRAY<DOUBLE>` of per-
-  * `(subspace, code)` partial scores laid out `j*ksub + code`, `codes` the
-  * candidate's `ARRAY<INT>` PQ code word; the result is the sum of the `m`
-  * table entries the codes select. One codegen'd kernel call per
-  * (query, candidate) pair — the compressed-domain scoring loop that makes
-  * PQ scanning memory-bandwidth-bound instead of FLOP-bound.
-  */
-case class PqAdc(table: Expression, codes: Expression, ksub: Int)
-    extends BinaryExpression {
-  require(ksub > 0, s"pq_adc: ksub must be positive, got $ksub")
-
-  override def left: Expression = table
-  override def right: Expression = codes
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (table.dataType, codes.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (t, c) => TypeCheckResult.TypeCheckFailure(
-        s"pq_adc arguments must be (ARRAY<DOUBLE>, ARRAY<INT>), got ${t.sql}, ${c.sql}")
-    }
-
-  override def dataType: DataType = DoubleType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "pq_adc"
-
-  override protected def nullSafeEval(t: Any, c: Any): Any =
-    VectorKernels.pqAdc(t.asInstanceOf[ArrayData], c.asInstanceOf[ArrayData], ksub)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, c) =>
-      s"${ev.value} = graft.functions.VectorKernels.pqAdc($t, $c, $ksub);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqAdc =
-    copy(table = newLeft, codes = newRight)
-}
-
-/** `srp_sig(vec, bits, seed)` — signed-random-projection (hyperplane) LSH
-  * signature of an `ARRAY<FLOAT|DOUBLE>` embedding: bit `b` is set iff the
-  * dot product with pseudo-random Rademacher (±1) hyperplane `b` is
-  * positive. Collision probability of two vectors on one bit is
-  * `1 − θ/π` (Charikar), so near-parallel vectors share most bits — the
-  * bucketing key for ANN at scale. Hyperplanes are derived deterministically
-  * from `(seed, bit, dim)` via murmur3 and cached per (bits, dims, seed),
-  * so executors regenerate identical planes with no broadcast.
-  */
-case class SrpSig(child: Expression, bits: Int, seed: Int) extends UnaryExpression {
-  require(bits > 0 && bits <= 64, s"srp_sig: bits must be in 1..64, got $bits")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType | DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"srp_sig argument must be ARRAY<FLOAT> or ARRAY<DOUBLE>, got ${t.sql}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "srp_sig"
-
-  private def isFloat: Boolean =
-    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override protected def nullSafeEval(vec: Any): Any =
-    VectorKernels.srpSig(vec.asInstanceOf[ArrayData], bits, seed, isFloat)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.functions.VectorKernels.srpSig($v, $bits, $seed, $isFloat);")
-
-  override protected def withNewChildInternal(newChild: Expression): SrpSig =
-    copy(child = newChild)
-}
-
-/** `simhash64(tokens)` — 64-bit SimHash signature of an `ARRAY<STRING>`
-  * token column (Charikar's similarity-preserving hash; near-duplicate
-  * detection via Hamming distance `bit_count(a ^ b)` on the result).
-  */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(_: StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 argument must be ARRAY<STRING>, got ${t.sql}")
-  }
-
-  override def dataType: DataType = LongType
-
-  override def nullIntolerant: Boolean = true
-
-  override def prettyName: String = "simhash64"
-
-  override protected def nullSafeEval(tokens: Any): Any =
-    VectorKernels.simhash(tokens.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"${ev.value} = graft.functions.VectorKernels.simhash($t);")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
 }

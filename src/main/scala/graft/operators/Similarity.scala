@@ -13,7 +13,7 @@ import graft.functions.{cosine_sim, dot_product, pq_adc, pq_encode, pq_table,
   * Three paths, per the standard ANN playbook:
   *
   *  - [[bruteForceTopK]] / [[bruteForcePairs]]: exact cosine via the native
-  *    [[graft.functions.CosineSim]] kernel. Exact and oracle-checkable; the
+  *    `cosine_sim` kernel. Exact and oracle-checkable; the
   *    candidate side stays linear only because the query set is small —
   *    this is the *baseline*, not the scale path.
   *  - [[annTopK]]: signed-random-projection LSH — signatures bucket the
@@ -239,7 +239,7 @@ object Similarity {
     * `q = clamp(floor(x/scale + 0.5), ±127)`. Returns the audit row per
     * vector `(vec_id, n_dims, qscale, max_abs_err)` — the whole
     * quantize→dequantize→error pipeline in ONE pass of the native
-    * [[graft.functions.Int8QuantStats]] kernel (no shuffle, no state,
+    * `int8_quant_stats` kernel (no shuffle, no state,
     * no interpreted lambdas), oracle-checked value-for-value. The error
     * bound `scale/2` is checked in SimilaritySpec; kernel == lambda-
     * composition equivalence in the same suite. */

@@ -23,7 +23,7 @@ object TextAnalysis {
     * deterministic, cross-engine-reproducible tokenizer (a BPE vocabulary
     * is model-specific; the regex family is what C4/Gopher-style corpus
     * pipelines use for stats and dedup keys). Backed by the native
-    * [[graft.functions.WordTokens]] kernel — byte-identical to
+    * `word_tokens` kernel — byte-identical to
     * `regexp_extract_all(lower(text), '[a-z0-9]+', 0)` (which the DuckDB
     * oracles still use, so every t/dedup oracle doubles as a parity
     * check) but ~2 branch tests per byte instead of a regex NFA walk:
@@ -36,7 +36,7 @@ object TextAnalysis {
 
   /** Word `n`-gram shingles of the token array; documents shorter than `n`
     * tokens contribute their whole normalized text as one shingle.
-    * Native kernel ([[graft.functions.WordNgrams]]) — the equivalent
+    * Native kernel (`word_ngrams`) — the equivalent
     * `transform(sequence(...), i -> concat_ws(" ", slice(toks, i, n)))`
     * pays an interpreted lambda per shingle. */
   def shingles(toks: Column, n: Int): Column =
@@ -670,7 +670,7 @@ object TextAnalysis {
     * fastText-style classifier shape every production corpus pipeline runs
     * after the rule filters ([[gopherFilter]]): tokens → `dim` hashed
     * feature buckets → weight lookup → summed linear score. Backed by the
-    * native [[graft.functions.HashedLrScore]] kernel, so scoring is one
+    * native `hashed_lr_score` kernel, so scoring is one
     * codegen'd projection per document — no token explode, no weight-table
     * join, zero shuffles at any corpus size. The deterministic integer
     * weight rule stands in for trained weights (same kernel shape) and
@@ -826,7 +826,7 @@ object TextAnalysis {
   val winnowWindow = 4
 
   /** Winnowing fingerprint (MOSS-style): ordered shingle hash sequence →
-    * window-`w` rolling minima via the native [[graft.functions.Winnow]]
+    * window-`w` rolling minima via the native `winnow`
     * kernel. `(doc_id, fp ARRAY<INT>)` for every tokenizable document;
     * [[shingleFingerprint]] keeps the cheaper min/max variant. */
   def winnowFingerprint(docs: DataFrame,

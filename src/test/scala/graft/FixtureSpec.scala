@@ -4,12 +4,16 @@ import java.io.File
 
 /** `ensureFixture`'s write-once + atomic-publish lifecycle (VERDICT r13
   * ask #7): first touch builds in a private temp dir and publishes with
-  * one rename, re-touch is a no-op, a version bump rebuilds, and a stale
-  * half-built dir (no marker — a crashed writer) is replaced. */
+  * one rename, re-touch is a no-op, a different build fingerprint
+  * rebuilds, and a stale half-built dir (no marker — a crashed writer) is
+  * replaced. */
 class FixtureSpec extends SparkSuite {
 
+  /** This build's marker file. */
+  private val marker = SparkEntry.fixtureMarker(SparkEntry.buildFingerprint)
+
   // distinct `dir` per test: the fixture path is a pure function of
-  // (dir, name, version), so a fresh dir key isolates each scenario
+  // (dir, name), so a fresh dir key isolates each scenario
   private def freshKey(tag: String): String =
     s"/nonexistent/fixture-spec-$tag-${System.nanoTime}"
 
@@ -31,7 +35,7 @@ class FixtureSpec extends SparkSuite {
     }
     assert(p1 === p2)
     assert(builds === 1)
-    assert(new File(p1, "_GRAFT_FIXTURE_v1").isFile)
+    assert(new File(p1, marker).isFile)
     assert(scala.io.Source.fromFile(new File(p1, "data.txt"))
       .mkString === "one")
     // no leftover private build dirs next to the published fixture
@@ -40,29 +44,33 @@ class FixtureSpec extends SparkSuite {
       _.getName.startsWith(new File(p1).getName + ".build_")))
   }
 
-  test("version bump rebuilds and replaces the stale fixture") {
+  test("a different build fingerprint rebuilds and replaces the stale fixture") {
     val dir = freshKey("ver")
-    val p1 = SparkEntry.ensureFixture(dir, "fx", version = 1)(
-      build(_, "v1"))
-    val p2 = SparkEntry.ensureFixture(dir, "fx", version = 2)(
-      build(_, "v2"))
+    val p1 = SparkEntry.ensureStamped(dir, "fx", "build1")(build(_, "b1"))
+    val p2 = SparkEntry.ensureStamped(dir, "fx", "build2")(build(_, "b2"))
     assert(p1 === p2)
-    assert(new File(p2, "_GRAFT_FIXTURE_v2").isFile)
-    assert(!new File(p2, "_GRAFT_FIXTURE_v1").isFile)
+    assert(new File(p2, SparkEntry.fixtureMarker("build2")).isFile)
+    assert(!new File(p2, SparkEntry.fixtureMarker("build1")).isFile)
     assert(scala.io.Source.fromFile(new File(p2, "data.txt"))
-      .mkString === "v2")
+      .mkString === "b2")
+    // the running build's own stamp is neither, so it rebuilds too
+    assert(!Set("build1", "build2").contains(SparkEntry.buildFingerprint))
+    SparkEntry.ensureFixture(dir, "fx")(build(_, "this build"))
+    assert(new File(p2, marker).isFile)
+    assert(scala.io.Source.fromFile(new File(p2, "data.txt"))
+      .mkString === "this build")
   }
 
   test("a half-built dir without a marker (crashed writer) is replaced") {
     val dir = freshKey("stale")
     // fabricate the crash residue: fixture path exists, marker absent
     val p1 = SparkEntry.ensureFixture(dir, "fx")(build(_, "good"))
-    new File(p1, "_GRAFT_FIXTURE_v1").delete()
+    new File(p1, marker).delete()
     val w = new java.io.FileWriter(new File(p1, "data.txt"))
     w.write("partial"); w.close()
     val p2 = SparkEntry.ensureFixture(dir, "fx")(build(_, "rebuilt"))
     assert(p1 === p2)
-    assert(new File(p2, "_GRAFT_FIXTURE_v1").isFile)
+    assert(new File(p2, marker).isFile)
     assert(scala.io.Source.fromFile(new File(p2, "data.txt"))
       .mkString === "rebuilt")
   }
@@ -87,8 +95,8 @@ class FixtureSpec extends SparkSuite {
     assert(errors.isEmpty, s"racing publishers threw: ${errors}")
     assert(paths.size === 4)
     val p = paths.peek()
-    assert(new File(p, "_GRAFT_FIXTURE_v1").isFile,
-      "the survivor carries the current-version marker")
+    assert(new File(p, marker).isFile,
+      "the survivor carries this build's marker")
     val payload = scala.io.Source.fromFile(new File(p, "data.txt")).mkString
     assert((1 to 4).map(i => s"b$i").contains(payload),
       s"the surviving fixture must be ONE complete build, got '$payload'")
@@ -108,6 +116,6 @@ class FixtureSpec extends SparkSuite {
       // while building, the published path must not exist yet
       assert(!new File(SparkEntry.tmpPath(dir, "fx")).exists())
     }
-    assert(new File(p, "_GRAFT_FIXTURE_v1").isFile)
+    assert(new File(p, marker).isFile)
   }
 }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.core.{BloomFilter, Murmur3}
@@ -205,5 +206,126 @@ class FunctionsSpec extends SparkSuite {
       else Option(t.getMessage).toSeq ++ messages(t.getCause)
     assert(messages(ex).exists(_.contains("merging mismatched buffers")),
       s"unexpected failure: $ex")
+  }
+
+  // every kernel-table entry's Column function, by SQL name
+  private val columnCalls: Map[String, (Seq[Column], Seq[Int]) => Column] = Map(
+    "word_tokens" -> ((c, _) => word_tokens(c(0))),
+    "word_ngrams" -> ((c, k) => word_ngrams(c(0), k(0))),
+    "ngram_stats" -> ((c, k) => ngram_stats(c(0), k(0))),
+    "bigram_stats" -> ((c, _) => bigram_stats(c(0))),
+    "gopher_token_stats" -> ((c, _) => gopher_token_stats(c(0))),
+    "stop_profile_counts" -> ((c, _) => stop_profile_counts(c(0))),
+    "hashed_lr_score" -> ((c, k) => hashed_lr_score(c(0), k(0))),
+    "hash_array" -> ((c, k) => hash_array(c(0), k(0))),
+    "winnow" -> ((c, k) => winnow(c(0), k(0))),
+    "minhash_sig" -> ((c, k) => minhash_sig(c(0), k(0))),
+    "simhash64" -> ((c, _) => simhash64(c(0))),
+    "cosine_sim" -> ((c, _) => cosine_sim(c(0), c(1))),
+    "dot_product" -> ((c, _) => dot_product(c(0), c(1))),
+    "vec_sub" -> ((c, _) => vec_sub(c(0), c(1))),
+    "int8_quant_stats" -> ((c, _) => int8_quant_stats(c(0))),
+    "sq8_encode" -> ((c, _) => sq8_encode(c(0))),
+    "sq8_cos" -> ((c, _) => sq8_cos(c(0), c(1))),
+    "pq_encode" -> ((c, k) => pq_encode(c(0), c(1), k(0), k(1))),
+    "pq_table" -> ((c, k) => pq_table(c(0), c(1), k(0), k(1))),
+    "pq_adc" -> ((c, k) => pq_adc(c(0), c(1), k(0))),
+    "srp_sig" -> ((c, k) => srp_sig(c(0), k(0), k(1))),
+    "jaro_winkler" -> ((c, _) => jaro_winkler(c(0), c(1))),
+    "hist_l1" -> ((c, _) => hist_l1(c(0), c(1))),
+    "hist_common" -> ((c, _) => hist_common(c(0), c(1))))
+
+  test("kernel table: SQL equals Column, generated equals interpreted, " +
+      "and wrong arguments fail naming the function") {
+    import org.apache.spark.sql.{AnalysisException, Row}
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import org.apache.spark.sql.types._
+    assert(columnCalls.keySet === Kernels.table.map(_.name).toSet)
+    // vectors of 4 dims; with m = ksub = 2 every constant below is 2:
+    // the codebook holds m*ksub*2 doubles, the ADC table m*ksub, and the
+    // sq8 container 8 scale bytes + 4 codes
+    val schema = new StructType()
+      .add("s1", StringType).add("s2", StringType)
+      .add("toks", ArrayType(StringType))
+      .add("vf", ArrayType(FloatType)).add("vd", ArrayType(DoubleType))
+      .add("dv", ArrayType(DoubleType)).add("cb", ArrayType(DoubleType))
+      .add("codes", ArrayType(IntegerType)).add("bin", BinaryType)
+      .add("n", IntegerType).add("flag", BooleanType)
+    def row(s1: String, s2: String, toks: Seq[String], v: Seq[Double],
+        cb: Seq[Double], codes: Seq[Int], bin: Seq[Int]) =
+      Row(s1, s2, toks, v.map(_.toFloat), v, v.map(_ / 10), cb, codes,
+        bin.map(_.toByte).toArray, 3, true)
+    // a third row of NULLs: every kernel propagates it
+    val rows = Seq(
+      row("The quick brown fox, the lazy dog 42", "the quick brown fax",
+        Seq("a", "b", "a", "b", "c"), Seq(0.5, -1.0, 2.0, 0.25),
+        Seq(1.0, 0.0, 0.0, 1.0, 1.0, 1.0, -1.0, 0.5), Seq(1, 0),
+        Seq(0, 0, 0, 0, 0, 0, 0, 0, 10, -20, 127, 3)),
+      row("Der Hund und die Katze", "der hund", Seq("x"), Seq(-3.0, 1.5, 0.0, 7.0),
+        Seq(0.5, -0.5, 2.0, 1.0, -1.0, 0.0, 0.25, 4.0), Seq(0, 1),
+        Seq(63, -128, 0, 0, 0, 0, 0, 0, -1, 5, 0, 90)),
+      Row.fromSeq(Seq.fill(schema.size)(null)))
+    // an RDD-backed frame: no local-relation or constant folding can
+    // evaluate the kernels on the driver before the plan runs
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    def values(d: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+      d.collect().toSeq.map(_.toSeq.map {
+        case b: Array[Byte] => b.toSeq
+        case x => x
+      })
+    def withConf[T](kv: (String, String)*)(body: => T): T = {
+      kv.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally kv.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+    import KernelArg._
+    for (k <- Kernels.table) {
+      val vectors = if (k.args.contains(Vec)) Seq("vf", "vd") else Seq("")
+      for (vec <- vectors) {
+        // a kernel's i-th column of one kind reads that kind's i-th input
+        val pool = Map[KernelArg, Seq[String]](Str -> Seq("s1", "s2"),
+          Strs -> Seq("toks"), Vec -> Seq(vec, vec), Doubles -> Seq("dv", "cb"),
+          Ints -> Seq("codes"), Bin -> Seq("bin"))
+        val names = k.args.filterNot(_.isInstanceOf[Const]).foldLeft(Seq.empty[String]) {
+          (acc, a) => acc :+ pool(a)(acc.count(pool(a).contains))
+        }
+        val consts = k.args.collect { case _: Const => 2 }
+        val call = columnCalls(k.name)(names.map(df.col), consts)
+        val what = s"${k.name} over (${names.mkString(", ")})"
+        // (a) the SQL surface and the Column surface agree
+        val viaSql = df.selectExpr(s"${k.name}(${(names ++ consts).mkString(", ")})")
+        assert(values(viaSql) === values(df.select(call)), what)
+        // (b) whole-stage generated code and the interpreted path agree
+        val gen = withConf("spark.sql.codegen.wholeStage" -> "true",
+            "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY") {
+          val d = df.select(call)
+          assert(d.queryExecution.executedPlan
+            .find(_.isInstanceOf[WholeStageCodegenExec]).isDefined, what)
+          values(d)
+        }
+        val interp = withConf("spark.sql.codegen.wholeStage" -> "false",
+            "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(values(df.select(call)))
+        assert(gen === interp, what)
+        assert(gen(2) === Seq(null), s"$what: NULL in, NULL out")
+        // (c) a wrong-typed column fails analysis, naming the function
+        val wrong = intercept[AnalysisException] {
+          df.select(columnCalls(k.name)(df.col("flag") +: names.tail.map(df.col), consts))
+        }
+        assert(wrong.getMessage.contains(k.name), wrong.getMessage)
+        // (d) a column where an INT constant belongs fails, naming it
+        if (consts.nonEmpty) {
+          val e = intercept[Exception] {
+            df.selectExpr(s"${k.name}(${(names ++ ("n" +: consts.tail)).mkString(", ")})")
+          }
+          assert(e.getMessage.contains(k.name) && e.getMessage.contains("INT literal"),
+            e.getMessage)
+        }
+      }
+      if (k.sameElements) {
+        val mixed = intercept[AnalysisException] {
+          df.select(columnCalls(k.name)(Seq(df.col("vf"), df.col("vd")), Nil))
+        }
+        assert(mixed.getMessage.contains(k.name), mixed.getMessage)
+      }
+    }
   }
 }

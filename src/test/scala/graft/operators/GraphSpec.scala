@@ -402,6 +402,20 @@ class GraphSpec extends SparkSuite {
     spark.catalog.clearCache()
   }
 
+  test("connectedComponents: an input with no undirected edges stops " +
+      "after round 1") {
+    // self-loops only: no edges, so the initial labels are the fixed
+    // point. 9 jobs: the initial labels' materializing write (which also
+    // observes their count and label sum) and one round. Without the
+    // label-sum seed a second, identical round runs (11); the loop that
+    // counted the initial labels with `count()` and had no seed ran 12
+    val (r, jobs) = jobsOf(
+      Graph.connectedComponents(eventsOf(Seq(7L, 7L, 7L))).collect())
+    assert(r.isEmpty)
+    assert(jobs <= 9, s"$jobs jobs: a converged input ran a second round")
+    spark.catalog.clearCache()
+  }
+
   test("connectedComponents: a 33-node path (diameter 32) converges to " +
       "one component — the pointer jump beats plain propagation's " +
       "round count") {
