@@ -133,7 +133,7 @@ object BloomPipeline {
     * Remaining callers: `CollectedProbeSpec` and `ReferencePipelineSpec`
     * (cross-formulation identity against the collected probe),
     * `PipelineSpec`, and the perfbench harness's traced `recomposed`
-    * pass. Deleting it (ROADMAP item 5) waits for a benchmark change that
+    * pass. Deleting it (ROADMAP item 1) waits for a benchmark change that
     * moves that recomposition onto [[fpStatsCollected]].
     *
     * Edge policy (SURVEY.md §2.6, deliberate fix): a test rating with no

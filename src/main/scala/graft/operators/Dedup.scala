@@ -856,12 +856,16 @@ object Dedup {
     val nEdgeRows = edges.count()
     val loop = Fixpoint.rounds(docs.sparkSession, nEdgeRows)
     val edgesR = loop.enter(edges)
+    // with no edge the initial labels are empty and their sum is 0: that
+    // seed stops the loop after round 1. With any edge (doc_a < doc_b)
+    // round 1 lowers a label, so no seed is needed
+    val seed = if (nEdgeRows == 0) Some(java.math.BigDecimal.ZERO) else None
     // the connected-components round (min-label fold + pointer jump,
     // [[Graph.minLabelJumpRound]]) run to the label-sum fixed point
     val labels = loop.iterate(
         edgesR.select(col("v").as("node")).distinct()
           .withColumn("label", col("node")),
-        Int.MaxValue, Fixpoint.labelSum) { (cur, _, _) =>
+        Int.MaxValue, Fixpoint.labelSum, seed) { (cur, _, _) =>
       Graph.minLabelJumpRound(edgesR, cur)
     }(Fixpoint.sameSum)
     // the final labels are materialized; drop the scaffolding caches (the

@@ -87,27 +87,6 @@ object Layout {
         max("l_partkey").as("max_partkey"))
   }
 
-  /** Reference Hilbert index (the public xy2d walk, rotation scoped to
-    * the current sub-square side): maps cell `(x, y)` of the
-    * `2^order × 2^order` grid to its position along the Hilbert curve.
-    * Drives the spec's bijection/adjacency proof and documents the exact
-    * recurrence both engine twins unroll. */
-  private[operators] def hilbertIndexRef(order: Int, x0: Long, y0: Long): Long = {
-    var x = x0; var y = y0; var d = 0L
-    var s = 1L << (order - 1)
-    while (s > 0) {
-      val rx = if ((x & s) > 0) 1L else 0L
-      val ry = if ((y & s) > 0) 1L else 0L
-      d += s * s * ((3 * rx) ^ ry)
-      if (ry == 0) {
-        val (fx, fy) = if (rx == 1) (s - 1 - x, s - 1 - y) else (x, y)
-        x = fy; y = fx
-      }
-      s >>= 1
-    }
-    d
-  }
-
   /** Hilbert-curve layout manifest — same bucketing, file cutting, and
     * manifest schema as [[zorderManifest]], but rows follow the Hilbert
     * curve instead of the Morton curve. Hilbert never takes the long

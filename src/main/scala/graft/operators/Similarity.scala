@@ -252,22 +252,6 @@ object Similarity {
       round(element_at(st, 2), 6).as("max_abs_err"))
   }
 
-  /** The interpreted-lambda composition [[quantizeInt8Stats]] replaced —
-    * kept as the cross-check that the one-pass kernel computes the same
-    * audit (equivalence pinned in SimilaritySpec). */
-  def quantizeInt8StatsComposed(emb: DataFrame): DataFrame = {
-    val x = transform(col("embedding"), e => e.cast("double"))
-    val scale = array_max(transform(x, e => abs(e))) / 127.0
-    def err(s: Column) = array_max(transform(x, e =>
-      abs(e - greatest(lit(-127.0), least(lit(127.0),
-        floor(e / s + 0.5).cast("double"))) * s)))
-    emb.select(
-      col("vec_id"),
-      size(col("embedding")).as("n_dims"),
-      round(scale, 6).as("qscale"),
-      when(scale === 0.0, 0.0).otherwise(round(err(scale), 6)).as("max_abs_err"))
-  }
-
   /** Spherical-k-means PQ codebook training, the TRAIN stage of [[PqAdc]]:
     * vectors split into `m` subvectors of `d/m` dims; per subspace, a
     * `ksub`-centroid codebook is trained from a deterministic sample init

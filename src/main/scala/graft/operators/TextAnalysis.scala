@@ -51,11 +51,6 @@ object TextAnalysis {
   val stopFr: Seq[String] = graft.functions.VectorKernels.stopFr
   val stopEs: Seq[String] = graft.functions.VectorKernels.stopEs
 
-  /** The composed stop-count (kept as the kernel's equivalence twin in
-    * TextDedupSpec; production paths read [[graft.functions.stop_profile_counts]]). */
-  private[operators] def countIn(toks: Column, words: Seq[String]): Column =
-    size(filter(toks, t => t.isin(words: _*)))
-
   /** Per-document token statistics: `(doc_id, n_tokens, n_distinct,
     * total_token_chars)`. */
   def tokenStats(docs: DataFrame): DataFrame = {
@@ -748,35 +743,6 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n"),
         round(sum("y") / count(lit(1)).cast("double"), 6).as("frac_pos"))
       .orderBy("bin")
-
-  /** The decomposed formulation of [[hashedLrQuality]] — explode tokens,
-    * broadcast-join a materialized `dim`-row weight table, re-aggregate —
-    * kept as the cross-check that the one-pass kernel computes exactly the
-    * classic shape (equivalence pinned in TextDedupSpec). */
-  def hashedLrQualityComposed(docs: DataFrame, dim: Int = 64): DataFrame = {
-    val spark = docs.sparkSession
-    val weights = spark.range(dim).select(
-      col("id").cast("long").as("bucket"),
-      ((col("id") * 2654435761L) % 1001L - 500L).as("weight"))
-    val t = tokens(col("text"))
-    val perTok = docs
-      .select(col("doc_id"), explode(t).as("tok"))
-      .withColumn("bucket", (length(col("tok")) * 31L + ascii(col("tok"))) % dim)
-      .join(broadcast(weights), "bucket")
-      .groupBy("doc_id").agg(sum("weight").as("score"))
-    docs
-      .select(col("doc_id"), size(t).as("n_tokens"))
-      .join(perTok, Seq("doc_id"), "left_outer")
-      .select(
-        col("doc_id"), col("n_tokens"),
-        coalesce(col("score"), lit(0L)).as("score"))
-      .select(
-        col("doc_id"), col("n_tokens"), col("score"),
-        when(col("n_tokens") > 0,
-          round(col("score").cast("double") / col("n_tokens"), 6))
-          .otherwise(0.0).as("score_per_token"),
-        (col("score") >= 0).as("keep"))
-  }
 
   /** 64-bit content fingerprint of the normalized text (exact-dup key).
     * xxhash64 is Spark-built-in and codegen'd; dedup correctness never

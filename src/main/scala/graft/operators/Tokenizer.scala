@@ -214,57 +214,6 @@ object Tokenizer {
       sum(length(col("word"))).cast("long").as("n_chars"))
     corpus.crossJoin(wordChecks)
   }
-
-  private[operators] def encodeReference(word: String,
-      merges: Seq[(String, String)]): Seq[String] =
-    merges.foldLeft(word.map(_.toString): Seq[String]) { case (syms, (l, r)) =>
-      val acc = scala.collection.mutable.ArrayBuffer.empty[String]
-      for (s <- syms) {
-        if (acc.nonEmpty && acc.last == l && s == r)
-          acc(acc.length - 1) = l + r
-        else acc += s
-      }
-      acc.toSeq
-    }
-
-  /** In-memory reference BPE trainer over collected word counts — the
-    * independent implementation `TokenizerSpec` gates [[bpeTrain]]
-    * against. Same tie-break, same greedy left-to-right merge. */
-  private[operators] def bpeTrainReference(
-      wordCounts: Seq[(String, Long)], nMerges: Int): Seq[(Int, String, String, Long)] = {
-    var words: Seq[(Vector[String], Long)] =
-      wordCounts.map { case (w, c) => (w.map(_.toString).toVector, c) }
-    val out = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
-    var rank = 1
-    var exhausted = false
-    while (rank <= nMerges && !exhausted) {
-      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
-      for ((syms, c) <- words; i <- 0 until syms.length - 1)
-        counts((syms(i), syms(i + 1))) =
-          counts.getOrElse((syms(i), syms(i + 1)), 0L) + c
-      if (counts.isEmpty) exhausted = true
-      else {
-        val ((l, r), n) = counts.toSeq.minBy { case ((a, b), m) => (-m, a, b) }
-        out += ((rank, l, r, n))
-        words = words.map { case (syms, c) =>
-          val acc = Vector.newBuilder[String]
-          var last: String = null
-          for (s <- syms) {
-            if (last == l && s == r) {
-              val merged = acc.result()
-              acc.clear()
-              merged.init.foreach(acc += _)
-              acc += (l + r)
-              last = l + r
-            } else { acc += s; last = s }
-          }
-          (acc.result(), c)
-        }
-        rank += 1
-      }
-    }
-    out.toSeq
-  }
 }
 
 /** DuckDB twin of [[Tokenizer.bpePairCounts]] — same word counts, same

@@ -6,6 +6,28 @@ import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
 class LayoutSpec extends SparkSuite {
+
+  /** Reference Hilbert index (the public xy2d walk, rotation scoped to
+    * the current sub-square side): maps cell `(x, y)` of the
+    * `2^order × 2^order` grid to its position along the Hilbert curve.
+    * Drives the spec's bijection/adjacency proof and documents the exact
+    * recurrence both engine twins unroll. */
+  private def hilbertIndexRef(order: Int, x0: Long, y0: Long): Long = {
+    var x = x0; var y = y0; var d = 0L
+    var s = 1L << (order - 1)
+    while (s > 0) {
+      val rx = if ((x & s) > 0) 1L else 0L
+      val ry = if ((y & s) > 0) 1L else 0L
+      d += s * s * ((3 * rx) ^ ry)
+      if (ry == 0) {
+        val (fx, fy) = if (rx == 1) (s - 1 - x, s - 1 - y) else (x, y)
+        x = fy; y = fx
+      }
+      s >>= 1
+    }
+    d
+  }
+
   import spark.implicits._
 
   test("zValue interleaves bits: known Morton vectors") {
@@ -52,7 +74,7 @@ class LayoutSpec extends SparkSuite {
     val order = 4
     val n = 1 << order
     val cells = for { x <- 0 until n; y <- 0 until n }
-      yield Layout.hilbertIndexRef(order, x, y) -> ((x, y))
+      yield hilbertIndexRef(order, x, y) -> ((x, y))
     val byD = cells.toMap
     // bijection onto [0, n²)
     assert(byD.keySet === (0 until n * n).map(_.toLong).toSet)
@@ -78,7 +100,7 @@ class LayoutSpec extends SparkSuite {
       .orderBy("file_id")
       .as[(Long, Long, Long, Long, Long, Long)].collect()
     val expect = grid
-      .map { case (x, y, _) => (Layout.hilbertIndexRef(4, x, y), x, y) }
+      .map { case (x, y, _) => (hilbertIndexRef(4, x, y), x, y) }
       .sortBy(_._1)
       .grouped(16).zipWithIndex
       .map { case (chunk, i) =>

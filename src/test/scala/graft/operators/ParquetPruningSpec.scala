@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 
 import graft.{SparkEntry, SparkSuite}
+import graft.lanes.Fixtures
 
 /** Storage-side pruning gates: the sorted small-row-group layout must let
   * parquet skip row groups on a range predicate (footer min/max), and the
@@ -31,8 +32,8 @@ class ParquetPruningSpec extends SparkSuite {
     scans.map(_.metrics("numOutputRows").value).sum
   }
 
-  private lazy val sorted = SparkEntry.fixtures("docs_rg_sorted")(spark, dir)
-  private lazy val scrambled = SparkEntry.fixtures("docs_rg_scrambled")(spark, dir)
+  private lazy val sorted = Fixtures.docsRgSorted(spark, dir)
+  private lazy val scrambled = Fixtures.docsRgScrambled(spark, dir)
   private lazy val total = spark.read.parquet(s"$dir/documents.parquet").count()
 
   test("range predicate: sorted layout reads a fraction of the scrambled one") {

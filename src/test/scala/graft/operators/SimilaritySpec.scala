@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -7,6 +8,22 @@ import graft.functions.{cosine_sim, dot_product, pq_adc, srp_sig}
 import graft.operators.Similarity.{ExactCos, Ivf, OneList, PqAdc, Sq8Cos}
 
 class SimilaritySpec extends SparkSuite {
+
+  /** The interpreted-lambda composition [[Similarity.quantizeInt8Stats]]
+    * replaced: the one-pass kernel must compute the same audit. */
+  private def quantizeInt8StatsComposed(emb: DataFrame): DataFrame = {
+    val x = transform(col("embedding"), e => e.cast("double"))
+    val scale = array_max(transform(x, e => abs(e))) / 127.0
+    def err(s: Column) = array_max(transform(x, e =>
+      abs(e - greatest(lit(-127.0), least(lit(127.0),
+        floor(e / s + 0.5).cast("double"))) * s)))
+    emb.select(
+      col("vec_id"),
+      size(col("embedding")).as("n_dims"),
+      round(scale, 6).as("qscale"),
+      when(scale === 0.0, 0.0).otherwise(round(err(scale), 6)).as("max_abs_err"))
+  }
+
   import spark.implicits._
 
   private def vecDf(rows: (Long, Seq[Float])*) =
@@ -308,7 +325,7 @@ class SimilaritySpec extends SparkSuite {
     val df = vecDf(rows: _*)
     val a = Similarity.quantizeInt8Stats(df).orderBy("vec_id")
       .collect().map(_.toString).toSeq
-    val b = Similarity.quantizeInt8StatsComposed(df).orderBy("vec_id")
+    val b = quantizeInt8StatsComposed(df).orderBy("vec_id")
       .collect().map(_.toString).toSeq
     assert(a === b)
   }

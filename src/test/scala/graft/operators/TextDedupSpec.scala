@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -8,6 +8,40 @@ import graft.functions.{simhash64, minhash_sig}
 import graft.operators.TextAnalysis.tokens
 
 class TextDedupSpec extends SparkSuite {
+
+  /** The composed stop-count, the twin of
+    * [[graft.functions.stop_profile_counts]]. */
+  private def countIn(toks: Column, words: Seq[String]): Column =
+    size(filter(toks, t => t.isin(words: _*)))
+
+  /** The decomposed formulation of [[TextAnalysis.hashedLrQuality]] —
+    * explode tokens, broadcast-join a materialized `dim`-row weight table,
+    * re-aggregate: the one-pass kernel must compute exactly this shape. */
+  private def hashedLrQualityComposed(docs: DataFrame, dim: Int = 64): DataFrame = {
+    val spark = docs.sparkSession
+    val weights = spark.range(dim).select(
+      col("id").cast("long").as("bucket"),
+      ((col("id") * 2654435761L) % 1001L - 500L).as("weight"))
+    val t = tokens(col("text"))
+    val perTok = docs
+      .select(col("doc_id"), explode(t).as("tok"))
+      .withColumn("bucket", (length(col("tok")) * 31L + ascii(col("tok"))) % dim)
+      .join(broadcast(weights), "bucket")
+      .groupBy("doc_id").agg(sum("weight").as("score"))
+    docs
+      .select(col("doc_id"), size(t).as("n_tokens"))
+      .join(perTok, Seq("doc_id"), "left_outer")
+      .select(
+        col("doc_id"), col("n_tokens"),
+        coalesce(col("score"), lit(0L)).as("score"))
+      .select(
+        col("doc_id"), col("n_tokens"), col("score"),
+        when(col("n_tokens") > 0,
+          round(col("score").cast("double") / col("n_tokens"), 6))
+          .otherwise(0.0).as("score_per_token"),
+        (col("score") >= 0).as("keep"))
+  }
+
   import spark.implicits._
 
   private def docs(rows: (Long, String)*): DataFrame =
@@ -815,7 +849,7 @@ class TextDedupSpec extends SparkSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_id").collect().map(_.toString).toSeq
     assert(rows(TextAnalysis.hashedLrQuality(d)) ===
-      rows(TextAnalysis.hashedLrQualityComposed(d)))
+      rows(hashedLrQualityComposed(d)))
     val byId = TextAnalysis.hashedLrQuality(d).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     // hand-checked: bucket("the") = (3*31+116) % 64 = 17,
@@ -857,7 +891,7 @@ class TextDedupSpec extends SparkSuite {
       .collect().map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
     val composed = d.select(col("doc_id") +: profiles.zipWithIndex.map {
         case (words, i) =>
-          TextAnalysis.countIn(tokens(col("text")), words).as(s"c$i")
+          countIn(tokens(col("text")), words).as(s"c$i")
       }: _*)
       .collect().map(r => r.getLong(0) -> (1 to 4).map(r.getInt)).toMap
     kernel.foreach { case (id, ks) => assert(ks === composed(id), s"doc $id") }

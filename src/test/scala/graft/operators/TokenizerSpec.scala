@@ -10,6 +10,60 @@ import graft.SparkSuite
   * reference trainer, and pin the merge-rewrite semantics (greedy
   * left-to-right, non-overlapping) on hand-checkable words. */
 class TokenizerSpec extends SparkSuite {
+
+  /** Encodes one word by applying `merges` in rank order, each greedy
+    * left-to-right and non-overlapping. */
+  private def encodeReference(word: String,
+      merges: Seq[(String, String)]): Seq[String] =
+    merges.foldLeft(word.map(_.toString): Seq[String]) { case (syms, (l, r)) =>
+      val acc = scala.collection.mutable.ArrayBuffer.empty[String]
+      for (s <- syms) {
+        if (acc.nonEmpty && acc.last == l && s == r)
+          acc(acc.length - 1) = l + r
+        else acc += s
+      }
+      acc.toSeq
+    }
+
+  /** In-memory reference BPE trainer over collected word counts — the
+    * independent implementation this spec gates [[Tokenizer.bpeTrain]]
+    * against. Same tie-break, same greedy left-to-right merge. */
+  private def bpeTrainReference(
+      wordCounts: Seq[(String, Long)], nMerges: Int): Seq[(Int, String, String, Long)] = {
+    var words: Seq[(Vector[String], Long)] =
+      wordCounts.map { case (w, c) => (w.map(_.toString).toVector, c) }
+    val out = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
+    var rank = 1
+    var exhausted = false
+    while (rank <= nMerges && !exhausted) {
+      val counts = scala.collection.mutable.Map.empty[(String, String), Long]
+      for ((syms, c) <- words; i <- 0 until syms.length - 1)
+        counts((syms(i), syms(i + 1))) =
+          counts.getOrElse((syms(i), syms(i + 1)), 0L) + c
+      if (counts.isEmpty) exhausted = true
+      else {
+        val ((l, r), n) = counts.toSeq.minBy { case ((a, b), m) => (-m, a, b) }
+        out += ((rank, l, r, n))
+        words = words.map { case (syms, c) =>
+          val acc = Vector.newBuilder[String]
+          var last: String = null
+          for (s <- syms) {
+            if (last == l && s == r) {
+              val merged = acc.result()
+              acc.clear()
+              merged.init.foreach(acc += _)
+              acc += (l + r)
+              last = l + r
+            } else { acc += s; last = s }
+          }
+          (acc.result(), c)
+        }
+        rank += 1
+      }
+    }
+    out.toSeq
+  }
+
   import spark.implicits._
 
   private def docs(texts: String*) =
@@ -52,7 +106,7 @@ class TokenizerSpec extends SparkSuite {
 
     val wc = Tokenizer.wordCounts(corpus)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val want = Tokenizer.bpeTrainReference(wc, nMerges = 6)
+    val want = bpeTrainReference(wc, nMerges = 6)
     assert(got.toSeq === want)
     // the learned merges must build multi-char symbols, not stay at chars
     assert(want.exists { case (_, l, r, _) => (l + r).length > 2 })
@@ -80,7 +134,7 @@ class TokenizerSpec extends SparkSuite {
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
     val wc = Tokenizer.wordCounts(corpus)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    assert(got.toSeq === Tokenizer.bpeTrainReference(wc, nMerges = 5))
+    assert(got.toSeq === bpeTrainReference(wc, nMerges = 5))
   }
 
   test("encodeWithMerges equals the reference encoder and honors its bounds") {
@@ -99,7 +153,7 @@ class TokenizerSpec extends SparkSuite {
     got.zip(texts).foreach { case (r, text) =>
       val words = text.toLowerCase.split("\\s+").filter(_.nonEmpty).toSeq
       val wantSub = words.map(w =>
-        Tokenizer.encodeReference(w, merges).length.toLong).sum
+        encodeReference(w, merges).length.toLong).sum
       assert(r.getAs[Long]("n_tokens") === words.length.toLong)
       assert(r.getAs[Long]("n_chars") === words.map(_.length.toLong).sum)
       assert(r.getAs[Long]("n_subwords") === wantSub)
