@@ -152,6 +152,9 @@ object Kernels {
     KernelSpec("hashed_lr_score", vk, "hashedLrScore", Seq(Str, Const("dim", 1)), LongType),
     // element-wise seeded murmur3, the array sibling of mmh3
     KernelSpec("hash_array", vk, "hashArray", Seq(Strs, Const("seed")), ints),
+    // element-wise xxhash64: transform(arr, x -> xxhash64(x)) runs an
+    // interpreted lambda per element on every dedup verify side
+    KernelSpec("xxhash64_array", vk, "xxhash64Array", Seq(Strs), longs),
     // winnowing fingerprint: the sliding-window minimum has no lambda-free
     // composition of built-ins
     KernelSpec("winnow", vk, "winnow", Seq(Ints, Const("w", 1)), ints),

@@ -123,6 +123,9 @@ package object functions {
   /** Element-wise seeded murmur3 of an ARRAY<STRING> column. */
   def hash_array(arr: Column, seed: Int): Column = kernel("hash_array", arr)(seed)
 
+  /** Element-wise `xxhash64` of an ARRAY<STRING> column. */
+  def xxhash64_array(arr: Column): Column = kernel("xxhash64_array", arr)()
+
   /** Winnowing fingerprint (window-`w` rolling minima, rightmost ties) of
     * an ARRAY<INT> hash-sequence column. */
   def winnow(hashes: Column, w: Int): Column = kernel("winnow", hashes)(w)

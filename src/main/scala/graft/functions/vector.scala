@@ -555,6 +555,14 @@ object VectorKernels {
     org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(out)
   }
 
+  /** Element-wise `xxhash64` (`xxhash64_array`), value-identical to
+    * `transform(arr, x -> xxhash64(x))`: Spark's seed 42, and a NULL
+    * element hashes to the seed, as `xxhash64(NULL)` does. */
+  def xxhash64Array(arr: ArrayData): ArrayData =
+    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(
+      Array.tabulate(arr.numElements())(i => if (arr.isNullAt(i)) 42L else
+        org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(arr.getUTF8String(i), 42L)))
+
   /** MinHash signature kernel: one murmur3 per (shingle, seed), min-folded
     * in place; returns a primitive int array (no boxing on either path).
     * Null shingles are skipped. */

@@ -1135,20 +1135,15 @@ object EventLanes extends LaneFamily("events") {
     Lane("e8_markov", Some(markovSql))((s, dir) => {
       // first-order Markov transition matrix over each user's event
       // sequence: lead() windowed PER USER (bounded partitions, the e2
-      // scale contract — never a global sequence sort), then transition
-      // probabilities via a partitioned window over the (type × type)
-      // relation, which is bounded by event-type cardinality squared.
+      // scale contract — never a global sequence sort), then the shared
+      // FeatureEng.markovFace finish (st20 drains into the same one).
       // The sequence-model feature layer for behavioral events.
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val tr = Tables(s, dir, "events")
+      FeatureEng.markovFace(Tables(s, dir, "events")
         .select(col("event_type").as("prev_type"),
           lead(col("event_type"), 1).over(w).as("next_type"))
-        .where(col("next_type").isNotNull)
-        .groupBy("prev_type", "next_type").agg(count(lit(1)).as("n"))
-      tr.withColumn("p",
-          round(col("n") / sum("n").over(Window.partitionBy("prev_type")), 6))
-        .orderBy("prev_type", "next_type")
+        .where(col("next_type").isNotNull))
     }),
     // carried last-touch, 7-day look
     Lane("e9_attribution", Some(attributionSql))((s, dir) => {

@@ -176,17 +176,21 @@ object Fixtures {
       .parquet(path)
   }
 
+  /** The catalog names of the bucketed (lineitem, orders) tables of `dir`. */
+  def bucketedNames(dir: String): (String, String) =
+    (s"graft_li_${math.abs(dir.hashCode)}", s"graft_od_${math.abs(dir.hashCode)}")
+
   // one-time bucketed-table CREATEs (b1's timed region is then the
   // exchange-free join itself)
   val bucketedTables = Fixture("bucketed_tables") { (s, dir) =>
-    val suffix = math.abs(dir.hashCode).toString
+    val (li, od) = bucketedNames(dir)
     Bucketing.ensureBucketed(s,
       Tables(s, dir, "lineitem")
         .select("l_orderkey", "l_extendedprice", "l_discount"),
-      s"graft_li_$suffix", "l_orderkey")
+      li, "l_orderkey")
     Bucketing.ensureBucketed(s,
       Tables(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
-      s"graft_od_$suffix", "o_orderkey")
+      od, "o_orderkey")
   }
 
   val all: Seq[Fixture] = Seq(filters, shardedFilters, filtersSeq, splitTsv,

@@ -192,6 +192,13 @@ object MediaLanes extends LaneFamily("media") {
     Lane("mm6_quantize", Some(SimilaritySql.quantizeInt8Stats))((s, dir) =>
       // int8 embedding compression audit
       Similarity.quantizeInt8Stats(Tables(s, dir, "embeddings"))
-        .orderBy("vec_id"))
+        .orderBy("vec_id")),
+    Lane("mm7_ahash", Some(MultimodalSql.aHash()))((s, dir) =>
+      // perceptual average-hash dedup screen
+      // over the payload "pixels" (integer-exact, fully oracle-checked)
+      Multimodal.aHash(Tables(s, dir, "documents"))),
+    Lane("mm8_phash", Some(MultimodalSql.pHash))((s, dir) => // perceptual DCT-hash: integer-exact
+      // 8x8 DCT via inlined quantized basis, median-thresholded
+      Multimodal.pHash(Tables(s, dir, "documents")))
   )
 }

@@ -3,7 +3,7 @@ package graft.lanes
 import org.apache.spark.sql.functions._
 
 import graft.Config
-import graft.operators.{AsOf, Bucketing, RangeJoin, Ratings, Skew, Tables}
+import graft.operators.{AsOf, RangeJoin, Ratings, Skew, Tables}
 
 /** Joins, grouping sets, set operations and distinct aggregation, the
   * skew-salted, runtime-bloom and bucketed joins, and the JSON/map scalar
@@ -735,14 +735,8 @@ object RelationalLanes extends LaneFamily("relational") {
           |       round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue
           |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
           |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin))((s, dir) => {
-      val suffix = math.abs(dir.hashCode).toString
-      val li = Bucketing.ensureBucketed(s,
-        Tables(s, dir, "lineitem")
-          .select("l_orderkey", "l_extendedprice", "l_discount"),
-        s"graft_li_$suffix", "l_orderkey")
-      val od = Bucketing.ensureBucketed(s,
-        Tables(s, dir, "orders").select("o_orderkey", "o_orderpriority"),
-        s"graft_od_$suffix", "o_orderkey")
+      Fixtures.bucketedTables(s, dir)
+      val (li, od) = Fixtures.bucketedNames(dir)
       s.table(li)
         .join(s.table(od), col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_orderpriority").agg(

@@ -1,8 +1,6 @@
 package graft.lanes
 
-import graft.operators.{
-  DedupSql, FeatureEngSql, KmvSql, Multimodal, MultimodalSql, NaiveBayesSql, Tables,
-  TextAnalysisSql}
+import graft.operators.{DedupSql, FeatureEngSql, KmvSql, NaiveBayesSql, TextAnalysisSql}
 import EventLanes.{attributionSql, markovSql, zscoreSql}
 import TextLanes.{dsirTargetPredSql, dsirTargetSources}
 
@@ -280,13 +278,6 @@ object StreamingLanes extends LaneFamily("streaming") {
       // dedup_minhash_lsh at ingest:
       // static LSH index, stateless stream signature + banded probe,
       // exact-Jaccard verify, per-doc admission verdict
-      graft.streaming.StreamingQueries.nearDupAdmission(s, dir)),
-    Lane("mm7_ahash", Some(MultimodalSql.aHash()))((s, dir) =>
-      // perceptual average-hash dedup screen
-      // over the payload "pixels" (integer-exact, fully oracle-checked)
-      Multimodal.aHash(Tables(s, dir, "documents"))),
-    Lane("mm8_phash", Some(MultimodalSql.pHash))((s, dir) => // perceptual DCT-hash: integer-exact
-      // 8x8 DCT via inlined quantized basis, median-thresholded
-      Multimodal.pHash(Tables(s, dir, "documents")))
+      graft.streaming.StreamingQueries.nearDupAdmission(s, dir))
   )
 }

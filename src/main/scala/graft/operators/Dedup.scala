@@ -2,8 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-import graft.functions.{Fixpoint, bloom_build_native, jaro_winkler, minhash_sig, mmh3, simhash64}
+import graft.functions.{Fixpoint, bloom_build_native, jaro_winkler, minhash_sig, mmh3, simhash64,
+  xxhash64_array}
 import graft.operators.TextAnalysis.{normalized, shingles, tokens}
 
 /** Deduplication operators over the `documents` table — the core of an
@@ -241,7 +243,7 @@ object Dedup {
         xxhash64(col("gram")).as("gh"),
         graft.functions.mmh3(col("gram"), VerifySeed).as("gh2"))
       .repartition(col("gh"), col("gh2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val dupKeys = hashed.groupBy("gh", "gh2").agg(count(lit(1)).as("n_docs"))
       .where(col("n_docs") > 1).select("gh", "gh2")
     val dupPerDoc = hashed.join(dupKeys, Seq("gh", "gh2"))
@@ -272,6 +274,46 @@ object Dedup {
       .where(size(t) > 0)
       .select(col("doc_id"), array_distinct(shingles(t, shingleN)).as("sh"))
   }
+
+  /** [[shingleSets]] persisted and materialized by one eager count, which
+    * is returned with it ([[minhashLshPairs]]' banding reads it) — the
+    * shared base of the set-similarity pair finders and the streaming
+    * admission gate's index. Released through the caller's
+    * [[graft.CacheScope]] registration.
+    *
+    * Eagerly materialized (r12): the base has THREE consumers whose AQE
+    * query stages schedule CONCURRENTLY (for the exact finders: the
+    * prefix-side exchange, the index-side exchange, and the verify join),
+    * and a cold cache makes them race on first materialization — each
+    * racing task recomputes the whole tokenize+shingle lineage before
+    * finding the block taken. The r12 pair-bisect at sf1 measured the
+    * race as intermittent 2-4× in-task CPU inflation (draws
+    * [11.5, 19.9, 9.5] behind dedup_clusters; top-stage CPU 83 → 351
+    * task-seconds with identical plan, zero spill). One untimed count()
+    * makes every downstream stage read a warm cache deterministically.
+    * NOTE this is NOT the reverted candidates pin: the base is a leaf
+    * cache and does not feed AQE's join-strategy choice. */
+  private[graft] def shingleBase(docs: DataFrame, shingleN: Int): (DataFrame, Long) = {
+    val base = shingleSets(docs, shingleN).persist(MEMORY_AND_DISK)
+    (base, base.count())
+  }
+
+  /** The default bucket cap of every blocked pair finder: a block (LSH or
+    * SimHash band bucket, edit-distance length block, streaming index
+    * bucket) with more members than this is dropped before pair
+    * expansion, bounding per-block work at `bucketCap²/2` pairs. No
+    * block at any tested scale reaches it. */
+  val bucketCap: Int = 1024
+
+  /** The blocks of `rows` (grouped by `keys`) with more than `maxBucket`
+    * members, as their `keys` — what [[editDistancePairs]]' fence and the
+    * streaming admission index's cap anti-join away. */
+  private[graft] def overCapBlocks(rows: DataFrame, keys: Seq[String],
+      maxBucket: Int): DataFrame =
+    rows.groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("n"))
+      .where(col("n") > maxBucket)
+      .select(keys.map(col): _*)
 
   /** Corpus-size cutover for the scale-dependent LSH banding rule: below
     * this many documents the recall-first split applies; at or above it
@@ -323,13 +365,14 @@ object Dedup {
   }
 
   /** All ordered document pairs `(doc_a < doc_b)` whose exact shingle
-    * Jaccard ≥ `threshold`, found via MinHash + banded LSH:
+    * Jaccard ≥ `threshold`, found via MinHash + banded LSH — partition,
+    * filter and refine, each step one shared helper:
     *
     *   signature (numHashes seeded-murmur minima, native kernel)
-    *   → `bands` bucket keys per doc (xxhash64 of each signature slice)
+    *   → `bands` bucket keys per doc ([[bandRows]])
     *   → shuffle on (band, key): only co-bucketed docs ever meet
-    *   → pair expansion inside buckets, distinct
-    *   → exact Jaccard verify on the two shingle sets
+    *   → capped pair expansion inside buckets, distinct ([[bucketPairs]])
+    *   → exact Jaccard verify on the two shingle sets ([[jaccardVerified]])
     *
     * Nothing here is quadratic in the corpus: the bucket shuffle carries
     * one row per (doc, band), and the verify join is linear in candidate
@@ -340,10 +383,9 @@ object Dedup {
     * BANDING (r15): `bands = 0` (the default) resolves through
     * [[lshBandingFor]] on the corpus's document count — recall-first
     * below [[lshScaleCutover]], the [[lshTune]] utility argmax above it.
-    * The count is one extra action over the persisted shingle relation
-    * (which every downstream branch reuses, so the materialization is
-    * work the plan pays anyway). Pass an explicit `bands` to pin an
-    * operating point (specs and A/B campaigns).
+    * The count is [[shingleBase]]'s materializing action, so it costs no
+    * extra pass. Pass an explicit `bands` to pin an operating point
+    * (specs and A/B campaigns).
     */
   def minhashLshPairs(
       docs: DataFrame,
@@ -351,99 +393,180 @@ object Dedup {
       numHashes: Int = 128,
       bands: Int = 0,
       shingleN: Int = 3,
-      maxBucket: Int = 1024): DataFrame = {
+      maxBucket: Int = bucketCap): DataFrame = {
     require(bands == 0 || (bands > 0 && numHashes % bands == 0),
       s"bands ($bands) must be 0 (auto) or a positive divisor of " +
         s"numHashes ($numHashes)")
-
     // The shingle sets feed three plan branches (signatures + both sides
-    // of the verify join); without persistence Spark re-tokenizes and
-    // re-shingles the corpus once per branch. At cluster scale this is the
-    // stage you materialize (persist or checkpoint to parquet) — same
-    // decision, bigger numbers. MEMORY_AND_DISK so eviction degrades to
-    // recompute rather than OOM. Lifecycle (here and in the PPJoin prefix
-    // relation below): released by the harness's per-query clearCache
-    // (the Bench/Verify contract); a library caller should
-    // clearCache/unpersist after the action — repeated invocations
-    // otherwise accumulate cache entries.
-    val base = shingleSets(docs, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // banding resolves per corpus scale (the r14 sf5 campaign's fix):
-    // the count materializes the persisted relation the three downstream
-    // branches reuse anyway. The materialization is itself load-bearing
-    // for the PLAN (measured r15, sf1 A/B): with the cache populated,
+    // of the verify join). Their materialization is load-bearing for the
+    // PLAN too (measured r15, sf1 A/B): with the cache populated,
     // Catalyst sees the shingle relation's REAL in-memory size and plans
     // the verify joins below as shuffle hash joins — un-materialized,
     // the pruned-scan estimate made it BROADCAST the whole corpus
     // shingle relation (31 MB of visible shuffle hiding the corpus in
     // the broadcast channel, 16.4s at sf1 vs 2.3s; at 100 TB that
     // broadcast is a non-starter).
+    val (base, nDocs) = shingleBase(docs, shingleN)
     val (nBands, nRows) =
       if (bands > 0) (bands, numHashes / bands)
-      else lshBandingFor(base.count(), numHashes, threshold)
-    val sigs = base.select(col("doc_id"), minhash_sig(col("sh"), numHashes).as("sig"))
-
-    // band count is a plan-time constant, so the band keys are a literal
-    // array of codegen'd expressions — no interpreted lambda in the path
-    val buckets = sigs
-      .select(col("doc_id"), posexplode(bandKeys(col("sig"), nBands, nRows)))
-      .toDF("doc_id", "band", "key")
-
-    val candidates = buckets
-      .groupBy("band", "key")
-      .agg(sort_array(collect_list("doc_id")).as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-      .select(explode(pairsOf(col("ids"))).as("pair"))
-      .select(col("pair._1").as("doc_a"), col("pair._2").as("doc_b"))
-      .distinct()
-
-    val scored = candidates
-      .join(base.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(base.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      // |A∪B| = |A|+|B|−|A∩B| on distinct-shingle sets — one array
-      // kernel per pair, value-identical (see jaccardPairsExact); the
-      // scored persist below the filter gives sort-sampling single-pass
-      // and exactly one kernel call per candidate (same note there)
-      .withColumn("inter",
-        size(array_intersect(col("sh_a"), col("sh_b"))))
-      .withColumn("jaccard", col("inter").cast("double")
-        / (size(col("sh_a")) + size(col("sh_b")) - col("inter")))
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // `base` and `scored` stay cached until the pair relation's first
-    // action; library callers release via graft.CacheScope.release
-    // (harness callers keep the per-query clearCache backstop)
-    graft.CacheScope.owns(
-      scored.where(col("jaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), col("jaccard")),
-      base, scored)
+      else lshBandingFor(nDocs, numHashes, threshold)
+    val candidates = bucketPairs(bandRows(base, "doc_id", numHashes, nBands, nRows),
+      col("doc_id"), maxBucket)((a, b) => Seq(a.as("doc_a"), b.as("doc_b")))
+    jaccardVerified(candidates, base, threshold)
   }
 
-  /** The banded bucket keys of a MinHash signature — one xxhash64 per
-    * band over that band's signature slice, as a literal array of
+  /** `(id, band, key)`: one row per (doc, band) of a shingle-set
+    * relation's MinHash band keys — one xxhash64 per band over that
+    * band's slice of the `numHashes` signature, as a literal array of
     * codegen'd expressions (band count is a plan-time constant; no
-    * interpreted lambda). Shared by [[minhashLshPairs]] and the streaming
-    * near-dup admission gate so both sides of a stream-static LSH join
-    * bucket identically. */
-  private[graft] def bandKeys(sig: Column, bands: Int, rows: Int): Column =
-    array((0 until bands).map(b =>
-      xxhash64(lit(b), slice(sig, b * rows + 1, rows))): _*)
+    * interpreted lambda). [[minhashLshPairs]] and both sides of the
+    * streaming admission gate bucket through it, so stream and batch
+    * cannot bucket differently. The signature gets its OWN projection
+    * before the band slices reference it: a multi-referenced alias is a
+    * CollapseProject barrier, while inlining minhash_sig into each slice
+    * would re-run the 128-hash kernel once per band (measured: 160s CPU
+    * -> 5s on the streaming index side at sf1). */
+  private[graft] def bandRows(sets: DataFrame, id: String, numHashes: Int,
+      bands: Int, rows: Int): DataFrame =
+    sets.select(col("doc_id").as(id), minhash_sig(col("sh"), numHashes).as("sig"))
+      .select(col(id), posexplode(array((0 until bands).map(b =>
+        xxhash64(lit(b), slice(col("sig"), b * rows + 1, rows))): _*)))
+      .toDF(id, "band", "key")
 
-  /** All ordered pairs from a sorted id array: [a,b,c] → [(a,b),(a,c),(b,c)].
-    * Bucket cardinality is capped upstream, so the quadratic expansion is
-    * bounded per bucket, never per corpus. */
+  /** The capped bucket expansion behind both banded finders: group the
+    * `(band, key)` rows, keep buckets with `1 < size ≤ maxBucket`, expand
+    * each sorted `member` list to all its ordered pairs, project each
+    * pair `(a, b)` to columns, and `distinct` (a pair co-bucketed in
+    * several bands meets once). A bucket over the cap is exact-dup-like
+    * mass; the cap bounds the quadratic expansion per bucket, never per
+    * corpus. */
+  private[graft] def bucketPairs(buckets: DataFrame, member: Column,
+      maxBucket: Int)(pair: (Column, Column) => Seq[Column]): DataFrame =
+    buckets.groupBy("band", "key")
+      .agg(sort_array(collect_list(member)).as("ids"))
+      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
+      .select(explode(pairsOf(col("ids"))).as("p"))
+      .select(pair(col("p._1"), col("p._2")): _*)
+      .distinct()
+
+  /** All ordered pairs from a sorted id array: [a,b,c] → [(a,b),(a,c),(b,c)]. */
   private def pairsOf(ids: Column): Column =
     flatten(transform(sequence(lit(1), size(ids) - 1),
       i => transform(sequence(i + 1, size(ids)),
         j => struct(element_at(ids, i).as("_1"), element_at(ids, j).as("_2")))))
 
+  /** One side of a verify join: `(id, sz_<s>, h_<s>)`, a shingle set's
+    * size and its shingles as xxhash64 longs.
+    *
+    * WIDTH-REDUCED VERIFY WIRES (r16, the span_rate treatment): the
+    * verify joins carry 8-byte shingle HASHES, not shingle strings. The
+    * second join re-exchanges one side's array PER CANDIDATE (the r15
+    * sweep read 956 MB → 4.87 GB at sf1→sf5 on this exchange), so element
+    * width is the whole cost: xxhash64 longs are ~3.5× narrower than
+    * ~25-char shingle strings, and the intersect kernel compares longs
+    * instead of strings. Exactness: collisions are scoped WITHIN one
+    * candidate pair — a false intersect member needs two DISTINCT
+    * shingles of the same pair to share an xxhash64, ≤ |A|·|B|/2⁶⁴ ≈
+    * 5e-16 per pair, and the union bound stays ≪ 1e-6 even at 10⁹
+    * verified pairs — unlike the corpus-wide equality decisions
+    * (bloomNewDocs/dupSpanRate) whose birthday population forces the
+    * two-family convention. The projection is one native kernel call per
+    * set, evaluated map-side below the exchange; sizes ride along as
+    * ints. */
+  private[graft] def hashedSide(sets: DataFrame, id: String, s: String): DataFrame =
+    sets.select(col("doc_id").as(id), size(col("sh")).as(s"sz_$s"),
+      xxhash64_array(col("sh")).as(s"h_$s"))
+
+  /** `candidates` `(doc_a, doc_b)` with both [[hashedSide]]s joined on. */
+  private def withSides(candidates: DataFrame, base: DataFrame): DataFrame =
+    candidates
+      .join(hashedSide(base, "doc_a", "a"), "doc_a")
+      .join(hashedSide(base, "doc_b", "b"), "doc_b")
+
+  /** Adds `jaccard = |A∩B| / (|A|+|B|−|A∩B|)` over the hashed sides `a`
+    * and `b`: one intersect kernel per pair, and the union size is integer
+    * arithmetic on the carried sizes, so the double — and the oracle
+    * twin's — is bit-identical. */
+  private[graft] def withJaccard(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("inter", size(array_intersect(col("h_a"), col("h_b"))))
+      .withColumn("jaccard", col("inter").cast("double")
+        / (col("sz_a") + col("sz_b") - col("inter")))
+
+  /** The exact Jaccard refine of `(doc_a, doc_b)` candidates: pairs of
+    * `base` with Jaccard ≥ `threshold`, as `(doc_a, doc_b, jaccard)`,
+    * owning `base`, `deps` and its own scored cache ([[graft.CacheScope]]).
+    *
+    * The SCORED pair relation persists (lazily) BELOW the threshold
+    * filter: bounded (one narrow row per candidate pair) while its
+    * lineage holds the expensive array-intersection join. Two effects:
+    * (1) the registered queries sort the result, and a range sort's
+    * boundary-sampling pass would otherwise execute the whole lineage a
+    * second time (r12 sf1 stage trace: two stages each reading the same
+    * 699 MB pair-expanded exchange); (2) with the filter ABOVE the cache
+    * boundary, Catalyst cannot duplicate the intersect into a Filter
+    * predicate — the kernel runs exactly ONCE per candidate during
+    * materialization. */
+  private def jaccardVerified(candidates: DataFrame, base: DataFrame,
+      threshold: Double, deps: DataFrame*): DataFrame = {
+    val scored = withJaccard(withSides(candidates, base))
+      .select(col("doc_a"), col("doc_b"), col("jaccard"))
+      .persist(MEMORY_AND_DISK)
+    graft.CacheScope.owns(scored.where(col("jaccard") >= threshold),
+      (base +: deps :+ scored): _*)
+  }
+
+  /** The df-ordered shingle index `(doc_id, sz, pos, sh_key)` of a
+    * [[shingleBase]]: the global canonical shingle order is ascending
+    * document frequency (rarest first), shingle text as tie-break; `pos`
+    * is a shingle's rank in its doc under that order. The candidate joins
+    * key on the shingle's 64-bit hash, not the string: narrower exchange,
+    * long compares. A collision can only ADD a candidate (verify rejects
+    * it); the ORDER stays on (df, shingle text), which total-orders the
+    * real shingle universe. With `prefixFor = Some(θ)` only each doc's
+    * θ-prefix ([[inPrefix]]) is kept.
+    *
+    * Persisted because BOTH candidate-join sides read it and Catalyst
+    * plans the subtree (explode → df join → window sort) twice otherwise;
+    * four fixed-width columns per shingle, far smaller than the base.
+    * Eagerly materialized: both sides' exchanges schedule concurrently
+    * under AQE — the cold-cache race of [[shingleBase]]. */
+  private def shingleIndex(base: DataFrame, prefixFor: Option[Double]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val inv = base.select(col("doc_id"), size(col("sh")).as("sz"),
+      explode(col("sh")).as("shingle"))
+    val freq = inv.groupBy("shingle").agg(count("*").as("df"))
+    val w = Window.partitionBy("doc_id").orderBy(col("df"), col("shingle"))
+    val keyed = inv.join(freq, "shingle")
+      .withColumn("pos", row_number().over(w))
+      .select(col("doc_id"), col("sz"), col("pos"),
+        xxhash64(col("shingle")).as("sh_key"))
+    val index = prefixFor.fold(keyed)(t => keyed.where(inPrefix(t)))
+      .persist(MEMORY_AND_DISK)
+    index.count()
+    index
+  }
+
+  /** Every pruning bound of the exact finders biases toward KEEPING
+    * candidates at float boundaries: ceil(x*θ) computed in doubles can
+    * land one integer too high when x*θ is exactly integral (e.g.
+    * 7*0.2857.. = 2.0000000000000004), which would shrink a prefix /
+    * inflate a required overlap and drop a pair whose score is exactly θ.
+    * The epsilon (≪ any true fractional part at realistic set sizes)
+    * makes every bound err on the safe side; the exact verify removes
+    * whatever the looser pruning lets through. */
+  private val eps = 1e-9
+
+  /** The prefix-filter bound: a shingle at `pos` lies in its doc's first
+    * `|sh| − ⌈θ·|sh|⌉ + 1` shingles. */
+  private def inPrefix(threshold: Double): Column =
+    col("pos") <= col("sz") - ceil(col("sz") * threshold - eps) + 1
+
   /** All ordered document pairs `(doc_a < doc_b)` whose exact shingle
     * Jaccard ≥ `threshold`, found EXACTLY (no LSH approximation) via a
     * prefix-filtered inverted-index join — the PPJoin-family shape:
     *
-    *   1. global canonical shingle order: ascending document frequency
-    *      (rarest first), shingle text as tie-break;
+    *   1. global canonical shingle order ([[shingleIndex]]);
     *   2. each document indexes only its first `|sh| − ⌈θ·|sh|⌉ + 1`
     *      shingles in that order — by the prefix-filter theorem any pair
     *      with Jaccard ≥ θ shares at least one *prefix* shingle, so the
@@ -451,8 +574,7 @@ object Dedup {
     *   3. candidates come from the equality join on indexed shingles with
     *      the length filter `θ·|a| ≤ |b| ∧ θ·|b| ≤ |a|`;
     *   4. exact Jaccard verifies each candidate on the full shingle sets
-    *      (as 8-byte hash arrays on the wire — the r16 width reduction;
-    *      collision scope is within one pair, see the in-body note).
+    *      ([[jaccardVerified]]).
     *
     * Complements [[minhashLshPairs]]: LSH recall degrades below its banding
     * sweet spot (at θ=0.5 with 32×4 bands it misses ~13% of pairs); this
@@ -465,57 +587,8 @@ object Dedup {
       threshold: Double,
       shingleN: Int = 3): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold must be in (0,1], got $threshold")
-    import org.apache.spark.sql.expressions.Window
-
-    val base = shingleSets(docs, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Eagerly materialized (r12): `base` has THREE consumers whose AQE
-    // query stages schedule CONCURRENTLY (the prefix-side exchange, the
-    // index-side exchange, and the verify join), and a cold cache makes
-    // them race on first materialization — each racing task recomputes
-    // the whole tokenize+shingle lineage before finding the block taken.
-    // The r12 pair-bisect at sf1 measured the race as intermittent 2-4×
-    // in-task CPU inflation (draws [11.5, 19.9, 9.5] behind
-    // dedup_clusters; top-stage CPU 83 → 351 task-seconds with identical
-    // plan, zero spill). One untimed count() makes every downstream
-    // stage read a warm cache deterministically. NOTE this is NOT the
-    // reverted candidates pin: base is a leaf cache and does not feed
-    // AQE's join-strategy choice.
-    base.count()
-    val inv = base.select(col("doc_id"), size(col("sh")).as("sz"),
-      explode(col("sh")).as("shingle"))
-    val freq = inv.groupBy("shingle").agg(count("*").as("df"))
-
-    // All pruning bounds below bias toward KEEPING candidates at float
-    // boundaries: ceil(x*θ) computed in doubles can land one integer too
-    // high when x*θ is exactly integral (e.g. 7*0.2857.. = 2.0000000000000004),
-    // which would shrink a prefix / inflate a required overlap and drop a
-    // pair whose Jaccard is exactly θ. The epsilon (≪ any true fractional
-    // part at realistic set sizes) makes every bound err on the safe side;
-    // the exact verify join removes whatever the looser pruning lets through.
-    val eps = 1e-9
-
-    val w = Window.partitionBy("doc_id").orderBy(col("df"), col("shingle"))
-    val prefix = inv.join(freq, "shingle")
-      .withColumn("pos", row_number().over(w))
-      .where(col("pos") <= col("sz") - ceil(col("sz") * threshold - eps) + 1)
-      // the candidate join keys on the shingle's 64-bit hash, not the
-      // string: narrower exchange, long compares. A collision can only ADD
-      // a candidate (verify rejects it); the canonical ORDER above stays on
-      // (df, shingle text), which total-orders the real shingle universe.
-      .select(col("doc_id"), col("sz"), col("pos"),
-        xxhash64(col("shingle")).as("sh_key"))
-      // Cache-lifetime contract as BloomPipeline.buildFilters: released by
-      // the caller (Bench/Verify clearCache between queries).
-      // persisted because BOTH sides of the self-join read it and Catalyst
-      // plans the subtree (explode → df join → window sort) twice — the
-      // plan shows two independent Window+Exchange chains otherwise. Four
-      // fixed-width columns per prefix shingle: far smaller than `base`,
-      // safe to materialize at any corpus scale.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // both self-join sides' exchanges schedule concurrently under AQE —
-    // same cold-cache materialization race as `base`; count() untimed
-    prefix.count()
+    val (base, _) = shingleBase(docs, shingleN)
+    val prefix = shingleIndex(base, Some(threshold))
 
     // positional filter (PPJoin): a qualifying pair needs overlap
     // α = ⌈θ/(1+θ)·(|a|+|b|)⌉, and a match at positions (pa, pb) caps the
@@ -539,50 +612,7 @@ object Dedup {
       // flipped the verify join off AQE's runtime-stats path and tripled
       // the standalone wall (10.6s → 29s) — the distinct's own exchange
       // already gives AQE an exact size for the verify join's strategy.
-
-    // WIDTH-REDUCED VERIFY WIRES (r16, VERDICT r15 ask #4 — the
-    // span_rate treatment): the verify joins carry 8-byte shingle
-    // HASHES, not shingle strings. The second join re-exchanges one
-    // side's array PER CANDIDATE (the r15 sweep read 956 MB → 4.87 GB
-    // at sf1→sf5 on this exchange), so element width is the whole
-    // cost: xxhash64 longs are ~3.5× narrower than ~25-char shingle
-    // strings, and the intersect kernel compares longs instead of
-    // strings. Exactness: collisions are scoped WITHIN one candidate
-    // pair — a false intersect member needs two DISTINCT shingles of
-    // the same pair to share an xxhash64, ≤ |A|·|B|/2⁶⁴ ≈ 5e-16 per
-    // pair, and the union bound stays ≪ 1e-6 even at 10⁹ verified
-    // pairs — unlike the corpus-wide equality decisions (bloomNewDocs/
-    // dupSpanRate) whose birthday population forces the two-family
-    // convention. The hash projections evaluate map-side below the
-    // exchange; sizes ride along as ints (|A∪B| = |A|+|B|−|A∩B| on the
-    // identical integers, so the double — and the oracle twin — is
-    // bit-identical).
-    val hA = base.select(col("doc_id").as("doc_a"),
-      size(col("sh")).as("sz_a"),
-      transform(col("sh"), s => xxhash64(s)).as("h_a"))
-    val hB = base.select(col("doc_id").as("doc_b"),
-      size(col("sh")).as("sz_b"),
-      transform(col("sh"), s => xxhash64(s)).as("h_b"))
-    candidates
-      .join(hA, "doc_a")
-      .join(hB, "doc_b")
-      .withColumn("inter",
-        size(array_intersect(col("h_a"), col("h_b"))))
-      .withColumn("jaccard", col("inter").cast("double")
-        / (col("sz_a") + col("sz_b") - col("inter")))
-      .select(col("doc_a"), col("doc_b"), col("jaccard"))
-      // The SCORED pair relation persists (lazily) BELOW the threshold
-      // filter: bounded (one narrow row per candidate pair) while its
-      // lineage holds the expensive array-intersection join. Two effects:
-      // (1) the registered query sorts the result, and a range sort's
-      // boundary-sampling pass would otherwise execute the whole lineage
-      // a second time (r12 sf1 stage trace: two stages each reading the
-      // same 699 MB pair-expanded exchange); (2) with the filter ABOVE
-      // the cache boundary, Catalyst cannot duplicate the intersect into
-      // a Filter predicate — the kernel runs exactly ONCE per candidate
-      // during materialization. Harness clearCache releases it.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .where(col("jaccard") >= threshold)
+    jaccardVerified(candidates, base, threshold, prefix)
   }
 
   /** Asymmetric shingle containment `C(A→B) = |A∩B| / |A| ≥ θ` — the
@@ -595,25 +625,19 @@ object Dedup {
     * Exactness by the prefix-filter argument: if `C(A→B) ≥ θ` then A and B
     * share ≥ `⌈θ·|A|⌉` shingles, so B must hit A's first
     * `|A| − ⌈θ·|A|⌉ + 1` shingles under ANY global shingle order — the
-    * same (df, shingle) canonical order [[jaccardPairsExact]] uses. Only
+    * same [[shingleIndex]] [[jaccardPairsExact]] uses. Only
     * the CONTAINED side takes a prefix; the containing side has no size
     * bound, so it contributes its full inverted list — that full index is
     * the honest scale cost of asymmetric containment (the exchange
     * carries 8-byte shingle hashes, and hot-shingle buckets are the skew
     * lane AQE splits; a df cap would trade recall, so none is applied).
-    * The verify join then computes `|A∩B|/|A|` on the hashed shingle
-    * arrays (8-byte elements on the wire — the r16 width reduction;
-    * collisions are scoped within one pair and negligible, see
-    * [[jaccardPairsExact]]'s in-body note) — hash collisions in
-    * candidate generation only ADD candidates.
-    * Float boundaries use [[jaccardPairsExact]]'s keep-biased epsilon. */
+    * The verify join then computes `|A∩B|/|A|` on the [[hashedSide]]s —
+    * hash collisions in candidate generation only ADD candidates. */
   def containmentPairs(
       docs: DataFrame,
       threshold: Double,
       shingleN: Int = 3): DataFrame = {
     require(threshold > 0 && threshold <= 1, s"threshold must be in (0,1], got $threshold")
-    import org.apache.spark.sql.expressions.Window
-
     // In-suite degradation note (r9 verdict #2, root-caused r10): the r9
     // driver artifact put this query at 11.7s in-suite vs 1.9s in a fresh
     // process, and the suspected cause was eviction of these persists.
@@ -627,52 +651,21 @@ object Dedup {
     // all three intra-draw runs ([26.9, 11.7, 13.3]) — which the bench's
     // cross-draw median (light draws, r10) now absorbs. Shape kept: one
     // tokenize pass, df-ordered prefixes, narrow hash-keyed exchanges.
-    val base = shingleSets(docs, shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager leaf-cache materialization — the concurrent-stage cold-cache
-    // race measured in the r12 sf1 bisect; see [[jaccardPairsExact]]
-    base.count()
-    val inv = base.select(col("doc_id"), size(col("sh")).as("sz"),
-      explode(col("sh")).as("shingle"))
-    val freq = inv.groupBy("shingle").agg(count("*").as("df"))
-    val eps = 1e-9
-
-    val w = Window.partitionBy("doc_id").orderBy(col("df"), col("shingle"))
-    val keyed = inv.join(freq, "shingle")
-      .withColumn("pos", row_number().over(w))
-      .select(col("doc_id"), col("sz"), col("pos"),
-        xxhash64(col("shingle")).as("sh_key"))
-      // both the contained-side prefix and the containing-side full index
-      // derive from this one relation (Bench/Verify clearCache contract)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // eager: both candidate-join sides schedule concurrently (race note
-    // in [[jaccardPairsExact]])
-    keyed.count()
-    val prefixA = keyed
-      .where(col("pos") <= col("sz") - ceil(col("sz") * threshold - eps) + 1)
-
-    val candidates = prefixA.as("a")
+    val (base, _) = shingleBase(docs, shingleN)
+    // both the contained-side prefix and the containing-side full index
+    // derive from this one relation
+    val keyed = shingleIndex(base, None)
+    val candidates = keyed.where(inPrefix(threshold)).as("a")
       .join(keyed.as("b"),
         col("a.sh_key") === col("b.sh_key")
           && col("a.doc_id") =!= col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
       // No eager candidate materialization — same r12 reversal and
-      // rationale as [[jaccardPairsExact]] (the cached form tripled the
-      // sf1 standalone wall by losing AQE's runtime join selection).
+      // rationale as [[jaccardPairsExact]].
 
-    // width-reduced verify wires — the [[jaccardPairsExact]] r16
-    // treatment verbatim (8-byte hash elements, within-pair collision
-    // scope, map-side projections below the exchanges); containment's
-    // denominator is the contained side's size, carried as an int
-    val hA = base.select(col("doc_id").as("doc_a"),
-      size(col("sh")).as("sz_a"),
-      transform(col("sh"), s => xxhash64(s)).as("h_a"))
-    val hB = base.select(col("doc_id").as("doc_b"),
-      transform(col("sh"), s => xxhash64(s)).as("h_b"))
-    candidates
-      .join(hA, "doc_a")
-      .join(hB, "doc_b")
+    // containment's denominator is the contained side's size
+    val res = withSides(candidates, base)
       .withColumn("containment",
         size(array_intersect(col("h_a"), col("h_b"))).cast("double")
           / col("sz_a"))
@@ -682,10 +675,11 @@ object Dedup {
       // prefix admits a much larger candidate set than jaccard's, and an
       // above-filter persist measured the all-candidates cache build as
       // a consistent +25s at sf1 ([36.6, 38.5, 40.6] vs ~8-14s). The
-      // sort-sampling single-pass benefit (jaccardPairsExact note) still
+      // sort-sampling single-pass benefit ([[jaccardVerified]]) still
       // holds; the filter-side intersect duplication is the cheaper of
       // the two costs here.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
+    graft.CacheScope.owns(res, base, keyed, res)
   }
 
   /** Contamination screen (VERDICT r11 ask #5) — the audit every
@@ -728,7 +722,7 @@ object Dedup {
     // under the harness clearCache contract
     val evalSh = base.where(isEval)
       .select(col("doc_id"), explode(col("sh")).as("shingle"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val evalSet = evalSh.select("shingle").distinct()
     // the only corpus-scale branch: scan → explode → broadcast semi-join
     // → bounded distinct
@@ -771,8 +765,8 @@ object Dedup {
       .select(col("doc_id"), explode(col("sh")).as("shingle"))
       // two consumers (first-occurrence min and per-doc totals) would
       // otherwise re-run the tokenize+shingle scan; eager per the r12
-      // leaf-cache race note in [[jaccardPairsExact]]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // leaf-cache race note in [[shingleBase]]
+      .persist(MEMORY_AND_DISK)
     inv.count()
     val novel = inv.groupBy("shingle").agg(min("doc_id").as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_novel"))
@@ -804,11 +798,9 @@ object Dedup {
       .join(keyed.as("y"),
         col("x.nfp") === col("y.nfp") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-    val norms = docs.where(size(t) > 0)
-      .select(col("doc_id"), normalized(col("text")).as("norm"))
-    val exactPairs = cand
-      .join(norms.select(col("doc_id").as("doc_a"), col("norm").as("norm_a")), "doc_a")
-      .join(norms.select(col("doc_id").as("doc_b"), col("norm").as("norm_b")), "doc_b")
+    def norms(s: String) = docs.where(size(t) > 0)
+      .select(col("doc_id").as(s"doc_$s"), normalized(col("text")).as(s"norm_$s"))
+    val exactPairs = cand.join(norms("a"), "doc_a").join(norms("b"), "doc_b")
       .where(col("norm_a") === col("norm_b"))
       .select(col("doc_a"), col("doc_b"))
     exactPairs
@@ -840,12 +832,12 @@ object Dedup {
     val rawPairs = minhashLshPairs(docs, threshold, shingleN = shingleN)
     val pairs = rawPairs
       .select(col("doc_a"), col("doc_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     // symmetrized pair edges, named `(v, u)` for the shared round body
     val edges = pairs
       .unionByName(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
       .toDF("v", "u")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
 
     // right-sized round width (r17, VERDICT r16 #3 / guide §2.2 — the
     // [[graft.operators.Graph.connectedComponents]] treatment): the
@@ -958,7 +950,7 @@ object Dedup {
   def cleanCorpus(docs: DataFrame, minQuality: Double): DataFrame = {
     val scored = TextAnalysis.qualityScore(docs).select(col("doc_id"), col("quality"))
     val kept = docs.join(scored, "doc_id").where(col("quality") >= minQuality)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     // dedup via exactKeepers: full-corpus exchanges stay (doc_id, hash)-
     // narrow, text moves only for the repeated-fingerprint sliver.
     // The keeper-id join is PINNED to the shuffle plan (r16, VERDICT r15
@@ -1007,7 +999,7 @@ object Dedup {
     val kept = langed
       .join(TextAnalysis.contamination(docs, benchmark), "doc_id")
       .where(!col("contaminated"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     // same persist-and-return ownership registration as cleanCorpus
     graft.CacheScope.owns(
       kept.select(col("doc_id"), col("lang_pred"), col("quality"),
@@ -1131,7 +1123,7 @@ object Dedup {
         keep = Seq("text"))
       .where(col("quality") >= minQuality)
       .select(col("doc_id"), col("text"), col("quality"), col("n_tokens"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(MEMORY_AND_DISK)
     val cl = nearDupClusters(scored, threshold, shingleN)
     val wBest = Window.partitionBy("cluster_rep")
       .orderBy(col("quality").desc, col("doc_id"))
@@ -1190,32 +1182,28 @@ object Dedup {
     * Hamming distance ≤ `maxHamming`. Blocking: the 64-bit signature is
     * cut into `maxHamming + 1` bands — by pigeonhole any pair within the
     * distance budget agrees exactly on ≥1 band, so candidates come from
-    * equality bucket joins (same scale shape as LSH), and the final
-    * distance check is one xor+popcount. */
+    * equality buckets expanded by the same capped [[bucketPairs]] as LSH
+    * (a band bucket over [[bucketCap]] members is dropped; none reaches
+    * it at any tested scale), and the final distance check is one
+    * xor+popcount. */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val nBands = maxHamming + 1
     val width = 64 / nBands
     val t = tokens(col("text"))
-    val sigs = docs
+    val buckets = docs
       .where(size(t) > 0)
       .select(col("doc_id"), simhash64(t).as("sig"))
-
-    val buckets = sigs.select(col("doc_id"), col("sig"), posexplode(array(
-      (0 until nBands).map(b =>
-        shiftrightunsigned(col("sig"), b * width)
-          .bitwiseAND(lit((1L << width) - 1))): _*))).toDF("doc_id", "sig", "band", "key")
-
-    buckets
-      .groupBy("band", "key")
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("sig")))).as("members"))
-      .where(size(col("members")) > 1)
-      .select(explode(pairsOf(col("members"))).as("p"))
-      .select(
-        col("p._1.doc_id").as("doc_a"), col("p._2.doc_id").as("doc_b"),
-        bit_count(col("p._1.sig").bitwiseXOR(col("p._2.sig"))).as("hamming"))
-      .distinct()
-      .where(col("hamming") <= maxHamming)
+      .select(col("doc_id"), col("sig"), posexplode(array(
+        (0 until nBands).map(b =>
+          shiftrightunsigned(col("sig"), b * width)
+            .bitwiseAND(lit((1L << width) - 1))): _*)))
+      .toDF("doc_id", "sig", "band", "key")
+    bucketPairs(buckets, struct(col("doc_id"), col("sig")), bucketCap) { (a, b) =>
+      Seq(a("doc_id").as("doc_a"), b("doc_id").as("doc_b"),
+        bit_count(a("sig").bitwiseXOR(b("sig"))).as("hamming"))
+    }.where(col("hamming") <= maxHamming)
   }
+
 
   /** Fuzzy near-dup pairs by bounded edit distance: `(doc_a, doc_b, dist)`
     * for same-language documents whose lengths differ by ≤ `lenWindow` and
@@ -1266,32 +1254,24 @@ object Dedup {
       maxDist: Int = 10,
       prefixLen: Int = 40,
       band: Int = 8,
-      maxBucket: Int = 1024): DataFrame = {
+      maxBucket: Int = bucketCap): DataFrame = {
     require(band >= lenWindow, s"band ($band) must be >= lenWindow ($lenWindow)")
     require(maxBucket > 1, s"maxBucket must exceed 1, got $maxBucket")
     val base = docs.select(col("doc_id"), col("lang"),
       col("n_chars"), substring(col("text"), 1, prefixLen).as("prefix"))
     val bucketed = base.select(col("doc_id"), col("lang"), col("n_chars"),
-      col("prefix"),
-      explode(array(floor(col("n_chars") / band),
-        floor(col("n_chars") / band) + 1)).as("bucket"))
+      col("prefix"), lengthBuckets(band))
     // the density fence: membership counted over the SAME bucketed
     // relation the join reads; fenced blocks never reach pair expansion
-    val fencedBlocks = bucketed.groupBy("lang", "bucket")
-      .agg(count(lit(1)).as("n_members"))
-      .where(col("n_members") > maxBucket)
-      .select("lang", "bucket")
-    val buckets = bucketed
-      .join(fencedBlocks, Seq("lang", "bucket"), "left_anti")
+    val buckets = bucketed.join(
+      overCapBlocks(bucketed, Seq("lang", "bucket"), maxBucket),
+      Seq("lang", "bucket"), "left_anti")
 
-    val a = buckets.select(col("lang"), col("bucket"),
-      col("doc_id").as("doc_a"), col("n_chars").as("len_a"),
-      col("prefix").as("pre_a"))
-    val b = buckets.select(col("lang"), col("bucket"),
-      col("doc_id").as("doc_b"), col("n_chars").as("len_b"),
-      col("prefix").as("pre_b"))
+    def side(s: String) = buckets.select(col("lang"), col("bucket"),
+      col("doc_id").as(s"doc_$s"), col("n_chars").as(s"len_$s"),
+      col("prefix").as(s"pre_$s"))
 
-    a.join(b, Seq("lang", "bucket"))
+    side("a").join(side("b"), Seq("lang", "bucket"))
       .where(col("doc_a") < col("doc_b")
         && abs(col("len_a") - col("len_b")) <= lenWindow
         // exactly-one-meeting rule: a pair co-bucketed in both k and k+1
@@ -1310,6 +1290,13 @@ object Dedup {
         levenshtein(col("pre_a"), col("pre_b")).as("dist"))
       .where(col("dist") <= maxDist)
   }
+
+  /** A doc's two length blocks `{⌊n_chars/band⌋, ⌊n_chars/band⌋+1}`,
+    * exploded as `bucket` — the membership [[editDistancePairs]] joins on
+    * and [[editDistanceFenceReport]] counts. */
+  private def lengthBuckets(band: Int): Column =
+    explode(array(floor(col("n_chars") / band),
+      floor(col("n_chars") / band) + 1)).as("bucket")
 
   /** The drop metric for [[editDistancePairs]]' density fence (r16,
     * VERDICT r15 ask #3): one summary row —
@@ -1330,11 +1317,8 @@ object Dedup {
   def editDistanceFenceReport(
       docs: DataFrame,
       band: Int = 8,
-      maxBucket: Int = 1024): DataFrame = {
-    val bucketed = docs.select(col("lang"),
-      explode(array(floor(col("n_chars") / band),
-        floor(col("n_chars") / band) + 1)).as("bucket"))
-    bucketed.groupBy("lang", "bucket")
+      maxBucket: Int = bucketCap): DataFrame = {
+    docs.select(col("lang"), lengthBuckets(band)).groupBy("lang", "bucket")
       .agg(count(lit(1)).as("n"))
       .agg(
         count(lit(1)).as("n_blocks"),
@@ -1399,11 +1383,9 @@ object Dedup {
       substring(name, 2, 1),
       concat(least(substring(name, 1, 1), substring(name, 2, 1)),
         greatest(substring(name, 1, 1), substring(name, 2, 1))))
-    val a = part.select(col("p_brand").as("brand"), col("p_type").as("ptype"),
-      col("p_partkey").as("part_a"), col("p_name").as("name_a"),
-      posexplode(bands(col("p_name"))).as(Seq("band", "key")))
-    val b = part.select(col("p_brand").as("brand"), col("p_type").as("ptype"),
-      col("p_partkey").as("part_b"), col("p_name").as("name_b"),
+    def side(s: String) = part.select(col("p_brand").as("brand"),
+      col("p_type").as("ptype"), col("p_partkey").as(s"part_$s"),
+      col("p_name").as(s"name_$s"),
       posexplode(bands(col("p_name"))).as(Seq("band", "key")))
     // Lossless match-count prefilter: jw ≥ θ with prefix weight 0.1 over
     // ≤4 chars ⇒ jaro ≥ (θ−0.4)/0.6 = jMin; jaro = (m/|a| + m/|b| +
@@ -1425,7 +1407,7 @@ object Dedup {
         (graft.functions.hist_common(col("name_a"), col("name_b"))
           .cast("double") >= mLower)
       else lit(true)
-    a.join(b, Seq("brand", "ptype", "band", "key"))
+    side("a").join(side("b"), Seq("brand", "ptype", "band", "key"))
       .where(col("part_a") < col("part_b") && mBound)
       .select(col("part_a"), col("part_b"),
         round(jaro_winkler(col("name_a"), col("name_b")), 6).as("jw"))
@@ -1510,10 +1492,8 @@ object Dedup {
       keyLen: Int = 40,
       blockLen: Int = 2,
       maxDist: Int = 10): DataFrame = {
-    val p1 = snmPass(docs, normalized(col("text")), w, keyLen, blockLen, maxDist)
-    val p2 = snmPass(docs, reverse(normalized(col("text"))), w, keyLen,
-      blockLen, maxDist)
-    p1.union(p2)
+    def pass(key: Column) = snmPass(docs, key, w, keyLen, blockLen, maxDist)
+    pass(normalized(col("text"))).union(pass(reverse(normalized(col("text")))))
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"), col("dist"))
       .groupBy("doc_a", "doc_b")

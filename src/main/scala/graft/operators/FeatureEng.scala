@@ -214,6 +214,20 @@ object FeatureEng {
       sum(when(isEvt, 0L).otherwise(1L)).as("n_non")), nBins)
   }
 
+  /** First-order Markov transition matrix over `(prev_type, next_type)`
+    * transition rows: the count `n` per cell and its probability `p`
+    * within the `prev_type` row (rounded 6dp), ordered — one finish
+    * shared by the batch lane (e8, `lead()` per user) and its streaming
+    * twin's drained transitions (st20). The probability window runs over
+    * a relation bounded by event-type cardinality squared. */
+  def markovFace(transitions: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    transitions.groupBy("prev_type", "next_type").agg(count(lit(1)).as("n"))
+      .withColumn("p",
+        round(col("n") / sum("n").over(Window.partitionBy("prev_type")), 6))
+      .orderBy("prev_type", "next_type")
+  }
+
   /** WOE/IV presentation over a `(bin, n_evt, n_non)` wide relation —
     * shared by the fixed-width ([[woeIv]], fe6) and equal-frequency
     * ([[woeIvNtile]], fe12) screens (the psiFace pattern: one

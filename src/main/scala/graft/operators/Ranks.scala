@@ -136,7 +136,6 @@ object Ranks {
       ts.zipWithIndex.foreach { case (t, i) => accs(i) += t }
       row
     }.toSeq
-    import spark.implicits._
     val offDf = spark.createDataFrame(
       spark.sparkContext.parallelize(
         offsets.map(org.apache.spark.sql.Row.fromSeq), 1),

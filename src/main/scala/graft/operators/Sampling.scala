@@ -398,7 +398,7 @@ object Sampling {
 /** DuckDB twins of [[Sampling]] — identical integer hash/weight
   * arithmetic, term for term. */
 object SamplingSql {
-  import Sampling.{hashMod, hashPrime}
+  import Sampling.hashMod
 
   def temperatureMix(targetPct: Int): String =
     s"""WITH counts AS (

@@ -897,7 +897,8 @@ object StreamingQueries {
     * consecutive-pair transitions, and stores the new last event. The
     * cross-batch transition (state → first arrival of the next batch) is
     * exactly what a batch recomputation would have seen, so the drained
-    * counts equal `e8_markov`'s and share its oracle verbatim. State is
+    * transitions finish through e8's own
+    * [[graft.operators.FeatureEng.markovFace]] and share its oracle. State is
     * bounded by user cardinality; transitions on the wire are two small
     * strings, never the event payload. */
   def streamMarkov(outer: SparkSession, dir: String): DataFrame = {
@@ -922,12 +923,8 @@ object StreamingQueries {
             .map { case (a, b) => (a._3, b._3) }
       }
 
-    import org.apache.spark.sql.expressions.Window
-    drainTable(name, transitions.toDF("prev_type", "next_type"), "append")
-      .groupBy("prev_type", "next_type").agg(count(lit(1)).as("n"))
-      .withColumn("p",
-        round(col("n") / sum("n").over(Window.partitionBy("prev_type")), 6))
-      .orderBy("prev_type", "next_type")
+    graft.operators.FeatureEng.markovFace(
+      drainTable(name, transitions.toDF("prev_type", "next_type"), "append"))
   }
 
   /** The streaming twin of `w7_zscore_anomaly`: trailing z-score outlier
@@ -1347,8 +1344,8 @@ object StreamingQueries {
     * is built ONCE from the existing corpus (`doc_id % 5 ≠ 4`, the index
     * slice), and every ARRIVING document (`doc_id % 5 = 4`, the stream
     * slice) computes its MinHash signature and band keys in a STATELESS
-    * projection (the same [[graft.operators.Dedup.bandKeys]] expressions
-    * as the batch face — stream and batch cannot bucket differently),
+    * projection (the same [[graft.operators.Dedup.bandRows]] as the
+    * batch face — stream and batch cannot bucket differently),
     * probes the index via a stream-static left-outer equi-join on
     * `(band, key)`, verifies every surviving candidate with the EXACT
     * shingle Jaccard, and folds to one verdict per doc: `dup_jaccard` =
@@ -1387,36 +1384,25 @@ object StreamingQueries {
     * verdicts in driver memory. */
   def nearDupAdmission(outer: SparkSession, dir: String,
       threshold: Double = 0.8, numHashes: Int = 128, bands: Int = 0,
-      shingleN: Int = 3, maxBucket: Int = 1024): DataFrame = {
+      shingleN: Int = 3,
+      maxBucket: Int = graft.operators.Dedup.bucketCap): DataFrame = {
     import org.apache.spark.sql.functions.{max => fmax}
+    import graft.operators.Dedup
     // this lane's cost is the in-batch LSH probe + exact-verify JOINS,
     // not state commits: the child default of 4 state partitions would
     // run the bucket and verify exchanges 8× under-parallel (measured
     // 19.9s → 8.3s at sf1 when widened back to the session width)
     val spark = childSession(outer, "spark.sql.shuffle.partitions" ->
       outer.sessionState.conf.numShufflePartitions.toString)
-    val index = graft.operators.Dedup.shingleSets(
-        spark.read.parquet(s"$dir/documents.parquet")
-          .where(pmod(col("doc_id"), lit(5)) =!= 4), shingleN)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (index, nIndex) = Dedup.shingleBase(
+      spark.read.parquet(s"$dir/documents.parquet")
+        .where(pmod(col("doc_id"), lit(5)) =!= 4), shingleN)
     // stream and batch MUST bucket identically: the banding resolves
-    // once from the index corpus size (the count also materializes the
-    // persisted index both join sides reuse)
+    // once from the index corpus size
     val (nBands, nRows) =
       if (bands > 0) (bands, numHashes / bands)
-      else graft.operators.Dedup.lshBandingFor(index.count(), numHashes,
-        threshold)
-    // the signature gets its OWN projection before the band slices
-    // reference it: a multi-referenced alias is a CollapseProject
-    // barrier (the minhashLshPairs shape), while inlining minhash_sig
-    // into bandKeys would re-run the 128-hash kernel once per band
-    // (measured: 160s CPU -> 5s on the index side at sf1)
-    val idxRaw = index
-      .select(col("doc_id").as("doc_b"),
-        graft.functions.minhash_sig(col("sh"), numHashes).as("sig"))
-      .select(col("doc_b"),
-        posexplode(graft.operators.Dedup.bandKeys(col("sig"), nBands, nRows)))
-      .toDF("doc_b", "band", "key")
+      else Dedup.lshBandingFor(nIndex, numHashes, threshold)
+    val idxRaw = Dedup.bandRows(index, "doc_b", numHashes, nBands, nRows)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // ONE-TIME hot-bucket cap on the persisted index (r16, VERDICT r15
     // ask #5, the batch face's maxBucket policy): a (band, key) bucket
@@ -1427,30 +1413,19 @@ object StreamingQueries {
     // amortizes across the stream's lifetime of micro-batches — the
     // deployment posture SCALING.md's r15 investigation prescribed.
     //
-    // FUSED (r17, VERDICT r16 #2 on st31): the r16 form paid two full
-    // index materializations (idxRaw.count + capped count) plus an
-    // unconditional anti-join pass per invocation for a cap that never
-    // binds at measured scale. The bucket-size aggregate IS now the
+    // FUSED (r17, VERDICT r16 #2 on st31): the hot-bucket count IS the
     // eager-materializing action (it reads every cached partition, so the
     // leaf cache is populated before AQE can race the probe sides — the
-    // jaccardPairsExact lesson holds), and the anti-join + second cache
-    // exist ONLY when a hot bucket is actually present: an anti-join
-    // against zero hot keys is the identity, so the capped result is
+    // shingleBase lesson holds), and the anti-join + second cache exist
+    // ONLY when a hot bucket is actually present: an anti-join against
+    // zero hot keys is the identity, so the capped result is
     // byte-identical on both paths.
-    val nHot = idxRaw.groupBy("band", "key")
-      .agg(count(lit(1)).as("n"))
-      .where(col("n") > maxBucket)
-      .count()
+    val hot = Dedup.overCapBlocks(idxRaw, Seq("band", "key"), maxBucket)
+    val nHot = hot.count()
     val idxBuckets =
       if (nHot == 0L) idxRaw
-      else {
-        val hotKeys = idxRaw.groupBy("band", "key")
-          .agg(count(lit(1)).as("n"))
-          .where(col("n") > maxBucket)
-          .select("band", "key")
-        idxRaw.join(hotKeys, Seq("band", "key"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
+      else idxRaw.join(hot, Seq("band", "key"), "left_anti")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val verdicts =
       scala.collection.mutable.ArrayBuffer.empty[(Long, Option[Double])]
     try {
@@ -1468,28 +1443,20 @@ object StreamingQueries {
         // splits at sf1) while the signature+verify work is the cost —
         // one narrow exchange of the filtered slice buys full-width
         // CPU on the probe (measured 22.2s -> 8s class at sf1)
-        val sets = graft.operators.Dedup.shingleSets(
+        val sets = Dedup.shingleSets(
             graft.functions.Staging.spread(
               batch.where(pmod(col("doc_id"), lit(5)) === 4)), shingleN)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val probeKeys = sets
-            .select(col("doc_id"),
-              graft.functions.minhash_sig(col("sh"), numHashes).as("sig"))
-            .select(col("doc_id"), posexplode(
-              graft.operators.Dedup.bandKeys(col("sig"), nBands, nRows)))
-            .toDF("doc_id", "band", "key")
-          val cand = probeKeys.join(idxBuckets, Seq("band", "key"))
+          val cand = Dedup.bandRows(sets, "doc_id", numHashes, nBands, nRows)
+            .join(idxBuckets, Seq("band", "key"))
             .select("doc_id", "doc_b").distinct()
-          val best = cand
-            .join(index.select(col("doc_id").as("doc_b"),
-              col("sh").as("sh_b")), "doc_b")
-            .join(sets, "doc_id")
-            .withColumn("inter", size(array_intersect(col("sh"), col("sh_b"))))
-            .withColumn("j", col("inter").cast("double")
-              / (size(col("sh")) + size(col("sh_b")) - col("inter")))
+          val best = Dedup.withJaccard(cand
+              .join(Dedup.hashedSide(index, "doc_b", "b"), "doc_b")
+              .join(Dedup.hashedSide(sets, "doc_id", "a"), "doc_id"))
             .groupBy("doc_id")
-            .agg(fmax(when(col("j") >= threshold, col("j"))).as("dup_j"))
+            .agg(fmax(when(col("jaccard") >= threshold, col("jaccard")))
+              .as("dup_j"))
           val out = sets.select(col("doc_id"))
             .join(best, Seq("doc_id"), "left_outer")
             .collect()

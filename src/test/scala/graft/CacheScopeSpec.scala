@@ -60,6 +60,29 @@ class CacheScopeSpec extends SparkSuite {
     CacheScope.release(ranked)
     assert(spark.sparkContext.getPersistentRDDs.size < before ||
       before === 0)
+    // the pair finders: one release(result) frees every relation each
+    // persisted (shingle base, shingle index, scored or survivor pairs)
+    val words = (1 to 40).map(i => s"w$i")
+    val docs = Seq(
+      (1L, words.mkString(" ")),
+      (2L, (words.take(38) :+ "changed").mkString(" ")),
+      (3L, (1 to 40).map(i => s"z$i").mkString(" ")),
+      (4L, words.mkString(" ")))
+      .toDF("doc_id", "text")
+    import graft.operators.Dedup
+    val leaking = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "jaccardPairsExact" -> (Dedup.jaccardPairsExact(_, 0.8)),
+      "containmentPairs" -> (Dedup.containmentPairs(_, 0.8)),
+      "simhashPairs" -> (Dedup.simhashPairs(_))).filter { case (name, op) =>
+      spark.catalog.clearCache()
+      val cached = spark.sparkContext.getPersistentRDDs.size
+      val pairs = op(docs)
+      assert(pairs.count() > 0, name)
+      CacheScope.release(pairs)
+      spark.sparkContext.getPersistentRDDs.size != cached
+    }.map(_._1)
+    assert(leaking.isEmpty, "left a persisted relation without an owner")
+    spark.catalog.clearCache()
   }
 
   test("self-ownership: owns(res, res) releases res itself without an " +

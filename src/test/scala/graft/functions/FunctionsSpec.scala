@@ -218,6 +218,7 @@ class FunctionsSpec extends SparkSuite {
     "stop_profile_counts" -> ((c, _) => stop_profile_counts(c(0))),
     "hashed_lr_score" -> ((c, k) => hashed_lr_score(c(0), k(0))),
     "hash_array" -> ((c, k) => hash_array(c(0), k(0))),
+    "xxhash64_array" -> ((c, _) => xxhash64_array(c(0))),
     "winnow" -> ((c, k) => winnow(c(0), k(0))),
     "minhash_sig" -> ((c, k) => minhash_sig(c(0), k(0))),
     "simhash64" -> ((c, _) => simhash64(c(0))),

@@ -38,6 +38,14 @@ object VectorKernelsPropSpec extends Properties("VectorKernels") {
       } && got.numElements() == toks.length
   }
 
+  property("xxhash64Array == element-wise xxhash64") = forAll(tokensGen) { toks =>
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    val got = VectorKernels.xxhash64Array(arr(toks))
+    got.numElements() == toks.length && toks.indices.forall { i =>
+      got.getLong(i) == new XxHash64(Seq(Literal(toks(i)))).eval()
+    }
+  }
+
   property("minhashSig == per-seed minimum of element hashes") =
     forAll(Gen.nonEmptyListOf(tokenGen), Gen.choose(1, 32)) { (toks, h) =>
       val got = VectorKernels.minhashSig(arr(toks), h)

@@ -35,6 +35,10 @@ class RegistrySpec extends AnyFunSuite {
       "priv2_dp_counts"))
   }
 
+  test("the streaming family declares only st* lanes") {
+    assert(StreamingLanes.lanes.map(_.name).filterNot(_.startsWith("st")) === Nil)
+  }
+
   test("a name declared by two families fails, naming the lane and both " +
       "families") {
     val e = intercept[IllegalStateException](LaneFamily.registry(Seq(

@@ -323,6 +323,18 @@ class TextDedupSpec extends SparkSuite {
     spark.catalog.clearCache()
   }
 
+  test("bucket expansion: a bucket over the cap yields no pairs") {
+    val text = "the same near duplicate text in every one of three docs"
+    val buckets = Dedup.bandRows(Dedup.shingleSets(
+      docs((1L, text), (2L, text), (3L, text)), 3), "doc_id", 128, 32, 4)
+    def expand(cap: Int) = Dedup.bucketPairs(buckets, col("doc_id"), cap)(
+        (a, b) => Seq(a.as("doc_a"), b.as("doc_b")))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // every band of the three identical signatures is one 3-member bucket
+    assert(expand(2).isEmpty)
+    assert(expand(3) === Set((1L, 2L), (1L, 3L), (2L, 3L)))
+  }
+
   test("minhashLshPairs: jaccard values are exact int ratios") {
     val d = docs(
       (1L, baseWords.mkString(" ")),
