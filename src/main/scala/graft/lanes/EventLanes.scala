@@ -6,6 +6,22 @@ import graft.operators.{FeatureEng, FeatureEngSql, Ranks, Tables, TextAnalysis, 
 
 /** Event-time, date and sequence analytics over `events` (SURVEY §2.5). */
 object EventLanes extends LaneFamily("events") {
+  // shared by e1_event_hourly and its stream st1_stream_hourly
+  private[lanes] lazy val hourlySql =
+    """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS hour,
+      |       event_type, count(*) AS n
+      |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin
+  // shared by e6_sliding and its stream st17_stream_sliding
+  private[lanes] lazy val slidingSql =
+    """WITH ev AS (SELECT epoch_ns(ts) // 1000 AS us, event_type
+      |            FROM events),
+      |hops AS (
+      |  SELECT ((us // 900000000) - k) * 900000000 AS w_start_us,
+      |         event_type
+      |  FROM ev, (SELECT unnest(generate_series(0, 3)) AS k))
+      |SELECT w_start_us, event_type, count(*) AS n
+      |FROM hops GROUP BY 1, 2
+      |ORDER BY w_start_us, event_type""".stripMargin
   // shared by e9_attribution and its incremental twin
   // st22_stream_attribution: per-user carried last-touch, 7-day lookback
   private[lanes] lazy val attributionSql =
@@ -66,10 +82,7 @@ object EventLanes extends LaneFamily("events") {
 
   val lanes: Seq[Lane] = Seq(
     // --- E: event-time / date functions over events (SURVEY §2.5 absence)
-    Lane("e1_event_hourly", Some(
-        """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS hour,
-          |       event_type, count(*) AS n
-          |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin))((s, dir) =>
+    Lane("e1_event_hourly", Some(hourlySql))((s, dir) =>
       Tables(s, dir, "events")
         // integer `div`: double division of ~1.7e18 nanos loses the last
         // ~8 bits and can misplace hour-boundary events vs the oracle
@@ -78,31 +91,15 @@ object EventLanes extends LaneFamily("events") {
         .groupBy("hour", "event_type").agg(count("*").as("n"))
         .orderBy("hour", "event_type")),
     // the same 4 hops per event via integer micros
-    Lane("e6_sliding", Some(
-        """WITH ev AS (SELECT epoch_ns(ts) // 1000 AS us, event_type
-          |            FROM events),
-          |hops AS (
-          |  SELECT ((us // 900000000) - k) * 900000000 AS w_start_us,
-          |         event_type
-          |  FROM ev, (SELECT unnest(generate_series(0, 3)) AS k))
-          |SELECT w_start_us, event_type, count(*) AS n
-          |FROM hops GROUP BY 1, 2
-          |ORDER BY w_start_us, event_type""".stripMargin))((s, dir) =>
+    Lane("e6_sliding", Some(slidingSql))((s, dir) =>
       // Hopping (sliding) event-time windows — 1 h windows advancing
-      // every 15 min, so each event lands in exactly 4 overlapping
-      // windows: the trend-detection shape e1's tumbling windows can't
-      // express. Spark's window() plans the 4 assignments as a narrow
-      // explode in the scan projection (no self-join); the aggregate
-      // stays one partial/final pair keyed by (window, type). The
-      // oracle regenerates the same 4 hops per event with integer
-      // arithmetic on epoch micros.
-      Tables(s, dir, "events")
-        .select(timestamp_micros(expr("ts div 1000")).as("t"),
-          col("event_type"))
-        .groupBy(window(col("t"), "1 hour", "15 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(expr("unix_micros(window.start)").as("w_start_us"),
-          col("event_type"), col("n"))
+      // every 15 min: the trend-detection shape e1's tumbling windows
+      // can't express, through the shared FeatureEng.hoppingCounts (st17
+      // drains into the same one). The oracle regenerates the same 4
+      // hops per event with integer arithmetic on epoch micros.
+      FeatureEng.hoppingCounts(Tables(s, dir, "events")
+          .select(timestamp_micros(expr("ts div 1000")).as("t"),
+            col("event_type")))
         .orderBy("w_start_us", "event_type")),
     Lane("e5_retention", Some(
         """WITH ev AS (SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
@@ -1154,25 +1151,18 @@ object EventLanes extends LaneFamily("events") {
       // sort); `last(..., ignoreNulls)` over a running frame is a
       // single-pass window — no self-join against the touch set, which
       // at 100 TB would rebuild the event table per purchase.
+      // The lookback verdict is the shared FeatureEng.attributionFace
+      // (st22 carries the touch in state and calls the same one).
       import org.apache.spark.sql.expressions.Window
-      val lookbackNs = 7L * 24 * 3600 * 1000000000L
       val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
-      val touched = Tables(s, dir, "events")
+      FeatureEng.attributionFace(Tables(s, dir, "events")
         .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
           last(when(col("event_type").isin("click", "view"),
             struct(col("ts").as("t_ts"), col("event_id").as("t_id"),
               col("event_type").as("t_type"))), ignoreNulls = true)
             .over(w).as("touch"))
-      val inWin = col("touch").isNotNull &&
-        col("ts") - col("touch.t_ts") <= lit(lookbackNs)
-      touched.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("event_id").as("purchase_id"),
-          expr("ts div 1000").as("purchase_ts_us"),
-          when(inWin, col("touch.t_id")).as("touch_id"),
-          when(inWin, col("touch.t_type")).otherwise(lit("organic"))
-            .as("channel"))
-        .orderBy("purchase_id")
+        .where(col("event_type") === "purchase"))
     })
   )
 }

@@ -3,7 +3,7 @@ package graft.lanes
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BloomPipeline, Kmv, KmvSql, Ratings, Sampling, SamplingSql, Tables}
+import graft.operators.{BloomPipeline, FeatureEng, Kmv, KmvSql, Ratings, Sampling, SamplingSql, Tables}
 
 /** Scans, projections, filters, splits and aggregations over the TPC-H and
   * events tables (SURVEY §2.1-2.2, §2.4). */
@@ -102,18 +102,10 @@ object ScanAggLanes extends LaneFamily("scan_agg") {
         count_min_sketch(col("l_suppkey"), lit(eps), lit(0.99), lit(42))
           .as("sk"),
         count(lit(1)).as("n")).head()
-      val sk = org.apache.spark.util.sketch.CountMinSketch.readFrom(
-        new java.io.ByteArrayInputStream(row.getAs[Array[Byte]]("sk")))
-      val bound = math.ceil(eps * row.getAs[Long]("n")).toLong
       // exact top-10 (deterministic tiebreak), probed against the sketch
-      val topk = li.groupBy("l_suppkey").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("l_suppkey")).limit(10).collect()
-        .map { r =>
-          val (key, n) = (r.getLong(0), r.getLong(1))
-          val est = sk.estimateCount(key)
-          (key, n, est >= n && est <= n + bound)
-        }
-      s.createDataFrame(topk.toSeq).toDF("l_suppkey", "n", "cms_ok")
+      Sampling.cmsGate(row.getAs[Array[Byte]]("sk"), row.getAs[Long]("n"),
+        li.groupBy("l_suppkey").agg(count(lit(1)).as("n"))
+          .orderBy(col("n").desc, col("l_suppkey")).limit(10), eps)
     }),
     // per-group sketches union to the global distinct
     Lane("a9_hll_merge", Some(
@@ -280,22 +272,13 @@ object ScanAggLanes extends LaneFamily("scan_agg") {
         .join(Tables(s, dir, "orders").select(col("o_orderkey")),
           col("l_orderkey") === col("o_orderkey"), "left_anti")
         .agg(count(lit(1)).as("n_orphans"))
-      val m = base.crossJoin(orphans) // two one-row relations
-      def rule(name: String, observed: org.apache.spark.sql.Column,
-          threshold: Double, passed: org.apache.spark.sql.Column) =
-        m.select(lit(name).as("rule"),
-          round(observed.cast("double"), 6).as("observed"),
-          lit(threshold).as("threshold"), passed.as("passed"))
-      rule("fk_orders_orphans", col("n_orphans"), 0.0,
-          col("n_orphans") === 0)
-        .union(rule("pk_unique_violations", col("n") - col("n_pk"), 0.0,
-          col("n") === col("n_pk")))
-        .union(rule("qty_min_nonnegative", col("mn"), 0.0,
-          col("mn") >= 0.0))
-        .union(rule("qty_null_count", col("n_null"), 0.0,
-          col("n_null") === 0))
-        .union(rule("rowcount_min", col("n"), 1.0, col("n") >= 1))
-        .orderBy("rule")
+      FeatureEng.contractVerdicts(base.crossJoin(orphans), // two one-row relations
+        ("fk_orders_orphans", col("n_orphans"), 0.0, col("n_orphans") === 0),
+        ("pk_unique_violations", col("n") - col("n_pk"), 0.0,
+          col("n") === col("n_pk")),
+        ("qty_min_nonnegative", col("mn"), 0.0, col("mn") >= 0.0),
+        ("qty_null_count", col("n_null"), 0.0, col("n_null") === 0),
+        ("rowcount_min", col("n"), 1.0, col("n") >= 1))
     }),
     // the one-row corpus health profile
     Lane("a12_profile", Some(

@@ -1,7 +1,7 @@
 package graft.lanes
 
 import graft.operators.{DedupSql, FeatureEngSql, KmvSql, NaiveBayesSql, TextAnalysisSql}
-import EventLanes.{attributionSql, markovSql, zscoreSql}
+import EventLanes.{attributionSql, hourlySql, markovSql, slidingSql, zscoreSql}
 import TextLanes.{dsirTargetPredSql, dsirTargetSources}
 
 /** Structured Streaming lanes, each drained to a deterministic result that
@@ -10,22 +10,10 @@ object StreamingLanes extends LaneFamily("streaming") {
   val lanes: Seq[Lane] = Seq(
     // --- ST: Structured Streaming drained to a deterministic result —
     // the incremental engine must reproduce the batch answer exactly
-    Lane("st1_stream_hourly", Some(
-        """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:00') AS hour,
-          |       event_type, count(*) AS n
-          |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin))((s, dir) =>
+    Lane("st1_stream_hourly", Some(hourlySql))((s, dir) => // == batch e1
       graft.streaming.StreamingQueries.eventHourly(s, dir)),
     // drained complete state == batch e6
-    Lane("st17_stream_sliding", Some(
-        """WITH ev AS (SELECT epoch_ns(ts) // 1000 AS us, event_type
-          |            FROM events),
-          |hops AS (
-          |  SELECT ((us // 900000000) - k) * 900000000 AS w_start_us,
-          |         event_type
-          |  FROM ev, (SELECT unnest(generate_series(0, 3)) AS k))
-          |SELECT w_start_us, event_type, count(*) AS n
-          |FROM hops GROUP BY 1, 2
-          |ORDER BY w_start_us, event_type""".stripMargin))((s, dir) =>
+    Lane("st17_stream_sliding", Some(slidingSql))((s, dir) =>
       // hopping windows, e6's twin
       graft.streaming.StreamingQueries.eventSliding(s, dir)),
     // 2-batch MV merge chain == full recompute

@@ -228,6 +228,53 @@ object FeatureEng {
       .orderBy("prev_type", "next_type")
   }
 
+  /** Last-touch attribution verdicts over purchase rows `(user_id,
+    * event_id, ts, touch)`, where `touch` is the user's last preceding
+    * click/view as `struct<t_ts, t_id, t_type>` (null when none): the
+    * touch credits the purchase within a 7-day lookback, else the
+    * purchase is `organic`. `(user_id, purchase_id, purchase_ts_us,
+    * touch_id, channel)` ordered by purchase — one finish shared by e9
+    * (a running `last(..., ignoreNulls)` window) and its streaming twin
+    * st22 (a touch carried in per-user state). */
+  def attributionFace(purchases: DataFrame): DataFrame = {
+    val inWin = col("touch").isNotNull &&
+      col("ts") - col("touch.t_ts") <= lit(7L * 24 * 3600 * 1000000000L)
+    // `div` is always nullable in Spark, though by a literal it is null
+    // only where ts is: the coalesce keeps ts's own nullability
+    purchases.select(col("user_id"), col("event_id").as("purchase_id"),
+        coalesce(expr("ts div 1000"), col("ts")).as("purchase_ts_us"),
+        when(inWin, col("touch.t_id")).as("touch_id"),
+        when(inWin, col("touch.t_type")).otherwise(lit("organic"))
+          .as("channel"))
+      .orderBy("purchase_id")
+  }
+
+  /** Hopping event-time window counts over a `(t, event_type)` frame:
+    * 1 h windows every 15 min, so each event lands in 4 windows (a narrow
+    * explode in the projection; one partial/final aggregate keyed by
+    * (window, type)). `(w_start_us, event_type, n)`, unordered — shared
+    * by e6 and its streaming twin st17, which watermarks `t` first. */
+  def hoppingCounts(timed: DataFrame): DataFrame =
+    timed.groupBy(window(col("t"), "1 hour", "15 minutes"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+      .select(expr("unix_micros(window.start)").as("w_start_us"),
+        col("event_type"), col("n"))
+
+  /** Data-contract verdicts over a one-row metric relation: one `(rule,
+    * observed, threshold, passed)` row per spec, `observed` rounded to 6
+    * places as a double, ordered by rule — shared by a17 and the drained
+    * stream st24. */
+  def contractVerdicts(metrics: DataFrame,
+      specs: (String, Column, Double, Column)*): DataFrame = {
+    def rule(spec: (String, Column, Double, Column)): DataFrame = {
+      val (name, observed, threshold, passed) = spec
+      metrics.select(lit(name).as("rule"),
+        round(observed.cast("double"), 6).as("observed"),
+        lit(threshold).as("threshold"), passed.as("passed"))
+    }
+    specs.map(rule).reduce(_ union _).orderBy("rule")
+  }
+
   /** WOE/IV presentation over a `(bin, n_evt, n_non)` wide relation —
     * shared by the fixed-width ([[woeIv]], fe6) and equal-frequency
     * ([[woeIvNtile]], fe12) screens (the psiFace pattern: one

@@ -393,6 +393,26 @@ object Sampling {
           col("exact_pairs"), 6))
       .select("exact_pairs", "est_pairs", "sample_keys", "rel_err")
   }
+
+  /** The count-min heavy-hitter gate shared by a8 and its streaming twin
+    * st23: each exact `(key, n)` row of `topk` (a bounded top-k,
+    * collected) is probed against the serialized count-min `sketch` of
+    * `total` rows at relative error `eps`, under the CMS guarantee
+    * `exact ≤ estimate ≤ exact + ⌈εN⌉`. `(key, n, cms_ok)`, the key
+    * named as in `topk`. */
+  def cmsGate(sketch: Array[Byte], total: Long, topk: DataFrame,
+      eps: Double): DataFrame = {
+    val cms = org.apache.spark.util.sketch.CountMinSketch.readFrom(
+      new java.io.ByteArrayInputStream(sketch))
+    val bound = math.ceil(eps * total).toLong
+    val gated = topk.collect().map { r =>
+      val (key, n) = (r.getLong(0), r.getLong(1))
+      val est = cms.estimateCount(key)
+      (key, n, est >= n && est <= n + bound)
+    }
+    topk.sparkSession.createDataFrame(gated.toSeq)
+      .toDF(topk.columns.head, "n", "cms_ok")
+  }
 }
 
 /** DuckDB twins of [[Sampling]] — identical integer hash/weight

@@ -834,13 +834,27 @@ object TextAnalysis {
     * is a one-row relation, broadcast. At serving scale the freq table is
     * the train-once artifact; training inline here mirrors the
     * self-perplexity batch-hygiene pass. */
-  def unigramLmScore(docs: DataFrame): DataFrame = {
-    val dt = docs
-      .select(col("doc_id"), explode(tokens(col("text"))).as("token"))
+  def unigramLmScore(docs: DataFrame): DataFrame =
+    unigramLmFace(unigramLmCounts(docs))
+
+  /** The unigram-LM fold: per-`(doc_id, token)` occurrence counts `c_dt`,
+    * over a batch or a stream of documents. */
+  def unigramLmCounts(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), explode(tokens(col("text"))).as("token"))
       .groupBy("doc_id", "token").agg(count(lit(1)).as("c_dt"))
+
+  /** The unigram-LM finish over the `(doc_id, token, c_dt)` counts: token
+    * frequencies, the corpus total, and each document's cross-entropy —
+    * shared by t21 and its drained stream (st14). The freq-side key is
+    * renamed, so a count relation whose leaf cannot re-instance its
+    * attributes (a memory-sink table) self-joins as is. The freq join is
+    * left to the planner: a forced broadcast of `freq` cost more executor
+    * CPU on both t21 and st14 at sf0.01. */
+  def unigramLmFace(dt: DataFrame): DataFrame = {
     val freq = dt.groupBy("token").agg(sum("c_dt").as("c_t"))
+      .withColumnRenamed("token", "f_token")
     val total = freq.agg(sum(col("c_t")).cast("double").as("n_total"))
-    dt.join(freq, "token")
+    dt.join(freq, col("token") === col("f_token"))
       .crossJoin(broadcast(total))
       .groupBy("doc_id")
       .agg(
@@ -1007,13 +1021,21 @@ object TextAnalysis {
 
   /** Adjacent token bigrams of a token-array column as `(prev, cur)`
     * structs — a narrow per-row derivation (no self-join on position).
-    * `private[graft]`: the streaming DSIR face keys its state on the
-    * same derivation. */
+    * `private[graft]` for its spec. */
   private[graft] def bigrams(toksCol: String): Column =
     expr(
       s"""transform(sequence(1, size($toksCol) - 1),
          |  i -> struct(element_at($toksCol, i) AS prev,
          |              element_at($toksCol, i + 1) AS cur))""".stripMargin)
+
+  /** The stupid-backoff score of one bigram position: `c(prev,cur)/c(prev)`
+    * when the bigram was seen, else `0.4 · c(cur)/N`, else `0.4/N` — the
+    * one formula [[bigramLmScore]] and [[dsirFace]]'s two models share. */
+  private def backoff(cBi: Column, cPrev: Column, cCur: Column,
+      nTotal: Column): Column =
+    when(cBi.isNotNull, cBi.cast("double") / cPrev)
+      .when(cCur.isNotNull, lit(0.4) * cCur.cast("double") / nTotal)
+      .otherwise(lit(0.4) / nTotal)
 
   /** Bigram-LM cross-entropy with stupid backoff (Brants et al. 2007,
     * "Large Language Models in Machine Translation") — the order-2 upgrade
@@ -1059,12 +1081,8 @@ object TextAnalysis {
       .join(uni.select(col("token").as("cur"), col("c_u").as("c_cur")),
         Seq("cur"), "left")
       .crossJoin(broadcast(total))
-      .withColumn("s",
-        when(col("c_bi").isNotNull,
-          col("c_bi").cast("double") / col("c_prev"))
-          .when(col("c_cur").isNotNull,
-            lit(0.4) * col("c_cur").cast("double") / col("n_total"))
-          .otherwise(lit(0.4) / col("n_total")))
+      .withColumn("s", backoff(col("c_bi"), col("c_prev"), col("c_cur"),
+        col("n_total")))
       .groupBy("doc_id")
       .agg(
         sum("c_db").cast("long").as("n_bigrams"),
@@ -1173,51 +1191,80 @@ object TextAnalysis {
     * bigramLmScore]]'s model) is that estimator with exact counts, which
     * keeps the whole operator oracle-checkable.
     *
-    * One scoring pass: the per-(doc, prev, cur) relation joins BOTH
-    * models' lookup tables (bounded word-keyed builds, like every LM
-    * join here), and one aggregate emits both log-likelihoods — the
-    * candidate corpus is scanned once, not once per model. */
-  def dsirWeights(docs: DataFrame, targetPred: Column): DataFrame = {
-    val toked = docs.select(col("doc_id"), targetPred.as("in_target"),
-      tokens(col("text")).as("toks"))
+    * Count the fold, then the face: [[dsirFold]] tokenizes and explodes
+    * the corpus once, and [[dsirFace]] collects both models from it and
+    * scores the candidates in one aggregate — the finish st15 runs on
+    * its drained counts. */
+  def dsirWeights(docs: DataFrame, targetPred: Column): DataFrame =
+    dsirFace(dsirFold(docs, targetPred))
 
-    def model(slice: Column): (DataFrame, DataFrame, DataFrame) = {
-      val uni = toked.where(slice)
-        .select(explode(col("toks")).as("token"))
-        .groupBy("token").agg(count(lit(1)).as("c_u"))
-      val total = uni.agg(sum("c_u").cast("double").as("n_total"))
-      val bi = toked.where(slice && size(col("toks")) >= 2)
-        .select(explode(bigrams("toks")).as("bg"))
-        .groupBy(col("bg.prev").as("prev"), col("bg.cur").as("cur"))
-        .agg(count(lit(1)).as("c_bi"))
-      (uni, bi, total)
-    }
-    val (uniT, biT, totT) = model(col("in_target"))
-    val (uniR, biR, totR) = model(!col("in_target"))
+  /** The DSIR fold: `(doc_id, in_target, kind, key, c)` counts from ONE
+    * tokenize pass and ONE explode, where `kind` tags unigram (`u`) vs
+    * bigram (`b`) occurrences and `key` is the token or the space-joined
+    * bigram (tokens are `[a-z0-9]+`, so the join is unambiguous). The
+    * zip_with pair construction is total: a short or empty document
+    * yields no bigram, no size guard needed. `doc_id` collapses to -1 on
+    * every row [[dsirFace]] never reads per document (target docs and all
+    * unigrams feed the model counts only). Per-doc rows are final within
+    * any slice holding the whole document, so a stream folds each
+    * micro-batch on its own and the face re-aggregates the model rows. */
+  def dsirFold(docs: DataFrame, targetPred: Column): DataFrame =
+    docs.select(col("doc_id"), targetPred.as("in_target"),
+        tokens(col("text")).as("toks"))
+      .select(col("doc_id"), col("in_target"), explode(expr(
+        """concat(
+          |  transform(toks, t -> struct('u' AS kind, t AS key)),
+          |  transform(
+          |    filter(zip_with(toks, slice(toks, 2, size(toks)),
+          |             (a, b) -> struct(a AS prev, b AS cur)),
+          |           p -> p.cur IS NOT NULL),
+          |    p -> struct('b' AS kind,
+          |                concat_ws(' ', p.prev, p.cur) AS key)))"""
+          .stripMargin)).as("kk"))
+      .select(
+        when(col("in_target") || col("kk.kind") === "u", lit(-1L))
+          .otherwise(col("doc_id")).as("doc_id"),
+        col("in_target"), col("kk.kind").as("kind"), col("kk.key").as("key"))
+      .groupBy("doc_id", "in_target", "kind", "key")
+      .agg(count(lit(1)).as("c"))
 
-    val db = toked.where(!col("in_target") && size(col("toks")) >= 2)
-      .select(col("doc_id"), explode(bigrams("toks")).as("bg"))
-      .groupBy(col("doc_id"), col("bg.prev").as("prev"),
-        col("bg.cur").as("cur"))
-      .agg(count(lit(1)).as("c_db"))
-
-    def withScore(d: DataFrame, uni: DataFrame, bi: DataFrame,
-        total: DataFrame, sfx: String): DataFrame =
-      d.join(bi.select(col("prev"), col("cur"), col("c_bi").as(s"c_bi_$sfx")),
+  /** The DSIR finish over [[dsirFold]]'s counts — shared by t25 (and
+    * pipe4) and the drained stream st15. Both LMs' unigram and bigram
+    * tables fold out of the counts in ONE aggregate whose result is
+    * VOCABULARY-bounded, so it is collected to the driver (the
+    * trained-artifact contract, cf. BloomPipeline.collectFilters) and
+    * re-enters the scoring plan as local relations under broadcast hash
+    * joins; the totals are exact long sums of the collected unigrams.
+    * The candidate relation is the non-target bigram rows, unique per
+    * `(doc, key)`, read straight off the counts. */
+  def dsirFace(counts: DataFrame): DataFrame = {
+    val spark = counts.sparkSession
+    import spark.implicits._
+    val model = counts.groupBy("in_target", "kind", "key")
+      .agg(sum("c").as("c")).collect()
+    def rows(target: Boolean, kind: String) = model.iterator
+      .filter(r => r.getBoolean(0) == target && r.getString(1) == kind)
+      .map(r => (r.getString(2), r.getLong(3))).toSeq
+    def score(target: Boolean, sfx: String)(d: DataFrame): DataFrame = {
+      val uni = rows(target, "u")
+      val bi = rows(target, "b").map { case (k, c) =>
+        val Array(p, n) = k.split(" ", 2)
+        (p, n, c)
+      }
+      d.join(broadcast(bi.toDF("prev", "cur", s"c_bi_$sfx")),
           Seq("prev", "cur"), "left")
-        .join(uni.select(col("token").as("prev"),
-          col("c_u").as(s"c_prev_$sfx")), Seq("prev"), "left")
-        .join(uni.select(col("token").as("cur"),
-          col("c_u").as(s"c_cur_$sfx")), Seq("cur"), "left")
-        .crossJoin(broadcast(total.select(col("n_total").as(s"n_tot_$sfx"))))
-        .withColumn(s"s_$sfx",
-          when(col(s"c_bi_$sfx").isNotNull,
-            col(s"c_bi_$sfx").cast("double") / col(s"c_prev_$sfx"))
-            .when(col(s"c_cur_$sfx").isNotNull,
-              lit(0.4) * col(s"c_cur_$sfx").cast("double") / col(s"n_tot_$sfx"))
-            .otherwise(lit(0.4) / col(s"n_tot_$sfx")))
-
-    withScore(withScore(db, uniT, biT, totT, "t"), uniR, biR, totR, "r")
+        .join(broadcast(uni.toDF("prev", s"c_prev_$sfx")), Seq("prev"), "left")
+        .join(broadcast(uni.toDF("cur", s"c_cur_$sfx")), Seq("cur"), "left")
+        .withColumn(s"s_$sfx", backoff(col(s"c_bi_$sfx"), col(s"c_prev_$sfx"),
+          col(s"c_cur_$sfx"), lit(uni.iterator.map(_._2).sum.toDouble)))
+    }
+    counts.where(col("kind") === "b" && !col("in_target"))
+      .select(col("doc_id"),
+        element_at(split(col("key"), " "), 1).as("prev"),
+        element_at(split(col("key"), " "), 2).as("cur"),
+        col("c").as("c_db"))
+      .transform(score(target = true, "t"))
+      .transform(score(target = false, "r"))
       .groupBy("doc_id")
       .agg(
         sum("c_db").cast("long").as("n_bigrams"),

@@ -39,6 +39,24 @@ class RegistrySpec extends AnyFunSuite {
     assert(StreamingLanes.lanes.map(_.name).filterNot(_.startsWith("st")) === Nil)
   }
 
+  test("each streaming twin shares its batch lane's oracle") {
+    val twins = Seq(
+      "st1_stream_hourly" -> "e1_event_hourly",
+      "st14_stream_lm" -> "t21_unigram_lm",
+      "st15_stream_dsir" -> "t25_dsir",
+      "st17_stream_sliding" -> "e6_sliding",
+      "st20_stream_markov" -> "e8_markov",
+      "st21_stream_anomaly" -> "w7_zscore_anomaly",
+      "st22_stream_attribution" -> "e9_attribution",
+      "st25_stream_benford" -> "fe3_benford",
+      "st26_stream_nb_serve" -> "t36_nb_classify",
+      "st27_stream_psi" -> "fe5_psi_drift",
+      "st29_stream_cusum" -> "w13_cusum")
+    for ((stream, batch) <- twins)
+      assert(SparkEntry.oracleSql(stream) === SparkEntry.oracleSql(batch),
+        s"$stream vs $batch")
+  }
+
   test("a name declared by two families fails, naming the lane and both " +
       "families") {
     val e = intercept[IllegalStateException](LaneFamily.registry(Seq(

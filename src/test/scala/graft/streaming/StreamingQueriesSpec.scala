@@ -269,6 +269,35 @@ class StreamingQueriesSpec extends SparkSuite with TimeLimits
     assert(streamed.map(_.toSeq).toSeq === batch.map(_.toSeq).toSeq)
   }
 
+  test("lmScore stream equals the batch unigramLmScore row for row") {
+    val dir = "/root/testdata/sf0.001"
+    val streamed = StreamingQueries.lmScore(spark, dir).collect()
+    val batch = graft.operators.TextAnalysis
+      .unigramLmScore(Tables(spark, dir, "documents"))
+      .orderBy("doc_id").collect()
+    assert(streamed.nonEmpty)
+    assert(streamed.map(_.toSeq).toSeq === batch.map(_.toSeq).toSeq)
+  }
+
+  test("relaid streams with the schema a read-back of its files infers") {
+    // `range` ids are non-nullable: the written frame's schema differs
+    // from a read-back's, yet the stream must read with the latter
+    val base = s"${sys.props("java.io.tmpdir")}/graft_relaid_spec"
+    val events = spark.range(64).selectExpr("id AS event_id",
+      "id * 1000 AS ts", "CAST(id AS STRING) AS event_type")
+    assert(events.schema.forall(!_.nullable))
+    try {
+      for (byTime <- Seq(true, false)) {
+        val used = StreamingQueries.relaid(events, base, byTime).schema
+        assert(used === spark.read.parquet(s"$base/src").schema,
+          s"byTime = $byTime")
+      }
+    } finally {
+      org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
+        .delete(new org.apache.hadoop.fs.Path(base), true)
+    }
+  }
+
   test("kmvState stream equals the batch KMV sketch per group") {
     val dir = "/root/testdata/sf0.001"
     val streamed = StreamingQueries.kmvState(spark, dir).collect()
