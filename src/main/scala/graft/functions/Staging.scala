@@ -44,8 +44,9 @@ object Staging {
   /** Pin `df`'s current output as physical columns by re-basing it on its
     * own RDD — an analysis barrier `CollapseProject` (and every other
     * plan rewrite) cannot cross. Deterministic: same rows, same schema,
-    * same partitioning; only the lineage is cut. */
-  def pin(df: DataFrame): DataFrame =
+    * same partitioning; only the lineage is cut. [[stagedTransform]]'s
+    * step; the iterative loops re-base through [[Fixpoint.Rounds]]. */
+  private def pin(df: DataFrame): DataFrame =
     org.apache.spark.sql.graft.Bridge.pinInternal(df)
 
   /** Repartition to the session's shuffle-partition width so a

@@ -775,12 +775,14 @@ object FeatureEng {
       count(lit(1)).as("n"),
       sum("x").as("sx"),
       sum(col("x").cast("decimal(38,0)") * col("x")).as("sxx"))
+      // a key of its own, so a drained stream's leaf self-joins unpinned
+      .withColumnRenamed("event_type", "s_type")
     val wCum = org.apache.spark.sql.expressions.Window
       .partitionBy("event_type").orderBy("hr")
       .rowsBetween(
         org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    val cum = cells.join(broadcast(stats), "event_type")
+    val cum = cells.join(broadcast(stats), col("event_type") === col("s_type"))
       .withColumn("y", col("n") * col("x") - col("sx"))
       .withColumn("cs", sum("y").over(wCum))
     val s2 = cum.withColumn("rm", min("cs").over(wCum))

@@ -5,7 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, StructType}
 
-import graft.functions.{Fixpoint, Staging}
+import graft.CacheScope
+import graft.functions.Fixpoint
 
 /** Graph analytics over the event stream — the capability class the engine
   * lacked: degree profiles, triangle counting, and PageRank, all derived
@@ -21,25 +22,35 @@ import graft.functions.{Fixpoint, Staging}
   * cost of dropping the one boundary transition per bucket. The same
   * trade is standard in sessionization (e2) and sliding windows (e6).
   *
-  * Scale posture of the three consumers:
-  *  - degree: one groupBy per direction over 16-byte edge rows — a pair
-  *    of partial/final aggregates, no text, no skew beyond AQE's reach.
-  *  - triangles: edges are ORIENTED from the (degree, node)-smaller
-  *    endpoint to the larger before the wedge join, the classic
-  *    bound that caps per-node wedge fan-out at O(sqrt(m)) even on
-  *    power-law graphs (a raw wedge join on a hub node is quadratic in
-  *    its degree). The oracle counts the same triangles with the
+  * Every operator starts from ONE counted prep ([[prep]]): its input
+  * relation persisted and materialized by one job that observes the row
+  * count (and any other scalar the operator needs), with the round width
+  * ([[Fixpoint.rounds]]) sized from that count. The label loops (gr9,
+  * gr10, gr13, gr15) share one init ([[labelInit]]). Every persist is
+  * released before the operator returns or owned by the returned
+  * relation ([[graft.CacheScope.owns]]), so one `CacheScope.release` of
+  * the result frees it all.
+  *
+  * Scale posture of the four families:
+  *  - degrees, reciprocity, assortativity: aggregates and equi-joins over
+  *    16-byte edge rows — partial/final pairs, no text, no skew beyond
+  *    AQE's reach.
+  *  - the wedge family (triangles, clustering, neighbor Jaccard, link
+  *    prediction): edges are ORIENTED from the (degree, node)-smaller
+  *    endpoint to the larger before the wedge join ([[wedges]]), the
+  *    classic bound that caps per-node wedge fan-out at O(sqrt(m)) even
+  *    on power-law graphs. The oracle counts the same triangles with the
   *    simpler node-id orientation — the COUNT is orientation-invariant.
-  *  - PageRank: rank is a node-keyed `(node, deg, rank)` relation,
-  *    never a driver array. The preps are the edge relation with the
-  *    out-degree folded on by a window, and one `(node, deg)` aggregate
-  *    (`deg = 0` marks a dangling node). Each iteration is (edges join
-  *    ranks) shuffled on src, an aggregate on dst, and a one-row
-  *    dangling-mass relation cross-joined back in (the repo's bounded
-  *    scalar-broadcast contract). Iterations materialize via persist so
-  *    the lineage stays shallow, each with one job that also observes
-  *    the next round's dangling mass; the driver scalars are n, the
-  *    seed count and that one double per round.
+  *  - the rank loops (PageRank, personalized PageRank, HITS): node-keyed
+  *    score relations, never driver arrays; each round is an edge
+  *    equi-join plus an aggregate per half-step, materialized by one job.
+  *  - the label and frontier loops (label propagation, modularity, WCC,
+  *    k-core, BFS): one symmetrized-adjacency join plus a node-keyed
+  *    aggregate per round, with fixed-point exits on an observed metric.
+  *
+  * Every loop runs through [[Fixpoint]]: one persist and one
+  * materializing job per round on a re-based RDD, so lineage stays one
+  * round deep.
   */
 object Graph {
 
@@ -61,60 +72,54 @@ object Graph {
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
 
+  /** Both orientations `(u, v)` of the `a < b` undirected edges. */
+  private def symmetric(und: DataFrame): DataFrame =
+    und.select(col("a").as("u"), col("b").as("v"))
+      .union(und.select(col("b").as("u"), col("a").as("v")))
+
+  /** `(node, <name>)`: the number of symmetrized edges leaving each node. */
+  private def degreeOf(sym: DataFrame, name: String = "deg"): DataFrame =
+    sym.groupBy(col("u").as("node")).agg(count(lit(1)).as(name))
+
+  /** An operator's counted prep: the persisted relation, the scalars its
+    * materializing job observed (`obs(0)` is the row count `n`), and the
+    * rounds sized from `n`. */
+  private final case class Prep(rel: DataFrame, obs: Row,
+      loop: Fixpoint.Rounds) {
+    def n: Long = obs.getLong(0)
+  }
+
+  /** Persist `df` and materialize it with ONE job
+    * ([[Fixpoint.materialize]]) that observes its row count and `more`;
+    * the rounds are sized from the count (`perPartRows` as in
+    * [[Fixpoint.rounds]]). */
+  private def prep(df: DataFrame, perPartRows: Long = 0L)(
+      more: Column*): Prep = {
+    val (rel, v) = Fixpoint.materialize(df, struct(count(lit(1)) +: more: _*))
+    val obs = v.asInstanceOf[Row]
+    Prep(rel, obs, Fixpoint.rounds(df.sparkSession, obs.getLong(0), perPartRows))
+  }
+
   /** Per-node degree profile: out/in over the directed edges, und over
-    * the undirected ones. Nodes = every endpoint. */
+    * the undirected ones. Nodes = every endpoint. The joins run at the
+    * width of the counted edge relation. */
   def degrees(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    val ed0 = edges(events).persist()
-    // width from the measured edge count (r17 — these aggregates and
-    // joins carry node/edge-keyed rows only; the count doubles as the
-    // edge-cache materializer)
-    val nE = ed0.count()
-    val ed = Fixpoint.rounds(spark, nE).enter(ed0)
-    val nodes = ed.select(col("src").as("node"))
-      .union(ed.select(col("dst").as("node"))).distinct()
-    val outDeg = ed.groupBy(col("src").as("node")).agg(count(lit(1)).as("out_deg"))
-    val inDeg = ed.groupBy(col("dst").as("node")).agg(count(lit(1)).as("in_deg"))
-    val und = ed.select(least(col("src"), col("dst")).as("a"),
+    val ed = prep(edges(events))()
+    val e = ed.loop.enter(ed.rel)
+    val nodes = e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+    val outDeg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("out_deg"))
+    val inDeg = e.groupBy(col("dst").as("node")).agg(count(lit(1)).as("in_deg"))
+    val und = e.select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b")).distinct()
-    val undDeg = und.select(col("a").as("node"))
-      .union(und.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("und_deg"))
-    nodes.join(outDeg, Seq("node"), "left")
+    CacheScope.owns(nodes.join(outDeg, Seq("node"), "left")
       .join(inDeg, Seq("node"), "left")
-      .join(undDeg, Seq("node"), "left")
+      .join(degreeOf(symmetric(und), "und_deg"), Seq("node"), "left")
       .select(col("node"),
         coalesce(col("out_deg"), lit(0L)).as("out_deg"),
         coalesce(col("in_deg"), lit(0L)).as("in_deg"),
         coalesce(col("und_deg"), lit(0L)).as("und_deg"))
-      .orderBy("node")
-  }
-
-  /** Undirected degree per node over the `a<b` edge set. */
-  private def undDegrees(und: DataFrame): DataFrame =
-    und.select(col("a").as("node"))
-      .union(und.select(col("b").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-
-  /** Degree-oriented triangle relation `(x, y, z)` — one row per triangle.
-    * Every undirected edge is oriented from the `(deg, node)`-
-    * lexicographically smaller endpoint to the larger (a total order, so
-    * each triangle survives as exactly one oriented path x->y->z plus its
-    * closing edge x->z). Orientation by degree caps per-node wedge
-    * fan-out at O(sqrt(m)) even on power-law graphs. */
-  private def orientedTriangles(und: DataFrame, deg: DataFrame): DataFrame = {
-    val withDeg = und
-      .join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "da"), "a")
-      .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "db"), "b")
-    val oriented = withDeg.select(
-      when(col("da") < col("db") || (col("da") === col("db") && col("a") < col("b")),
-        struct(col("a").as("src"), col("b").as("dst")))
-        .otherwise(struct(col("b").as("src"), col("a").as("dst"))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst")).persist()
-    val e1 = oriented.select(col("src").as("x"), col("dst").as("y"))
-    val e2 = oriented.select(col("src").as("y"), col("dst").as("z"))
-    val e3 = oriented.select(col("src").as("x"), col("dst").as("z"))
-    e1.join(e2, "y").join(e3, Seq("x", "z")).select("x", "y", "z")
+      .orderBy("node"), ed.rel)
   }
 
   /** Per-edge rows-per-partition budget for the WEDGE-join family
@@ -125,26 +130,49 @@ object Graph {
     * count, never a core count (guide §2.2). */
   private val WedgeRowsPerPart = 16384L
 
+  /** The wedge family's shared prep (gr2, gr4, gr5): the undirected edges
+    * `und` counted (`m`) and entered at the wedge width, their degrees
+    * `deg`, and the degree-oriented triangle relation `tri`
+    * `(x, y, z)`, one row per triangle. Every undirected edge is
+    * oriented from the `(deg, node)`-lexicographically smaller endpoint
+    * to the larger (a total order, so each triangle survives as exactly
+    * one oriented path x->y->z plus its closing edge x->z); orientation
+    * by degree caps per-node wedge fan-out at O(sqrt(m)) even on
+    * power-law graphs. `caches` are the persisted relations a result
+    * built on these must own. */
+  private final case class Wedges(und: DataFrame, m: Long, deg: DataFrame,
+      tri: DataFrame, caches: Seq[DataFrame])
+
+  private def wedges(events: DataFrame): Wedges = {
+    val p = prep(undirected(events), WedgeRowsPerPart)()
+    val und = p.loop.enter(p.rel)
+    val deg = degreeOf(symmetric(und))
+    val oriented = und
+      .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
+      .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
+      .select(when(col("da") < col("db") ||
+          (col("da") === col("db") && col("a") < col("b")),
+        struct(col("a").as("src"), col("b").as("dst")))
+        .otherwise(struct(col("b").as("src"), col("a").as("dst"))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst")).persist()
+    def arm(s: String, d: String) =
+      oriented.select(col("src").as(s), col("dst").as(d))
+    val tri = arm("x", "y").join(arm("y", "z"), "y")
+      .join(arm("x", "z"), Seq("x", "z")).select("x", "y", "z")
+    Wedges(und, p.n, deg, tri, Seq(p.rel, oriented))
+  }
+
   /** One-row graph census: nodes, undirected edges, triangles. Wedge join
-    * over the degree-oriented edges (see [[orientedTriangles]]); the
-    * count is identical to the oracle's node-id orientation. */
+    * over the degree-oriented edges (see [[wedges]]); the count is
+    * identical to the oracle's node-id orientation. `n_edges` is the
+    * prep's observed edge count. */
   def triangles(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    val und = undirected(events).persist()
-    // the census needs the edge count anyway — counting it here also
-    // sizes the wedge join's width from the measured volume (r17, the
-    // iterative lanes' round-width treatment applied to the one-shot
-    // wedge family: at sf0.1 these exchanges carried KBs across the full
-    // session width, and the whole family ran ~1.4× faster at local[8])
-    val m = und.count()
-    val undR = Fixpoint.rounds(spark, m, WedgeRowsPerPart).enter(und)
-    val deg = undDegrees(undR)
-    val tri = orientedTriangles(undR, deg).agg(count(lit(1)).as("n_triangles"))
-    val census = deg.agg(count(lit(1)).as("n_nodes"))
-      .crossJoin(tri)
-      .select(col("n_nodes"), lit(m).as("n_edges"),
-        coalesce(col("n_triangles"), lit(0L)).as("n_triangles"))
-    census
+    val w = wedges(events)
+    CacheScope.owns(w.deg.agg(count(lit(1)).as("n_nodes"))
+      .crossJoin(w.tri.agg(count(lit(1)).as("n_triangles")))
+      .select(col("n_nodes"), lit(w.m).as("n_edges"),
+        coalesce(col("n_triangles"), lit(0L)).as("n_triangles")),
+      w.caches: _*)
   }
 
   /** Per-node local clustering coefficient
@@ -156,68 +184,52 @@ object Graph {
     * degree-oriented wedge join (bounded fan-out) feeds the same
     * numbers the oracle gets from node-id orientation. */
   def clusteringCoefficient(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    val und = undirected(events).persist()
-    // wedge-family width from the measured edge count (the [[triangles]]
-    // treatment; the count doubles as the und-cache materializer)
-    val m = und.count()
-    val undR = Fixpoint.rounds(spark, m, WedgeRowsPerPart).enter(und)
-    val deg = undDegrees(undR).persist()
-    val tri = orientedTriangles(undR, deg)
-    val perNode = tri.select(col("x").as("node"))
-      .union(tri.select(col("y").as("node")))
-      .union(tri.select(col("z").as("node")))
+    val w = wedges(events)
+    val perNode = w.tri.select(col("x").as("node"))
+      .union(w.tri.select(col("y").as("node")))
+      .union(w.tri.select(col("z").as("node")))
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
-    deg.join(perNode, Seq("node"), "left")
+    CacheScope.owns(w.deg.join(perNode, Seq("node"), "left")
       .select(col("node"), col("deg"),
         coalesce(col("n_tri"), lit(0L)).as("n_tri"),
         round(
           when(col("deg") < 2, lit(0.0))
             .otherwise(lit(2.0) * coalesce(col("n_tri"), lit(0L)) /
               (col("deg") * (col("deg") - 1))), 6).as("coeff"))
-      .orderBy("node")
+      .orderBy("node"), w.caches: _*)
   }
 
   /** Per-edge neighborhood Jaccard `|N(a)∩N(b)| / |N(a)∪N(b)|` over the
     * undirected graph — the standard link-prediction / edge-strength
     * feature. A common neighbor `z` of the adjacent pair `(a, b)` is
     * exactly a triangle `{a, b, z}`, so the counts come from the
-    * DEGREE-ORIENTED triangle relation ([[orientedTriangles]] — each
-    * triangle credits its three edges once): the per-node wedge fan-out
-    * is capped at O(√m) like gr2/gr5, where the former unoriented wedge
-    * join paid Σ deg² — measured 42s of task CPU and a 3 GB broadcast
-    * probe at sf0.1, and quadratic in hub degree at 100 TB (r16, guide
-    * §1.2 "the distributed algorithm"). The union size is
+    * DEGREE-ORIENTED triangle relation ([[wedges]] — each triangle
+    * credits its three edges once): the per-node wedge fan-out is capped
+    * at O(√m) like gr2/gr5, where the former unoriented wedge join paid
+    * Σ deg² — measured 42s of task CPU and a 3 GB broadcast probe at
+    * sf0.1, and quadratic in hub degree at 100 TB (r16, guide §1.2 "the
+    * distributed algorithm"). The union size is
     * `deg(a) + deg(b) - common` (a ∈ N(b) and b ∈ N(a), so both sides
     * already count the edge's own endpoints). */
   def neighborJaccard(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    val und0 = undirected(events).persist()
-    // wedge-family width from the measured edge count (the [[triangles]]
-    // treatment)
-    val m = und0.count()
-    val und = Fixpoint.rounds(spark, m, WedgeRowsPerPart).enter(und0)
-    val deg = undDegrees(und).persist()
-    val tri = orientedTriangles(und, deg)
-    val common = tri.select(explode(array(
-        struct(least(col("x"), col("y")).as("a"),
-          greatest(col("x"), col("y")).as("b")),
-        struct(least(col("x"), col("z")).as("a"),
-          greatest(col("x"), col("z")).as("b")),
-        struct(least(col("y"), col("z")).as("a"),
-          greatest(col("y"), col("z")).as("b")))).as("e"))
+    val w = wedges(events)
+    def pair(p: String, q: String) =
+      struct(least(col(p), col(q)).as("a"), greatest(col(p), col(q)).as("b"))
+    val common = w.tri
+      .select(explode(array(pair("x", "y"), pair("x", "z"), pair("y", "z")))
+        .as("e"))
       .select(col("e.a").as("a"), col("e.b").as("b"))
       .groupBy("a", "b").agg(count(lit(1)).as("common"))
-    und
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), "a")
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), "b")
+    CacheScope.owns(w.und
+      .join(w.deg.select(col("node").as("a"), col("deg").as("da")), "a")
+      .join(w.deg.select(col("node").as("b"), col("deg").as("db")), "b")
       .join(common, Seq("a", "b"), "left")
       .select(col("a"), col("b"), col("da"), col("db"),
         coalesce(col("common"), lit(0L)).as("common"),
         round(coalesce(col("common"), lit(0L)) /
           (col("da") + col("db") - coalesce(col("common"), lit(0L))).cast("double"),
           6).as("jaccard"))
-      .orderBy("a", "b")
+      .orderBy("a", "b"), w.caches: _*)
   }
 
   /** PageRank over the directed graph, `iters` synchronous iterations at
@@ -328,27 +340,24 @@ object Graph {
     * exceeds int64 within a few rounds — under ANSI mode Spark would
     * throw mid-round while the DuckDB twin (HUGEINT internally) raises
     * only at its final CAST, so the engines would fail differently.
-    * The loop therefore tracks `max(h)` per round (one tiny agg on the
-    * already-cached node-sized relation) and checks HEADROOM before each
-    * round against the loose-but-safe bound `max(h) · deg_max² ≤
-    * Long.MaxValue` (one round multiplies the max magnitude by at most
-    * deg_max per half-step; the check runs in BigInt so it cannot itself
-    * overflow). When headroom runs out the loop FLIPS to per-round
-    * L1-normalized doubles for the remaining rounds, seeded from the
-    * current exact state scaled by its L1 total — normalization commutes,
-    * so the flip changes representation, not direction. Same plan shape
-    * (one extra one-row total crossJoined per half-step). The registered
-    * gr12 data never flips (deg_max is small); the hot-hub flip is pinned
-    * in GraphSpec against the closed-form star-graph fixed point.
+    * Each round's materializing job therefore observes `max(h)`, and the
+    * exact phase stops once that leaves no HEADROOM for another round
+    * against the loose-but-safe bound `max(h) · deg_max² ≤ Long.MaxValue`
+    * (one round multiplies the max magnitude by at most deg_max per
+    * half-step; the check runs in BigInt so it cannot itself overflow).
+    * The remaining rounds then FLIP to per-half-step L1-normalized
+    * doubles — normalization commutes, so the flip changes
+    * representation, not direction. Same round body (one extra one-row
+    * total crossJoined per half-step). The registered gr12 data never
+    * flips (deg_max is small); the hot-hub flip is pinned in GraphSpec
+    * against the closed-form star-graph fixed point.
     *
     * Scale posture: identical to [[pagerank]] — node-keyed relations,
-    * one edge equi-join + one aggregate per half-step, ONE persist and
-    * one materializing job per round on a re-based RDD (the 2^rounds
-    * analysis-blowup discipline; the a-relation's cache fills as the
-    * h-step reads it),
-    * every prep released at exit with only the materialized result cache
-    * resident. The oracle is the identical recurrence unrolled as
-    * DuckDB CTEs. */
+    * one edge equi-join + one aggregate per half-step, the state
+    * `(node, a, h)` persisted and materialized by one job per round
+    * (the a-half is the round's temporary cache), every prep released at
+    * exit with only the materialized result cache resident. The oracle
+    * is the identical recurrence unrolled as DuckDB CTEs. */
   def hits(events: DataFrame, iters: Int = 3): DataFrame =
     hitsOnEdges(edges(events), iters)
 
@@ -358,66 +367,46 @@ object Graph {
     * compactly. */
   def hitsOnEdges(edgeRel: DataFrame, iters: Int): DataFrame = {
     val ed = edgeRel.persist()
-    val nodes = ed.select(col("src").as("node"))
-      .union(ed.select(col("dst").as("node"))).distinct().persist()
-    // loud-guard scalar (bounded artifact: one row) — max in/out degree
-    val degMax = math.max(1L,
-      ed.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-        .union(ed.groupBy(col("dst").as("node")).agg(count(lit(1)).as("d")))
-        .agg(coalesce(max("d"), lit(0L)).as("m")).head().getLong(0))
-    // flip before a round whose sums COULD overflow: one round scales the
-    // max magnitude by ≤ degMax per half-step (BigInt: the check itself
-    // cannot overflow)
+    // every node with its larger of in/out degree: ONE job materializes
+    // it (and the edge cache) and observes n and deg_max
+    val nodes = prep(ed.select(col("src").as("node"), lit(true).as("out"))
+        .union(ed.select(col("dst").as("node"), lit(false).as("out")))
+        .groupBy("node")
+        .agg(greatest(count_if(col("out")), count_if(!col("out"))).as("d")))(
+      coalesce(max("d"), lit(0L)))
+    val degMax = math.max(1L, nodes.obs.getLong(1))
     val headroom = BigInt(Long.MaxValue) / (BigInt(degMax) * BigInt(degMax))
-    // right-sized round width (r17) — the [[pagerank]] treatment: the
-    // half-step exchanges carry node-keyed score rows and the edge
-    // relation; width derives from the measured node count (the degMax
-    // job above already materialized the edge cache)
-    val loop = Fixpoint.rounds(edgeRel.sparkSession, nodes.count())
-    val nodesR = loop.enter(nodes)
+    val loop = nodes.loop
     val edR = loop.enter(ed)
-    // the guard's max(h) rides each round's materializing job — zero
-    // extra jobs (h sums non-negative terms: max == |max|)
-    val hMaxOf = Fixpoint.Metric.observed[Long](
-      coalesce(max(col("h")), lit(0L)))
-    var hub = nodesR.select(col("node"), lit(1L).as("h")).persist()
-    var auth: DataFrame = null
-    var hMax = 1L
-    var done = 0
-    while (done < iters && BigInt(hMax) <= headroom) {
-      val aRaw = edR.join(hub, edR("src") === hub("node"))
-        .groupBy(col("dst").as("node")).agg(sum("h").as("a"))
-      val nextA = loop.pin(nodesR.join(aRaw, Seq("node"), "left")
-          .select(col("node"), coalesce(col("a"), lit(0L)).as("a")))
-        .persist() // populated when the h-step below first reads it
-      val hRaw = edR.join(nextA, edR("dst") === nextA("node"))
-        .groupBy(col("src").as("node")).agg(sum("a").as("h"))
-      // one job materializes nextA and nextH
-      val h = loop.step(nodesR.join(hRaw, Seq("node"), "left")
-          .select(col("node"), coalesce(col("h"), lit(0L)).as("h")),
-        hMaxOf, Option(auth).toSeq :+ hub)
-      auth = nextA
-      hub = h.state
-      hMax = h.value
-      done += 1
+    // one half-step: `out` of every node of `cur` sums its neighbors' `in`
+    // (a: over in-edges from hubs; h: over out-edges to authorities),
+    // L1-normalized when `norm` (a flipped round)
+    def half(cur: DataFrame, in: String, out: String, keep: Seq[String],
+        norm: Boolean): DataFrame = {
+      val (on, by) = if (out == "a") ("src", "dst") else ("dst", "src")
+      val raw = edR.join(cur.select(col("node").as(on), col(in)), on)
+        .groupBy(col(by).as("node"))
+        .agg(sum(if (norm) col(in).cast("double") else col(in)).as(out))
+      val v = coalesce(col(out), lit(0L))
+      val kept = ("node" +: keep).map(col)
+      val all = cur.select(kept: _*).join(raw, Seq("node"), "left")
+      if (norm) all.crossJoin(raw.agg(sum(out).as("tot")))
+        .select(kept :+ (v / col("tot")).as(out): _*)
+      else all.select(kept :+ v.as(out): _*)
     }
-    if (done == iters) {
-      // exact path ran to completion: normalize once at the end
-      val aTot = auth.agg(sum("a").as("a_tot"))
-      val hTot = hub.agg(sum("h").as("h_tot"))
-      val res = Staging.pin(hub
-        .join(auth, Seq("node"))
-        .crossJoin(hTot).crossJoin(aTot)
-        .select(col("node"),
-          round(col("h").cast("double") / col("h_tot"), 9).as("hub"),
-          round(col("a").cast("double") / col("a_tot"), 9).as("authority"))
-        .orderBy("node")).persist()
-      res.count()
-      Seq(ed, nodes, hub, auth).foreach(_.unpersist())
-      graft.CacheScope.owns(res, res) // result IS the cached relation
-    } else {
-      // AUTO-FLIP: seed per-round-normalized doubles from the exact state
-      // (divide by its L1 total — commutes with the remaining sums).
+    def halves(norm: Boolean)(cur: DataFrame, r: Int,
+        prev: Option[Long]): Fixpoint.Round = {
+      val a = half(cur, "h", "a", Nil, norm).persist()
+      Fixpoint.Round(half(a, "a", "h", Seq("a"), norm), Seq(a))
+    }
+    val exact = loop.iterate(
+        loop.enter(nodes.rel).select(col("node"), lit(0L).as("a"), lit(1L).as("h")),
+        if (headroom < 1) 0 else iters,
+        Fixpoint.Metric.observed[Long](coalesce(max(col("h")), lit(0L))),
+        seed = Some(1L), initCaches = Seq(nodes.rel))(halves(norm = false))(
+      (_, hMax) => BigInt(hMax) > headroom)
+    val flipped = exact.rounds < iters
+    val last = if (!flipped) exact else {
       // LOUD by design (ADVICE r11 #4): the DuckDB oracle twin
       // (GraphSql.hits) unrolls the exact integer recurrence with no such
       // flip, so on a registered dataset the flipped result diverges from
@@ -427,50 +416,22 @@ object Graph {
       // hub-heavy enough to trip the headroom guard and the gr12 oracle
       // needs a matching float unroll BEFORE the round's gate run.
       System.err.println(s"[graft] hitsOnEdges OVERFLOW AUTO-FLIP after " +
-        s"$done exact rounds (deg_max=$degMax, h_max=$hMax): continuing " +
+        s"${exact.rounds} exact rounds (deg_max=$degMax): continuing " +
         "in per-round-normalized doubles; exact-integer oracle twins " +
         "(gr12_hits) will NOT match this result")
-      val hTot0 = hub.agg(sum("h").as("tot"))
-      var hubD = Staging.pin(hub.crossJoin(hTot0)
-        .select(col("node"),
-          (col("h").cast("double") / col("tot").cast("double")).as("h")))
-        .persist()
-      hubD.count()
-      hub.unpersist()
-      if (auth != null) auth.unpersist()
-      var authD: DataFrame = null
-      ((done + 1) to iters).foreach { _ =>
-        val aRaw = ed.join(hubD, ed("src") === hubD("node"))
-          .groupBy(col("dst").as("node")).agg(sum("h").as("a"))
-        val aTot = aRaw.agg(sum("a").as("tot"))
-        val nextA = Staging.pin(nodes.join(aRaw, Seq("node"), "left")
-          .crossJoin(aTot)
-          .select(col("node"),
-            (coalesce(col("a"), lit(0.0)) / col("tot")).as("a")))
-          .persist()
-        val hRaw = ed.join(nextA, ed("dst") === nextA("node"))
-          .groupBy(col("src").as("node")).agg(sum("a").as("h"))
-        val hTot = hRaw.agg(sum("h").as("tot"))
-        val nextH = Staging.pin(nodes.join(hRaw, Seq("node"), "left")
-          .crossJoin(hTot)
-          .select(col("node"),
-            (coalesce(col("h"), lit(0.0)) / col("tot")).as("h")))
-          .persist()
-        nextH.count()
-        if (authD != null) authD.unpersist()
-        authD = nextA
-        hubD.unpersist()
-        hubD = nextH
-      }
-      // per-half-step normalization means the final state is already L1
-      val res = Staging.pin(hubD.join(authD, Seq("node"))
-        .select(col("node"), round(col("h"), 9).as("hub"),
-          round(col("a"), 9).as("authority"))
-        .orderBy("node")).persist()
-      res.count()
-      Seq(ed, nodes, hubD, authD).foreach(_.unpersist())
-      graft.CacheScope.owns(res, res) // result IS the cached relation
+      loop.iterate(exact.state, iters - exact.rounds, Fixpoint.Metric.rows,
+        initCaches = exact.caches)(halves(norm = true))((_, _) => false)
     }
+    // the exact state normalizes once here; a flipped one already is L1
+    def norm(c: String) =
+      round(if (flipped) col(c) else col(c).cast("double") / col(s"${c}_tot"), 9)
+    val fin = if (flipped) last.state else last.state.crossJoin(
+      last.state.agg(sum("h").as("h_tot"), sum("a").as("a_tot")))
+    val res = loop.step(fin.select(col("node"), norm("h").as("hub"),
+        norm("a").as("authority")).orderBy("node"),
+      release = last.caches).state
+    ed.unpersist()
+    CacheScope.owns(res, res) // result IS the cached relation
   }
 
   /** Link prediction over the interaction graph — Adamic–Adar scores
@@ -486,30 +447,24 @@ object Graph {
     * edges, a degree equi-join for the weights, one bounded top-k. A
     * common neighbor has degree ≥ 2 by construction, so ln(deg) never
     * hits zero; the `deg > 1` guard pins that invariant in the plan. */
-  def linkPrediction(events: DataFrame, topK: Int = 20): DataFrame = {
-    // und is persisted for the THREE reads below (two symmetrized arms +
-    // the anti-join) and released BEFORE return: the result is bounded
+  def linkPrediction(events: DataFrame, topK: Int = 20): DataFrame =
+    // und is loaned for the THREE reads of the plan (two symmetrized arms
+    // + the anti-join) and released BEFORE return: the result is bounded
     // (topK rows) so the operator finalizes it eagerly — the top-k merge
-    // already lands topK rows on the driver, the same bounded-artifact
-    // contract as the PQ codebooks — and hands back a local relation,
-    // leaving NO resident cache behind (r9 verdict ask #6: the graph
-    // lane must not rely on the harness's clearCache for its prep
-    // relations).
-    val und = undirected(events).persist()
-    val plan = linkPredictionOver(und, topK)
-    val top = plan.collect() // bounded: at most topK rows
-    und.unpersist()
-    import scala.jdk.CollectionConverters._
-    events.sparkSession.createDataFrame(top.toSeq.asJava, plan.schema)
-  }
+    // already lands topK rows on the driver — and hands back a local
+    // relation, leaving NO resident cache behind
+    CacheScope.loan(undirected(events)) { und =>
+      val plan = linkPredictionOver(und, topK)
+      import scala.jdk.CollectionConverters._
+      events.sparkSession.createDataFrame(plan.collect().toSeq.asJava, plan.schema)
+    }
 
   /** The distributed top-k plan [[linkPrediction]] executes — exposed so
     * the plan audit can pin the shape that actually runs (the public
     * operator finalizes it to a bounded local relation). */
   private[graft] def linkPredictionOver(und: DataFrame, topK: Int): DataFrame = {
-    val sym = und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b").as("u"), col("a").as("v")))
-    val deg = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
+    val sym = symmetric(und)
+    val deg = degreeOf(sym)
     // SHAPE KEPT AS-IS after an r16 measured-and-rejected rework (guide
     // §1.1's "the ideal plan is usually slower at first" case): pushing
     // deg(z) onto the wedge-center arm pre-expansion and aggregating
@@ -556,24 +511,17 @@ object Graph {
     * frontier⋈edges equi-join plus a min-aggregate; the distance relation
     * is node-keyed, never a driver structure, and each level persists so
     * lineage stays one hop deep (the pagerank discipline). The frontier
-    * join shuffles only the CURRENT level's nodes. The oracle walks the
-    * same levels as a recursive CTE with a min-dist collapse — path
-    * enumeration is the oracle's cost, not the operator's: the relational
-    * loop never materializes paths. */
+    * join shuffles only the CURRENT level's nodes, but the rounds are
+    * sized by the SYMMETRIZED EDGE count (the per-level join's true
+    * volume: the frontier is small but its edge expansion is not). The
+    * oracle walks the same levels as a recursive CTE with a min-dist
+    * collapse — path enumeration is the oracle's cost, not the
+    * operator's: the relational loop never materializes paths. */
   def bfsHops(events: DataFrame, seedPred: Column, hops: Int = 3): DataFrame = {
-    val spark = events.sparkSession
-    val und = undirected(events).persist()
-    val sym = und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b").as("u"), col("a").as("v"))).persist()
-    // right-sized round width (r17) — the [[connectedComponents]]
-    // treatment, sized by the SYMMETRIZED EDGE count (the per-level join's
-    // true volume: the frontier is small but its edge expansion is not);
-    // the count also materializes the und cache sym reads all loop long
-    val nEdges = 2L * und.count()
-    val loop = Fixpoint.rounds(spark, nEdges)
-    val symR = loop.enter(sym)
-    val nodes = symR.select(col("u").as("node")).distinct()
-    val dist0 = nodes.where(seedPred)
+    val sym = prep(symmetric(undirected(events)))()
+    val loop = sym.loop
+    val symR = loop.enter(sym.rel)
+    val dist0 = symR.select(col("u").as("node")).distinct().where(seedPred)
       .select(col("node"), lit(0).as("dist")).persist()
     // EMPTY-FRONTIER EARLY EXIT (r16): `dist` only ever GROWS (union +
     // min keeps every existing node at its first-seen hop), so an
@@ -589,12 +537,9 @@ object Graph {
       Fixpoint.Round(cur.union(next)
         .groupBy("node").agg(min(col("dist")).as("dist")))
     }(_ == _)
-    // dist is cached and materialized; the edge caches are dead weight
-    // past the loop (r8 advice #4). dist itself stays persisted for the
-    // consumer and is released by the harness's per-query clearCache.
-    sym.unpersist()
-    und.unpersist()
-    graft.CacheScope.owns(dist.state.orderBy("node"), dist.caches: _*)
+    // dist is cached and materialized; the edge cache is dead weight
+    sym.rel.unpersist()
+    CacheScope.owns(dist.state.orderBy("node"), dist.caches: _*)
   }
 
   /** Personalized PageRank (Page et al. 1999 §6; the "random walk with
@@ -618,6 +563,18 @@ object Graph {
       d: Double = 0.85): DataFrame =
     rankLoop(events, Some(seedPred), iters, d)
 
+  /** The label loops' init (gr9, gr10, gr13, gr15): the symmetrized edges
+    * persisted, and `(node, deg, label = node)` materialized by ONE job
+    * that observes the node count (the round width), the exact label sum
+    * (`obs(1)`: it seeds the fixed-point test, so an input that is
+    * already converged stops after round 1) and Σ deg = 2·|und|
+    * (`obs(2)`). */
+  private def labelInit(events: DataFrame): (DataFrame, Prep) = {
+    val sym = symmetric(undirected(events)).persist()
+    (sym, prep(degreeOf(sym).withColumn("label", col("node")))(
+      Fixpoint.labelSum.agg, sum("deg")))
+  }
+
   /** Bounded-round community detection by synchronous min-label
     * propagation: every node starts labeled with its own id, and each
     * round takes the min over itself and its neighbors' previous labels.
@@ -633,34 +590,22 @@ object Graph {
     * aggregate per round over node-keyed relations; a per-round persist
     * materialized by one job keeps lineage one step deep (the [[pagerank]]
     * discipline), and labels are integers so the cross-engine match is
-    * exact, not rounded. */
+    * exact, not rounded. FIXED-POINT EARLY EXIT (r16): synchronous
+    * min-label propagation is monotone — a round that changes zero labels
+    * is the fixed point and every remaining round recomputes the
+    * identical relation, so exiting early is bit-identical to the full
+    * `iters` unroll; detection is the exact label sum observed on each
+    * materializing job. */
   def labelPropagation(events: DataFrame, iters: Int = 4): DataFrame = {
-    val und = undirected(events).persist()
-    val sym = und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b").as("u"), col("a").as("v"))).persist()
-    val nodes = sym.select(col("u").as("node")).distinct()
-    val lab = nodes.select(col("node"), col("node").as("label")).persist()
-    // materialize for the round-width decision below; round 1 reads the
-    // warm cache instead of paying this scan itself, so the extra job is
-    // the bounded count alone
-    val nNodes = lab.count()
-    // right-sized round width (r17, VERDICT r16 #3 / guide §2.2) — the
-    // [[connectedComponents]] treatment: per-round exchanges of the
-    // node-keyed label relation run at a width derived from the measured
-    // node count
-    val loop = Fixpoint.rounds(events.sparkSession, nNodes)
+    val (sym, init) = labelInit(events)
+    val loop = init.loop
     val symR = loop.enter(sym)
-    // FIXED-POINT EARLY EXIT (r16): synchronous min-label propagation is
-    // monotone — a round that changes zero labels is the fixed point and
-    // every remaining round recomputes the identical relation, so exiting
-    // early is bit-identical to the full `iters` unroll. Detection (r17):
-    // the exact label sum observed on the materializing job.
-    val labels = loop.iterate(loop.rebase(lab), iters, Fixpoint.labelSum,
-        initCaches = Seq(lab)) { (cur, _, _) =>
-      Fixpoint.Round(minLabelRound(symR, cur))
+    val labels = loop.iterate(loop.rebase(init.rel), iters, Fixpoint.labelSum,
+        seed = Some(init.obs.getDecimal(1)), initCaches = Seq(init.rel)) {
+      (cur, _, _) => Fixpoint.Round(minLabelRound(symR, cur))
     }(Fixpoint.sameSum)
-    Seq(und, sym).foreach(_.unpersist())
-    graft.CacheScope.owns(
+    sym.unpersist()
+    CacheScope.owns(
       labels.state.select(col("node"), col("label").as("community"))
         .orderBy("node"),
       labels.caches: _*)
@@ -703,7 +648,6 @@ object Graph {
         least(col("l1.label"), col("jl")).as("label"))
     Fixpoint.Round(jumped, Seq(prop))
   }
-
   /** Modularity TRAJECTORY of [[labelPropagation]] — Newman–Girvan `Q`
     * of the assignment after each min-label round, the "when to stop"
     * diagnostic a bounded-budget community pass consults: on the dense
@@ -732,27 +676,22 @@ object Graph {
     require(iters >= 1, s"iters must be >= 1: $iters")
     val spark = events.sparkSession
     import spark.implicits._
-    val und = undirected(events)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mEdges = und.count().toDouble
-    // an empty edge relation has no defined Q (every term divides by m);
-    // return the empty trajectory instead of iters rows of NaN (ADVICE r14)
-    if (mEdges == 0) {
-      und.unpersist(false)
-      return Seq.empty[(Long, Long, Long, Long, Double)]
-        .toDF("round", "n_communities", "intra_edges", "deg_sq_sum", "q")
+    // the shared init: its degrees feed S2, and m = Σ deg / 2
+    val (sym, init) = labelInit(events)
+    def trajectory(rows: Seq[(Long, Long, Long, Long, Double)]): DataFrame = {
+      Seq(sym, init.rel).foreach(_.unpersist(false))
+      // rounding through Spark's own round() — the engine-matched
+      // convention every rounded double in this library goes through
+      rows.toDF("round", "n_communities", "intra_edges", "deg_sq_sum", "q")
         .select(col("round"), col("n_communities"), col("intra_edges"),
           col("deg_sq_sum"), round(col("q"), 9).as("modularity"))
+        .orderBy("round")
     }
-    val sym = und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b").as("u"), col("a").as("v")))
-    val deg = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val lab0 = Staging.pin(sym.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))).persist()
-    val nNodes = lab0.count()
-    // right-sized round width (r17) — the [[labelPropagation]] treatment
-    val loop = Fixpoint.rounds(spark, nNodes)
+    // an empty edge relation has no defined Q (every term divides by m);
+    // return the empty trajectory instead of iters rows of NaN (ADVICE r14)
+    if (init.n == 0) return trajectory(Nil)
+    val mEdges = (init.obs.getLong(2) / 2).toDouble
+    val loop = init.loop
     val symR = loop.enter(sym)
     // every round's label relation stays cached until the ONE stats
     // collect at the end: the per-round stats are built lazily and
@@ -764,31 +703,30 @@ object Graph {
     // no round releases its predecessor.
     val labs = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     // FIXED-POINT EARLY EXIT (r16, the [[labelPropagation]] treatment):
-    // min-label propagation is monotone, so a round that changes zero
-    // labels fixes every later round's assignment — their Q rows are
-    // IDENTICAL to the fixed round's and are synthesized driver-side
-    // below (same integers, same division) instead of re-running the
-    // three stats joins per no-op round. Detection is the exact label
-    // sum observed on each round's materializing job.
-    var cur = loop.rebase(lab0)
-    var prevSum: Option[java.math.BigDecimal] = None
+    // a round that changes zero labels fixes every later round's
+    // assignment — their Q rows are IDENTICAL to the fixed round's and
+    // are synthesized driver-side below (same integers, same division)
+    // instead of re-running the three stats joins per no-op round.
+    var cur = loop.rebase(init.rel)
+    var prevSum = init.obs.getDecimal(1)
     var fixed = false
     while (labs.size < iters && !fixed) {
       val s = loop.step(minLabelRound(symR, cur), Fixpoint.labelSum)
-      fixed = prevSum.exists(Fixpoint.sameSum(_, s.value))
-      prevSum = Some(s.value)
+      fixed = Fixpoint.sameSum(prevSum, s.value)
+      prevSum = s.value
       labs += s.state
       cur = s.state
     }
     val statsDf = labs.zipWithIndex.map { case (l, i) =>
-      val byComm = deg.join(l.select(col("node"), col("label")), "node")
+      val byComm = init.rel.select("node", "deg")
+        .join(l.select(col("node"), col("label")), "node")
         .groupBy("label")
         .agg(sum("deg").cast("long").as("ds"))
       val agg = byComm.agg(count(lit(1)).as("nc"),
         sum(col("ds") * col("ds")).cast("long").as("s2"))
-      val it = und
-        .join(l.select(col("node").as("a"), col("label").as("la")), "a")
-        .join(l.select(col("node").as("b"), col("label").as("lb")), "b")
+      val it = sym.where(col("u") < col("v"))
+        .join(l.select(col("node").as("u"), col("label").as("la")), "u")
+        .join(l.select(col("node").as("v"), col("label").as("lb")), "v")
         .where(col("la") === col("lb"))
         .agg(count(lit(1)).as("it"))
       agg.crossJoin(it).select(lit(i + 1).cast("long").as("round"),
@@ -799,22 +737,13 @@ object Graph {
       val q = it / mEdges - s2.toDouble / (4.0 * mEdges * mEdges)
       (r.getLong(0), r.getLong(1), it, s2, q)
     }.sortBy(_._1)
+    labs.foreach(_.unpersist(false))
     // post-fixed-point rounds: the assignment is frozen, so each row is
     // the fixed round's stats under its own round number — exact, not
     // an approximation (the labels ARE identical)
-    val rows = measured ++ ((labs.size + 1) to iters).map { rn =>
-      val last = measured.last
-      (rn.toLong, last._2, last._3, last._4, last._5)
-    }
-    (labs :+ lab0 :+ und :+ deg).foreach(_.unpersist(false))
-    import spark.implicits._
-    // rounding through Spark's own round() — the engine-matched
-    // convention every rounded double in this library goes through
-    rows.toDF("round", "n_communities", "intra_edges", "deg_sq_sum", "q")
-      .select(col("round").cast("bigint").as("round"),
-        col("n_communities"), col("intra_edges"), col("deg_sq_sum"),
-        round(col("q"), 9).as("modularity"))
-      .orderBy("round")
+    trajectory(measured ++ ((labs.size + 1) to iters).map { rn =>
+      measured.last.copy(_1 = rn.toLong)
+    })
   }
 
   /** Weakly connected components, run TO CONVERGENCE — the full-closure
@@ -829,8 +758,10 @@ object Graph {
     * O(log diameter) rounds rather than O(diameter): the
     * [[Dedup.nearDupClusters]] recipe applied to the interaction graph.
     * Each round re-bases on its own RDD (flat logical plans), persists,
-    * materializes via the convergence count, and unpersists its
-    * predecessor — the [[kCore]]/[[pagerank]] cache lifecycle.
+    * materializes with one job that observes the exact label sum, and
+    * unpersists its predecessor — the [[kCore]]/[[pagerank]] cache
+    * lifecycle. The init's label sum seeds the fixed-point test, so an
+    * input that is already converged (no edges) stops after round 1.
     *
     * The DuckDB twin unrolls 10 jumped rounds — enough for any diameter
     * ≤ 2¹⁰, far above the registered corpora (the hour-chained events
@@ -839,35 +770,18 @@ object Graph {
     *
     * Scale posture: per round, one edge-relation join + node-keyed
     * aggregate and one label-relation self-join — nothing
-    * single-partition, nothing driver-side but the one convergence
-    * count per round. */
+    * single-partition, nothing driver-side but the one label sum per
+    * round. */
   def connectedComponents(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    val und = undirected(events).persist()
-    val sym = und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b").as("u"), col("a").as("v"))).persist()
-    // ONE job materializes the initial labels and observes their count
-    // and label sum; the sum seeds the fixed-point test, so an input that
-    // is already converged (no edges) stops after round 1
-    val (labels0, init) = Fixpoint.materialize(
-      Staging.pin(sym.select(col("u").as("node")).distinct()
-        .withColumn("label", col("node"))),
-      struct(count(lit(1)), Fixpoint.labelSum.agg))
-    val c = init.asInstanceOf[Row]
-    val nNodes = c.getLong(0)
-    // RIGHT-SIZED ROUND WIDTH (r17, VERDICT r16 #3 / guide §2.2): the
-    // per-round exchanges carry the node-keyed labels, now counted
-    val loop = Fixpoint.rounds(spark, nNodes)
+    val (sym, init) = labelInit(events)
+    val loop = init.loop
     val symR = loop.enter(sym)
-    // FIXED-POINT DETECTION BY LABEL-SUM (r17, VERDICT r16 #2 on gr13):
-    // zero extra jobs, and no r16 `__old` column through the per-round
-    // persists and the pointer-jump exchange
-    val labels = loop.iterate(loop.rebase(labels0), Int.MaxValue,
-        Fixpoint.labelSum, seed = Some(c.getDecimal(1)),
-        initCaches = Seq(labels0)) { (cur, _, _) =>
+    val labels = loop.iterate(loop.rebase(init.rel), Int.MaxValue,
+        Fixpoint.labelSum, seed = Some(init.obs.getDecimal(1)),
+        initCaches = Seq(init.rel)) { (cur, _, _) =>
       minLabelJumpRound(symR, cur)
     }(Fixpoint.sameSum)
-    Seq(und, sym).foreach(_.unpersist(false))
+    sym.unpersist(false)
     // converged is structurally true here — the loop above exits only
     // when a round changes zero labels. The column exists so the SQL
     // twin's FIXED unroll carries the same flag derived from its own
@@ -875,7 +789,7 @@ object Graph {
     // flag to false and the cross-engine mismatch names its cause
     // instead of presenting as an inscrutable label diff (the kCore
     // convention).
-    graft.CacheScope.owns(
+    CacheScope.owns(
       labels.state.select(col("node"), col("label").as("component"),
           lit(true).as("converged"))
         .orderBy("node"),
@@ -892,25 +806,19 @@ object Graph {
     *
     * Exact integers end to end: one LEFT SEMI self-join of the distinct
     * edge relation against its own reversal (edge-keyed equi-join — the
-    * exchange carries 16-byte pairs), two counts, one division at the
-    * end. The edge relation persists once for its two consumers (the
-    * [[degrees]] lifecycle: at most the prep relation stays resident). */
+    * exchange carries 16-byte pairs), the prep's observed edge count
+    * (`n_edges`), one division at the end. */
   def reciprocity(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    val ed0 = edges(events).persist()
-    // the total the verdict needs IS the measured edge count — one job
-    // materializes the cache, sizes the self-join width, and supplies
-    // n_edges (r17)
-    val nE = ed0.count()
-    val ed = Fixpoint.rounds(spark, nE).enter(ed0)
-    val rev = ed.select(col("dst").as("src"), col("src").as("dst"))
-    val recip = ed.join(rev, Seq("src", "dst"), "left_semi")
+    val ed = prep(edges(events))()
+    val e = ed.loop.enter(ed.rel)
+    val nE = lit(ed.n)
+    CacheScope.owns(e.join(e.select(col("dst").as("src"), col("src").as("dst")),
+        Seq("src", "dst"), "left_semi")
       .agg(count(lit(1)).as("n_reciprocal"))
-    recip
-      .select(lit(nE).as("n_edges"), col("n_reciprocal"),
-        round(when(lit(nE) > 0,
-          col("n_reciprocal").cast("double")
-            / lit(nE).cast("double")), 6).as("reciprocity"))
+      .select(nE.as("n_edges"), col("n_reciprocal"),
+        round(when(nE > 0,
+          col("n_reciprocal").cast("double") / nE.cast("double")), 6)
+          .as("reciprocity")), ed.rel)
   }
 
   /** Bounded-round k-core peeling (Seidman 1983's cores via the standard
@@ -928,18 +836,13 @@ object Graph {
     * Scale posture: per round, two alive-set equi-joins against the
     * symmetrized edges and one count aggregate — node-keyed relations,
     * one persist per round ([[pagerank]] discipline), never a driver
-    * structure beyond the two survivor COUNTS the flag needs. */
+    * structure beyond the two survivor COUNTS the flag needs. The alive
+    * set starts as the label init's nodes; the result is materialized by
+    * one more step while the edge cache is hot, then every prep is
+    * released, so the one resident cache is the result itself. */
   def kCore(events: DataFrame, k: Int = 3, rounds: Int = 6): DataFrame = {
-    val spark = events.sparkSession
-    val und = undirected(events).persist()
-    val sym = und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b").as("u"), col("a").as("v"))).persist()
-    val alive = sym.select(col("u").as("node")).distinct().persist()
-    val nAlive = alive.count()
-    // right-sized round width (r17) — the [[connectedComponents]]
-    // treatment: the peeling rounds' alive-set joins run at a width
-    // derived from the measured node count
-    val loop = Fixpoint.rounds(spark, nAlive)
+    val (sym, init) = labelInit(events)
+    val loop = init.loop
     val symR = loop.enter(sym)
     def coreDeg(a: DataFrame): DataFrame = symR
       .join(a.withColumnRenamed("node", "u"), "u")
@@ -952,25 +855,18 @@ object Graph {
     // sym⋈alive⋈alive + aggregate + persist job) with a bit-identical
     // result and the same `converged` flag the full unroll reports; a
     // graph still peeling at round `rounds` runs every round, unchanged.
-    val core = loop.iterate(loop.rebase(alive), rounds, Fixpoint.Metric.rows,
-        seed = Some(nAlive), initCaches = Seq(alive)) { (cur, _, _) =>
+    val core = loop.iterate(loop.rebase(init.rel.select("node")), rounds,
+        Fixpoint.Metric.rows, seed = Some(init.n),
+        initCaches = Seq(init.rel)) { (cur, _, _) =>
       Fixpoint.Round(coreDeg(cur).where(col("deg") >= k).select("node"))
     }(_ == _)
     // zero rounds compare the initial count with itself
     val converged = core.converged || core.rounds == 0
-    // Eager-materialize-then-release (r9 verdict ask #6): the result is
-    // core-node-sized — smaller than the edge-sized preps — so it is
-    // rebased onto its own RDD, persisted, and materialized while sym's
-    // cache is hot; THEN every prep relation is unpersisted. The one
-    // resident cache left is the result itself (released by the caller
-    // or the harness clearCache); recompute after eviction re-derives
-    // through the rebased RDD without needing the dropped preps' caches.
-    val result = loop.pin(coreDeg(core.state)
+    val result = loop.step(coreDeg(core.state)
       .select(col("node"), col("deg"), lit(converged).as("converged"))
-      .orderBy("node")).persist()
-    result.count()
-    (Seq(und, sym) ++ core.caches).foreach(_.unpersist())
-    graft.CacheScope.owns(result, result) // result IS the cached relation
+      .orderBy("node"), release = core.caches).state
+    sym.unpersist()
+    CacheScope.owns(result, result) // result IS the cached relation
   }
 
   /** Degree assortativity (Newman 2002): the Pearson correlation of
@@ -983,21 +879,15 @@ object Graph {
     *
     * Scale posture: one degree aggregate, two bounded degree equi-joins
     * onto the edge relation, one co-moment `corr` partial/final pair —
-    * no iteration, no window. The correlation is sum-order-dependent in
-    * the last ulps (the w9_autocorr precedent); rounding to 6 decimals
-    * absorbs it on both engines. */
+    * no iteration, no window. The width comes from the counted edge
+    * relation; every sum here is an integer-valued double < 2^53, so the
+    * result is summation-order-exact at ANY width. The correlation is
+    * sum-order-dependent in the last ulps (the w9_autocorr precedent);
+    * rounding to 6 decimals absorbs it on both engines. */
   def assortativity(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    val und = undirected(events).persist()
-    // width from the measured edge count (r17, the [[degrees]] treatment;
-    // every sum here is an integer-valued double < 2^53, so the result is
-    // summation-order-exact at ANY width). The count doubles as the
-    // und-cache materializer.
-    val m = und.count()
-    val undR = Fixpoint.rounds(spark, m).enter(und)
-    val sym = undR.select(col("a").as("u"), col("b").as("v"))
-      .union(undR.select(col("b").as("u"), col("a").as("v")))
-    val deg = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
+    val und = prep(undirected(events))()
+    val sym = symmetric(und.loop.enter(und.rel))
+    val deg = degreeOf(sym)
     // Pearson from explicit co-moment sums rather than corr(): a REGULAR
     // graph has zero degree variance, where ANSI-mode corr() throws
     // DIVIDE_BY_ZERO and the oracle engine returns NULL — the explicit
@@ -1007,7 +897,7 @@ object Graph {
     // streaming co-moment corr comfortably within the 6-decimal round.
     val x = col("du").cast("double")
     val y = col("dv").cast("double")
-    sym
+    CacheScope.owns(sym
       .join(deg.select(col("node").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), "v")
       .agg(
@@ -1023,7 +913,7 @@ object Graph {
         when(varx <= 0 || vary <= 0, lit(null))
           .otherwise(round(covn / sqrt(varx * vary), 6))
           .as("assortativity")
-      })
+      }), und.rel)
   }
 }
 

@@ -263,16 +263,18 @@ object Sampling {
       keepPct: Int = 25, nShards: Int = 8): DataFrame = {
     require(keepPct > 0 && keepPct <= 100, s"keepPct in (0,100]: $keepPct")
     require(nShards > 0, s"nShards must be positive: $nShards")
+    val weights = TextAnalysis.dsirWeights(docs, targetPred)
     val (rankedAll, nCand) = Ranks.withGlobalRank(
-      TextAnalysis.dsirWeights(docs, targetPred),
-      Seq(desc("log_ratio"), col("doc_id")), "rnk")
+      weights, Seq(desc("log_ratio"), col("doc_id")), "rnk")
     val ranked = rankedAll.where(col("rnk") <= lit(nCand * keepPct / 100))
-    ranked
-      .select(col("doc_id"), col("log_ratio"), rowHash(col("doc_id")).as("h"))
-      .withColumn("shard", (col("h") % nShards).cast("int"))
-      .withColumn("pos", row_number().over(
-        Window.partitionBy("shard").orderBy("h", "doc_id")))
-      .select("doc_id", "log_ratio", "shard", "pos")
+    // the result owns the weights' fold and the rank's sorted base
+    graft.CacheScope.transfer(weights, graft.CacheScope.transfer(rankedAll,
+      ranked
+        .select(col("doc_id"), col("log_ratio"), rowHash(col("doc_id")).as("h"))
+        .withColumn("shard", (col("h") % nShards).cast("int"))
+        .withColumn("pos", row_number().over(
+          Window.partitionBy("shard").orderBy("h", "doc_id")))
+        .select("doc_id", "log_ratio", "shard", "pos")))
   }
 
   /** Fixed-size weighted sample WITHOUT replacement (Efraimidis &

@@ -1194,9 +1194,14 @@ object TextAnalysis {
     * Count the fold, then the face: [[dsirFold]] tokenizes and explodes
     * the corpus once, and [[dsirFace]] collects both models from it and
     * scores the candidates in one aggregate — the finish st15 runs on
-    * its drained counts. */
-  def dsirWeights(docs: DataFrame, targetPred: Column): DataFrame =
-    dsirFace(dsirFold(docs, targetPred))
+    * its drained counts. The face reads the fold twice (the collected
+    * model and the candidate rows), so the fold is persisted once and
+    * owned by the returned relation: the documents are scanned and
+    * tokenized once. */
+  def dsirWeights(docs: DataFrame, targetPred: Column): DataFrame = {
+    val fold = dsirFold(docs, targetPred).persist()
+    graft.CacheScope.owns(dsirFace(fold), fold)
+  }
 
   /** The DSIR fold: `(doc_id, in_target, kind, key, c)` counts from ONE
     * tokenize pass and ONE explode, where `kind` tags unigram (`u`) vs

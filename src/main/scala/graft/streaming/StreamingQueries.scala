@@ -1066,13 +1066,10 @@ object StreamingQueries {
     val counts = eventStream(spark, dir, maxFilesPerTrigger = Some(2))
       .groupBy(col("event_type"), expr("ts div 3600000000000").as("hr"))
       .agg(cnt(lit(1)).as("x"))
-    // the face self-joins its cells (per-type stats fold back onto the
-    // cell relation) and MemoryPlan leaves can't deduplicate attribute
-    // ids across a self-join — re-base the drained state onto its own
-    // RDD (a LogicalRDD leaf analyzes like any batch relation)
-    val drained = drainTable(named("st29_cusum", dir), counts, "complete")
+    // the face self-joins its cells on a renamed stats key, so the
+    // memory-sink leaf needs no re-base
     graft.operators.FeatureEng.cusumFace(
-      org.apache.spark.sql.graft.Bridge.pinInternal(drained))
+      drainTable(named("st29_cusum", dir), counts, "complete"))
   }
 
   /** Streaming corpus-intake gate — the t2/t45 screens as an always-on

@@ -127,6 +127,14 @@ class CacheScopeSpec extends SparkSuite {
       "labelPropagation" -> (() => Graph.labelPropagation(events, iters = 2)),
       "connectedComponents" -> (() => Graph.connectedComponents(events)),
       "bfsHops" -> (() => Graph.bfsHops(events, col("node") === 10L, hops = 2)),
+      "kCore" -> (() => Graph.kCore(events, k = 1, rounds = 2)),
+      "hits" -> (() => Graph.hits(events, iters = 2)),
+      "degrees" -> (() => Graph.degrees(events)),
+      "triangles" -> (() => Graph.triangles(events)),
+      "clusteringCoefficient" -> (() => Graph.clusteringCoefficient(events)),
+      "neighborJaccard" -> (() => Graph.neighborJaccard(events)),
+      "reciprocity" -> (() => Graph.reciprocity(events)),
+      "assortativity" -> (() => Graph.assortativity(events)),
       "nearDupClusters" -> (() => Dedup.nearDupClusters(docs)))
     lanes.foreach { case (name, lane) =>
       val result = lane()

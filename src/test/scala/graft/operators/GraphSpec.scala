@@ -272,6 +272,38 @@ class GraphSpec extends SparkSuite {
     spark.catalog.clearCache()
   }
 
+  test("each operator's prep is one counted job") {
+    // the 150-user graph of the pagerank bound above. A prep persists its
+    // relation and materializes it with ONE job that also observes its
+    // row count (hits: and deg_max), so no prep pays a count()'s own
+    // aggregate jobs on top of its plan.
+    val rnd = new scala.util.Random(5)
+    val ev = eventsOfBuckets((0 until 10).map { b =>
+      Seq.fill(300)(rnd.nextInt(150).toLong) :+ (1000L + b)
+    }: _*)
+    val leaves = spark.range(1, 100001).toDF("id")
+    val star = leaves.select(lit(0L).as("src"), col("id").as("dst"))
+      .union(leaves.select(col("id").as("src"), lit(0L).as("dst")))
+    val bounds: Seq[(String, Int, () => Any)] = Seq(
+      ("degrees", 14, () => Graph.degrees(ev).collect()),
+      ("triangles", 16, () => Graph.triangles(ev).collect()),
+      ("neighborJaccard", 23, () => Graph.neighborJaccard(ev).collect()),
+      ("clusteringCoefficient", 29, () =>
+        Graph.clusteringCoefficient(ev).collect()),
+      ("reciprocity", 8, () => Graph.reciprocity(ev).collect()),
+      ("assortativity", 9, () => Graph.assortativity(ev).collect()),
+      ("labelPropagation", 31, () => Graph.labelPropagation(ev).collect()),
+      ("kCore", 23, () => Graph.kCore(ev).collect()),
+      ("modularity", 64, () => Graph.modularity(ev).collect()),
+      ("hits", 50, () => Graph.hits(ev).collect()),
+      ("hits, flipped", 75, () => Graph.hitsOnEdges(star, iters = 4).collect()))
+    bounds.foreach { case (name, bound, run) =>
+      val (_, jobs) = jobsOf(run())
+      assert(jobs <= bound, s"$name fired $jobs jobs")
+      spark.catalog.clearCache()
+    }
+  }
+
   test("labelPropagation: components collapse to their min node id") {
     // components {1,2,3} (diameter 2) and {4,5}: 4 rounds ≥ both diameters
     val r = Graph.labelPropagation(
@@ -528,6 +560,22 @@ class GraphSpec extends SparkSuite {
         s"$name left ${resident - base} resident caches (max 1: its result)")
       spark.catalog.clearCache()
       assert(resident === base, s"$name residue survived clearCache")
+    }
+    // one-shot operators: every persist they make is owned by the
+    // returned relation, so one release after its action frees them all
+    val oneShot: Seq[(String, () => DataFrame)] = Seq(
+      "degrees" -> (() => Graph.degrees(ev)),
+      "triangles" -> (() => Graph.triangles(ev)),
+      "clusteringCoefficient" -> (() => Graph.clusteringCoefficient(ev)),
+      "neighborJaccard" -> (() => Graph.neighborJaccard(ev)),
+      "reciprocity" -> (() => Graph.reciprocity(ev)),
+      "assortativity" -> (() => Graph.assortativity(ev)))
+    oneShot.foreach { case (name, op) =>
+      val result = op()
+      result.collect()
+      graft.CacheScope.release(result)
+      assert(resident === base,
+        s"$name left ${resident - base} resident caches after release")
     }
   }
 }

@@ -954,4 +954,38 @@ class TextDedupSpec extends SparkSuite {
       .as[(Long, Long, Double)].collect().toSeq
     assert(got === Seq((1L, 2L, 0.966667)))
   }
+
+  test("dsirWeights scans and tokenizes the documents once") {
+    // the face reads its fold twice (the collected model and the
+    // candidate rows); with the fold persisted once, the tasks read each
+    // parquet document once, plus a few cached batches
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsir_docs")
+    val rows = 400
+    (0 until rows).map { i =>
+      (i.toLong, if (i % 4 == 0) "wiki" else "web",
+        s"word$i alpha beta ${if (i % 2 == 0) "gamma" else "delta"} w${i % 7}")
+    }.toDF("doc_id", "source", "text")
+      .write.mode("overwrite").parquet(dir.toString)
+    val docs = spark.read.parquet(dir.toString)
+    val read = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          end: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        Option(end.taskMetrics).foreach(m =>
+          read.addAndGet(m.inputMetrics.recordsRead))
+    }
+    org.apache.spark.GraftBus.drain(spark.sparkContext, 60000L)
+    spark.sparkContext.addSparkListener(listener)
+    val scored = try {
+      val w = TextAnalysis.dsirWeights(docs, col("source") === "wiki")
+      val n = w.collect().length
+      graft.CacheScope.release(w)
+      org.apache.spark.GraftBus.drain(spark.sparkContext, 60000L)
+      n
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(scored === rows - rows / 4, "every non-target document is scored")
+    assert(read.get < 2L * rows,
+      s"${read.get} input records for $rows documents: the fold ran twice")
+    spark.catalog.clearCache()
+  }
 }
